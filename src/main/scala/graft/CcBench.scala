@@ -1,13 +1,16 @@
 package graft
 
-import graft.spark.{ConnectedComponents, GraftSession}
+import graft.spark.{AdaptiveStrategy, ConnectedComponents, GraftSession}
+import graft.spark.AdaptiveStrategy.Limits
 import org.apache.spark.sql.functions._
 
 /** Connected-components strategy evidence at real edge counts: generates a
   * deterministic pseudo-random multigraph (portable LCG, no Math.random),
   * runs BOTH physical strategies on the same edges, checks they agree
   * exactly, and prints one JSON line per size — the measured basis for the
-  * `unionFindMaxEdges` default (SURVEY §4.4).
+  * components edge limit in [[AdaptiveStrategy.Limits]] (SURVEY §4.4).
+  * Both strategies are forced through the [[AdaptiveStrategy.withLimits]]
+  * seam.
   *
   * Usage: runMain graft.CcBench [edgeCounts...]   (default 1e6 4e6 16e6)
   */
@@ -51,25 +54,18 @@ object CcBench {
     def timed(f: => Long): (Long, Double) = {
       val t0 = System.nanoTime(); val n = f; (n, (System.nanoTime() - t0) / 1e9)
     }
-    // union-find path (threshold above nEdges); run() + count inside the
-    // timer — the loop variant materializes EAGERLY inside run(), so the
-    // construction must be timed too
+    // run() + count inside the timer: both strategies materialize their
+    // result inside run(), so the mismatch join below reads cached blocks
+    // for BOTH sides instead of re-running either CC
     var uf: org.apache.spark.sql.DataFrame = null
     val (ufRows, ufSecs) = timed {
-      // eager localCheckpoint: materialization is part of the timed cost
-      // (as before) and the mismatch join below reads the cached blocks
-      uf = ConnectedComponents.run(edges, unionFindMaxEdges = Long.MaxValue)
-        .localCheckpoint()
+      uf = AdaptiveStrategy.withLimits(
+        Limits.Production.copy(componentsEdges = Long.MaxValue))(ConnectedComponents.run(edges))._1
       uf.count()
     }
-    // distributed loop (threshold 0) — localCheckpoint symmetrically with
-    // the union-find branch so both timings include materialization and
-    // the mismatch join below reads cached blocks for BOTH sides (without
-    // it, the join would silently re-run the whole distributed CC)
     var dist: org.apache.spark.sql.DataFrame = null
     val (distRows, distSecs) = timed {
-      dist = ConnectedComponents.run(edges, unionFindMaxEdges = 0)
-        .localCheckpoint()
+      dist = AdaptiveStrategy.withLimits(Limits.ForceDistributed)(ConnectedComponents.run(edges))._1
       dist.count()
     }
     // exact agreement: both (node, component) sets identical — reuse the

@@ -52,8 +52,9 @@ object PortableHash {
 
   /** The original composable form — kept as the parity reference the spec
     * checks the native expression against (it IS the documented semantics:
-    * codepoint elements via split's zero-width regex, ascii = first UTF-16
-    * unit).
+    * codepoint elements via split's zero-width regex, and `ascii` returns
+    * the element's first codepoint — the full codepoint for an astral
+    * character, e.g. ascii('😀') = 128512).
     */
   private[graft] def charFoldLegacy(s: Column, mult: Long, p: Long): Column =
     aggregate(split(s, ""), lit(0L), (acc, c) => pmod(acc * mult + ascii(c), lit(p)))

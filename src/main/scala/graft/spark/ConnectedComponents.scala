@@ -13,13 +13,13 @@ import org.apache.spark.sql.functions._
   * trivially small. So `run` materializes the edge list once, counts it, and
   * picks the physical strategy:
   *
-  *  - **edges ≤ `unionFindMaxEdges` (default 10⁷)**: single-task union–find
-  *    (path-halving) over the raw edges — one job, no symmetrize shuffle, no
-  *    rounds. 10⁷ string edges is ≲1–2 GB of task heap, comfortably inside
-  *    one executor; the output is identical (component = min reachable id
-  *    in UTF-8 BYTE order — enforced by `bytesLess`, matching Spark's
-  *    UTF8String `min` and DuckDB string order for arbitrary ids, not just
-  *    ASCII).
+  *  - **edges ≤ the components edge limit (10⁷, [[AdaptiveStrategy]])**:
+  *    single-task union–find (path-halving) over the raw edges — one job,
+  *    no symmetrize shuffle, no rounds. 10⁷ string edges is ≲1–2 GB of task
+  *    heap, comfortably inside one executor; the output is identical
+  *    (component = min reachable id in UTF-8 BYTE order — enforced by
+  *    `bytesLess`, matching Spark's UTF8String `min` and DuckDB string
+  *    order for arbitrary ids, not just ASCII).
   *  - **larger graphs**: the distributed loop below. Each round fuses one
   *    hop of neighbor min-label propagation with one pointer-jumping step
   *    (label := label's label), so label paths halve per round and
@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   *    into a silent wrong answer;
   *  - lineage is truncated every round via localCheckpoint; when the
   *    session has a reliable checkpoint dir configured
-  *    (`sc.setCheckpointDir`), every `checkpointInterval`-th round uses a
+  *    (`sc.setCheckpointDir`), every [[CheckpointInterval]]-th round uses a
   *    reliable `checkpoint()` instead, so executor loss on a real cluster
   *    replays at most k rounds (localCheckpoint blocks die with their
   *    executor).
@@ -58,19 +58,30 @@ object ConnectedComponents {
     *         the default 64 covers any graph that fits on hardware —
     *         2^64 exceeds the diameter of any representable graph.
     */
-  def run(edges: DataFrame, maxIterations: Int = 64,
-          checkpointInterval: Int = 5,
-          unionFindMaxEdges: Long = 10000000L,
-          maxEdgesPerInitTask: Long = 2000000L): DataFrame = {
+  def run(edges: DataFrame, maxIterations: Int = 64): DataFrame = {
     // materialize the (possibly expensive) upstream pair pipeline exactly
     // once; lazy checkpoint + count = ONE action that both stores the
-    // blocks and yields the strategy-picking size
-    val raw = edges.select(col("src").cast("string"), col("dst").cast("string"))
+    // blocks and yields the strategy-picking size. A NULL endpoint links
+    // nothing: its edge keeps only the other endpoint, as a node.
+    val (a, b) = (col("src").cast("string"), col("dst").cast("string"))
+    val raw = edges.select(coalesce(a, b).as("src"), coalesce(b, a).as("dst"))
+      .filter(col("src").isNotNull)
       .localCheckpoint(eager = false)
+    val spark = raw.sparkSession
+    import spark.implicits._
     val n = raw.count()
-    if (n <= unionFindMaxEdges) runUnionFind(raw)
-    else runDistributed(raw, n, maxIterations, checkpointInterval, maxEdgesPerInitTask)
+    AdaptiveStrategy.run("ConnectedComponents", n, AdaptiveStrategy.limits.componentsEdges,
+        raw.as[(String, String)])(labelPartition)(
+      runDistributed(raw, n, maxIterations).as[(String, String)]).toDF("node", "component")
   }
+
+  /** Every k-th distributed round checkpoints reliably (when the session
+    * has a checkpoint dir), so executor loss replays at most k rounds.
+    */
+  private val CheckpointInterval = 5
+
+  /** Edges one init task's union–find holds at most (see [[runDistributed]]). */
+  private val MaxEdgesPerInitTask = 2000000L
 
   /** INCREMENTAL component maintenance — the linking/dedup twin of
     * [[Entailment.owlEntailIncremental]]: given a standing
@@ -96,9 +107,7 @@ object ConnectedComponents {
     * over the label table.
     */
   def incremental(labels: DataFrame, newEdges: DataFrame,
-                  maxIterations: Int = 64, checkpointInterval: Int = 5,
-                  unionFindMaxEdges: Long = 10000000L,
-                  maxEdgesPerInitTask: Long = 2000000L): DataFrame = {
+                  maxIterations: Int = 64): DataFrame = {
     val l = labels.select(col("node"), col("component")).localCheckpoint()
     // one action materializes the delta AND answers the emptiness question
     val e = newEdges.select(col("src").cast("string"), col("dst").cast("string"))
@@ -113,9 +122,9 @@ object ConnectedComponents {
       .join(sub.select(col("node").as("dst"), col("component").as("dc")), Seq("dst"), "left")
       .select(coalesce(col("sc"), col("src")).as("src"),
         coalesce(col("dc"), col("dst")).as("dst"))
-    // quotient components: nodes are old labels and brand-new ids
-    val q = run(mapped, maxIterations, checkpointInterval,
-      unionFindMaxEdges, maxEdgesPerInitTask).localCheckpoint()
+    // quotient components: nodes are old labels and brand-new ids (run's
+    // output is already materialized state, read twice below)
+    val q = run(mapped, maxIterations)
     // old nodes follow their label's move (untouched labels keep)
     val moves = q.select(col("node").as("component"), col("component").as("qc"))
     val olds = l.join(moves, Seq("component"), "left")
@@ -183,18 +192,9 @@ object ConnectedComponents {
     nodes.iterator.map(n => (n, minOf.get(find(n))))
   }
 
-  /** Single-task union–find: one job, no shuffles. */
-  private def runUnionFind(raw: DataFrame): DataFrame = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    raw.as[(String, String)].coalesce(1).mapPartitions(labelPartition)
-      .toDF("node", "component")
-  }
-
   /** O(log d)-round distributed loop for graphs too big for one task. */
-  private def runDistributed(raw: DataFrame, edgeCount: Long, maxIterations: Int,
-                             checkpointInterval: Int,
-                             maxEdgesPerInitTask: Long): DataFrame = {
+  private def runDistributed(raw: DataFrame, edgeCount: Long,
+                             maxIterations: Int): DataFrame = {
     val spark = raw.sparkSession
     val sc = spark.sparkContext
     import spark.implicits._
@@ -221,13 +221,13 @@ object ConnectedComponents {
     // partition in an UNSPILLABLE java HashMap, so the init partition count
     // must bound edges/task explicitly instead of inheriting the session
     // shuffle setting (2×10⁹ symmetrized edges over 200 partitions would be
-    // a multi-GB map per task): ≈2·edgeCount/maxEdgesPerInitTask tasks caps
-    // the map at maxEdgesPerInitTask entries (partitioning is by src, so a
+    // a multi-GB map per task): ≈2·edgeCount/MaxEdgesPerInitTask tasks caps
+    // the map at MaxEdgesPerInitTask entries (partitioning is by src, so a
     // hot node's edges still land together — upstream blocking degree-caps
     // make that bounded too). More partitions only weaken the CONTRACTION
     // (a coarser quotient for the loop), never correctness.
     val initParts = math.max(spark.sparkContext.defaultParallelism.toLong,
-      2L * edgeCount / math.max(maxEdgesPerInitTask, 1L) + 1L).toInt
+      2L * edgeCount / MaxEdgesPerInitTask + 1L).toInt
     var labels = sym.repartition(initParts, col("src")).as[(String, String)]
       .mapPartitions(labelPartition)
       .toDF("node", "component")
@@ -257,7 +257,7 @@ object ConnectedComponents {
         .select(col("a.node").as("node"), newComp.as("component"),
           (col("a.old") =!= newComp).as("changed"))
       val next =
-        if (iter % checkpointInterval == 0 && sc.getCheckpointDir.isDefined)
+        if (iter % CheckpointInterval == 0 && sc.getCheckpointDir.isDefined)
           jumped.checkpoint()
         else jumped.localCheckpoint()
       // exact convergence: early-exit scan of the materialized blocks

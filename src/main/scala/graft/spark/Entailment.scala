@@ -3,6 +3,7 @@ package graft.spark
 import graft.model.Triple
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Distributed OWL-RL-subset entailment, re-expressed as DataFrame joins
   * against a broadcast schema-edge table.
@@ -170,7 +171,13 @@ object Entailment {
   }
 
   /** Shared semi-naive fixpoint core of [[owlEntail]] (delta = whole base)
-    * and [[owlEntailIncremental]] (delta = fresh rows only).
+    * and [[owlEntailIncremental]] (delta = fresh rows only), through
+    * [[AdaptiveStrategy.run]]: at or under the entailment fact limit the
+    * fixpoint runs as ONE in-memory task ([[entailKernel]]), above it — any
+    * real-scale graph — the distributed semi-naive loop runs. The
+    * rewrite-edge table is vocabulary-sized by construction (already the
+    * broadcast assumption), so collecting it for the task is the same
+    * driver cost the broadcast path pays.
     *
     * @param result0 deduplicated starting graph (already contains delta0)
     * @param delta0  the rows to derive from first
@@ -179,170 +186,120 @@ object Entailment {
     *        delta0's schema edges (full closure); false makes the
     *        new-edge diff run from iteration 1 (incremental)
     */
-  /** Facts threshold under which the rewrite fixpoint runs as ONE
-    * in-memory task — the same size-adaptive escape hatch
-    * [[ConnectedComponents.run]] and [[GraphQuery]]'s closures use, for
-    * the same reason: each fixpoint iteration costs several
-    * scheduler-bound jobs regardless of data volume. The rewrite-edge
-    * table is vocabulary-sized by construction (already the broadcast
-    * assumption), so collecting it is the same driver cost the broadcast
-    * path pays. Above the threshold — any real-scale graph — the
-    * distributed semi-naive loop runs unchanged.
-    */
-  // vars, not vals: the distributed-path parity spec forces the
-  // distributed strategy by dropping these to 0 (and restores them)
-  private[spark] var SingleTaskMaxFacts: Long = 300000L
-  private[spark] var SingleTaskMaxResult: Long = 3000000L
-  private val OverflowMarker = "graft-single-task-entail-overflow"
-
   private def entailFrom(result0: Dataset[Triple], delta0: Dataset[Triple],
                          edges0: DataFrame, firstDeltaEdgesCovered: Boolean,
                          maxIterations: Int): Dataset[Triple] = {
-    entailSingleTask(result0, delta0, edges0, firstDeltaEdgesCovered, maxIterations)
-      .getOrElse(entailFromDistributed(result0, delta0, edges0,
-        firstDeltaEdgesCovered, maxIterations))
-  }
-
-  /** The in-memory twin of [[entailFromDistributed]]: identical rule
-    * application ([[derive]]'s pred/inv/class kinds), identical new-edge
-    * handling (a derived triple that is itself a schema edge widens the
-    * edge set and replays the WHOLE graph against just the new edges),
-    * identity-column novelty, and the same THROW at the iteration cap —
-    * asserted equal to the distributed path by EntailmentParitySpec.
-    * Returns None above [[SingleTaskMaxFacts]] or when the result
-    * overflows [[SingleTaskMaxResult]] (fallback to distributed).
-    */
-  private def entailSingleTask(result0: Dataset[Triple], delta0: Dataset[Triple],
-                               edges0: DataFrame, firstDeltaEdgesCovered: Boolean,
-                               maxIterations: Int): Option[Dataset[Triple]] = {
     val spark = result0.sparkSession
     import spark.implicits._
-    if (result0.count() > SingleTaskMaxFacts) return None
-    // vocabulary-sized by construction — the distributed path broadcasts
-    // exactly this table, so the driver-side footprint is unchanged
-    val edgeArr = edges0.select(col("e_p1"), col("e_p2"), col("e_kind"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
-    val sameFrame = result0 eq delta0
     val tag = (t: Int, ds: Dataset[Triple]) => ds.toDF().select(
       lit(t).as("t"), col("subj"), col("pred"), col("obj_iri"), col("obj_lexical"),
       col("obj_datatype"), col("obj_lang"), col("conv_id"), col("turn_idx"))
-    val input = if (sameFrame) tag(1, result0) else tag(0, result0).unionByName(tag(1, delta0))
-    val maxResult = SingleTaskMaxResult
-    val firstCovered = firstDeltaEdgesCovered
-    val out = input
-      .as[(Int, String, String, String, String, String, String, String, Int)]
-      .coalesce(1).mapPartitions { it =>
-        def key(f: Triple) = (f.subj, f.pred, f.obj_iri, f.obj_lexical, f.obj_datatype, f.obj_lang)
-        val seen = scala.collection.mutable.HashSet.empty[(String, String, String, String, String, String)]
-        val result = scala.collection.mutable.ArrayBuffer.empty[Triple]
-        var delta = scala.collection.mutable.ArrayBuffer.empty[Triple]
-        it.foreach { case (t, s, p, oi, ol, od, og, cv, ti) =>
-          val f = Triple(s, p, oi, ol, od, og, cv, ti)
-          if (seen.add(key(f))) result += f
-          // the delta seed rides its tag: in the incremental case these
-          // rows also sit inside result0 (already counted above), so they
-          // only seed the loop here, never duplicate the output
-          if (t == 1) delta += f
-        }
-        // rewrite-edge state, indexed per kind by match key
-        val edges = scala.collection.mutable.HashSet.empty[(String, String, String)]
-        val predM = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-        val invM = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-        val classM = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-        def mapFor(kind: String) = kind match {
-          case "pred" => predM
-          case "inv" => invM
-          case _ => classM
-        }
-        def addEdge(e: (String, String, String)): Boolean = {
-          if (!edges.add(e)) return false
-          val m = mapFor(e._3)
-          var buf = m.get(e._1)
-          if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[String]; m.put(e._1, buf) }
-          buf += e._2
-          true
-        }
-        edgeArr.foreach(addEdge)
-        // schemaEdges twin: the rewrite edges a fact set asserts
-        def schemaEdgesOf(fs: Iterable[Triple]): Seq[(String, String, String)] = {
-          val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
-          fs.foreach { f =>
-            if (f.obj_iri != null) f.pred match {
-              case SubPropertyOf => out += ((f.subj, f.obj_iri, "pred"))
-              case EquivalentProperty =>
-                out += ((f.subj, f.obj_iri, "pred")); out += ((f.obj_iri, f.subj, "pred"))
-              case InverseOf =>
-                out += ((f.subj, f.obj_iri, "inv")); out += ((f.obj_iri, f.subj, "inv"))
-              case SubClassOf => out += ((f.subj, f.obj_iri, "class"))
-              case EquivalentClass =>
-                out += ((f.subj, f.obj_iri, "class")); out += ((f.obj_iri, f.subj, "class"))
-              case RdfType if f.obj_iri == SymmetricProperty =>
-                out += ((f.subj, f.subj, "inv"))
-              case _ => ()
-            }
-          }
-          out.toSeq
-        }
-        // derive() twin over one fact against the given per-kind maps
-        def deriveInto(f: Triple, pm: java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]],
-                       im: java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]],
-                       cm: java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]],
-                       sink: scala.collection.mutable.ArrayBuffer[Triple]): Unit = {
-          val pt = pm.get(f.pred)
-          if (pt != null) pt.foreach { p2 =>
-            sink += Triple(f.subj, p2, f.obj_iri, f.obj_lexical, f.obj_datatype, f.obj_lang, null, -1)
-          }
-          if (f.obj_iri != null) {
-            val iv = im.get(f.pred)
-            if (iv != null) iv.foreach { p2 =>
-              sink += Triple(f.obj_iri, p2, f.subj, null, null, null, null, -1)
-            }
-            if (f.pred == RdfType) {
-              val ct = cm.get(f.obj_iri)
-              if (ct != null) ct.foreach { c2 =>
-                sink += Triple(f.subj, RdfType, c2, null, null, null, null, -1)
-              }
-            }
-          }
-        }
-        var iter = 0
-        while (delta.nonEmpty && iter < maxIterations) {
-          iter += 1
-          val derived = scala.collection.mutable.ArrayBuffer.empty[Triple]
-          val newEdges =
-            if (iter == 1 && firstCovered) Nil
-            else schemaEdgesOf(delta).filterNot(edges.contains).distinct
-          if (newEdges.isEmpty) {
-            delta.foreach(deriveInto(_, predM, invM, classM, derived))
-          } else {
-            newEdges.foreach(addEdge)
-            delta.foreach(deriveInto(_, predM, invM, classM, derived))
-            // replay the WHOLE graph against just the new edges
-            val np = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-            val ni = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-            val nc = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-            newEdges.foreach { e =>
-              val m = e._3 match { case "pred" => np; case "inv" => ni; case _ => nc }
-              var buf = m.get(e._1)
-              if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[String]; m.put(e._1, buf) }
-              buf += e._2
-            }
-            result.foreach(deriveInto(_, np, ni, nc, derived))
-          }
-          val next = scala.collection.mutable.ArrayBuffer.empty[Triple]
-          derived.foreach { f =>
-            if (seen.add(key(f))) { result += f; next += f }
-          }
-          if (result.size > maxResult) throw new IllegalStateException(OverflowMarker)
-          delta = next
-        }
-        if (delta.nonEmpty)
-          throw new IllegalStateException(
-            s"entailment fixpoint not reached in $maxIterations iterations — " +
-              "the closure is incomplete; raise maxIterations")
-        result.iterator
+    val input =
+      if (result0 eq delta0) tag(1, result0) else tag(0, result0).unionByName(tag(1, delta0))
+    val l = AdaptiveStrategy.limits
+    AdaptiveStrategy.run("Entailment", result0.count(), l.entailFacts,
+        input.as[(Int, String, String, String, String, String, String, String, Int)]) {
+      val edgeArr = edges0.select(col("e_p1"), col("e_p2"), col("e_kind"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      entailKernel(_, edgeArr, firstDeltaEdgesCovered, maxIterations, l.entailResult)
+    }(entailFromDistributed(result0, delta0, edges0, firstDeltaEdgesCovered, maxIterations))
+  }
+
+  /** In-task rewrite-edge index: per rule kind, match key → targets. */
+  private final class RuleIndex {
+    private val kinds = Seq("pred", "inv", "class")
+      .map(_ -> new java.util.HashMap[String, mutable.ArrayBuffer[String]]()).toMap
+    def add(e: (String, String, String)): Unit = {
+      val m = kinds(e._3)
+      var buf = m.get(e._1)
+      if (buf == null) { buf = mutable.ArrayBuffer.empty[String]; m.put(e._1, buf) }
+      buf += e._2
+    }
+    private def each(kind: String, k: String)(f: String => Unit): Unit = {
+      val targets = kinds(kind).get(k)
+      if (targets != null) targets.foreach(f)
+    }
+    /** [[derive]]'s twin over one fact. */
+    def derive(f: Triple, emit: Triple => Unit): Unit = {
+      each("pred", f.pred)(p2 =>
+        emit(Triple(f.subj, p2, f.obj_iri, f.obj_lexical, f.obj_datatype, f.obj_lang, null, -1)))
+      if (f.obj_iri != null) {
+        each("inv", f.pred)(p2 => emit(Triple(f.obj_iri, p2, f.subj, null, null, null, null, -1)))
+        if (f.pred == RdfType)
+          each("class", f.obj_iri)(c2 => emit(Triple(f.subj, RdfType, c2, null, null, null, null, -1)))
       }
-    SingleTaskFallback.materialize(out, OverflowMarker, "fixpoint not reached")
+    }
+  }
+
+  /** The in-memory twin of [[entailFromDistributed]] over tagged rows (t = 1
+    * marks delta0): identical rule application, identical new-edge handling
+    * (a derived triple that is itself a schema edge widens the edge set and
+    * replays the WHOLE graph against just the new edges), identity-column
+    * novelty, and the same THROW at the iteration cap — asserted equal to
+    * the distributed path by the parity specs. The result cap is checked as
+    * each novel fact is added.
+    */
+  private def entailKernel(rows: Iterator[(Int, String, String, String, String, String, String, String, Int)],
+                           edgeArr: Array[(String, String, String)], firstCovered: Boolean,
+                           maxIterations: Int, maxResult: Long): Iterator[Triple] = {
+    def key(f: Triple) = (f.subj, f.pred, f.obj_iri, f.obj_lexical, f.obj_datatype, f.obj_lang)
+    val seen = mutable.HashSet.empty[(String, String, String, String, String, String)]
+    val result = mutable.ArrayBuffer.empty[Triple]
+    var delta = mutable.ArrayBuffer.empty[Triple]
+    rows.foreach { case (t, s, p, oi, ol, od, og, cv, ti) =>
+      val f = Triple(s, p, oi, ol, od, og, cv, ti)
+      if (seen.add(key(f))) result += f
+      // the delta seed rides its tag: in the incremental case these rows
+      // also sit inside result0, so they only seed the loop here, never
+      // duplicate the output
+      if (t == 1) delta += f
+    }
+    val edges = mutable.HashSet.empty[(String, String, String)]
+    val index = new RuleIndex
+    edgeArr.foreach(e => if (edges.add(e)) index.add(e))
+    // schemaEdges twin: the rewrite edges a fact set asserts
+    def schemaEdgesOf(fs: Iterable[Triple]): Seq[(String, String, String)] =
+      fs.toSeq.flatMap { f =>
+        if (f.obj_iri == null) Nil
+        else f.pred match {
+          case SubPropertyOf => Seq((f.subj, f.obj_iri, "pred"))
+          case EquivalentProperty => Seq((f.subj, f.obj_iri, "pred"), (f.obj_iri, f.subj, "pred"))
+          case InverseOf => Seq((f.subj, f.obj_iri, "inv"), (f.obj_iri, f.subj, "inv"))
+          case SubClassOf => Seq((f.subj, f.obj_iri, "class"))
+          case EquivalentClass => Seq((f.subj, f.obj_iri, "class"), (f.obj_iri, f.subj, "class"))
+          case RdfType if f.obj_iri == SymmetricProperty => Seq((f.subj, f.subj, "inv"))
+          case _ => Nil
+        }
+      }
+    var iter = 0
+    while (delta.nonEmpty && iter < maxIterations) {
+      iter += 1
+      val next = mutable.ArrayBuffer.empty[Triple]
+      def emit(f: Triple): Unit =
+        if (seen.add(key(f))) {
+          result += f
+          next += f
+          if (result.size > maxResult) AdaptiveStrategy.overflow()
+        }
+      val newEdges =
+        if (iter == 1 && firstCovered) Nil
+        else schemaEdgesOf(delta).filterNot(edges.contains).distinct
+      val replayed = result.size // the graph as of this round's start
+      newEdges.foreach { e => edges.add(e); index.add(e) }
+      delta.foreach(index.derive(_, emit))
+      if (newEdges.nonEmpty) {
+        // replay the WHOLE graph against just the new edges
+        val fresh = new RuleIndex
+        newEdges.foreach(fresh.add)
+        (0 until replayed).foreach(i => fresh.derive(result(i), emit))
+      }
+      delta = next
+    }
+    if (delta.nonEmpty)
+      throw new IllegalStateException(
+        s"entailment fixpoint not reached in $maxIterations iterations — " +
+          "the closure is incomplete; raise maxIterations")
+    result.iterator
   }
 
   private def entailFromDistributed(result0: Dataset[Triple], delta0: Dataset[Triple],

@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Basic-graph-pattern (BGP) querying over the extracted triple table —
   * the consumer-side role RDF.rb's `Queryable#query` plays for the
@@ -536,10 +537,10 @@ object GraphQuery {
       slice = slice.filter(preds
         .map(p => col("pred_bucket") === pmod(hash(lit(p)), lit(g.predBuckets)))
         .reduce(_ || _)) // each side folds to a literal → partition filter
-    // no distinct here: fullClosure dedups its input itself — a second
+    // no distinct here: closure dedups its input itself — a second
     // Deduplicate would cost a redundant full shuffle of the edge slice
     val edges = slice.select(col("subj").as("s"), col("obj_iri").as("o"))
-    fullClosure(edges, maxIterations, preds.mkString("|"))
+    closure(edges, None, maxIterations, preds.mkString("|"))
   }
 
   /** Transitive closure of a bare (s, o) edge frame — [[pathPlus]] without
@@ -548,7 +549,7 @@ object GraphQuery {
     * the same THROW on a live frontier at the iteration cap.
     */
   def closePairs(edges: DataFrame, maxIterations: Int = 64): DataFrame =
-    fullClosure(edges.select(col("s"), col("o")), maxIterations, "closePairs")
+    closure(edges, None, maxIterations, "closePairs")
 
   /** INCREMENTAL transitive-closure maintenance — the path twin of
     * [[Entailment.owlEntailIncremental]]: given the CLOSED pair set of a
@@ -568,310 +569,196 @@ object GraphQuery {
                           maxIterations: Int = 64): DataFrame = {
     val c = closedPairs.select(col("s"), col("o")).localCheckpoint()
     val d = newEdges.select(col("s"), col("o")).distinct()
-    incrementalSingleTask(c, d, maxIterations).getOrElse {
-      val r = c.union(d).distinct()
-      val suffix = seminaiveClosure(r, d, maxIterations, "pathPlusIncremental")
-        .localCheckpoint()
+    // admitted on the standing closure's size alone: the delta is unsized
+    // until the task reads it, where the kernel's seed cap bounds it
+    closureStrategy("GraphQuery.pathPlusIncremental", c.count(),
+        tagged(c, Hop | Prefix).unionByName(tagged(d, Hop | Seed)),
+        doubling = false, maxIterations, "pathPlusIncremental") {
+      val suffix = closure(c.union(d).distinct(), Some(d), maxIterations,
+        "pathPlusIncremental").localCheckpoint()
       val prefixed = c.as("pc").join(suffix.as("px"), col("pc.o") === col("px.s"))
         .select(col("pc.s").as("s"), col("px.o").as("o"))
       c.union(suffix).union(prefixed).distinct()
     }
   }
 
-  /** Single-task twin of the incremental decomposition `C ∪ (Δ ∘ (C∪Δ)*)
-    * ∪ (C ∘ Δ ∘ (C∪Δ)*)` for standing closures under the
-    * [[SingleTaskClosureMaxEdges]] threshold — same rationale as
-    * [[singleTaskClosure]] (the three-stage DataFrame pipeline costs ~8
-    * scheduler-bound jobs regardless of data size). Identical pair set:
-    * the in-memory loop replays the exact seeded expansion, prefix join
-    * and final distinct. None above the threshold or past the pair cap
-    * (caller falls back to the distributed pipeline).
+  // row tags of the closure kernel's input (bit flags)
+  private final val Hop = 1 // a traversable (s, o) edge
+  private final val Seed = 2 // a starting pair of the expansion
+  private final val Prefix = 4 // a standing closed pair: kept, and prefix-joined onto the expansion
+
+  private def tagged(pairs: DataFrame, tag: Int): DataFrame =
+    pairs.select(lit(tag).as("t"), col("s"), col("o"))
+
+  /** Transitive closure of `edgesIn` — the shared fixpoint core of
+    * [[pathPlusAlt]], [[closePairs]] and the [[Path.Plus]]/[[Path.Star]]
+    * cases of [[evalPath]]. FULL (`seed` None): every edge seeds and
+    * rounds double the covered path length. SEEDED: one-hop expansion from
+    * the seed pairs only — a bound-endpoint `<x> p+ ?y` query explores x's
+    * reachable cone, never the whole graph's closure (composing a cone
+    * slice with a full closure would drag in pairs outside the cone).
+    * Hitting `maxIterations` with a live frontier THROWS on either
+    * strategy — a silently truncated closure is wrong answers, not a
+    * degraded mode.
     */
-  private def incrementalSingleTask(c: DataFrame, d: DataFrame,
-                                    maxIterations: Int): Option[DataFrame] = {
-    if (c.count() > SingleTaskClosureMaxEdges) return None
-    val spark = c.sparkSession
+  private def closure(edgesIn: DataFrame, seed: Option[DataFrame], maxIterations: Int,
+                      what: String): DataFrame = {
+    val doubling = seed.isEmpty
+    val e = edgesIn.select(col("s"), col("o"))
+    // the full closure dedups its edges here (callers skip their own distinct)
+    val edges = (if (doubling) e.distinct() else e).localCheckpoint()
+    val seeds = seed.map(_.select(col("s"), col("o")).distinct())
+    val input = seeds.fold(tagged(edges, Hop | Seed))(sd =>
+      tagged(edges, Hop).unionByName(tagged(sd, Seed)))
+    closureStrategy(s"GraphQuery.closure[$what]", edges.count(), input, doubling,
+        maxIterations, what) {
+      closureLoop(edges, seeds.fold(edges)(_.localCheckpoint()), doubling, maxIterations, what)
+    }
+  }
+
+  /** One closure call through [[AdaptiveStrategy.run]]: `input` holds the
+    * tagged (t, s, o) rows [[closureKernel]] reads.
+    */
+  private def closureStrategy(engine: String, size: => Long, input: DataFrame,
+                              doubling: Boolean, maxIterations: Int, what: String)
+                             (distributed: => DataFrame): DataFrame = {
+    val spark = input.sparkSession
     import spark.implicits._
-    val input = c.select(lit(0).as("t"), col("s"), col("o"))
-      .unionByName(d.select(lit(1).as("t"), col("s"), col("o")))
-    val maxPairs = SingleTaskClosureMaxPairs
-    val maxEdges = SingleTaskClosureMaxEdges
-    val out = input.as[(Int, String, String)].coalesce(1).mapPartitions { it =>
-      val cPairs = scala.collection.mutable.HashSet.empty[(String, String)]
-      val dPairs = scala.collection.mutable.HashSet.empty[(String, String)]
-      it.foreach { case (t, s, o) =>
-        if (t == 0) cPairs.add((s, o)) else dPairs.add((s, o))
-        // the pre-task count guards only the standing closure; the DELTA
-        // is unsized until here — overflow falls back to the distributed
-        // pipeline instead of eating the task heap
-        if (dPairs.size > maxEdges)
-          throw new IllegalStateException(OverflowMarker)
-      }
-      // hop edges r = C ∪ Δ, adjacency by source
-      val adj = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-      def addEdge(s: String, o: String): Unit = {
-        var buf = adj.get(s)
-        if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[String]; adj.put(s, buf) }
-        buf += o
-      }
-      cPairs.foreach { case (s, o) => addEdge(s, o) }
-      dPairs.foreach { case (s, o) => if (!cPairs.contains((s, o))) addEdge(s, o) }
-      // seeded suffix expansion: Δ ∘ (C∪Δ)*
-      val suffix = scala.collection.mutable.HashSet.empty[(String, String)]
-      var delta = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      dPairs.foreach { p => if (suffix.add(p)) delta += p }
-      var iter = 0
-      while (delta.nonEmpty && iter < maxIterations) {
-        iter += 1
-        val next = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        delta.foreach { case (s, o) =>
-          if (o != null) { // NULL hop nodes join nothing (SQL parity)
-            val outs = adj.get(o)
-            if (outs != null) outs.foreach { o2 =>
-              if (suffix.add((s, o2))) next += ((s, o2))
-            }
-          }
-        }
-        if (suffix.size > maxPairs) throw new IllegalStateException(OverflowMarker)
-        delta = next
-      }
-      if (delta.nonEmpty)
-        throw new IllegalStateException(
-          s"path closure (pathPlusIncremental) frontier still live after $maxIterations " +
-            "iterations — raise maxIterations; a truncated closure would be silently wrong")
-      // prefix join C ∘ suffix, then C ∪ suffix ∪ prefixed under set semantics
-      val cByObj = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-      cPairs.foreach { case (s, o) =>
-        var buf = cByObj.get(o)
-        if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[String]; cByObj.put(o, buf) }
-        buf += s
-      }
-      val result = scala.collection.mutable.HashSet.empty[(String, String)]
-      result ++= cPairs
-      result ++= suffix
-      suffix.foreach { case (ss, so) =>
-        if (ss != null) { // NULL suffix source joins nothing (SQL parity)
-          val pres = cByObj.get(ss)
-          if (pres != null) pres.foreach { cs =>
-            result.add((cs, so))
-            if (result.size > maxPairs) throw new IllegalStateException(OverflowMarker)
-          }
-        }
-      }
-      result.iterator
-    }.toDF("s", "o")
-    SingleTaskFallback.materialize(out, OverflowMarker, "frontier still live")
+    val l = AdaptiveStrategy.limits
+    AdaptiveStrategy.run(engine, size, l.closureEdges, input.as[(Int, String, String)])(
+      closureKernel(_, doubling, maxIterations, l.closureEdges, l.closurePairs, what))(
+      distributed.as[(String, String)]).toDF("s", "o")
   }
 
-  /** Semi-naive transitive expansion — the shared fixpoint core of
-    * [[pathPlusAlt]] and the [[Path.Plus]]/[[Path.Star]] cases of
-    * [[evalPath]]: grow `seed` by repeatedly joining the newest DELTA (only)
-    * against `edges` until no new (s, o) pair appears. Novelty is a
-    * left-anti against the union of checkpointed accepted deltas (disjoint
-    * by construction — shallow lineage, no growing-plan recompute);
-    * iterations = graph diameter; cycles terminate naturally. Hitting
-    * `maxIterations` with a live frontier THROWS — a silently truncated
-    * closure is wrong answers, not a degraded mode.
+  /** The in-memory closure kernel over tagged (t, s, o) rows: semi-naive
+    * expansion from the SEED pairs over the HOP edges. With `doubling` the
+    * accepted novel pairs join the adjacency after each round, so the next
+    * round composes against the closure so far — the same round semantics
+    * as [[closureLoop]], so the `maxIterations` contract agrees across
+    * strategies. PREFIX pairs C (the incremental case) finish the result as
+    * `C ∪ X ∪ (C ∘ X)` over the expansion X. Traversal never continues
+    * through a NULL hop node, matching the SQL equi-joins' null rejection
+    * (null-endpoint pairs still surface — they just extend nothing).
     *
-    * @param edgesIn (s, o) hop edges
-    * @param seed    (s, o) starting pairs — the edges themselves for a full
-    *                closure, or the single-source slice for a bound-endpoint
-    *                closure (then only the reachable CONE is explored: at
-    *                100 TB a `<x> p+ ?y` query never materializes the whole
-    *                graph's closure)
+    * Caps are checked as each pair is added, so a dense graph overflows
+    * before a round's derivations accumulate: more than `maxSeeds` seed
+    * pairs (an incremental delta is unsized until here) or `maxPairs`
+    * pairs throws [[AdaptiveStrategy.overflow]].
     */
-  private def seminaiveClosure(edgesIn: DataFrame, seed: DataFrame,
-                               maxIterations: Int, what: String): DataFrame = {
-    val edgesRaw = edgesIn.select(col("s"), col("o")).localCheckpoint()
-    singleTaskClosure(edgesRaw, Some(seed.select(col("s"), col("o")).distinct()),
-        maxIterations, what)
-      .getOrElse(seminaiveClosureDistributed(edgesRaw, seed, maxIterations, what))
+  private def closureKernel(rows: Iterator[(Int, String, String)], doubling: Boolean,
+                            maxIterations: Int, maxSeeds: Long, maxPairs: Long,
+                            what: String): Iterator[(String, String)] = {
+    type Index = java.util.HashMap[String, mutable.ArrayBuffer[String]]
+    def link(m: Index, k: String, v: String): Unit = {
+      var buf = m.get(k)
+      if (buf == null) { buf = mutable.ArrayBuffer.empty[String]; m.put(k, buf) }
+      buf += v
+    }
+    val adj = new Index()
+    val prefix = mutable.ArrayBuffer.empty[(String, String)]
+    val seen = mutable.HashSet.empty[(String, String)]
+    def add(p: (String, String), into: mutable.ArrayBuffer[(String, String)]): Unit =
+      if (seen.add(p)) {
+        into += p
+        if (seen.size > maxPairs) AdaptiveStrategy.overflow()
+      }
+    var delta = mutable.ArrayBuffer.empty[(String, String)]
+    rows.foreach { case (t, s, o) =>
+      if ((t & Hop) != 0) link(adj, s, o)
+      if ((t & Prefix) != 0) prefix += ((s, o))
+      if ((t & Seed) != 0) {
+        add((s, o), delta)
+        if (seen.size > maxSeeds) AdaptiveStrategy.overflow()
+      }
+    }
+    var iter = 0
+    while (delta.nonEmpty && iter < maxIterations) {
+      iter += 1
+      val next = mutable.ArrayBuffer.empty[(String, String)]
+      delta.foreach { case (s, o) =>
+        val outs = if (o == null) null else adj.get(o)
+        if (outs != null) outs.foreach(o2 => add((s, o2), next))
+      }
+      if (doubling) next.foreach { case (s, o) => link(adj, s, o) }
+      delta = next
+    }
+    if (delta.nonEmpty) throw new IllegalStateException(liveFrontier(what, maxIterations))
+    if (prefix.isEmpty) seen.iterator
+    else {
+      val byObj = new Index()
+      prefix.foreach { case (s, o) => link(byObj, o, s) }
+      val out = mutable.HashSet.empty[(String, String)]
+      out ++= prefix
+      out ++= seen
+      seen.foreach { case (xs, xo) =>
+        val pres = if (xs == null) null else byObj.get(xs)
+        if (pres != null) pres.foreach { cs =>
+          out.add((cs, xo))
+          if (out.size > maxPairs) AdaptiveStrategy.overflow()
+        }
+      }
+      out.iterator
+    }
   }
 
-  /** The distributed one-hop semi-naive loop (the pre-threshold shape). */
-  private def seminaiveClosureDistributed(edgesRaw: DataFrame, seed: DataFrame,
-                                          maxIterations: Int, what: String): DataFrame = {
-    val edges = edgesRaw.select(col("s").as("e_s"), col("o").as("e_o"))
-    var seen = seed.select(col("s"), col("o")).distinct().localCheckpoint()
-    var delta = seen
+  /** The distributed closure loop: each round joins the last round's NOVEL
+    * pairs (delta) against the hop relation — the EDGES for a seeded
+    * closure (one-hop semi-naive, per-round cost O(|Δ ⋈ E|)), the closure
+    * SO FAR for a full one. Novelty is a left-anti against `seen`, the
+    * union of checkpointed accepted deltas (disjoint by construction —
+    * shallow lineage, no growing-plan recompute); cycles terminate
+    * naturally.
+    *
+    * Full closure is semi-naive PATH DOUBLING (the "smart" TC of
+    * Valduriez & Boral / Ioannidis: `T_{k+1} = T_k ∪ (Δ_k ∘ T_k)`), so
+    * the covered path length doubles per round — ceil(log₂ d) + 1 rounds
+    * for diameter d, against d rounds of one-hop expansion. Correctness of
+    * the semi-naive restriction: a pair whose shortest path length L lands
+    * in (2^{k-1}, 2^k] splits at its midpoint into a prefix that was NOVEL
+    * in round k−1 and a suffix already in the closure, so `Δ ∘ closure`
+    * derives every new pair. Trade-off: each round shuffles the
+    * accumulated closure instead of the edge slice, and a pair with many
+    * midpoints is derived once per midpoint before the distinct; what it
+    * buys is rounds — every round is a shuffle barrier whose scheduler
+    * floor is paid serially, and the long-diameter closures this engine
+    * runs (org trees, crawl chains) pay log₂ d barriers instead of d.
+    */
+  private def closureLoop(edges: DataFrame, seed: DataFrame, doubling: Boolean,
+                          maxIterations: Int, what: String): DataFrame = {
+    var seen = seed
+    var delta = seed
     var frontierLive = !delta.isEmpty
     var iter = 0
     while (iter < maxIterations && frontierLive) {
       iter += 1
-      val novel = delta.join(edges, col("o") === col("e_s"))
-        .select(col("s"), col("e_o").as("o"))
-        .distinct().as("d")
-        .join(seen.as("a"),
-          col("d.s") === col("a.s") && col("d.o") === col("a.o"), "left_anti")
+      // renamed projections, not aliases: a doubling round 1 composes
+      // `seen` with ITSELF, and the anti-join's left side derives from
+      // `seen` too — alias-based column refs cannot disambiguate a true
+      // self-join
+      val hop = (if (doubling) seen else edges).select(col("s").as("h_s"), col("o").as("h_o"))
+      val novel = delta.join(hop, col("o") === col("h_s"))
+        .select(col("s"), col("h_o").as("o"))
+        .distinct()
+        // null-safe: a pair with a NULL endpoint (it extends nothing, but
+        // surfaces) must match itself, or it stays "novel" every round
+        .join(seen.select(col("s").as("a_s"), col("o").as("a_o")),
+          col("s") <=> col("a_s") && col("o") <=> col("a_o"), "left_anti")
+        .select(col("s"), col("o"))
         .localCheckpoint()
       delta = novel
-      // one emptiness probe per iteration (the while-condition reuses it)
+      // one emptiness probe per round (the while-condition reuses it)
       frontierLive = !novel.isEmpty
       // accepted deltas are disjoint and individually checkpointed, so the
       // running union stays shallow-lineage and duplicate-free
       if (frontierLive) seen = seen.union(novel)
     }
-    if (frontierLive)
-      throw new IllegalStateException(
-        s"path closure ($what) frontier still live after $maxIterations iterations " +
-          "— raise maxIterations; a truncated closure would be silently wrong")
+    if (frontierLive) throw new IllegalStateException(liveFrontier(what, maxIterations))
     seen
   }
 
-  /** Edge-count threshold below which a closure runs as ONE in-memory task
-    * — the same size-adaptive escape hatch [[ConnectedComponents.run]]
-    * documents for its union–find path, for the same reason: the
-    * distributed fixpoint costs `rounds × jobs/round × fixed scheduler
-    * latency` regardless of data volume, and below this threshold that
-    * driver-side tax dominates while every task is trivially small.
-    * 500k string edges is ~25 MB in one task; the derived pair set is
-    * additionally capped by [[SingleTaskClosureMaxPairs]] — a degenerate
-    * graph (a long chain closes quadratically) overflows the cap and falls
-    * back to the distributed loop instead of eating the task heap.
-    */
-  // vars, not vals: the distributed-path parity specs force the
-  // distributed strategies by dropping the thresholds to 0 (and restore
-  // them) — production code never writes these
-  private[spark] var SingleTaskClosureMaxEdges: Long = 500000L
-  private[spark] var SingleTaskClosureMaxPairs: Long = 20000000L
-
-  private val OverflowMarker = "graft-single-task-closure-overflow"
-
-  /** Try the single-task in-memory closure; None when the edge count is
-    * over the threshold or the pair cap overflowed (caller falls back to
-    * the distributed loop). SEEDED closures run the same one-hop
-    * semi-naive expansion as [[seminaiveClosureDistributed]]; FULL
-    * closures run semi-naive DOUBLING (novel pairs join the adjacency, so
-    * covered path length doubles per round) — the same round semantics as
-    * [[fullClosureDoubling]], so the `maxIterations` live-frontier
-    * contract agrees across the size threshold. Traversal never continues
-    * through a NULL hop node, matching the SQL equi-joins' null
-    * rejection (null-endpoint SEED/edge pairs still surface in the
-    * result, as they do distributed — they just extend nothing).
-    */
-  private def singleTaskClosure(edges: DataFrame, seed: Option[DataFrame],
-                                maxIterations: Int, what: String): Option[DataFrame] = {
-    if (edges.count() > SingleTaskClosureMaxEdges) return None
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val hasSeed = seed.isDefined
-    val tagged = edges.select(lit(0).as("t"), col("s"), col("o"))
-    val input = seed match {
-      case Some(sd) => tagged.unionByName(sd.select(lit(1).as("t"), col("s"), col("o")))
-      case None => tagged
-    }
-    val maxPairs = SingleTaskClosureMaxPairs
-    val out = input.as[(Int, String, String)].coalesce(1).mapPartitions { it =>
-      val adj = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
-      def addEdge(s: String, o: String): Unit = {
-        var buf = adj.get(s)
-        if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[String]; adj.put(s, buf) }
-        buf += o
-      }
-      val seen = scala.collection.mutable.HashSet.empty[(String, String)]
-      var delta = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      it.foreach { case (t, s, o) =>
-        if (t == 0) {
-          addEdge(s, o)
-          if (!hasSeed && seen.add((s, o))) delta += ((s, o))
-        } else if (seen.add((s, o))) delta += ((s, o))
-      }
-      var iter = 0
-      while (delta.nonEmpty && iter < maxIterations) {
-        iter += 1
-        val next = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-        delta.foreach { case (s, o) =>
-          if (o != null) { // a NULL hop node joins nothing (SQL equi-join parity)
-            val outs = adj.get(o)
-            if (outs != null) outs.foreach { o2 =>
-              if (seen.add((s, o2))) next += ((s, o2))
-            }
-          }
-        }
-        if (seen.size > maxPairs)
-          throw new IllegalStateException(OverflowMarker)
-        // FULL closure: doubling — the accepted novel pairs join the
-        // adjacency, so the next round composes against the closure so
-        // far (T_k), not just the edges
-        if (!hasSeed) next.foreach { case (s, o) => addEdge(s, o) }
-        delta = next
-      }
-      if (delta.nonEmpty)
-        throw new IllegalStateException(
-          s"path closure ($what) frontier still live after $maxIterations iterations " +
-            "— raise maxIterations; a truncated closure would be silently wrong")
-      seen.iterator
-    }.toDF("s", "o")
-    // materialize HERE so a pair-cap overflow (or the live-frontier throw)
-    // surfaces now, unwrapped from Spark's task-failure envelope
-    SingleTaskFallback.materialize(out, OverflowMarker, "frontier still live")
-  }
-
-  /** Full transitive closure by semi-naive PATH DOUBLING (the "smart" TC of
-    * Valduriez & Boral / Ioannidis: `T_{k+1} = T_k ∪ (Δ_k ∘ T_k)`): round k
-    * composes the last round's NOVEL pairs with the whole closure-so-far,
-    * so the covered path length doubles per round — ceil(log₂ d) + 1
-    * rounds for diameter d, against d rounds of one-hop expansion.
-    * Correctness of the semi-naive restriction: a pair whose shortest path
-    * length L lands in (2^{k-1}, 2^k] splits at its midpoint into a prefix
-    * of length ⌈L/2⌉ ∈ (2^{k-2}, 2^{k-1}] — i.e. a pair that was NOVEL in
-    * round k−1 — and a suffix already in the closure, so `Δ ∘ closure`
-    * derives every new pair and the fixpoint is the exact transitive
-    * closure (same pair set as one-hop semi-naive, verified by the
-    * recursive-CTE oracles).
-    *
-    * Trade-off (guide §1.2 — algorithm first): each round shuffles the
-    * accumulated closure instead of the edge slice, and a pair with many
-    * midpoints is derived once per midpoint before the distinct — doubling
-    * does O(log d) times more join work than one-hop expansion in the
-    * worst case. What it buys is rounds: every round is a full shuffle
-    * barrier whose scheduler/latency floor is paid serially (at bench
-    * scale that floor IS the cost; on a cluster a deep closure pays d
-    * barriers of stragglers). For the long-diameter closures this engine
-    * actually runs (org trees, crawl chains — d ≈ log n or worse), log₂ d
-    * barriers wins at every scale we can measure. Bound-endpoint closures
-    * keep one-hop [[seminaiveClosure]]: their frontier is a cone slice,
-    * and composing it with a full closure would drag in pairs outside the
-    * cone.
-    */
-  private def fullClosure(edgesIn: DataFrame, maxIterations: Int,
-                          what: String): DataFrame = {
-    val e = edgesIn.select(col("s"), col("o")).distinct().localCheckpoint()
-    singleTaskClosure(e, None, maxIterations, what)
-      .getOrElse(fullClosureDoubling(e, maxIterations, what))
-  }
-
-  private def fullClosureDoubling(edgesIn: DataFrame, maxIterations: Int,
-                                  what: String): DataFrame = {
-    var seen = edgesIn
-    var delta = seen
-    var frontierLive = !delta.isEmpty
-    var iter = 0
-    while (iter < maxIterations && frontierLive) {
-      iter += 1
-      // renamed projections, not aliases: round 1 composes `seen` with
-      // ITSELF, and the anti-join's left side derives from `seen` too —
-      // alias-based column refs cannot disambiguate a true self-join
-      val suffix = seen.select(col("s").as("c_s"), col("o").as("c_o"))
-      val novel = delta.join(suffix, col("o") === col("c_s"))
-        .select(col("s"), col("c_o").as("o"))
-        .distinct()
-        .join(seen.select(col("s").as("a_s"), col("o").as("a_o")),
-          col("s") === col("a_s") && col("o") === col("a_o"), "left_anti")
-        .select(col("s"), col("o"))
-        .localCheckpoint()
-      delta = novel
-      frontierLive = !novel.isEmpty
-      // the union of individually-checkpointed disjoint deltas: shallow
-      // lineage, no re-materialization of the whole closure per round
-      if (frontierLive) seen = seen.union(novel)
-    }
-    if (frontierLive)
-      throw new IllegalStateException(
-        s"path closure ($what) frontier still live after $maxIterations iterations " +
-          "— raise maxIterations; a truncated closure would be silently wrong")
-    seen
-  }
+  private def liveFrontier(what: String, maxIterations: Int): String =
+    s"path closure ($what) frontier still live after $maxIterations iterations " +
+      "— raise maxIterations; a truncated closure would be silently wrong"
 
   // --------------------------------------------------------------------
   // SPARQL 1.1 property-path algebra
@@ -946,7 +833,7 @@ object GraphQuery {
     * layout; [[Path.Inv]] is a column swap (free); [[Path.Chain]] is a
     * chain of co-partitioned equi-joins on the hop node; [[Path.Alt]] is a
     * metadata-only union of independently-pruned scans; [[Path.Plus]] runs
-    * the [[seminaiveClosure]] fixpoint. [[Path.Star]]/[[Path.Opt]] with
+    * the [[closure]] fixpoint. [[Path.Star]]/[[Path.Opt]] with
     * BOTH endpoints unbound must emit the zero-length pair of every graph
     * node (SPARQL's ZeroLengthPath) — a full node-set scan; bind an
     * endpoint when you don't need that.
@@ -1050,14 +937,14 @@ object GraphQuery {
         val edges = pathFrame(g, p, None, None, maxIter).distinct()
         (src, dst) match {
           case (Some(v), d) =>
-            val cone = seminaiveClosure(edges,
-              edges.filter(col("s") === v), maxIter, render(path))
+            val cone = closure(edges, Some(edges.filter(col("s") === v)), maxIter,
+              render(path))
             d.map(w => cone.filter(col("o") === w)).getOrElse(cone)
           case (None, Some(w)) => // single-TARGET: explore the reverse cone
             val rev = edges.select(col("o").as("s"), col("s").as("o"))
-            seminaiveClosure(rev, rev.filter(col("s") === w), maxIter, render(path))
+            closure(rev, Some(rev.filter(col("s") === w)), maxIter, render(path))
               .select(col("o").as("s"), col("s").as("o"))
-          case _ => fullClosure(edges, maxIter, render(path))
+          case _ => closure(edges, None, maxIter, render(path))
         }
 
       case Path.Star(p) =>

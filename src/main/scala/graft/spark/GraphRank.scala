@@ -48,56 +48,53 @@ object GraphRank {
 
   /** PageRank over an explicit edge list `(src, dst)`. Returns
     * `(node, rank_micros)` for every node appearing as src or dst.
+    *
+    * Size-adaptive through [[AdaptiveStrategy.run]]: at or under the
+    * pagerank edge limit the power iteration runs as one in-memory task
+    * (the distributed loop costs iters × jobs × scheduler latency
+    * regardless of data volume). The arithmetic is exact commutative
+    * integer math, so the two strategies are bit-identical by construction.
     */
   def pagerank(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     // lazy checkpoint + count: one action materializes the edge slice AND
-    // yields the size that picks the physical strategy — the same
-    // size-adaptive escape hatch as ConnectedComponents/GraphQuery (the
-    // distributed loop costs iters x jobs x scheduler latency regardless
-    // of data volume; the arithmetic is exact commutative integer math,
-    // so the two paths are bit-identical by construction)
+    // yields the size that picks the strategy
     val e0 = edges.select(col("src"), col("dst")).localCheckpoint(eager = false)
-    if (e0.count() <= SingleTaskMaxEdges) return pagerankSingleTask(e0, iters)
-    pagerankDistributed(e0, iters)
-  }
-
-  /** var, not val: the distributed-path parity spec forces the
-    * distributed strategy by dropping this to 0 (and restores it).
-    */
-  private[spark] var SingleTaskMaxEdges: Long = 500000L
-
-  private def pagerankSingleTask(e0: DataFrame, iters: Int): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    e0.as[(String, String)].coalesce(1).mapPartitions { it =>
-      val srcs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      val outdeg = new java.util.HashMap[String, Long]()
-      val nodes = scala.collection.mutable.LinkedHashSet.empty[String]
-      it.foreach { case (s, d) =>
-        srcs += ((s, d))
-        outdeg.merge(s, 1L, (a, b) => a + b)
-        nodes += s; nodes += d
+    AdaptiveStrategy.run("GraphRank.pagerank", e0.count(),
+        AdaptiveStrategy.limits.pagerankEdges, e0.as[(String, String)])(
+      pagerankKernel(_, iters))(
+      pagerankDistributed(e0, iters).as[(String, Long)]).toDF("node", "rank_micros")
+  }
+
+  private def pagerankKernel(it: Iterator[(String, String)], iters: Int): Iterator[(String, Long)] = {
+    val srcs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val outdeg = new java.util.HashMap[String, Long]()
+    val nodes = scala.collection.mutable.LinkedHashSet.empty[String]
+    it.foreach { case (s, d) =>
+      srcs += ((s, d))
+      outdeg.merge(s, 1L, (a, b) => a + b)
+      nodes += s; nodes += d
+    }
+    val r = new java.util.HashMap[String, Long]()
+    nodes.foreach(n => r.put(n, UnitMicros))
+    var i = 0
+    while (i < iters) {
+      i += 1
+      val contrib = new java.util.HashMap[String, Long]()
+      srcs.foreach { case (s, d) =>
+        val rs = r.get(s)
+        if (rs > MaxSafeRankMicros)
+          throw new IllegalStateException(
+            "pagerank rank overflow: a node rank exceeds Long.MaxValue/damp — rescale UnitMicros")
+        contrib.merge(d, (rs * DampPpm) / (outdeg.get(s) * UnitMicros), (a, b) => a + b)
       }
-      val r = new java.util.HashMap[String, Long]()
-      nodes.foreach(n => r.put(n, UnitMicros))
-      var i = 0
-      while (i < iters) {
-        i += 1
-        val contrib = new java.util.HashMap[String, Long]()
-        srcs.foreach { case (s, d) =>
-          val rs = r.get(s)
-          if (rs > MaxSafeRankMicros)
-            throw new IllegalStateException(
-              "pagerank rank overflow: a node rank exceeds Long.MaxValue/damp — rescale UnitMicros")
-          contrib.merge(d, (rs * DampPpm) / (outdeg.get(s) * UnitMicros), (a, b) => a + b)
-        }
-        nodes.foreach { n =>
-          r.put(n, (UnitMicros - DampPpm) + contrib.getOrDefault(n, 0L))
-        }
+      nodes.foreach { n =>
+        r.put(n, (UnitMicros - DampPpm) + contrib.getOrDefault(n, 0L))
       }
-      nodes.iterator.map(n => (n, r.get(n)))
-    }.toDF("node", "rank_micros")
+    }
+    nodes.iterator.map(n => (n, r.get(n)))
   }
 
   private def pagerankDistributed(e0: DataFrame, iters: Int): DataFrame = {

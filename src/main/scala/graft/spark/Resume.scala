@@ -56,7 +56,8 @@ object Resume {
     *                     unattributable to a bucket AND semantically wrong
     *                     under partial resume (a later run would close
     *                     over only the missing buckets' rows); the write
-    *                     fails fast on the first null-lineage row — run
+    *                     fails fast on the first row whose conv_id is null
+    *                     or hashes outside the pending buckets — run
     *                     such transforms over the COMPLETED table instead
     *                     (the ExtractMain --entail persist pattern).
     */
@@ -74,23 +75,26 @@ object Resume {
     val todo = all.filterNot(done)
     if (todo.isEmpty) return Summary(Nil, all, 0L)
 
-    val bucketed = transcripts
-      .withColumn("bucket", pmod(crc32(col("conv_id")), lit(nBuckets)))
-      .filter(col("bucket").isin(todo: _*))
-    // a null conv_id (a cross-row transform's derived lineage) would land
-    // in the Hive default partition OUTSIDE the manifest protocol — a
-    // partial resume then silently replaces it with a subset. Failing the
-    // WRITE JOB on the first such row keeps the run atomic: a failed
-    // dynamic-overwrite job commits no partitions and no manifest marks.
+    val bucket = pmod(crc32(col("conv_id")), lit(nBuckets))
+    val bucketed = transcripts.withColumn("bucket", bucket).filter(col("bucket").isin(todo: _*))
+    // every output row must land in one of THIS run's pending buckets. A
+    // null conv_id (a cross-row transform's derived lineage) would land in
+    // the Hive default partition outside the manifest protocol, and a
+    // conv_id rewritten into an already-committed bucket would make the
+    // dynamic overwrite silently replace that bucket with only the moved
+    // rows. Failing the WRITE JOB on the first such row keeps the run
+    // atomic: a failed dynamic-overwrite job commits no partitions and no
+    // manifest marks.
     val triples = transform(
         ExtractPipeline.extract(bucketed.drop("bucket"), registry, basePrefix,
           errorCounter, uriOptions))
       .withColumn("bucket",
-        coalesce(pmod(crc32(col("conv_id")), lit(nBuckets)),
-          raise_error(lit("writeWithResume: transform emitted a row without " +
-            "conv_id lineage — per-bucket resume needs row-local transforms; " +
-            "run cross-row transforms (entailment closure) over the " +
-            "completed table instead")).cast("bigint")))
+        when(bucket.isin(todo: _*), bucket).otherwise(
+          raise_error(lit("writeWithResume: transform emitted a row whose conv_id " +
+            "lineage is null or outside this run's pending buckets — per-bucket " +
+            "resume needs row-local transforms that keep each row's conv_id; run " +
+            "cross-row transforms (entailment closure) over the completed table " +
+            "instead")).cast("bigint")))
 
     // dynamic overwrite (writer-scoped option, not a session-wide conf):
     // replaces only the partitions being (re)written, so a half-written

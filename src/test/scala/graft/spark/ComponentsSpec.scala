@@ -10,6 +10,11 @@ class ComponentsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** Connected components forced through the distributed loop. */
+  private def distributedCC(edges: org.apache.spark.sql.DataFrame, maxIterations: Int = 64) =
+    AdaptiveStrategy.withLimits(AdaptiveStrategy.Limits.ForceDistributed)(
+      ConnectedComponents.run(edges, maxIterations))._1
+
   test("EntityStats salted two-phase equals direct groupBy") {
     val triples = ExtractPipeline.extract(Transcripts.synthetic(spark, 500, 20))
     val salted = EntityStats.bySubject(triples, salt = 8).collect()
@@ -325,7 +330,7 @@ class ComponentsSpec extends AnyFunSuite {
     assert(cc.map(_.getString(1)).distinct.toSeq == Seq("n1"))
     assert(cc.length == 10)
     // forced distributed loop must agree exactly
-    val ccDist = ConnectedComponents.run(edges, unionFindMaxEdges = 0).collect()
+    val ccDist = distributedCC(edges).collect()
     assert(ccDist.map(r => (r.getString(0), r.getString(1))).toSet ==
       cc.map(r => (r.getString(0), r.getString(1))).toSet)
     // two disjoint chains → two components
@@ -365,7 +370,7 @@ class ComponentsSpec extends AnyFunSuite {
     // a linear-propagation implementation would need ~511 and fail here
     val n = 512
     val edges = (1 until n).map(i => (f"v$i%04d", f"v${i + 1}%04d")).toDF("src", "dst")
-    val cc = ConnectedComponents.run(edges, maxIterations = 14, unionFindMaxEdges = 0)
+    val cc = distributedCC(edges, maxIterations = 14)
       .collect()
     assert(cc.length == n)
     assert(cc.map(_.getString(1)).distinct.toSeq == Seq("v0001"))
@@ -385,7 +390,7 @@ class ComponentsSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       intercept[IllegalStateException] {
-        ConnectedComponents.run(edges, maxIterations = 1, unionFindMaxEdges = 0).count()
+        distributedCC(edges, maxIterations = 1).count()
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
@@ -400,7 +405,7 @@ class ComponentsSpec extends AnyFunSuite {
       .toDF("src", "dst")
     val uf = ConnectedComponents.run(edges).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    val dist = ConnectedComponents.run(edges, unionFindMaxEdges = 0).collect()
+    val dist = distributedCC(edges).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(uf == dist)
     assert(uf.map(_._2) == Set("a�")) // the UTF-8 byte-order min
@@ -416,7 +421,7 @@ class ComponentsSpec extends AnyFunSuite {
     } ++ (0 until 10).map(i => (f"v$i%03d", f"v$i%03d"))).toDF("src", "dst")
     val uf = ConnectedComponents.run(edges).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    val dist = ConnectedComponents.run(edges, unionFindMaxEdges = 0).collect()
+    val dist = distributedCC(edges).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(uf == dist)
     // every component label is the min of its members

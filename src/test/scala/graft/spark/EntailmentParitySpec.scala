@@ -4,12 +4,13 @@ import graft.model.Triple
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The rewrite fixpoint has two physical strategies (single in-memory task
-  * under [[Entailment.SingleTaskMaxFacts]], distributed semi-naive above).
+  * at or under the entailment fact limit of [[AdaptiveStrategy.Limits]],
+  * distributed semi-naive above).
   * This spec pins the SINGLE-TASK path's rule semantics against
   * hand-checked expectations (every rule kind, chained targets, literal
   * carry, derived-schema-edge replay, incremental == scratch);
   * [[DistributedPathParitySpec]] forces the distributed strategies via
-  * the threshold seams and asserts the two paths agree bit-for-bit.
+  * the [[AdaptiveStrategy.withLimits]] seam and asserts the paths agree.
   */
 class EntailmentParitySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
