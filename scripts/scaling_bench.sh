@@ -4,11 +4,12 @@
 # -XX:ActiveProcessorCount=<cpus> and ParallelGC young gen proportional to
 # the simulated core count, so GC capacity scales with mutator parallelism
 # exactly as it would across real executors.
-# Usage: scripts/scaling_bench.sh [nTurns]   (default 4,000,000)
+# Usage: scripts/scaling_bench.sh [nTurns]   (default 4,000,000), after
+# `sbt compile` in this checkout (its target/ classes are what runs).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 TURNS="${1:-4000000}"
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+CP="$PWD/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 
 run_level() {
@@ -17,7 +18,7 @@ run_level() {
   local heap=$(( yg * 2 + 8 ))
   java -Xmx${heap}g -Xmn${yg}g -XX:+UseParallelGC -XX:ActiveProcessorCount="$cpus" $ADD_OPENS \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" graft.ScalingBench single "$cpus" "$TURNS" 2>/dev/null | tail -1
+    -cp "$CP" graft.Diag scaling "$cpus" "$TURNS" 2>/dev/null | tail -1
 }
 
 # the sandbox VM shares a noisy hypervisor: interleave two fresh-JVM

@@ -88,31 +88,28 @@ object Bench {
       if (only.isDefined) (0L, 0.0) else extractionThroughput(spark, nTurns)
     val tps = if (extractSecs > 0) (triples / extractSecs).toLong else 0L
 
-    // stored-hyperplane vs portable-LCG LSH bucketing (same bits — spec
-    // asserts identity; this line evidences the deployment path's speedup).
-    // Bucketing stage only (the downstream candidate join is identical),
-    // measured BEFORE the query loop: after ~150 generated query plans the
-    // JVM code cache fills and fresh codegen can run deoptimized, which
-    // once inflated the LCG side ~9x vs its standalone timing.
-    import org.apache.spark.sql.functions.{col, substring_index, size => asize, sum => asum}
+    // portable-LCG LSH bucketing stage (the downstream candidate join is
+    // timed by sim_lsh_pairs), measured BEFORE the query loop: after ~150
+    // generated query plans the JVM code cache fills and fresh codegen can
+    // run deoptimized, which once inflated this stage ~9x vs its standalone
+    // timing.
+    import org.apache.spark.sql.functions.{col, substring_index, sum => asum}
     // whole block failure-tolerant like the per-query loop: a missing or
     // empty embeddings table must not abort the bench (−1 marks the line
     // unusable)
-    val (lshLcg, lshStored) =
-      try if (only.isDefined) (-1.0, -1.0) else {
+    val lshLcg =
+      try if (only.isDefined) -1.0 else {
         val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id").cast("string").as("vec_id"), col("embedding"))
           .localCheckpoint()
-        val dim = embs.select(asize(col("embedding"))).head().getInt(0)
-        def lshSecs(stored: Option[Int]): Double = median((0 until Samples).map { _ =>
+        median((0 until Samples).map { _ =>
           timeIt {
-            graft.ops.VectorOps.lshBuckets(embs, 8, 4, stored)
+            graft.ops.VectorOps.lshBuckets(embs, 8, 4)
               .agg(asum(col("bucket"))).head().getLong(0)
           }._2
         })
-        (lshSecs(None), lshSecs(Some(dim)))
       } catch {
-        case e: Throwable => System.err.println(s"[bench] lsh: $e"); (-1.0, -1.0)
+        case e: Throwable => System.err.println(s"[bench] lsh: $e"); -1.0
       }
 
     // incremental maintenance vs from-scratch: the org tree's transitive
@@ -160,9 +157,8 @@ object Bench {
     val total = results.map(_._2).sum + extractSecs
     val totalStr = f"$total%.3f"
     val exStr = f"$extractSecs%.3f"
-    val lshSpeedup = if (lshLcg > 0 && lshStored > 0) lshLcg / lshStored else -1.0
     val incrSpeedup = if (incrScratch > 0 && incrDelta > 0) incrScratch / incrDelta else -1.0
-    val lshStr = f""""lsh_lcg_secs":$lshLcg%.3f,"lsh_stored_secs":$lshStored%.3f,"lsh_stored_speedup":$lshSpeedup%.2f,"incr_scratch_secs":$incrScratch%.3f,"incr_delta_secs":$incrDelta%.3f,"incr_speedup":$incrSpeedup%.2f"""
+    val lshStr = f""""lsh_lcg_secs":$lshLcg%.3f,"incr_scratch_secs":$incrScratch%.3f,"incr_delta_secs":$incrDelta%.3f,"incr_speedup":$incrSpeedup%.2f"""
     val json =
       s"""{"metric":"total","value":$totalStr,"unit":"sec","samples":$Samples,"queries":$qs,"queries_min":$qsMin,"queries_max":$qsMax,"sf":"$sfDir","extract_turns":$nTurns,"extract_triples":$triples,"extract_secs":$exStr,"triples_per_sec":$tps,$lshStr}"""
     // machine-readable in two redundant ways (round-1 driver parse failed

@@ -1,7 +1,8 @@
 package graft
 
 import graft.core.RegistryIndex
-import graft.spark.{Entailment, ExtractPipeline, GraftSession, Resume, Transcripts}
+import graft.sources.TranscriptSources
+import graft.spark.{Entailment, ExtractPipeline, GraftSession, Resume}
 import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point — the distributed counterpart of the reference
@@ -29,14 +30,10 @@ import org.apache.spark.sql.SparkSession
   * scans. This path is a single atomic saveAsTable overwrite (no
   * per-bucket resume — the catalog swap is the commit point).
   *
-  * `--input synthetic:<nTurns>[:<nConvs>]` substitutes the deterministic
-  * generated corpus (Transcripts.synthetic) for the parquet read — a
-  * data-free smoke/scaling run on any cluster (the generator is
-  * spark.range-driven, so it parallelizes like the real scan).
-  * `--input html:<glob>` reads a directory/glob of raw HTML files (one
-  * document per file — the reference CLI's own input shape) and
-  * `--input jsonl:<path>` reads line-delimited JSON transcripts with the
-  * explicit table schema (no inference pass).
+  * `--input` also takes `synthetic:<nTurns>[:<nConvs>]` (a data-free,
+  * spark.range-driven corpus), `html:<glob>` (one document per file, the
+  * reference CLI's input shape) or `jsonl:<path>` — see
+  * [[graft.sources.TranscriptSources.fromSpec]].
   *
   * Output is written with checkpointed resume (Resume.writeWithResume):
   * re-running after a failure completes only the missing buckets.
@@ -45,30 +42,15 @@ object ExtractMain {
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
-    // spark-submit provides master/conf (respected); local fallback
-    // otherwise. A pre-existing active OR default session is borrowed (a
-    // harness's session may live on another thread) and never stopped here.
-    val preexisting =
-      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = preexisting.getOrElse(
-      GraftSession.fromSubmit(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt))
-    spark.sparkContext.setLogLevel("WARN")
+    // spark-submit provides master/conf (respected); a borrowed session is
+    // never stopped here
+    GraftSession.withSubmitSession((spark, owned) => extract(opts, spark, owned))
+  }
 
+  private def extract(opts: Map[String, String], spark: SparkSession, owned: Boolean): Unit = {
     val registry = opts.get("registry").map(RegistryIndex.fromUri)
       .getOrElse(ExtractPipeline.defaultRegistry)
-    val transcripts = opts("input") match {
-      case s if s.startsWith("synthetic:") =>
-        val parts = s.stripPrefix("synthetic:").split(':')
-        val nTurns = parts(0).toLong
-        val nConvs = if (parts.length > 1) parts(1).toLong
-                     else math.max(nTurns / 20, 1L)
-        Transcripts.synthetic(spark, nTurns, nConvs)
-      case s if s.startsWith("html:") =>
-        graft.sources.TranscriptSources.htmlFiles(spark, s.stripPrefix("html:"))
-      case s if s.startsWith("jsonl:") =>
-        graft.sources.TranscriptSources.jsonlTranscripts(spark, s.stripPrefix("jsonl:"))
-      case path => spark.read.parquet(path)
-    }
+    val transcripts = TranscriptSources.fromSpec(spark, opts("input"))
     val errors = spark.sparkContext.longAccumulator("extract_errors")
 
     require(!(opts.contains("ntriples") && opts.contains("subject-table")),
@@ -124,12 +106,11 @@ object ExtractMain {
       // own session (spark-submit): exit code 2, the CLI contract. Borrowed
       // session (a harness drove main directly): throwing reports the
       // failure WITHOUT killing the host JVM.
-      if (preexisting.isEmpty) { spark.stop(); sys.exit(2) }
+      if (owned) { spark.stop(); sys.exit(2) }
       else sys.error(s"validate: ${errors.value} extraction errors")
     }
     // the reference CLI's self-report (script/parse:98), distributed edition
     println(f"Parsed $written statements in $secs%.2f seconds @ ${written / secs}%.0f statements/second. (errors=${errors.value})")
-    if (preexisting.isEmpty) spark.stop()
   }
 
   private def parseArgs(args: Array[String]): Map[String, String] =

@@ -1,7 +1,8 @@
 package graft
 
 import graft.core.RegistryIndex
-import graft.spark.{ExtractPipeline, GraftSession, IncrementalGraph, Transcripts}
+import graft.sources.TranscriptSources
+import graft.spark.{ExtractPipeline, GraftSession, IncrementalGraph}
 import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the NIGHTLY-CRAWL shape: fold one delta
@@ -24,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   * untouched and the root swap is the storage layer's atomic operation.
   *
   * `--input` accepts the same forms as [[ExtractMain]]
-  * (`synthetic:`/`html:`/`jsonl:`/parquet path). The first run against an
+  * ([[graft.sources.TranscriptSources.fromSpec]]). The first run against an
   * empty root builds every artifact from scratch; later runs fold. Query
   * the standing root with [[QueryMain]] `--graph <root>/graph` (or
   * `<root>/closure`), or through [[graft.spark.IncrementalGraph
@@ -38,12 +39,7 @@ object IncrementalMain {
       required = Seq("root"))._1
     require(opts.contains("input") ^ opts.contains("compact"),
       "exactly one of --input <delta> (fold) or --compact <destRoot> (maintenance) is required")
-    val preexisting =
-      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = preexisting.getOrElse(
-      GraftSession.fromSubmit(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt))
-    spark.sparkContext.setLogLevel("WARN")
-    try {
+    GraftSession.withSubmitSession { (spark, _) =>
       opts.get("compact") match {
         case Some(dest) =>
           val (g, c, l) = IncrementalGraph.compactRoot(spark, opts("root"), dest)
@@ -56,7 +52,7 @@ object IncrementalMain {
             (if (s.newClosureTriples >= 0) s", ${s.newClosureTriples} new closure triples" else "") +
             (if (s.linkStateNodes >= 0) s", link state ${s.linkStateNodes} nodes" else "") + ".")
       }
-    } finally if (preexisting.isEmpty) spark.stop()
+    }
   }
 
   /** Parse-free core so the suite drives the full CLI path without owning
@@ -65,18 +61,7 @@ object IncrementalMain {
   def run(opts: Map[String, String], spark: SparkSession): IncrementalGraph.CrawlSummary = {
     val registry = opts.get("registry").map(RegistryIndex.fromUri)
       .getOrElse(ExtractPipeline.defaultRegistry)
-    val transcripts = opts("input") match {
-      case s if s.startsWith("synthetic:") =>
-        val parts = s.stripPrefix("synthetic:").split(':')
-        val nTurns = parts(0).toLong
-        val nConvs = if (parts.length > 1) parts(1).toLong else math.max(nTurns / 20, 1L)
-        Transcripts.synthetic(spark, nTurns, nConvs)
-      case s if s.startsWith("html:") =>
-        graft.sources.TranscriptSources.htmlFiles(spark, s.stripPrefix("html:"))
-      case s if s.startsWith("jsonl:") =>
-        graft.sources.TranscriptSources.jsonlTranscripts(spark, s.stripPrefix("jsonl:"))
-      case path => spark.read.parquet(path)
-    }
+    val transcripts = TranscriptSources.fromSpec(spark, opts("input"))
     val errors = spark.sparkContext.longAccumulator("extract_errors")
     val uriOpts = graft.core.UriOptions(
       validate = opts.contains("validate-uris"),

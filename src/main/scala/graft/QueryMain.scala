@@ -54,21 +54,9 @@ import org.apache.spark.sql.functions.col
   */
 object QueryMain {
 
-  def main(args: Array[String]): Unit = {
-    // only stop a session THIS main created. Thread-local getActiveSession
-    // alone is not enough: getOrCreate() returns the DEFAULT session even
-    // when it was built on another thread (a host app's session), and
-    // stopping that would kill the host — so a pre-existing default session
-    // also marks the session as borrowed.
-    val preexisting =
-      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = preexisting.getOrElse(
-      GraftSession.fromSubmit(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt))
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val n = run(args, spark)
-      println(s"Matched $n bindings.")
-    } finally if (preexisting.isEmpty) spark.stop()
+  def main(args: Array[String]): Unit = GraftSession.withSubmitSession { (spark, _) =>
+    val n = run(args, spark)
+    println(s"Matched $n bindings.")
   }
 
   /** Parse args, run the BGP, write bindings; returns the row count.

@@ -172,6 +172,12 @@ object SparkEntry {
     s.sparkContext.getPersistentRDDs.valuesIterator
       .foreach(_.unpersist(blocking = false))
 
+  /** The named queries. Contract: ONE query frame live at a time per
+    * session — building a query first unpersists every RDD the session
+    * still holds (see `dropLeftoverBlocks`), so a frame from an earlier
+    * call must be consumed before the next query is built; two query
+    * frames cannot be composed.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (name, fn) =>
       name -> ((s: SparkSession, dir: String) => { dropLeftoverBlocks(s); fn(s, dir) })

@@ -152,8 +152,7 @@ object PortableHash {
     // a NULL embedding — or one with a NULL ELEMENT, which nulls every
     // projection the same way — gets a NULL bucket (dropped by the bucket
     // equi-join), NOT bucket 0: every bit would fall to otherwise(0),
-    // false-pairing the row with all genuine bucket-0 vectors; this also
-    // keeps the LCG and stored-matrix paths in agreement on degenerate rows
+    // false-pairing the row with all genuine bucket-0 vectors
     when(emb.isNotNull && !exists(emb, x => x.isNull), bits)
   }
 
@@ -165,40 +164,5 @@ object PortableHash {
     // NULL element → NULL bucket
     s"(CASE WHEN ($emb) IS NULL OR len(list_filter($emb, gx -> gx IS NULL)) > 0 " +
       s"THEN NULL ELSE $bits END)"
-  }
-
-  /** Scalar twin of [[plane]] (every intermediate is non-negative here, so
-    * `%` and pmod agree) — the ingredient for the stored-matrix path.
-    */
-  def planeValue(k: Long, d: Int): Double = {
-    require(k >= 0, "hyperplane index must be non-negative")
-    val v = ((k % 1000003L) * 8191L + d) * 1103515245L + 12345L
-    ((v % 2000L).toDouble - 1000.0) / 1000.0
-  }
-
-  /** STORED-hyperplane variant of [[lshBucket]] — the deployment fast path.
-    * Same bits, different physics: the plane values are precomputed into
-    * literal double arrays (nBits·dim doubles per table — model-sized plan
-    * literals, shipped once with the plan like a broadcast), so each
-    * projection is one tight codegen'd [[graft.functions.FloatDotProduct]]
-    * loop instead of re-deriving the LCG per element per row. Bit-identical
-    * buckets to the LCG path: identical double plane values, identical
-    * index-order double accumulation (spec-verified) — so the portable-LCG
-    * path remains the oracle-parity twin and this path is a drop-in.
-    * Needs the dimensionality up front (fixed at deployment).
-    */
-  def lshBucketStored(emb: Column, tableId: Int, nBits: Int, dim: Int): Column = {
-    val bits = (0 until nBits).map { b =>
-      val k = tableId.toLong * nBits + b
-      val planeArr = typedlit((0 until dim).map(d => planeValue(k, d)))
-      when(graft.functions.FloatDotProduct(emb, planeArr) >= 0, lit(1L << b))
-        .otherwise(lit(0L))
-    }.reduce(_ + _)
-    // a vector whose length != dim — or with a NULL element, which nulls
-    // the dot products — gets a NULL bucket (dropped by the bucket
-    // equi-join → pairs with nothing), never a silent bucket 0 that would
-    // false-pair it with every bucket-0 vector; the LCG path takes each
-    // vector's own length, so ragged corpora should use that path
-    when(size(emb) === dim && !exists(emb, x => x.isNull), bits)
   }
 }

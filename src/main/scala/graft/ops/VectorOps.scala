@@ -109,8 +109,8 @@ object VectorOps {
     * cosine: precision exact, recall = 1−(1−p^nBits)^nTables per pair.
     */
   def lshBucketedPairs(embs: DataFrame, nBits: Int, nTables: Int,
-                       threshold: Double, storedDim: Option[Int] = None): DataFrame = {
-    val cand = lshCandidates(embs, nBits, nTables, storedDim)
+                       threshold: Double): DataFrame = {
+    val cand = lshCandidates(embs, nBits, nTables)
     val e = withNorm(embs)
     cand
       .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("nrm").as("na")), "vec_a")
@@ -121,41 +121,17 @@ object VectorOps {
   }
 
   /** Per-(vector, table) bucket ids — the LSH bucketing stage, one exploded
-    * codegen'd pass over the corpus.
-    *
-    * `storedDim = Some(d)` switches bucket computation to the precomputed
-    * stored-hyperplane matrix ([[PortableHash.lshBucketStored]]) — same
-    * bits (spec-verified identical), one tight dot-product loop per
-    * hyperplane instead of per-element LCG re-derivation; the default LCG
-    * path stays the oracle-parity twin. The bench reports both timings
-    * (`lsh_lcg_secs` / `lsh_stored_secs`): this stage is where they differ,
-    * the downstream candidate join is byte-identical.
+    * codegen'd pass over the corpus ([[PortableHash.lshBucket]]).
     */
-  def lshBuckets(embsIn: DataFrame, nBits: Int, nTables: Int,
-                 storedDim: Option[Int] = None): DataFrame = {
-    val embs = graft.spark.Parallelism.spread(embsIn)
-    storedDim match {
-      case Some(dim) =>
-        embs.select(col("vec_id"), explode(array((0 until nTables).map { t =>
-            struct(lit(t).as("table_id"),
-              PortableHash.lshBucketStored(col("embedding"), t, nBits, dim).as("bucket"))
-          }: _*)).as("tb"))
-          .select(col("vec_id"), col("tb.table_id").as("table_id"),
-            col("tb.bucket").as("bucket"))
-      case None =>
-        embs.select(col("vec_id"), col("embedding"))
-          .withColumn("table_id", explode(array((0 until nTables).map(lit): _*)))
-          .withColumn("bucket", PortableHash.lshBucket(col("embedding"), col("table_id"), nBits))
-          .select(col("vec_id"), col("table_id"), col("bucket"))
-    }
-  }
+  def lshBuckets(embsIn: DataFrame, nBits: Int, nTables: Int): DataFrame =
+    graft.spark.Parallelism.spread(embsIn).select(col("vec_id"), col("embedding"))
+      .withColumn("table_id", explode(array((0 until nTables).map(lit): _*)))
+      .withColumn("bucket", PortableHash.lshBucket(col("embedding"), col("table_id"), nBits))
+      .select(col("vec_id"), col("table_id"), col("bucket"))
 
-  /** Distinct candidate pairs sharing ≥1 LSH bucket in ≥1 table; see
-    * [[lshBuckets]] for the `storedDim` fast path.
-    */
-  def lshCandidates(embs: DataFrame, nBits: Int, nTables: Int,
-                    storedDim: Option[Int] = None): DataFrame = {
-    val tabled = lshBuckets(embs, nBits, nTables, storedDim)
+  /** Distinct candidate pairs sharing ≥1 LSH bucket in ≥1 table. */
+  def lshCandidates(embs: DataFrame, nBits: Int, nTables: Int): DataFrame = {
+    val tabled = lshBuckets(embs, nBits, nTables)
     tabled.as("x").join(tabled.as("y"),
         col("x.table_id") === col("y.table_id") && col("x.bucket") === col("y.bucket") &&
           col("x.vec_id") < col("y.vec_id"))

@@ -10,6 +10,23 @@ import org.apache.spark.sql.types._
   */
 object TranscriptSources {
 
+  /** The transcript table an `--input` spec names (ExtractMain,
+    * IncrementalMain): `synthetic:<nTurns>[:<nConvs>]` is the generated
+    * corpus of [[graft.spark.Transcripts.synthetic]] (nConvs defaults to
+    * nTurns/20), `html:<glob>` is [[htmlFiles]], `jsonl:<path>` is
+    * [[jsonlTranscripts]], and anything else is a parquet path.
+    */
+  def fromSpec(spark: SparkSession, spec: String): DataFrame = spec match {
+    case s if s.startsWith("synthetic:") =>
+      val parts = s.stripPrefix("synthetic:").split(':')
+      val nTurns = parts(0).toLong
+      val nConvs = if (parts.length > 1) parts(1).toLong else math.max(nTurns / 20, 1L)
+      graft.spark.Transcripts.synthetic(spark, nTurns, nConvs)
+    case s if s.startsWith("html:") => htmlFiles(spark, s.stripPrefix("html:"))
+    case s if s.startsWith("jsonl:") => jsonlTranscripts(spark, s.stripPrefix("jsonl:"))
+    case path => spark.read.parquet(path)
+  }
+
   /** A directory (or glob) of raw HTML files, one document per file — the
     * reference's own input shape (script/parse reads files/URLs;
     * reader.rb:136 initialize accepts an IO per document). Each file

@@ -126,19 +126,6 @@ object ExtractPipeline {
     added.unionByName(removed)
   }
 
-  /** Per-partition lineage + metrics table (north rule observability):
-    * which partition produced how many triples from which conversations.
-    */
-  def lineageMetrics(triples: Dataset[Triple]): DataFrame =
-    triples
-      .withColumn("part_id", spark_partition_id())
-      .groupBy(col("part_id"))
-      .agg(
-        count(lit(1)).as("triples_out"),
-        approx_count_distinct(col("conv_id")).as("approx_convs"),
-        min(col("conv_id")).as("first_conv"),
-        max(col("conv_id")).as("last_conv"))
-
   /** Layout/stats metadata file name inside a writeGraph directory. */
   val LayoutFile = "_graft_layout.json"
 

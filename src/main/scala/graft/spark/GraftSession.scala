@@ -31,6 +31,25 @@ object GraftSession {
     s
   }
 
+  /** Cores for a local session: `SPARK_GRAFT_CPUS`, else the machine's. */
+  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The spark-submit mains' session lifecycle: run `body(spark, owned)`
+    * on a pre-existing active OR default session if there is one — a
+    * harness's or host app's session may live on another thread, and
+    * getOrCreate() would return it anyway — and never stop it; otherwise
+    * on a [[fromSubmit]] session that is stopped afterwards (`owned`).
+    */
+  def withSubmitSession[A](body: (SparkSession, Boolean) => A): A = {
+    val preexisting =
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val spark = preexisting.getOrElse(fromSubmit())
+    spark.sparkContext.setLogLevel("WARN")
+    try body(spark, preexisting.isEmpty)
+    finally if (preexisting.isEmpty) spark.stop()
+  }
+
   /** Session for spark-submit entry points. The launcher owns master and any
     * explicitly-passed conf (it sets them as system properties before main
     * runs), so this builder adds only the graft defaults and never overrides
@@ -41,7 +60,7 @@ object GraftSession {
     * shuffle on a 1000-core cluster idles 80% of it; an explicit
     * `--conf spark.sql.shuffle.partitions=N` still wins).
     */
-  def fromSubmit(localFallbackCpus: Int): SparkSession = {
+  def fromSubmit(): SparkSession = {
     val graftDefaults = Seq(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
@@ -58,8 +77,8 @@ object GraftSession {
       // running local on the driver machine
       case Some(master) => b = b.master(master)
       case None =>
-        b = b.master(s"local[$localFallbackCpus]")
-          .config("spark.sql.shuffle.partitions", localFallbackCpus.toString)
+        b = b.master(s"local[$localCpus]")
+          .config("spark.sql.shuffle.partitions", localCpus.toString)
           .config("spark.ui.enabled", "false")
     }
     val s = b.getOrCreate()

@@ -22,6 +22,11 @@ object Parallelism {
     *
     * Streaming frames pass through: their partitioning is per-batch and
     * `.rdd` introspection is not available mid-plan.
+    *
+    * For scan-shaped inputs only (a file scan, a checkpoint, a small local
+    * frame): under AQE the `.rdd` partition probe materializes every
+    * upstream exchange of a frame that already shuffles, as extra work
+    * ahead of the query that uses it.
     */
   def spread(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df

@@ -75,50 +75,20 @@ class VectorOpsSpec extends AnyFunSuite {
       s"cartesian leaked into:\n$plan")
   }
 
-  test("stored-hyperplane LSH path: bit-identical buckets and pairs to the LCG path") {
-    val dim = embs.select(size(col("embedding"))).head().getInt(0)
-    // bucket-level identity across every (vector, table)
-    val lcg = VectorOps.lshCandidates(corpus, nBits = 8, nTables = 4)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val stored = VectorOps.lshCandidates(corpus, nBits = 8, nTables = 4,
-        storedDim = Some(dim))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(stored == lcg && lcg.nonEmpty)
-    // end-to-end pair identity (verified cosine included)
-    val pLcg = VectorOps.lshBucketedPairs(corpus, 8, 4, 0.9)
-      .collect().map(_.toSeq).toSet
-    val pStored = VectorOps.lshBucketedPairs(corpus, 8, 4, 0.9, storedDim = Some(dim))
-      .collect().map(_.toSeq).toSet
-    assert(pStored == pLcg && pLcg.nonEmpty)
-  }
-
-  test("stored-hyperplane LSH: ragged vector gets a NULL bucket, never false bucket 0") {
-    import spark.implicits._
-    val df = Seq(("a", Seq(1.0f, 2.0f)), ("b", Seq(1.0f, 2.0f, 3.0f)))
-      .toDF("vec_id", "embedding")
-    val rows = VectorOps.lshBuckets(df, nBits = 4, nTables = 1, storedDim = Some(3))
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
-    assert(rows("a").isEmpty, "wrong-dim vector must not land in a real bucket")
-    assert(rows("b").nonEmpty)
-  }
-
-  test("NULL embedding gets a NULL bucket on BOTH paths (stored/LCG parity on degenerate rows)") {
+  test("NULL embedding gets a NULL bucket, never false bucket 0") {
     import spark.implicits._
     val df = Seq(("a", null: Seq[Float]), ("b", Seq(1.0f, 2.0f, 3.0f)))
       .toDF("vec_id", "embedding")
-    for (storedDim <- Seq(None, Some(3))) {
-      val rows = VectorOps.lshBuckets(df, nBits = 4, nTables = 2, storedDim = storedDim)
-        .collect().map(r => r.getString(0) ->
-          (if (r.isNullAt(2)) None else Some(r.getLong(2))))
-      val byId = rows.groupBy(_._1)
-      assert(byId("a").forall(_._2.isEmpty),
-        s"null embedding must bucket to NULL (storedDim=$storedDim), not pair with bucket 0")
-      assert(byId("b").forall(_._2.nonEmpty))
-    }
+    val rows = VectorOps.lshBuckets(df, nBits = 4, nTables = 2)
+      .collect().map(r => r.getString(0) ->
+        (if (r.isNullAt(2)) None else Some(r.getLong(2))))
+    val byId = rows.groupBy(_._1)
+    assert(byId("a").forall(_._2.isEmpty),
+      "null embedding must bucket to NULL, not pair with bucket 0")
+    assert(byId("b").forall(_._2.nonEmpty))
   }
 
-  test("embedding with a NULL ELEMENT gets a NULL bucket on BOTH paths") {
+  test("embedding with a NULL ELEMENT gets a NULL bucket") {
     // a null element nulls every dot product, so without the guard each bit
     // would fall to otherwise(0) and the row would false-pair with every
     // genuine bucket-0 vector
@@ -127,15 +97,12 @@ class VectorOpsSpec extends AnyFunSuite {
         expr("array(cast(1.0 as float), cast(null as float), cast(3.0 as float))").as("embedding"))
       .unionByName(one.select(lit("b").as("vec_id"),
         expr("array(cast(1.0 as float), cast(2.0 as float), cast(3.0 as float))").as("embedding")))
-    for (storedDim <- Seq(None, Some(3))) {
-      val rows = VectorOps.lshBuckets(df, nBits = 4, nTables = 2, storedDim = storedDim)
-        .collect().map(r => r.getString(0) ->
-          (if (r.isNullAt(2)) None else Some(r.getLong(2))))
-      val byId = rows.groupBy(_._1)
-      assert(byId("a").forall(_._2.isEmpty),
-        s"null-element embedding must bucket to NULL (storedDim=$storedDim)")
-      assert(byId("b").forall(_._2.nonEmpty))
-    }
+    val rows = VectorOps.lshBuckets(df, nBits = 4, nTables = 2)
+      .collect().map(r => r.getString(0) ->
+        (if (r.isNullAt(2)) None else Some(r.getLong(2))))
+    val byId = rows.groupBy(_._1)
+    assert(byId("a").forall(_._2.isEmpty), "null-element embedding must bucket to NULL")
+    assert(byId("b").forall(_._2.nonEmpty))
   }
 
   test("near-dup groups pair every original with exactly its copy") {

@@ -68,4 +68,44 @@ class SourcesSpec extends AnyFunSuite {
       key(ExtractPipeline.extract(spark.read.parquet(pq)).toDF()))
     assert(ExtractPipeline.extract(df).count() > 0)
   }
+
+  test("fromSpec: synthetic, html, jsonl and parquet inputs through the one parser") {
+    val dir = Files.createTempDirectory("graftspec")
+    def nameTypes(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    val transcript = TranscriptSources.transcriptSchema.map(f => f.name -> f.dataType)
+    def convs(df: org.apache.spark.sql.DataFrame) = df.select("conv_id").distinct().count()
+
+    // nConvs defaults to nTurns/20
+    val synth = TranscriptSources.fromSpec(spark, "synthetic:200")
+    assert(synth.count() == 200 && convs(synth) == 10)
+    assert(nameTypes(synth) == transcript)
+    val synthC = TranscriptSources.fromSpec(spark, "synthetic:200:5")
+    assert(synthC.count() == 200 && convs(synthC) == 5)
+    assert(nameTypes(synthC) == transcript)
+
+    val html = Files.createDirectory(dir.resolve("html"))
+    Seq("example1", "example2").foreach { g =>
+      Files.copy(Paths.get(s"src/test/resources/golden/$g.html"), html.resolve(s"$g.html"))
+    }
+    Files.writeString(html.resolve("notes.txt"), "not html")
+    val fromHtml = TranscriptSources.fromSpec(spark, s"html:$html")
+    assert(fromHtml.count() == 2)
+    assert(nameTypes(fromHtml) == Seq("conv_id" -> org.apache.spark.sql.types.StringType,
+      "turn_idx" -> org.apache.spark.sql.types.IntegerType,
+      "text" -> org.apache.spark.sql.types.StringType,
+      "base" -> org.apache.spark.sql.types.StringType))
+
+    val jsonl = dir.resolve("t.jsonl")
+    Files.writeString(jsonl, Seq(
+      """{"conv_id":"c1","turn_idx":0,"role":"user","text":"hi","tool":null,"ts":"2026-01-01T00:00:00Z"}""",
+      """{"conv_id":"c2","turn_idx":0,"role":"user","text":"yo","tool":null,"ts":"2026-01-01T00:01:00Z"}"""
+    ).mkString("\n"))
+    val fromJsonl = TranscriptSources.fromSpec(spark, s"jsonl:$jsonl")
+    assert(fromJsonl.count() == 2 && nameTypes(fromJsonl) == transcript)
+
+    val pq = dir.resolve("pq").toString
+    synthC.write.parquet(pq)
+    val fromParquet = TranscriptSources.fromSpec(spark, pq)
+    assert(fromParquet.count() == 200 && nameTypes(fromParquet) == transcript)
+  }
 }

@@ -383,8 +383,9 @@ class ComponentsSpec extends AnyFunSuite {
     // long chain); AQE must be off here because on test-sized data it
     // coalesces the init repartition to ONE partition, where the init is
     // exact and one round legitimately converges. Silent return of the
-    // intermediate labels would be a wrong answer (caught live in CcBench
-    // when a giant-cycle graph exceeded the old default round cap).
+    // intermediate labels would be a wrong answer (caught live by the
+    // components bench, now `graft.Diag cc`, when a giant-cycle graph
+    // exceeded the old default round cap).
     val edges = (1 until 512).map(i => (f"v$i%03d", f"v${i + 1}%03d")).toDF("src", "dst")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
