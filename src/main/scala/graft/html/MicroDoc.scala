@@ -151,6 +151,18 @@ object MicroDoc {
 
   private val RawText = Set("script", "style")
 
+  // HTML integration points (HTML5 tree construction §13.2.6.5): svg
+  // foreignObject/desc/title and the MathML text integration points parse
+  // their content as HTML again; annotation-xml does when its encoding
+  // names an HTML type
+  private val IntegrationPoints = Set("foreignobject", "desc", "title", "mi", "mo", "mn", "ms", "mtext")
+
+  private def isIntegrationPoint(e: Elem): Boolean =
+    IntegrationPoints.contains(e.tag) || (e.tag == "annotation-xml" && {
+      val enc = e.attrRaw("encoding")
+      enc != null && { val l = lowerAscii(enc); l == "text/html" || l == "application/xhtml+xml" }
+    })
+
   /** ASCII-lowercase only when needed — markup is almost always already
     * lowercase, and this runs per tag and attribute name.
     */
@@ -292,10 +304,14 @@ object MicroDoc {
           openElem(e)
           // HTML5 ignores a stray solidus on non-void elements (the tag
           // stays OPEN — Nokogiri::HTML5, the reference's parser, does the
-          // same); only FOREIGN content (svg/math subtrees) honors XML
-          // self-closing syntax
-          val selfCloseForeign = selfClose && (tag == "svg" || tag == "math" ||
-            stack.exists(el => el.tag == "svg" || el.tag == "math"))
+          // same); only FOREIGN content honors XML self-closing syntax: an
+          // svg/math element, or one whose nearest svg/math/integration-point
+          // ancestor is svg or math (inside foreignObject it is HTML again)
+          val selfCloseForeign = selfClose && (tag == "svg" || tag == "math" || {
+            val at = stack.lastIndexWhere(el =>
+              el.tag == "svg" || el.tag == "math" || isIntegrationPoint(el))
+            at >= 0 && !isIntegrationPoint(stack(at))
+          })
           if (!selfCloseForeign && !VoidTags.contains(tag)) {
             if (RawText.contains(tag)) {
               val close = "</" + tag

@@ -6,10 +6,43 @@ import org.apache.spark.sql.SparkSession
   * AQE (runtime coalescing + skew-join splitting, the north rule's skew
   * answer for joins), UTC session time (oracle parity), and shuffle
   * partitions sized to the actual core count instead of the 200 default.
+  * On a local master, `file:` is bound to [[InProcessLocalFileSystem]]
+  * (no forked `chmod` per written file) unless a binding was already set.
   */
 object GraftSession {
-  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    SparkSession.builder()
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
+
+  /** Hadoop's own `file:` implementation key, as a Spark conf entry. */
+  val FileImplKey = "spark.hadoop.fs.file.impl"
+
+  /** The `file:` binding a session on `master` gets: [[InProcessLocalFileSystem]]
+    * for a `local`/`local[…]` master, unless `preset` holds a value the
+    * user or spark-submit already set. Cluster masters keep Hadoop's.
+    */
+  def localFileBinding(master: String, preset: Option[String]): Option[(String, String)] =
+    if ((master == "local" || master.startsWith("local[")) && preset.isEmpty)
+      Some(FileImplKey -> classOf[InProcessLocalFileSystem].getName)
+    else None
+
+  /** [[localFileBinding]] with `preset` read from the system properties
+    * (where spark-submit puts `--conf`) and Hadoop's site files; logs the
+    * binding it returns.
+    */
+  private def fileBindingFor(master: String): Option[(String, String)] = {
+    val preset = sys.props.get(FileImplKey).orElse(
+      Option(new org.apache.hadoop.conf.Configuration().get("fs.file.impl")).filter(_.trim.nonEmpty))
+    val binding = localFileBinding(master, preset)
+    binding.foreach { case (_, impl) =>
+      log.info(s"file: bound to $impl on $master (" +
+        (if (InProcessLocalFileSystem.inProcess)
+          "libhadoop absent: permissions set in-process instead of one forked chmod per file)"
+        else "libhadoop loaded or no unix file attributes: permissions go through Hadoop's own call)"))
+    }
+    binding
+  }
+
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
+    val b = SparkSession.builder()
       .master(master)
       .appName("graft-kg")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -24,6 +57,8 @@ object GraftSession {
       // on the extraction stage when it ran after the full bench loop)
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
+    fileBindingFor(master).fold(b) { case (k, v) => b.config(k, v) }
+  }
 
   def local(cpus: Int): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()
@@ -81,6 +116,9 @@ object GraftSession {
           .config("spark.sql.shuffle.partitions", localCpus.toString)
           .config("spark.ui.enabled", "false")
     }
+    val master = sys.props.get("spark.master").orElse(sys.env.get("SPARK_MASTER"))
+      .getOrElse(s"local[$localCpus]")
+    fileBindingFor(master).foreach { case (k, v) => b = b.config(k, v) }
     val s = b.getOrCreate()
     val clustered = submitted || sys.env.contains("SPARK_MASTER")
     if (clustered && !sys.props.contains("spark.sql.shuffle.partitions")) {

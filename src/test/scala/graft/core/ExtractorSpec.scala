@@ -548,4 +548,29 @@ class ExtractorSpec extends AnyFunSuite {
     val v = Extractor.extract(html, "d", null, TestGraph.testRegistry)
     assert(v.triples.exists(t => t.obj == graft.model.Term.Iri("HTTP://Schema.ORG/Person")))
   }
+
+  test("foreign content: inside svg foreignObject a <span/> stays open, as in plain HTML") {
+    check(
+      """<svg><foreignObject><div itemscope><span itemprop="a"/>x</span></div></foreignObject></svg>""",
+      """_:a <#a> "x" .""")
+  }
+
+  test("foreign content: every HTML integration point parses its content as HTML") {
+    val item = """<div itemscope><span itemprop="a"/>x</span></div>"""
+    def value(html: String) = extract(html).triples.map(_.obj)
+    val asHtml = value(item)
+    Seq("<svg><desc>" -> "</desc></svg>", "<svg><title>" -> "</title></svg>",
+        "<math><mi>" -> "</mi></math>", "<math><mo>" -> "</mo></math>",
+        "<math><mn>" -> "</mn></math>", "<math><ms>" -> "</ms></math>",
+        "<math><mtext>" -> "</mtext></math>",
+        """<math><annotation-xml encoding="Text/HTML">""" -> "</annotation-xml></math>",
+        """<math><annotation-xml encoding="application/xhtml+xml">""" -> "</annotation-xml></math>")
+      .foreach { case (open, close) => assert(value(open + item + close) == asHtml, open) }
+    // not an integration point: XML self-closing still applies, the span is empty
+    assert(value("<math><annotation-xml>" + item + "</annotation-xml></math>") ==
+      Seq(graft.model.Term.Lit("")))
+    // svg inside an integration point is foreign again
+    assert(value("<svg><foreignObject><svg>" + item + "</svg></foreignObject></svg>") ==
+      Seq(graft.model.Term.Lit("")))
+  }
 }
