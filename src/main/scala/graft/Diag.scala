@@ -148,11 +148,11 @@ object Diag {
       |entries. The sim_ivf_topk assignment stage is the m>128 broadcast
       |path: the ONLY broadcast build side is the bounded centroid model.
       |The ITERATIVE graph ops (kg_path_reachable's semi-naive frontier,
-      |kg_pagerank's power iteration, kg_entail_trans's outer fixpoint)
-      |checkpoint per iteration, so their final plans are unions/scans of
-      |checkpointed RDDs; their per-iteration join shape is a co-partitioned
-      |equi-join documented in GraphQuery.pathPlus / GraphRank.pagerank /
-      |Entailment.owlEntailWithTransitive scaladoc. Of the query-form plans:
+      |kg_pagerank's power iteration, kg_entail_trans's semi-naive rule
+      |fixpoint) checkpoint per iteration, so their final plans are
+      |unions/scans of checkpointed RDDs; their per-iteration join shape is
+      |documented in GraphQuery.pathPlus / GraphRank.pagerank /
+      |Entailment scaladoc. Of the query-form plans:
       |kg_bgp_union's branches broadcast-join independently off pruned scans
       |(the union itself is metadata-only, the distinct is the one shuffle
       |set semantics demand); kg_bgp_minus/kg_describe end in an anti-/semi-

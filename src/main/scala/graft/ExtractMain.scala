@@ -67,7 +67,7 @@ object ExtractMain {
       val triples = ExtractPipeline.canonicalize(
         ExtractPipeline.extract(transcripts, registry,
           opts.getOrElse("base-prefix", null), errors, uriOpts))
-      if (opts.contains("entail")) Entailment.owlEntailWithTransitive(triples) else triples
+      if (opts.contains("entail")) Entailment.owlEntail(triples) else triples
     }
 
     val t0 = System.nanoTime()

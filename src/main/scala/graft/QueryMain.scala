@@ -98,11 +98,12 @@ object QueryMain {
     val g =
       if (opts.contains("entail")) {
         import spark.implicits._
-        val expanded = graft.spark.Entailment.owlEntailWithTransitive(
+        // already materialized (owlEntail's output contract): no checkpoint
+        val expanded = graft.spark.Entailment.owlEntail(
             g0.df.select(col("subj"), col("pred"), col("obj_iri"),
               col("obj_lexical"), col("obj_datatype"), col("obj_lang"),
               col("conv_id"), col("turn_idx")).as[graft.model.Triple])
-          .toDF().localCheckpoint()
+          .toDF()
         GraphQuery.PersistedGraph(expanded, 0, GraphQuery.predStats(expanded))
       } else g0
     val optGroups = reps.getOrElse("optional", Vector.empty).map(p => Seq(parsePattern(p)))

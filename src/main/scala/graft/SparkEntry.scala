@@ -713,7 +713,7 @@ object SparkEntry {
       val schema = Seq(
         Triple("http://schema.org/reportsTo", Entailment.RdfType,
           Entailment.TransitiveProperty, null, null, null, "schema", -1)).toDS()
-      val g = Entailment.owlEntailWithTransitive(
+      val g = Entailment.owlEntail(
         ExtractPipeline.canonicalize(
           ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir)))
           .unionByName(schema))

@@ -492,12 +492,12 @@ object GraphQuery {
     * `(subj, obj)` pairs connected by one or more `pred` edges.
     *
     * DOMAIN: IRI-node edges only (`obj_iri`) — the closure-utility shape
-    * its consumers need (entailment's prp-trp IRI chains, reachability,
-    * incremental maintenance over (s, o) pair tables). Literal-TERMINAL
-    * paths are out of this operator's domain: the path-algebra evaluator
-    * ([[evalPath]] on `Plus(P(pred))`, the CLI's `pred+`) includes them,
-    * and [[Entailment.owlEntailWithTransitive]] derives them explicitly
-    * as its literal-extension step.
+    * its consumers need (reachability, incremental maintenance over
+    * (s, o) pair tables). Literal-TERMINAL paths are out of this
+    * operator's domain: the path-algebra evaluator ([[evalPath]] on
+    * `Plus(P(pred))`, the CLI's `pred+`) includes them. Entailment's
+    * prp-trp does not use this operator: it is a rule of
+    * [[Entailment.owlEntail]]'s own fixpoint, literal terminals included.
     *
     * Spark-first shape, scaled for a 100-TB graph:
     *  - the edge slice is a constant-predicate scan — the pushed

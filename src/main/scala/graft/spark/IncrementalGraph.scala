@@ -124,49 +124,18 @@ object IncrementalGraph {
     val spark = delta.sparkSession
     import spark.implicits._
     standing(spark, dir, io) match {
-      case None =>
-        refuseTransitive(Entailment.owlEntail(delta))
+      case None => Entailment.owlEntail(delta)
       case Some(closed) =>
         // full new closure, then keep only rows the standing closure
         // lacks — the append stays delta-cone-sized. The standing side is
-        // a disk-backed scan consumed three times (transitive guard,
-        // incremental seed, novelty anti-join): re-scanning pruned parquet
-        // beats localCheckpoint's full materialization of the closure per
-        // fold — the O(|closed|) cost this operator exists to avoid.
-        val c = closed
-        refuseTransitive(c)
-        val out = Entailment.owlEntailIncremental(c, delta).as("n")
-          .join(c.as("o"), Triple.identityCond("n", "o"), "left_anti").as[Triple]
+        // a disk-backed scan read by the incremental seed and the novelty
+        // anti-join: re-scanning pruned parquet beats localCheckpoint's
+        // full materialization of the closure per fold — the O(|closed|)
+        // cost this operator exists to avoid.
+        Entailment.owlEntailIncremental(closed, delta).as("n")
+          .join(closed.as("o"), Triple.identityCond("n", "o"), "left_anti").as[Triple]
           .localCheckpoint()
-        // the DELTA can introduce the declaration too (checked on the cone,
-        // which contains every delta row's derivations incl. inherited
-        // rdf:type facts) — after the fact is cheaper than a second
-        // pre-scan and equally safe: nothing has been appended yet
-        refuseTransitive(out)
-        out
     }
-  }
-
-  /** THROW-not-truncate ([[Entailment]]'s stance) for the one rule the
-    * incremental maintainer cannot express: `owl:TransitiveProperty`.
-    * [[Entailment.owlEntailIncremental]] handles only the rewrite rules, so
-    * a graph declaring a transitive predicate would get a standing closure
-    * silently missing every multi-hop fact that `ExtractMain --entail`
-    * (which runs [[Entailment.owlEntailWithTransitive]]) derives. Refuse
-    * loudly and steer to the batch path.
-    */
-  private def refuseTransitive[T](df: Dataset[T]): Dataset[T] = {
-    val decl = df.toDF()
-      .filter(col("pred") === Entailment.RdfType &&
-        col("obj_iri") === Entailment.TransitiveProperty)
-      .select(col("subj")).limit(1).collect()
-    require(decl.isEmpty,
-      s"incremental closure maintenance does not support owl:TransitiveProperty " +
-        s"(declared for <${decl.headOption.map(_.getString(0)).getOrElse("")}>): " +
-        "prp-trp joins facts with facts, which the delta-cone maintainer cannot " +
-        "bound. Rebuild the closure in batch (ExtractMain --entail persists " +
-        "owlEntailWithTransitive's full closure) instead of folding this delta.")
-    df
   }
 
   /** Append the delta's NOVEL rows (identity anti-join against the

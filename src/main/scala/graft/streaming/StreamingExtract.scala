@@ -143,9 +143,9 @@ object StreamingExtract {
     * identity clusters, this = derived facts): each micro-batch appends the
     * closure's DELTA CONE to a standing closure dir via
     * [[graft.spark.IncrementalGraph.closureDelta]]
-    * ([[graft.spark.Entailment.owlEntailIncremental]] inside — a schema
-    * edge arriving mid-stream replays the standing facts through just that
-    * edge). The dir is the batch_id/pred_bucket layout, so
+    * ([[graft.spark.Entailment.owlEntailIncremental]] inside, every rule
+    * prp-trp included — a schema edge or transitive declaration arriving
+    * mid-stream replays the standing facts through just that edge). The dir is the batch_id/pred_bucket layout, so
     * [[graft.spark.GraphQuery.loadGraph]] queries it with pruning intact
     * at any point.
     *

@@ -84,6 +84,28 @@ class DistributedPathParitySpec extends AnyFunSuite {
     assert(singleIncr.contains(("x", "pp", "y", null, null, null)))
   }
 
+  /** The full closure and an incremental split of `facts`, on one strategy. */
+  private def entailOn(limits: Limits, facts: Seq[Triple], split: Int) =
+    withLimits(limits) {
+      val (old, fresh) = facts.splitAt(split)
+      (ids(Entailment.owlEntail(facts.toDS())),
+        ids(Entailment.owlEntailIncremental(Entailment.owlEntail(old.toDS()), fresh.toDS())))
+    }
+
+  test("prp-trp: single-task, distributed and overflow fallback equal the naive fixpoint") {
+    TransitiveCases.all.foreach { case (name, facts) =>
+      val naive = NaiveEntailment.closure(facts)
+      // split before the declaration: the incremental call must replay the
+      // standing facts through a transitive edge that arrives in its delta
+      Seq(Limits.Production, Limits.ForceDistributed, Overflowing).foreach { l =>
+        val ((full, incr), decisions) = entailOn(l, facts, facts.size - 1)
+        assert(full == naive, s"$name on $l")
+        assert(incr == naive, s"$name incremental on $l")
+        if (l == Overflowing) assert(fellBack(decisions, "Entailment"), s"$name: $decisions")
+      }
+    }
+  }
+
   test("pagerank: distributed loop equals the single-task path bit-for-bit") {
     val edges = edgeDf("a" -> "b", "b" -> "c", "c" -> "a", "d" -> "a", "e" -> "a")
       .select(col("s").as("src"), col("o").as("dst"))
@@ -200,6 +222,38 @@ class DistributedPathParitySpec extends AnyFunSuite {
     }
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(12).withInitialSeed(Seed(0x5EED)), prop)
+    assert(result.passed, result.toString)
+  }
+
+  // property: prp-trp with rewrite interplay on small random graphs
+  private val entailNode = Gen.oneOf("a", "b", "c", "d", "e")
+  private val schemaGen: Gen[Seq[Triple]] = Gen.someOf(Seq(
+    Triple("p", Entailment.RdfType, Entailment.TransitiveProperty, null, null, null, "s", 0),
+    Triple("q", Entailment.SubPropertyOf, "p", null, null, null, "s", 0),
+    Triple("p", Entailment.InverseOf, "r", null, null, null, "s", 0),
+    Triple("q", Entailment.RdfType, "T", null, null, null, "s", 0),
+    Triple("T", Entailment.SubClassOf, Entailment.TransitiveProperty, null, null, null, "s", 0)))
+    .map(_.toSeq)
+  private val factGen: Gen[Triple] = for {
+    s <- entailNode
+    p <- Gen.oneOf("p", "q")
+    o <- Gen.frequency(5 -> entailNode.map(Some(_)), 1 -> Gen.const(None))
+  } yield o.fold(Triple(s, p, null, s"v$s", null, "en", "c", 1))(Triple(s, p, _, null, null, null, "c", 1))
+
+  test("property: prp-trp closures agree with the naive fixpoint on every strategy") {
+    // schema first or last, split anywhere: declarations and rewrite edges
+    // land in the standing graph or arrive in the incremental delta
+    val prop = Prop.forAll(schemaGen, Gen.choose(1, 6).flatMap(Gen.listOfN(_, factGen)),
+        Gen.oneOf(true, false), Gen.choose(0, 10)) { (schema, facts, schemaFirst, cut) =>
+      val all = if (schemaFirst) schema ++ facts else facts ++ schema
+      val naive = NaiveEntailment.closure(all)
+      Seq(Limits.Production, Limits.ForceDistributed, Overflowing).forall { l =>
+        val (full, incr) = entailOn(l, all, math.min(cut, all.size))._1
+        full == naive && incr == naive
+      }
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(8).withInitialSeed(Seed(0x7EA5)), prop)
     assert(result.passed, result.toString)
   }
 }

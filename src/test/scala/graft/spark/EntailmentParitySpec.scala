@@ -3,12 +3,13 @@ package graft.spark
 import graft.model.Triple
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The rewrite fixpoint has two physical strategies (single in-memory task
-  * at or under the entailment fact limit of [[AdaptiveStrategy.Limits]],
+/** The entailment fixpoint has two physical strategies (single in-memory
+  * task at or under the entailment fact limit of [[AdaptiveStrategy.Limits]],
   * distributed semi-naive above).
   * This spec pins the SINGLE-TASK path's rule semantics against
-  * hand-checked expectations (every rule kind, chained targets, literal
-  * carry, derived-schema-edge replay, incremental == scratch);
+  * hand-checked expectations and the naive fixpoint ([[NaiveEntailment]]):
+  * every rule kind, chained targets, literal carry, derived-schema-edge
+  * replay, prp-trp shapes, incremental == scratch;
   * [[DistributedPathParitySpec]] forces the distributed strategies via
   * the [[AdaptiveStrategy.withLimits]] seam and asserts the paths agree.
   */
@@ -77,5 +78,41 @@ class EntailmentParitySpec extends AnyFunSuite {
     assert(incr == scratch)
     assert(incr.contains(("x", "q", "y", null, null, null)))
     assert(incr.contains(("x", Entailment.RdfType, "B", null, null, null)))
+  }
+
+  test("single-task prp-trp: chain, cycle, literal terminal, q ⊑ p, derived declaration") {
+    val closures = TransitiveCases.all.map { case (name, facts) =>
+      val (out, decisions) = AdaptiveStrategy.withLimits(AdaptiveStrategy.Limits.Production)(
+        ids(Entailment.owlEntail(facts.toDS())))
+      assert(decisions.map(_.strategy) == Seq("single-task"), name)
+      assert(out == NaiveEntailment.closure(facts), name)
+      name -> out
+    }.toMap
+    def has(name: String, s: String, o: String) =
+      closures(name).contains((s, "p", o, null, null, null))
+    assert(has("chain", "a", "e") && has("chain", "b", "d"))
+    assert(has("cycle", "a", "a") && has("cycle", "c", "b")) // reflexive through the cycle
+    assert(Seq("a", "b").forall(s => closures("literal terminal")
+      .contains((s, "p", null, "leaf", null, "en"))))
+    assert(has("q ⊑ p feeds p", "a", "d") && has("q ⊑ p feeds p", "a", "c"))
+    assert(!closures("q ⊑ p feeds p").contains(("a", "q", "c", null, null, null)))
+    assert(closures("derived declaration")
+      .contains(("p", Entailment.RdfType, Entailment.TransitiveProperty, null, null, null)))
+    assert(has("derived declaration", "a", "d"))
+  }
+
+  test("incremental prp-trp: a standing chain closes when the declaration or a new hop arrives") {
+    val chain = Seq(t("a", "p", "b"), t("b", "p", "c"))
+    val decl = Seq(t("p", Entailment.RdfType, Entailment.TransitiveProperty))
+    val hop = Seq(t("c", "p", "d"), lit("d", "p", "leaf"))
+    // declaration in the delta: the standing p-facts replay through it
+    val closed = Entailment.owlEntail(chain.toDS())
+    val afterDecl = Entailment.owlEntailIncremental(closed, decl.toDS())
+    assert(ids(afterDecl) == NaiveEntailment.closure(chain ++ decl))
+    // a new hop on an already transitive predicate joins the standing slice
+    val afterHop = ids(Entailment.owlEntailIncremental(afterDecl, hop.toDS()))
+    assert(afterHop == NaiveEntailment.closure(chain ++ decl ++ hop))
+    assert(afterHop.contains(("a", "p", "d", null, null, null)))
+    assert(afterHop.contains(("a", "p", null, "leaf", null, null)))
   }
 }

@@ -39,6 +39,22 @@ class IncrementalGraphSpec extends AnyFunSuite {
     mentionTurn("c4", 0, "k2", "k3"),
     schemaTurn("c5", 0))
 
+  // (anc rdf:type owl:TransitiveProperty) through markup, and an anc chain
+  // e1 → e2 → e3 whose top carries a language-tagged literal
+  private val Anc = "http://ex.org/anc"
+  private val ancDecl = ("t0", 0,
+    s"""<div itemscope itemid="$Anc"><link itemprop="http://www.w3.org/1999/02/22-rdf-syntax-ns#type" href="http://www.w3.org/2002/07/owl#TransitiveProperty"></div>""")
+  private def ancLink(conv: String, from: String, to: String) = (conv, 0,
+    s"""<div itemscope itemid="http://ex.org/$from"><link itemprop="$Anc" href="http://ex.org/$to"></div>""")
+  private val ancTurns = Seq(ancLink("t1", "e1", "e2"), ancLink("t2", "e2", "e3"),
+    ("t3", 0, s"""<div itemscope itemid="http://ex.org/e3"><span itemprop="$Anc" lang="en">top</span></div>"""))
+  private val ancHop = ancLink("t4", "e3", "e4")
+  private def ancFact(s: String, o: String): Seq[Any] =
+    Seq(s"http://ex.org/$s", Anc, s"http://ex.org/$o", null, null, null)
+  private def key(df: org.apache.spark.sql.DataFrame) = df
+    .select("subj", "pred", "obj_iri", "obj_lexical", "obj_datatype", "obj_lang")
+    .collect().map(_.toSeq).toSet
+
   test("IncrementalMain: two folded deltas equal the from-scratch build (graph, canonical view, closure)") {
     val root = Files.createTempDirectory("graftcrawl").toString
     val d1 = Files.createTempDirectory("graftcrawl_d1").toString
@@ -107,31 +123,33 @@ class IncrementalGraphSpec extends AnyFunSuite {
       .contains(f"v${3L}%016d"))
   }
 
-  test("incremental closure maintenance refuses owl:TransitiveProperty loudly") {
-    // (anc rdf:type owl:TransitiveProperty) through markup — prp-trp joins
-    // facts with facts, which the delta-cone maintainer cannot express, so
-    // folding must THROW (Entailment's throw-not-truncate stance), never
-    // silently maintain a closure missing the multi-hop facts
-    val trpTurn = ("c1", 0,
-      """<div itemscope itemid="http://ex.org/anc"><link itemprop="http://www.w3.org/1999/02/22-rdf-syntax-ns#type" href="http://www.w3.org/2002/07/owl#TransitiveProperty"></div>""")
+  test("incremental closure maintenance folds owl:TransitiveProperty: first batch and later delta") {
+    // prp-trp is a rule of the one entailment fixpoint, so a transitive
+    // declaration folds like any schema edge — in the first batch, or in a
+    // later delta that must replay a clean standing closure through it
+    def closure(root: String) = key(IncrementalGraph.readClosure(spark, root).df)
+    def scratch(rows: (String, Int, String)*) =
+      key(Entailment.owlEntail(ExtractPipeline.extract(turns(rows: _*))).toDF())
+    def fold(root: String, rows: (String, Int, String)*) =
+      IncrementalGraph.foldBatch(ExtractPipeline.extract(turns(rows: _*)).as[Triple],
+        root, predBuckets = 4, entail = true)
 
-    // first batch (no standing closure yet)
     val root1 = Files.createTempDirectory("grafttrp1").toString
-    val e1 = intercept[IllegalArgumentException] {
-      IncrementalGraph.foldBatch(ExtractPipeline.extract(turns(trpTurn)).as[Triple],
-        root1, predBuckets = 4, entail = true)
-    }
-    assert(e1.getMessage.contains("TransitiveProperty"))
+    fold(root1, ancTurns :+ ancDecl: _*)
+    assert(closure(root1) == scratch(ancTurns :+ ancDecl: _*))
+    assert(closure(root1).contains(ancFact("e1", "e3")))
 
-    // declaration arriving in a LATER delta against a clean standing closure
     val root2 = Files.createTempDirectory("grafttrp2").toString
-    IncrementalGraph.foldBatch(ExtractPipeline.extract(turns(batch1: _*)).as[Triple],
-      root2, predBuckets = 4, entail = true)
-    val e2 = intercept[IllegalArgumentException] {
-      IncrementalGraph.foldBatch(ExtractPipeline.extract(turns(trpTurn)).as[Triple],
-        root2, predBuckets = 4, entail = true)
-    }
-    assert(e2.getMessage.contains("TransitiveProperty"))
+    fold(root2, ancTurns: _*)
+    assert(!closure(root2).contains(ancFact("e1", "e3")))
+    val s = fold(root2, ancDecl)
+    assert(s.newClosureTriples > s.newTriples) // the standing chain replayed
+    assert(closure(root2) == scratch(ancTurns :+ ancDecl: _*))
+    assert(closure(root2).contains(ancFact("e1", "e3")))
+    // a later hop on the now-transitive predicate joins the standing slice
+    fold(root2, ancHop)
+    assert(closure(root2) == scratch(ancTurns :+ ancDecl :+ ancHop: _*))
+    assert(closure(root2).contains(ancFact("e1", "e4")))
   }
 
   test("linkStateStream: streamed micro-batches converge to the batch-built state; versions retained") {
@@ -208,6 +226,27 @@ class IncrementalGraphSpec extends AnyFunSuite {
     // stream restart with no new input: closure unchanged
     runStream()
     assert(key(GraphQuery.loadGraph(spark, cl).df) == after)
+  }
+
+  test("closureStream: a transitive declaration mid-stream closes the standing chain") {
+    val in = Files.createTempDirectory("graftcst_in").toString
+    val cl = Files.createTempDirectory("graftcst_cl").toString + "/closure"
+    val cp = Files.createTempDirectory("graftcst_cp").toString
+    val batches = Seq(ancTurns, Seq(ancDecl), Seq(ancHop))
+      .map(rows => ExtractPipeline.extract(turns(rows: _*)).localCheckpoint())
+    batches.zipWithIndex.foreach { case (b, i) =>
+      b.write.parquet(s"$in/b$i")
+      val stream = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[Triple].schema)
+        .parquet(s"$in/*").as[Triple]
+      val q = graft.streaming.StreamingExtract.closureStream(stream, cl, cp, predBuckets = 4)
+      q.processAllAvailable(); q.stop()
+      assert(key(GraphQuery.loadGraph(spark, cl).df) ==
+        key(Entailment.owlEntail(batches.take(i + 1).reduce(_ union _)).toDF()), s"batch $i")
+    }
+    val closed = key(GraphQuery.loadGraph(spark, cl).df)
+    assert(closed.contains(ancFact("e1", "e4")))
+    assert(closed.contains(Seq("http://ex.org/e1", Anc, null, "top", null, "en")))
   }
 
   test("compactRoot: accumulated batch partitions rewrite side-by-side; every artifact set-equal") {
