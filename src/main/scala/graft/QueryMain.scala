@@ -28,8 +28,12 @@ import org.apache.spark.sql.functions.col
   *
   * Pattern terms: `?name` = variable, `<uri>` = IRI constant, `"text"` =
   * literal constant. The graph's own layout metadata supplies the
-  * pred_bucket count (partition pruning) and a one-pass predicate stats
-  * map orders the joins by selectivity — see [[graft.spark.GraphQuery]].
+  * pred_bucket count (partition pruning), the predicate stats that order
+  * joins by selectivity and size `p+`/`p*` closures, and the table schema:
+  * opening a `--graph` is a metadata read, not a Spark job (a graph dir
+  * written before schemas were recorded infers it with one job) — see
+  * [[graft.spark.GraphQuery.loadGraph]]. On a ~28k-statement graph a query
+  * runs in 2–4 jobs; BENCH.md attributes them per kind.
   * Bindings are written as parquet; `--show N` additionally prints the
   * first N rows as TSV.
   *

@@ -151,11 +151,12 @@ object Extractor {
       // Each token passes through uri() (reference: reader.rb maps types
       // via the same helper as itemid/href) so the opt-in canonicalize/
       // validate treatments reach type IRIs and the derived vocabulary —
-      // with the default options uri(t, null) is the identity.
+      // with the default options uri(t, null) is the identity. The
+      // absoluteness filter comes AFTER uri(), as in the reference's
+      // map-then-select, so validate reports a relative token it drops.
       var tpe: String = null
       item.attr("itemtype").getOrElse("").split("\\s+").filter(_.nonEmpty)
-        .filter(Rfc3986.isAbsolute).foreach { t0 =>
-          val t = uri(t0, null)
+        .map(uri(_, null)).filter(Rfc3986.isAbsolute).foreach { t =>
           if (tpe == null) tpe = t
           add(subject, RdfType, Term.Iri(t))
         }

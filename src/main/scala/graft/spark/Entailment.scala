@@ -148,10 +148,11 @@ object Entailment {
     * caller that reads it several times needs no checkpoint of its own.
     */
   def owlEntail(triples: Dataset[Triple]): Dataset[Triple] = {
-    val base = triples.dropDuplicates(Triple.identityCols).localCheckpoint()
+    // the fact count that sizes the call rides the base's checkpoint
+    val (base, facts) = ExtractPipeline.checkpointCounted(triples.dropDuplicates(Triple.identityCols))
     // delta0 == base, so schemaEdges(base) already covers the first
     // iteration's edge set — the in-loop new-edge diff starts at round 2
-    entailFrom(base, base, schemaEdges(base), firstDeltaEdgesCovered = true)
+    entailFrom(base, base, schemaEdges(base), firstDeltaEdgesCovered = true, facts)
   }
 
   /** The full closure under every rule kind, prp-trp included — which
@@ -195,7 +196,8 @@ object Entailment {
     if (fresh.count() == 0) return base
     // edges from CLOSED only: the first-iteration diff then surfaces the
     // delta's own schema edges and replays them against the closed graph
-    entailFrom(base.union(fresh), fresh, schemaEdges(base), firstDeltaEdgesCovered = false)
+    val result0 = base.union(fresh)
+    entailFrom(result0, fresh, schemaEdges(base), firstDeltaEdgesCovered = false, result0.count())
   }
 
   /** Shared semi-naive fixpoint core of [[owlEntail]] (delta = whole base)
@@ -210,9 +212,11 @@ object Entailment {
     * @param firstDeltaEdgesCovered true when edges0 already includes
     *        delta0's schema edges (full closure); false makes the
     *        new-edge diff run from iteration 1 (incremental)
+    * @param facts   result0's row count, the admission size
     */
   private def entailFrom(result0: Dataset[Triple], delta0: Dataset[Triple],
-                         edges0: Seq[Edge], firstDeltaEdgesCovered: Boolean): Dataset[Triple] = {
+                         edges0: Seq[Edge], firstDeltaEdgesCovered: Boolean,
+                         facts: => Long): Dataset[Triple] = {
     val spark = result0.sparkSession
     import spark.implicits._
     val tag = (t: Int, ds: Dataset[Triple]) => ds.toDF().select(
@@ -221,7 +225,7 @@ object Entailment {
     val input =
       if (result0 eq delta0) tag(1, result0) else tag(0, result0).unionByName(tag(1, delta0))
     val l = AdaptiveStrategy.limits
-    AdaptiveStrategy.run("Entailment", result0.count(), l.entailFacts,
+    AdaptiveStrategy.run("Entailment", facts, l.entailFacts,
         input.as[(Int, String, String, String, String, String, String, String, Int)]) {
       entailKernel(_, edges0, firstDeltaEdgesCovered, l.entailResult)
     }(entailFromDistributed(result0, delta0, edges0, firstDeltaEdgesCovered))

@@ -139,6 +139,16 @@ object ExtractPipeline {
     obs.get("rows").asInstanceOf[Long]
   }
 
+  /** `ds.localCheckpoint()` with its row count observed on the same job —
+    * the [[writeCounted]] pattern for a materialization, where a
+    * `count()` after the checkpoint would cost jobs of its own.
+    */
+  def checkpointCounted[T](ds: Dataset[T]): (Dataset[T], Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val cp = ds.observe(obs, count(lit(1)).as("rows")).localCheckpoint()
+    (cp, obs.get("rows").asInstanceOf[Long])
+  }
+
   /** Materialize the graph as a partitioned table: bucketed by predicate
     * hash (pred is low-cardinality and hot — hashing spreads it) so
     * predicate-sliced reads prune partitions. Physical binding goes through
@@ -155,24 +165,22 @@ object ExtractPipeline {
     // scan of the just-written table — vocabulary-bounded, dozens of rows)
     // — so readers ([[GraphQuery.loadGraph]]) never guess the bucket count
     // (a wrong guess silently empties constant-pred patterns) and never
-    // re-scan the table for join-ordering stats. Persisted through the
-    // [[TableIO]] metadata seam: the parquet binding writes an atomic
-    // `_`-prefixed sidecar via the path's own Hadoop FileSystem (hdfs:// /
-    // s3a:// safe, invisible to Spark's listing like _SUCCESS, torn writes
-    // impossible and failed renames thrown); an Iceberg binding stores
-    // table properties instead of inventing a filesystem path from a
-    // catalog identifier. Readers still tolerate absent/corrupt metadata —
-    // loadGraph degrades to no-pruning.
+    // re-scan the table for join-ordering stats. The schema that read-back
+    // inferred rides along at no extra cost, so readers open the table
+    // without an inference job of their own. Persisted through the
+    // [[TableIO]] metadata seam ([[GraphLayout]]): the parquet binding
+    // writes an atomic `_`-prefixed sidecar via the path's own Hadoop
+    // FileSystem (hdfs:// / s3a:// safe, invisible to Spark's listing like
+    // _SUCCESS, torn writes impossible and failed renames thrown); an
+    // Iceberg binding stores table properties instead of inventing a
+    // filesystem path from a catalog identifier. Readers still tolerate
+    // absent/corrupt metadata — loadGraph degrades to no-pruning.
     val spark = triples.sparkSession
-    val stats = io.read(spark, outDir)
+    val written = io.read(spark, outDir)
+    val stats = written
       .groupBy(col("pred")).agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("pred_buckets", predBuckets)
-    val statsNode = root.putObject("pred_stats")
-    stats.sortBy(_._1).foreach { case (p, n) => statsNode.put(p, n) }
-    io.writeMetadata(spark, outDir, LayoutFile, mapper.writeValueAsString(root) + "\n")
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    GraphLayout.write(spark, outDir, io, GraphLayout(predBuckets, Some(stats), Some(written.schema)))
   }
 
   /** Catalog table property carrying write-time predicate stats on a

@@ -70,42 +70,31 @@ object GraphQuery {
   final case class PersistedGraph(df: DataFrame, predBuckets: Int,
                                   stats: Map[String, Long])
 
-  /** Open a persisted graph directory: reads the layout's OWN bucket count
-    * AND write-time predicate stats from `_graft_layout.json` (written by
+  /** Open a persisted graph directory: reads the layout's OWN bucket count,
+    * write-time predicate stats AND recorded schema from
+    * `_graft_layout.json` ([[GraphLayout]], written by
     * [[ExtractPipeline.writeGraph]] — a mismatched caller-supplied count
     * would silently empty every constant-pred pattern, so the table must
-    * describe itself, and stats from metadata mean opening a graph costs a
-    * metadata read, not a table scan). Goes through the path's own Hadoop
+    * describe itself). Opening a graph is a metadata read and a listing,
+    * not a Spark job: the stats replace a table scan and the schema the
+    * parquet footer-inference job. Goes through the path's own Hadoop
     * FileSystem, so hdfs:// / s3a:// graph dirs work under spark-submit.
-    * Missing metadata (a foreign parquet dir) degrades to predBuckets = 0
-    * (correct results, no partition pruning) with stats computed by the
-    * one-pass scan.
+    * Each piece degrades on its own: no schema (a layout written before
+    * schemas were recorded, a batch dir) infers it with one job; no stats
+    * (a batch layout) computes them by the one-pass scan; missing or
+    * corrupt metadata (a foreign parquet dir) does both with predBuckets =
+    * 0 (correct results, no partition pruning).
     */
   def loadGraph(spark: org.apache.spark.sql.SparkSession, dir: String,
                 io: graft.spark.TableIO = graft.spark.TableIO.default): PersistedGraph = {
-    import scala.jdk.CollectionConverters._
-    val df = io.read(spark, dir)
     // corrupt/truncated metadata (e.g. a writer killed mid-write on a
     // filesystem without the rename the writer attempts) degrades exactly
-    // like MISSING metadata — the graph must stay queryable; the READ
-    // itself may also throw (checksum mismatch on a torn local file), so
-    // it sits inside the Try alongside the parse
-    val parsed: Option[PersistedGraph] =
-      scala.util.Try(
-          io.readMetadata(spark, dir, graft.spark.ExtractPipeline.LayoutFile))
-        .toOption.flatten.flatMap { json =>
-        scala.util.Try {
-          val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-          val buckets = Option(root.get("pred_buckets")).map(_.asInt(0)).getOrElse(0)
-          val statsNode = root.get("pred_stats")
-          val stats =
-            if (statsNode != null && statsNode.isObject)
-              statsNode.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-            else predStats(df)
-          PersistedGraph(df, buckets, stats)
-        }.toOption
-      }
-    parsed.getOrElse(PersistedGraph(df, 0, predStats(df)))
+    // like MISSING metadata — the graph must stay queryable; the metadata
+    // READ itself may also throw (checksum mismatch on a torn local file)
+    val layout = scala.util.Try(GraphLayout.read(spark, dir, io)).toOption.flatten
+    val df = io.read(spark, dir, layout.flatMap(_.schema))
+    PersistedGraph(df, layout.fold(0)(_.predBuckets),
+      layout.flatMap(_.stats).getOrElse(predStats(df)))
   }
 
   /** Open a SUBJECT-BUCKETED graph table written by
@@ -163,7 +152,19 @@ object GraphQuery {
     *        cost by constant count only.
     */
   def bgp(triples: DataFrame, patterns: Seq[(Term, Term, Term)],
-          predBuckets: Int = 0, stats: Map[String, Long] = Map.empty): DataFrame = {
+          predBuckets: Int = 0, stats: Map[String, Long] = Map.empty): DataFrame =
+    solve(triples, patterns, predBuckets, stats).distinct()
+
+  /** [[bgp]] without its final distinct: every solution, once per
+    * derivation. For a side that only feeds a semi- or anti-join, which
+    * never multiplies the other side's rows — deduplicating it would buy
+    * a shuffle and change no answer.
+    */
+  private def solve(g: PersistedGraph, patterns: Seq[(Term, Term, Term)]): DataFrame =
+    solve(g.df, patterns, g.predBuckets, g.stats)
+
+  private def solve(triples: DataFrame, patterns: Seq[(Term, Term, Term)],
+                    predBuckets: Int, stats: Map[String, Long]): DataFrame = {
     require(patterns.nonEmpty, "empty BGP")
     require(patterns.forall(p => Seq(p._1, p._2, p._3).exists(_.isInstanceOf[V])),
       "variable-free patterns (pure existence checks) are not supported: " +
@@ -182,9 +183,10 @@ object GraphQuery {
   }
 
   /** Selectivity-greedy connected join over pre-compiled pattern frames —
-    * the shared core of [[bgp]] and [[bgpWithPaths]]. Each item is
-    * (bindings frame, variable names, subject variable or null, estimated
-    * rows); input position breaks cost ties deterministically.
+    * the shared core of [[bgp]] and [[bgpWithPaths]] — projected to
+    * `outVars`, NOT deduplicated. Each item is (bindings frame, variable
+    * names, subject variable or null, estimated rows); input position
+    * breaks cost ties deterministically.
     */
   private def greedyJoin(items0: Seq[(DataFrame, Seq[String], String, Long)],
                          outVars: Seq[String]): DataFrame = {
@@ -230,7 +232,7 @@ object GraphQuery {
       val shared = nvs.filter(acc._2.contains)
       acc = (acc._1.join(ndf, shared), (acc._2 ++ nvs).distinct)
     }
-    acc._1.select(outVars.map(col): _*).distinct()
+    acc._1.select(outVars.map(col): _*)
   }
 
   /** Estimated result rows for one pattern: the predicate's frequency when
@@ -416,13 +418,15 @@ object GraphQuery {
     *
     * Scale shape: anti-joins shuffle on the shared binding columns like
     * any equi-join, and AQE broadcasts a selective minus side; the minus
-    * group's own patterns push/prune independently.
+    * group's own patterns push/prune independently. A minus group is not
+    * deduplicated: an anti-join removes a row whether one solution agrees
+    * with it or many.
     */
   def bgpMinus(g: PersistedGraph, required: Seq[(Term, Term, Term)],
                minusGroups: Seq[Seq[(Term, Term, Term)]]): DataFrame = {
     var acc = bgp(g, required)
     minusGroups.foreach { grp =>
-      val m = bgp(g, grp)
+      val m = solve(g, grp)
       val shared = m.columns.filter(acc.columns.contains).toSeq
       if (shared.nonEmpty) acc = acc.join(m, shared, "left_anti")
     }
@@ -432,7 +436,7 @@ object GraphQuery {
   /** DESCRIBE — assemble every stored triple about the entities a BGP
     * selects (the SPARQL DESCRIBE analog, and the entity-assembly access
     * path a KG serves most: "give me everything we know about X"). Solves
-    * `patterns` as a [[bgp]], projects the distinct bindings of
+    * `patterns` as a [[bgp]], projects the bindings of
     * `entityVar`, and semi-joins the triple table on subject — full triple
     * rows (obj_iri/obj_lexical/obj_datatype/obj_lang preserved) come back,
     * not just the pattern's bindings.
@@ -442,15 +446,17 @@ object GraphQuery {
     * patterns), so the semi-join broadcasts the SMALL entity side under
     * AQE while the big triple table streams map-side — no full-table
     * shuffle. On a subject-bucketed table ([[loadBucketedGraph]]) the
-    * subj semi-join additionally inherits the bucketed distribution.
+    * subj semi-join additionally inherits the bucketed distribution. The
+    * selector's bindings and the entity set are not deduplicated: a
+    * semi-join keeps a triple once however many times its entity is bound.
     */
   def describe(g: PersistedGraph, patterns: Seq[(Term, Term, Term)],
                entityVar: String): DataFrame = {
-    val bindings = bgp(g, patterns)
+    val bindings = solve(g, patterns)
     require(bindings.columns.contains(entityVar),
       s"describe variable ?$entityVar is not bound by the patterns " +
         s"{${bindings.columns.mkString(",")}}")
-    val entities = bindings.select(col(entityVar).as("subj")).distinct()
+    val entities = bindings.select(col(entityVar).as("subj"))
     // of the triple columns, keep those the frame actually carries (a
     // persisted graph has all six; a bare test frame may carry four) —
     // layout columns like pred_bucket stay internal
@@ -538,9 +544,12 @@ object GraphQuery {
         .map(p => col("pred_bucket") === pmod(hash(lit(p)), lit(g.predBuckets)))
         .reduce(_ || _)) // each side folds to a literal → partition filter
     // no distinct here: closure dedups its input itself — a second
-    // Deduplicate would cost a redundant full shuffle of the edge slice
+    // Deduplicate would cost a redundant full shuffle of the edge slice.
+    // The stats count the predicates' literal-object rows too: an upper
+    // bound of the slice, which is all admission needs
     val edges = slice.select(col("subj").as("s"), col("obj_iri").as("o"))
-    closure(edges, None, maxIterations, preds.mkString("|"))
+    closure(edges, None, maxIterations, preds.mkString("|"),
+      sliceRows(g, Path.Alt(preds.map(Path.P))))
   }
 
   /** Transitive closure of a bare (s, o) edge frame — [[pathPlus]] without
@@ -567,14 +576,15 @@ object GraphQuery {
     */
   def pathPlusIncremental(closedPairs: DataFrame, newEdges: DataFrame,
                           maxIterations: Int = 64): DataFrame = {
-    val c = closedPairs.select(col("s"), col("o")).localCheckpoint()
+    val (c, closedSize) = ExtractPipeline.checkpointCounted(closedPairs.select(col("s"), col("o")))
     val d = newEdges.select(col("s"), col("o")).distinct()
     // admitted on the standing closure's size alone: the delta is unsized
-    // until the task reads it, where the kernel's seed cap bounds it
-    closureStrategy("GraphQuery.pathPlusIncremental", c.count(),
+    // until the task reads it, where the kernel's seed cap bounds it — so
+    // the hop rows (closure plus delta) need no cap of their own
+    closureStrategy("GraphQuery.pathPlusIncremental", closedSize,
         tagged(c, Hop | Prefix).unionByName(tagged(d, Hop | Seed)),
-        doubling = false, maxIterations, "pathPlusIncremental") {
-      val suffix = closure(c.union(d).distinct(), Some(d), maxIterations,
+        doubling = false, maxIterations, "pathPlusIncremental", capHops = false) {
+      val suffix = closure(c.union(d), Some(d), maxIterations,
         "pathPlusIncremental").localCheckpoint()
       val prefixed = c.as("pc").join(suffix.as("px"), col("pc.o") === col("px.s"))
         .select(col("pc.s").as("s"), col("px.o").as("o"))
@@ -600,33 +610,55 @@ object GraphQuery {
     * Hitting `maxIterations` with a live frontier THROWS on either
     * strategy — a silently truncated closure is wrong answers, not a
     * degraded mode.
+    *
+    * `edgeRows` is the edge frame's row count when the caller knows it
+    * from a layout's stats ([[sliceRows]]): the call is then admitted on
+    * it with no job at all, and the one task reads `edgesIn` — a pushed,
+    * pruned scan — directly. Stats can be stale or belong to another
+    * table, so the task counts the hop rows it reads and overflows past
+    * the edge limit: an oversized slice still ends in the distributed
+    * body, never in one task. Without it, the edges are deduplicated and
+    * materialized first, their count observed on that same job.
     */
   private def closure(edgesIn: DataFrame, seed: Option[DataFrame], maxIterations: Int,
-                      what: String): DataFrame = {
+                      what: String, edgeRows: Option[Long] = None): DataFrame = {
     val doubling = seed.isEmpty
+    val engine = s"GraphQuery.closure[$what]"
     val e = edgesIn.select(col("s"), col("o"))
-    // the full closure dedups its edges here (callers skip their own distinct)
-    val edges = (if (doubling) e.distinct() else e).localCheckpoint()
-    val seeds = seed.map(_.select(col("s"), col("o")).distinct())
-    val input = seeds.fold(tagged(edges, Hop | Seed))(sd =>
-      tagged(edges, Hop).unionByName(tagged(sd, Seed)))
-    closureStrategy(s"GraphQuery.closure[$what]", edges.count(), input, doubling,
-        maxIterations, what) {
-      closureLoop(edges, seeds.fold(edges)(_.localCheckpoint()), doubling, maxIterations, what)
+    val seeds = seed.map(_.select(col("s"), col("o")))
+    def input(edges: DataFrame, starts: Option[DataFrame]): DataFrame =
+      starts.fold(tagged(edges, Hop | Seed))(sd => tagged(edges, Hop).unionByName(tagged(sd, Seed)))
+    // the distributed loop reads edges and seeds every round: dedup and
+    // materialize them once (callers skip their own distinct)
+    def distributed(edges: DataFrame): DataFrame =
+      closureLoop(edges, seeds.fold(edges)(_.distinct().localCheckpoint()), doubling,
+        maxIterations, what)
+    edgeRows match {
+      case Some(n) =>
+        closureStrategy(engine, n, input(e, seeds), doubling, maxIterations, what) {
+          distributed(e.distinct().localCheckpoint())
+        }
+      case None =>
+        val (edges, n) = ExtractPipeline.checkpointCounted(e.distinct())
+        closureStrategy(engine, n, input(edges, seeds.map(_.distinct())), doubling,
+          maxIterations, what)(distributed(edges))
     }
   }
 
   /** One closure call through [[AdaptiveStrategy.run]]: `input` holds the
-    * tagged (t, s, o) rows [[closureKernel]] reads.
+    * tagged (t, s, o) rows [[closureKernel]] reads; with `capHops` the task
+    * overflows past the edge limit's worth of hop rows.
     */
-  private def closureStrategy(engine: String, size: => Long, input: DataFrame,
-                              doubling: Boolean, maxIterations: Int, what: String)
+  private def closureStrategy(engine: String, size: Long, input: DataFrame,
+                              doubling: Boolean, maxIterations: Int, what: String,
+                              capHops: Boolean = true)
                              (distributed: => DataFrame): DataFrame = {
     val spark = input.sparkSession
     import spark.implicits._
     val l = AdaptiveStrategy.limits
+    val maxHops = if (capHops) l.closureEdges else Long.MaxValue
     AdaptiveStrategy.run(engine, size, l.closureEdges, input.as[(Int, String, String)])(
-      closureKernel(_, doubling, maxIterations, l.closureEdges, l.closurePairs, what))(
+      closureKernel(_, doubling, maxIterations, maxHops, l.closureEdges, l.closurePairs, what))(
       distributed.as[(String, String)]).toDF("s", "o")
   }
 
@@ -640,13 +672,14 @@ object GraphQuery {
     * through a NULL hop node, matching the SQL equi-joins' null rejection
     * (null-endpoint pairs still surface — they just extend nothing).
     *
-    * Caps are checked as each pair is added, so a dense graph overflows
-    * before a round's derivations accumulate: more than `maxSeeds` seed
-    * pairs (an incremental delta is unsized until here) or `maxPairs`
+    * Caps are checked as each row or pair is added, so a dense graph
+    * overflows before a round's derivations accumulate: more than
+    * `maxHops` hop rows (a stats-admitted slice is unsized until here),
+    * `maxSeeds` seed pairs (an incremental delta is too) or `maxPairs`
     * pairs throws [[AdaptiveStrategy.overflow]].
     */
   private def closureKernel(rows: Iterator[(Int, String, String)], doubling: Boolean,
-                            maxIterations: Int, maxSeeds: Long, maxPairs: Long,
+                            maxIterations: Int, maxHops: Long, maxSeeds: Long, maxPairs: Long,
                             what: String): Iterator[(String, String)] = {
     type Index = java.util.HashMap[String, mutable.ArrayBuffer[String]]
     def link(m: Index, k: String, v: String): Unit = {
@@ -663,8 +696,13 @@ object GraphQuery {
         if (seen.size > maxPairs) AdaptiveStrategy.overflow()
       }
     var delta = mutable.ArrayBuffer.empty[(String, String)]
+    var hops = 0L
     rows.foreach { case (t, s, o) =>
-      if ((t & Hop) != 0) link(adj, s, o)
+      if ((t & Hop) != 0) {
+        hops += 1
+        if (hops > maxHops) AdaptiveStrategy.overflow()
+        link(adj, s, o)
+      }
       if ((t & Prefix) != 0) prefix += ((s, o))
       if ((t & Seed) != 0) {
         add((s, o), delta)
@@ -857,6 +895,21 @@ object GraphQuery {
       coalesce(col("obj_iri"), col("obj_lexical")).as("o"))
   }
 
+  /** Rows of the edge frame [[pathFrame]] builds for `p`, from the
+    * layout's stats: exact for an atom (its slice is that predicate's
+    * rows), an inverse of one (the same rows, swapped) and an alternation
+    * of such (a union of slices). None when the graph carries no stats or
+    * `p` joins, negates or closes — then only a count can size it.
+    */
+  private def sliceRows(g: PersistedGraph, p: Path): Option[Long] = p match {
+    case _ if g.stats.isEmpty => None
+    case Path.P(iri) => Some(g.stats.getOrElse(iri, 0L))
+    case Path.Inv(q) => sliceRows(g, q)
+    case Path.Alt(ps) =>
+      ps.foldLeft(Option(0L))((acc, q) => acc.flatMap(a => sliceRows(g, q).map(a + _)))
+    case _ => None
+  }
+
   /** Zero-length pairs (SPARQL ZeroLengthPath): a bound endpoint matches
     * itself; both unbound matches every node occurring in the graph
     * (subjects ∪ objects — one distinct over two projected scans).
@@ -934,17 +987,19 @@ object GraphQuery {
         ps.map(pathFrame(g, _, src, dst, maxIter)).reduce(_ unionByName _)
 
       case Path.Plus(p) =>
-        val edges = pathFrame(g, p, None, None, maxIter).distinct()
+        // closure dedups the edges when it needs them distinct
+        val edges = pathFrame(g, p, None, None, maxIter)
+        val rows = sliceRows(g, p)
         (src, dst) match {
           case (Some(v), d) =>
             val cone = closure(edges, Some(edges.filter(col("s") === v)), maxIter,
-              render(path))
+              render(path), rows)
             d.map(w => cone.filter(col("o") === w)).getOrElse(cone)
           case (None, Some(w)) => // single-TARGET: explore the reverse cone
             val rev = edges.select(col("o").as("s"), col("s").as("o"))
-            closure(rev, Some(rev.filter(col("s") === w)), maxIter, render(path))
+            closure(rev, Some(rev.filter(col("s") === w)), maxIter, render(path), rows)
               .select(col("o").as("s"), col("s").as("o"))
-          case _ => closure(edges, None, maxIter, render(path))
+          case _ => closure(edges, None, maxIter, render(path), rows)
         }
 
       case Path.Star(p) =>
@@ -1041,6 +1096,6 @@ object GraphQuery {
     val outVars = (patterns.flatMap(p => Seq(p._1, p._2, p._3)) ++
         pathPatterns.flatMap(p => Seq(p._1, p._3)))
       .collect { case V(n) => n }.distinct
-    greedyJoin(tripleItems ++ pathItems, outVars)
+    greedyJoin(tripleItems ++ pathItems, outVars).distinct()
   }
 }

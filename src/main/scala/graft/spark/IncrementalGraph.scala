@@ -3,6 +3,7 @@ package graft.spark
 import graft.model.Triple
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** The NIGHTLY-CRAWL composition: fold one delta batch of extracted triples
   * into a standing graph root, maintaining every standing artifact
@@ -46,6 +47,16 @@ object IncrementalGraph {
                                 newClosureTriples: Long, linkStateNodes: Long)
 
   private val CrawlPrefix = "_graft_crawl/batch-"
+
+  /** The schema a batch-layout dir reads back with: the triple columns,
+    * then the `batch_id` and `pred_bucket` partition columns. Recorded in
+    * the layout ([[GraphLayout]]) by every batch-layout writer, so readers
+    * open the dir without an inference job; `batch_id` is the LONG the
+    * writers store (inference would narrow it to int when it fits).
+    */
+  private[graft] val BatchSchema: StructType = StructType(
+    org.apache.spark.sql.Encoders.product[Triple].schema.fields.map(_.copy(nullable = true)) ++
+      Seq(StructField("batch_id", LongType), StructField("pred_bucket", IntegerType)))
 
   /** Fold one delta batch into the standing root. `delta` should be the
     * extracted (set-semantics) triples of the new transcripts — see
@@ -103,15 +114,16 @@ object IncrementalGraph {
                        io: TableIO): Option[Dataset[Triple]] = {
     import spark.implicits._
     // Try: a dir whose every committed batch was EMPTY has metadata but no
-    // data files — parquet schema inference then throws; fold as first batch
-    io.readMetadata(spark, dir, ExtractPipeline.LayoutFile).flatMap { _ =>
+    // data files — parquet schema inference then throws; fold as first
+    // batch (which is why this read never takes the recorded schema)
+    Option.when(GraphLayout.exists(spark, dir, io)) {
       scala.util.Try {
         io.read(spark, dir)
           .select(col("subj"), col("pred"), col("obj_iri"), col("obj_lexical"),
             col("obj_datatype"), col("obj_lang"), col("conv_id"), col("turn_idx"))
           .as[Triple]
       }.toOption
-    }
+    }.flatten
   }
 
   /** Compute the closure's NOVEL rows for one delta against a standing
@@ -149,22 +161,23 @@ object IncrementalGraph {
                                  knownBatchId: Long = -1L,
                                  minBatchId: Long = 0L): (Long, Long) = {
     val existing = standing(spark, dir, io)
+    val layout = existing.flatMap(_ => GraphLayout.read(spark, dir, io))
     val buckets = existing match {
       case Some(_) =>
         // the dir describes itself — a caller-supplied count that disagrees
         // with the layout would corrupt pruning for every reader
-        bucketCount(spark, dir, io).getOrElse(predBuckets)
+        layout.map(_.predBuckets).filter(_ > 0).getOrElse(predBuckets)
       case None =>
-        io.writeMetadata(spark, dir, ExtractPipeline.LayoutFile,
-          s"""{"pred_buckets": $predBuckets}""" + "\n")
+        GraphLayout.write(spark, dir, io, GraphLayout(predBuckets, schema = Some(BatchSchema)))
         predBuckets
     }
     val batchId =
       if (knownBatchId >= 0) knownBatchId
       else math.max(minBatchId, existing.map(_ =>
-        // cast: the partition column may infer as int; coalesce: a standing
-        // dir whose every batch was empty still has metadata but no rows
-        io.read(spark, dir)
+        // cast: an unrecorded schema may infer the partition column as int;
+        // coalesce: a standing dir whose every batch was empty still has
+        // metadata but no rows
+        io.read(spark, dir, layout.flatMap(_.schema))
           .agg(coalesce(max(col("batch_id")).cast("long"), lit(-1L)))
           .head().getLong(0) + 1L
       ).getOrElse(0L))
@@ -192,12 +205,7 @@ object IncrementalGraph {
   }
 
   private[graft] def bucketCount(spark: SparkSession, dir: String, io: TableIO): Option[Int] =
-    io.readMetadata(spark, dir, ExtractPipeline.LayoutFile).flatMap { json =>
-      scala.util.Try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-        Option(root.get("pred_buckets")).map(_.asInt(0)).filter(_ > 0)
-      }.toOption.flatten
-    }
+    GraphLayout.read(spark, dir, io).map(_.predBuckets).filter(_ > 0)
 
   /** Compact a batch-layout dir (this object's `graph/`/`closure/`, or a
     * [[graft.streaming.StreamingExtract.sinkToGraph]] output): rewrite all
@@ -222,8 +230,7 @@ object IncrementalGraph {
             .withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets))),
           io.overwritePartitions(_, destDir, Seq("batch_id", "pred_bucket")))
     }
-    io.writeMetadata(spark, destDir, ExtractPipeline.LayoutFile,
-      s"""{"pred_buckets": $buckets}""" + "\n")
+    GraphLayout.write(spark, destDir, io, GraphLayout(buckets, schema = Some(BatchSchema)))
     rows
   }
 
@@ -237,9 +244,10 @@ object IncrementalGraph {
   def compactRoot(spark: SparkSession, srcRoot: String, destRoot: String,
                   io: TableIO = TableIO.default): (Long, Long, Long) = {
     val g = compact(spark, s"$srcRoot/graph", s"$destRoot/graph", io)
-    val c = io.readMetadata(spark, s"$srcRoot/closure", ExtractPipeline.LayoutFile)
-      .map(_ => compact(spark, s"$srcRoot/closure", s"$destRoot/closure", io))
-      .getOrElse(-1L)
+    val c =
+      if (GraphLayout.exists(spark, s"$srcRoot/closure", io))
+        compact(spark, s"$srcRoot/closure", s"$destRoot/closure", io)
+      else -1L
     val l = LinkStateStore.load(spark, s"$srcRoot/link_state", io)
       .map(st => LinkStateStore.save(st, s"$destRoot/link_state", 0L, io).count())
       .getOrElse(-1L)
@@ -247,7 +255,8 @@ object IncrementalGraph {
   }
 
   /** Open the standing RAW graph for querying ([[GraphQuery.loadGraph]]
-    * semantics: pruning from the layout metadata, stats by one-pass scan).
+    * semantics: pruning and schema from the layout metadata, stats by
+    * one-pass scan).
     */
   def readGraph(spark: SparkSession, root: String,
                 io: TableIO = TableIO.default): GraphQuery.PersistedGraph =

@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Materialization seam for the graph tables (north rule: "materializes the
   * graph as partitioned (subj, pred, obj) Iceberg tables").
@@ -13,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   *  - `write`              → `df.writeTo(table).using("iceberg").createOrReplace()`
   *  - `overwritePartitions`→ `df.writeTo(table).overwritePartitions()`
-  *  - `read`               → `spark.table(table)`
+  *  - `read`               → `spark.table(table)` (the catalog holds the
+  *    schema: a recorded `schema` argument is ignored)
   *
   * and gains real snapshot isolation + atomic partition replacement; the
   * manifest-based Resume then degrades gracefully into a redundant (but
@@ -28,7 +30,14 @@ trait TableIO {
     */
   def overwritePartitions(df: DataFrame, table: String, partitionCols: Seq[String]): Unit
 
-  def read(spark: SparkSession, table: String): DataFrame
+  /** Read a table; `schema`, when given, is the one the table was
+    * recorded with (a graph layout's `schema`, [[GraphLayout]]): data
+    * columns, then the partition columns. The parquet binding then skips
+    * schema inference — a Spark job that reads parquet footers — and only
+    * lists the directory. A binding whose catalog knows the schema
+    * (Iceberg) ignores it.
+    */
+  def read(spark: SparkSession, table: String, schema: Option[StructType] = None): DataFrame
 
   /** Drop a whole table (version retention in [[LinkStateStore]]). Parquet:
     * recursive delete of the directory; Iceberg: `DROP TABLE`. Must be a
@@ -71,8 +80,8 @@ final class ParquetTableIO extends TableIO {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*).parquet(table)
 
-  override def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(table)
+  override def read(spark: SparkSession, table: String, schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(table)
 
   override def dropTable(spark: SparkSession, table: String): Unit = {
     val hp = new Path(table)

@@ -63,20 +63,20 @@ object StreamingExtract {
     * at-least-once) OVERWRITES exactly the partitions its first attempt
     * wrote — idempotent, no dedup pass needed. `pred_bucket` nests inside,
     * so constant-predicate queries still prune partitions; the layout
-    * metadata (bucket count, no stats — they'd go stale per batch) is
-    * (re)written through the [[graft.spark.TableIO]] seam, and
+    * metadata (bucket count and schema, no stats — they'd go stale per
+    * batch) is written through the [[graft.spark.TableIO]] seam, and
     * [[graft.spark.GraphQuery.loadGraph]] reads the dir like any other
-    * graph (stats by one-pass scan). Long-running streams accumulate
-    * batch_id partitions; [[graft.spark.IncrementalGraph.compact]]
-    * rewrites the dir side-by-side into one generation when the count
-    * grows unwieldy.
+    * graph (no inference job; stats by one-pass scan). Long-running
+    * streams accumulate batch_id partitions;
+    * [[graft.spark.IncrementalGraph.compact]] rewrites the dir side-by-side
+    * into one generation when the count grows unwieldy.
     */
   def sinkToGraph(triples: Dataset[Triple], outDir: String, checkpointDir: String,
                   predBuckets: Int = 16,
                   io: graft.spark.TableIO = graft.spark.TableIO.default)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // metadata ONCE, before the stream starts: its content is constant
-    // ({"pred_buckets": N} — no stats, they'd go stale per batch), and a
+    // (bucket count and schema — no stats, they'd go stale per batch), and a
     // per-batch rewrite would open a delete→rename window where concurrent
     // loadGraph readers silently lose pruning. A dir that already carries a
     // layout DESCRIBES ITSELF: a restart passing a different predBuckets
@@ -87,8 +87,8 @@ object StreamingExtract {
     val spark = triples.sparkSession
     val buckets = graft.spark.IncrementalGraph.bucketCount(spark, outDir, io)
       .getOrElse {
-        io.writeMetadata(spark, outDir, ExtractPipeline.LayoutFile,
-          s"""{"pred_buckets": $predBuckets}""" + "\n")
+        graft.spark.GraphLayout.write(spark, outDir, io, graft.spark.GraphLayout(predBuckets,
+          schema = Some(graft.spark.IncrementalGraph.BatchSchema)))
         predBuckets
       }
     triples.writeStream

@@ -549,6 +549,20 @@ class ExtractorSpec extends AnyFunSuite {
     assert(v.triples.exists(t => t.obj == graft.model.Term.Iri("HTTP://Schema.ORG/Person")))
   }
 
+  test("UriOptions.validate reports a relative itemtype token; default output unchanged") {
+    val html = """<div itemscope itemtype="Person http://schema.org/Person"><span itemprop="name">Ann</span></div>"""
+    val default = Extractor.extract(html, "d", null, TestGraph.testRegistry)
+    assert(default.errors.isEmpty)
+    // the relative token types nothing and does not govern the vocabulary
+    assert(default.triples.collect { case t if t.pred == Extractor.RdfType => t.obj } ==
+      Seq(graft.model.Term.Iri("http://schema.org/Person")))
+    assert(default.triples.exists(_.pred == "http://schema.org/name"))
+    val validated = Extractor.extract(html, "d", null, TestGraph.testRegistry,
+      UriOptions(validate = true))
+    assert(validated.errors == Seq("invalid IRI: relative IRI (no scheme): Person"))
+    assert(validated.triples == default.triples)
+  }
+
   test("foreign content: inside svg foreignObject a <span/> stays open, as in plain HTML") {
     check(
       """<svg><foreignObject><div itemscope><span itemprop="a"/>x</span></div></foreignObject></svg>""",
