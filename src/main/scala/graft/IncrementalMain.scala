@@ -25,9 +25,9 @@ import org.apache.spark.sql.SparkSession
   * untouched and the root swap is the storage layer's atomic operation.
   *
   * `--input` accepts the same forms as [[ExtractMain]]
-  * ([[graft.sources.TranscriptSources.fromSpec]]). The first run against an
-  * empty root builds every artifact from scratch; later runs fold. Query
-  * the standing root with [[QueryMain]] `--graph <root>/graph` (or
+  * ([[graft.sources.TranscriptSources.fromSpec]]). Every run folds: against
+  * an empty root, every artifact folds into an empty one. Query the
+  * standing root with [[QueryMain]] `--graph <root>/graph` (or
   * `<root>/closure`), or through [[graft.spark.IncrementalGraph
   * .readCanonical]] for the entity-canonical view.
   */

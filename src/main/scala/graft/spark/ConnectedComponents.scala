@@ -60,16 +60,14 @@ object ConnectedComponents {
     */
   def run(edges: DataFrame, maxIterations: Int = 64): DataFrame = {
     // materialize the (possibly expensive) upstream pair pipeline exactly
-    // once; lazy checkpoint + count = ONE action that both stores the
-    // blocks and yields the strategy-picking size. A NULL endpoint links
-    // nothing: its edge keeps only the other endpoint, as a node.
+    // once; its size picks the strategy. A NULL endpoint links nothing: its
+    // edge keeps only the other endpoint, as a node.
     val (a, b) = (col("src").cast("string"), col("dst").cast("string"))
-    val raw = edges.select(coalesce(a, b).as("src"), coalesce(b, a).as("dst"))
-      .filter(col("src").isNotNull)
-      .localCheckpoint(eager = false)
+    val (raw, n) = ExtractPipeline.checkpointCounted(
+      edges.select(coalesce(a, b).as("src"), coalesce(b, a).as("dst"))
+        .filter(col("src").isNotNull))
     val spark = raw.sparkSession
     import spark.implicits._
-    val n = raw.count()
     AdaptiveStrategy.run("ConnectedComponents", n, AdaptiveStrategy.limits.componentsEdges,
         raw.as[(String, String)])(labelPartition)(
       runDistributed(raw, n, maxIterations).as[(String, String)]).toDF("node", "component")
@@ -109,10 +107,9 @@ object ConnectedComponents {
   def incremental(labels: DataFrame, newEdges: DataFrame,
                   maxIterations: Int = 64): DataFrame = {
     val l = labels.select(col("node"), col("component")).localCheckpoint()
-    // one action materializes the delta AND answers the emptiness question
-    val e = newEdges.select(col("src").cast("string"), col("dst").cast("string"))
-      .localCheckpoint(eager = false)
-    if (e.count() == 0) return l
+    val (e, n) = ExtractPipeline.checkpointCounted(
+      newEdges.select(col("src").cast("string"), col("dst").cast("string")))
+    if (n == 0) return l
     // the slice of the standing labels the delta can touch
     val endpoints = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()

@@ -152,7 +152,9 @@ object Entailment {
     val (base, facts) = ExtractPipeline.checkpointCounted(triples.dropDuplicates(Triple.identityCols))
     // delta0 == base, so schemaEdges(base) already covers the first
     // iteration's edge set — the in-loop new-edge diff starts at round 2
-    entailFrom(base, base, schemaEdges(base), firstDeltaEdgesCovered = true, facts)
+    import triples.sparkSession.implicits._
+    entailFrom(triples.sparkSession.emptyDataset[Triple], base, schemaEdges(base),
+      firstDeltaEdgesCovered = true, facts)
   }
 
   /** The full closure under every rule kind, prp-trp included — which
@@ -189,46 +191,44 @@ object Entailment {
     // anti-join, schema-edge slice, target slice), never shuffled.
     val base = closed
     import closed.sparkSession.implicits._
-    // one action materializes the fresh slice AND answers the emptiness probe
-    val fresh = delta.dropDuplicates(Triple.identityCols).as("d")
-      .join(base.as("a"), antiCond, "left_anti").as[Triple]
-      .localCheckpoint(eager = false)
-    if (fresh.count() == 0) return base
+    val (fresh, n) = ExtractPipeline.checkpointCounted(delta.dropDuplicates(Triple.identityCols)
+      .as("d").join(base.as("a"), antiCond, "left_anti").as[Triple])
+    if (n == 0) return base
     // edges from CLOSED only: the first-iteration diff then surfaces the
-    // delta's own schema edges and replays them against the closed graph
-    val result0 = base.union(fresh)
-    entailFrom(result0, fresh, schemaEdges(base), firstDeltaEdgesCovered = false, result0.count())
+    // delta's own schema edges and replays the closed graph against them
+    entailFrom(base, fresh, schemaEdges(base), firstDeltaEdgesCovered = false, base.count() + n)
   }
 
-  /** Shared semi-naive fixpoint core of [[owlEntail]] (delta = whole base)
-    * and [[owlEntailIncremental]] (delta = fresh rows only), through
+  /** Shared semi-naive fixpoint core of [[owlEntail]] (no prior, delta =
+    * whole base) and [[owlEntailIncremental]] (prior = the closed graph,
+    * delta = fresh rows only), through
     * [[AdaptiveStrategy.run]]: at or under the entailment fact limit the
     * fixpoint runs as ONE in-memory task ([[entailKernel]]), above it — any
     * real-scale graph — the distributed semi-naive loop runs.
     *
-    * @param result0 deduplicated starting graph (already contains delta0)
+    * @param prior0  the deduplicated graph already closed under edges0,
+    *        disjoint from delta0; the starting graph is prior0 ∪ delta0
     * @param delta0  the rows to derive from first
     * @param edges0  schema edges KNOWN before delta0's are diffed in
     * @param firstDeltaEdgesCovered true when edges0 already includes
     *        delta0's schema edges (full closure); false makes the
     *        new-edge diff run from iteration 1 (incremental)
-    * @param facts   result0's row count, the admission size
+    * @param facts   the starting graph's row count, the admission size
     */
-  private def entailFrom(result0: Dataset[Triple], delta0: Dataset[Triple],
+  private def entailFrom(prior0: Dataset[Triple], delta0: Dataset[Triple],
                          edges0: Seq[Edge], firstDeltaEdgesCovered: Boolean,
                          facts: => Long): Dataset[Triple] = {
-    val spark = result0.sparkSession
+    val spark = delta0.sparkSession
     import spark.implicits._
     val tag = (t: Int, ds: Dataset[Triple]) => ds.toDF().select(
       lit(t).as("t"), col("subj"), col("pred"), col("obj_iri"), col("obj_lexical"),
       col("obj_datatype"), col("obj_lang"), col("conv_id"), col("turn_idx"))
-    val input =
-      if (result0 eq delta0) tag(1, result0) else tag(0, result0).unionByName(tag(1, delta0))
+    val input = tag(0, prior0).unionByName(tag(1, delta0))
     val l = AdaptiveStrategy.limits
     AdaptiveStrategy.run("Entailment", facts, l.entailFacts,
         input.as[(Int, String, String, String, String, String, String, String, Int)]) {
       entailKernel(_, edges0, firstDeltaEdgesCovered, l.entailResult)
-    }(entailFromDistributed(result0, delta0, edges0, firstDeltaEdgesCovered))
+    }(entailFromDistributed(prior0, delta0, edges0, firstDeltaEdgesCovered))
   }
 
   /** In-task schema-edge index: per rule kind, match key → targets. */
@@ -283,10 +283,11 @@ object Entailment {
     }
   }
 
-  /** The in-memory twin of [[entailFromDistributed]] over tagged rows (t = 1
-    * marks delta0): identical rule application, identical new-edge handling
-    * (a derived triple that is itself a schema edge widens the edge set and
-    * replays the WHOLE graph against just the new edges), identity-column
+  /** The in-memory twin of [[entailFromDistributed]] over tagged rows (t = 0
+    * marks prior0, t = 1 delta0): identical rule application, identical
+    * new-edge handling (a derived triple that is itself a schema edge
+    * widens the edge set, the delta derives against every edge, and the
+    * graph before the delta replays against just the new edges), identity-column
     * novelty, and the same THROW at the iteration cap — asserted equal to
     * the distributed path by the parity specs. The result cap is checked as
     * each novel fact is added.
@@ -300,12 +301,12 @@ object Entailment {
     var delta = mutable.ArrayBuffer.empty[Triple]
     rows.foreach { case (t, s, p, oi, ol, od, og, cv, ti) =>
       val f = Triple(s, p, oi, ol, od, og, cv, ti)
-      if (seen.add(key(f))) result += f
-      // the delta seed rides its tag: in the incremental case these rows
-      // also sit inside result0, so they only seed the loop here, never
-      // duplicate the output
-      if (t == 1) delta += f
+      if (t == 1) delta += f else if (seen.add(key(f))) result += f
     }
+    // the delta seed goes last: every round's delta is then the tail of
+    // `result`, and what precedes it is the graph to replay on new edges
+    delta = delta.filter(f => seen.add(key(f)))
+    result ++= delta
     val edges = mutable.HashSet.empty[Edge]
     val index = new RuleIndex
     val trans = new TransitiveFacts
@@ -329,11 +330,11 @@ object Entailment {
       val newEdges =
         if (iter == 1 && firstCovered) Nil
         else delta.flatMap(edgesOf).filterNot(edges.contains).distinct
-      val replayed = result.size // the graph as of this round's start
+      val replayed = result.size - delta.size // the graph before this round's delta
       newEdges.foreach(addEdge)
       delta.foreach(index.derive(_, trans, emit))
       if (newEdges.nonEmpty) {
-        // replay the WHOLE graph against just the new edges
+        // replay the rest of the graph against just the new edges
         val fresh = new RuleIndex
         newEdges.foreach(fresh.add)
         (0 until replayed).foreach(i => fresh.derive(result(i), trans, emit))
@@ -349,10 +350,10 @@ object Entailment {
       s"entailment fixpoint not reached in $MaxIterations iterations — " +
         "the closure is incomplete")
 
-  private def entailFromDistributed(result0: Dataset[Triple], delta0: Dataset[Triple],
+  private def entailFromDistributed(prior0: Dataset[Triple], delta0: Dataset[Triple],
                                     edges0: Seq[Edge],
                                     firstDeltaEdgesCovered: Boolean): Dataset[Triple] = {
-    val spark = result0.sparkSession
+    val spark = delta0.sparkSession
     import spark.implicits._
     val antiCond = Triple.identityCond("d", "a")
 
@@ -365,10 +366,12 @@ object Entailment {
         (col("pred") === RdfType &&
           col("obj_iri").isin(edges.filter(_._3 == "class").map(_._2).distinct: _*)))
 
-    var result = result0
+    // result = prior ∪ delta at every round's start
+    var prior = prior0
+    var result = prior0.union(delta0)
     var delta = delta0
     var edges = edges0
-    var seen = targetSlice(result0, edges).localCheckpoint()
+    var seen = targetSlice(result, edges).localCheckpoint()
     var iter = 0
     var deltaLive = !delta.isEmpty
     while (iter < MaxIterations && deltaLive) {
@@ -386,21 +389,19 @@ object Entailment {
         else {
           edges = edges ++ newEdges
           seen = targetSlice(result, edges).localCheckpoint()
-          derive(delta, seen, edges).union(derive(result, seen, newEdges))
+          derive(delta, seen, edges).union(derive(prior, seen, newEdges))
         }
-      // lazy checkpoint + count: ONE action materializes the delta's
-      // blocks AND answers the loop's emptiness question
-      val newDelta = derived
+      val (newDelta, n) = ExtractPipeline.checkpointCounted(derived
         .dropDuplicates(Triple.identityCols)
         .as("d")
         .join(seen.as("a"), antiCond, "left_anti")
-        .as[Triple]
-        .localCheckpoint(eager = false)
-      deltaLive = newDelta.count() > 0
+        .as[Triple])
+      deltaLive = n > 0
       // accepted deltas are disjoint from everything seen and individually
       // checkpointed, so plain unions stay duplicate-free AND shallow —
       // no per-round re-materialization of the whole slice
       seen = seen.union(newDelta)
+      prior = result
       result = result.union(newDelta)
       delta = newDelta
     }

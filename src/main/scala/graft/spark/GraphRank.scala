@@ -57,12 +57,11 @@ object GraphRank {
     */
   def pagerank(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    // lazy checkpoint + count: one action materializes the edge slice AND
-    // yields the size that picks the strategy
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint(eager = false)
+    // the edge slice's size picks the strategy
+    val (e0, n) = ExtractPipeline.checkpointCounted(edges.select(col("src"), col("dst")))
     val spark = e0.sparkSession
     import spark.implicits._
-    AdaptiveStrategy.run("GraphRank.pagerank", e0.count(),
+    AdaptiveStrategy.run("GraphRank.pagerank", n,
         AdaptiveStrategy.limits.pagerankEdges, e0.as[(String, String)])(
       pagerankKernel(_, iters))(
       pagerankDistributed(e0, iters).as[(String, Long)]).toDF("node", "rank_micros")

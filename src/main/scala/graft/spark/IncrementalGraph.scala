@@ -107,47 +107,38 @@ object IncrementalGraph {
     CrawlSummary(batchId, newTriples, closureNew, linkNodes)
   }
 
-  /** The standing triples of a batch-layout dir, if it exists (gated on the
-    * layout metadata — a foreign/absent dir folds like a first batch).
+  /** The standing triples of a batch-layout dir, read with [[BatchSchema]]
+    * (so opening it starts no job). A dir with no layout — absent, or not
+    * written by a batch-layout writer — is empty, as is one whose every
+    * batch was empty: a first batch folds against empty artifacts.
     */
-  private def standing(spark: SparkSession, dir: String,
-                       io: TableIO): Option[Dataset[Triple]] = {
+  private def standing(spark: SparkSession, dir: String, io: TableIO): Dataset[Triple] = {
     import spark.implicits._
-    // Try: a dir whose every committed batch was EMPTY has metadata but no
-    // data files — parquet schema inference then throws; fold as first
-    // batch (which is why this read never takes the recorded schema)
-    Option.when(GraphLayout.exists(spark, dir, io)) {
-      scala.util.Try {
-        io.read(spark, dir)
-          .select(col("subj"), col("pred"), col("obj_iri"), col("obj_lexical"),
-            col("obj_datatype"), col("obj_lang"), col("conv_id"), col("turn_idx"))
-          .as[Triple]
-      }.toOption
-    }.flatten
+    if (!GraphLayout.exists(spark, dir, io)) spark.emptyDataset[Triple]
+    else io.read(spark, dir, Some(BatchSchema))
+      .select(col("subj"), col("pred"), col("obj_iri"), col("obj_lexical"),
+        col("obj_datatype"), col("obj_lang"), col("conv_id"), col("turn_idx"))
+      .as[Triple]
   }
 
   /** Compute the closure's NOVEL rows for one delta against a standing
-    * closure dir (first batch: the delta's own closure) — shared by
-    * [[foldBatch]] and the streaming maintainer
+    * closure dir — shared by [[foldBatch]] and the streaming maintainer
     * ([[graft.streaming.StreamingExtract.closureStream]]).
     */
   private[graft] def closureDelta(delta: Dataset[Triple], dir: String,
                                   io: TableIO): Dataset[Triple] = {
     val spark = delta.sparkSession
     import spark.implicits._
-    standing(spark, dir, io) match {
-      case None => Entailment.owlEntail(delta)
-      case Some(closed) =>
-        // full new closure, then keep only rows the standing closure
-        // lacks — the append stays delta-cone-sized. The standing side is
-        // a disk-backed scan read by the incremental seed and the novelty
-        // anti-join: re-scanning pruned parquet beats localCheckpoint's
-        // full materialization of the closure per fold — the O(|closed|)
-        // cost this operator exists to avoid.
-        Entailment.owlEntailIncremental(closed, delta).as("n")
-          .join(closed.as("o"), Triple.identityCond("n", "o"), "left_anti").as[Triple]
-          .localCheckpoint()
-    }
+    // full new closure, then keep only rows the standing closure lacks —
+    // the append stays delta-cone-sized. The standing side is a disk-backed
+    // scan read by the incremental seed and the novelty anti-join:
+    // re-scanning pruned parquet beats localCheckpoint's full
+    // materialization of the closure per fold — the O(|closed|) cost this
+    // operator exists to avoid.
+    val closed = standing(spark, dir, io)
+    Entailment.owlEntailIncremental(closed, delta).as("n")
+      .join(closed.as("o"), Triple.identityCond("n", "o"), "left_anti").as[Triple]
+      .localCheckpoint()
   }
 
   /** Append the delta's NOVEL rows (identity anti-join against the
@@ -160,43 +151,23 @@ object IncrementalGraph {
                                  predBuckets: Int, io: TableIO,
                                  knownBatchId: Long = -1L,
                                  minBatchId: Long = 0L): (Long, Long) = {
-    val existing = standing(spark, dir, io)
-    val layout = existing.flatMap(_ => GraphLayout.read(spark, dir, io))
-    val buckets = existing match {
-      case Some(_) =>
-        // the dir describes itself — a caller-supplied count that disagrees
-        // with the layout would corrupt pruning for every reader
-        layout.map(_.predBuckets).filter(_ > 0).getOrElse(predBuckets)
-      case None =>
-        GraphLayout.write(spark, dir, io, GraphLayout(predBuckets, schema = Some(BatchSchema)))
-        predBuckets
-    }
+    val st = standing(spark, dir, io)
+    val buckets = layoutBuckets(spark, dir, io, predBuckets)
     val batchId =
       if (knownBatchId >= 0) knownBatchId
-      else math.max(minBatchId, existing.map(_ =>
-        // cast: an unrecorded schema may infer the partition column as int;
-        // coalesce: a standing dir whose every batch was empty still has
-        // metadata but no rows
-        io.read(spark, dir, layout.flatMap(_.schema))
-          .agg(coalesce(max(col("batch_id")).cast("long"), lit(-1L)))
-          .head().getLong(0) + 1L
-      ).getOrElse(0L))
-
-    val novel = existing match {
-      case None => delta.toDF()
-      case Some(st) =>
-        // prune the standing side to the delta's own pred buckets before the
-        // identity anti-join: partitions whose bucket the delta never touches
-        // are never read (bucket count is registry-bounded, so the collect is
-        // catalog-sized)
-        val deltaBuckets = delta
-          .select(pmod(hash(col("pred")), lit(buckets)).as("b")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val slice = st.toDF().withColumn("pred_bucket",
-            pmod(hash(col("pred")), lit(buckets)))
-          .filter(col("pred_bucket").isin(deltaBuckets: _*))
-        delta.as("d").join(slice.as("a"), Triple.identityCond("d", "a"), "left_anti")
-    }
+      // coalesce: a dir with no rows yet has no max
+      else math.max(minBatchId, io.read(spark, dir, Some(BatchSchema))
+        .agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0) + 1L)
+    // prune the standing side to the delta's own pred buckets before the
+    // identity anti-join: partitions whose bucket the delta never touches
+    // are never read (bucket count is registry-bounded, so the collect is
+    // catalog-sized)
+    val deltaBuckets = delta
+      .select(pmod(hash(col("pred")), lit(buckets)).as("b")).distinct()
+      .collect().map(_.getInt(0)).toSeq
+    val slice = st.toDF().withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets)))
+      .filter(col("pred_bucket").isin(deltaBuckets: _*))
+    val novel = delta.as("d").join(slice.as("a"), Triple.identityCond("d", "a"), "left_anti")
     val written = ExtractPipeline.writeCounted(
       novel.withColumn("batch_id", lit(batchId))
         .withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets))),
@@ -206,6 +177,18 @@ object IncrementalGraph {
 
   private[graft] def bucketCount(spark: SparkSession, dir: String, io: TableIO): Option[Int] =
     GraphLayout.read(spark, dir, io).map(_.predBuckets).filter(_ > 0)
+
+  /** The pred-bucket count a batch-layout dir records; a dir without one
+    * first gets a layout recording `predBuckets` and [[BatchSchema]]. A
+    * dir that carries a layout describes itself: a caller-supplied count
+    * that disagrees would corrupt pruning for every reader.
+    */
+  private[graft] def layoutBuckets(spark: SparkSession, dir: String, io: TableIO,
+                                   predBuckets: Int): Int =
+    bucketCount(spark, dir, io).getOrElse {
+      GraphLayout.write(spark, dir, io, GraphLayout(predBuckets, schema = Some(BatchSchema)))
+      predBuckets
+    }
 
   /** Compact a batch-layout dir (this object's `graph/`/`closure/`, or a
     * [[graft.streaming.StreamingExtract.sinkToGraph]] output): rewrite all
@@ -221,15 +204,11 @@ object IncrementalGraph {
   def compact(spark: SparkSession, srcDir: String, destDir: String,
               io: TableIO = TableIO.default): Long = {
     val buckets = bucketCount(spark, srcDir, io).getOrElse(16)
-    val rows = standing(spark, srcDir, io) match {
-      case None => 0L
-      case Some(st) =>
-        ExtractPipeline.writeCounted(
-          st.dropDuplicates(Triple.identityCols)
-            .withColumn("batch_id", lit(0L))
-            .withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets))),
-          io.overwritePartitions(_, destDir, Seq("batch_id", "pred_bucket")))
-    }
+    val rows = ExtractPipeline.writeCounted(
+      standing(spark, srcDir, io).dropDuplicates(Triple.identityCols)
+        .withColumn("batch_id", lit(0L))
+        .withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets))),
+      io.overwritePartitions(_, destDir, Seq("batch_id", "pred_bucket")))
     GraphLayout.write(spark, destDir, io, GraphLayout(buckets, schema = Some(BatchSchema)))
     rows
   }
@@ -266,14 +245,13 @@ object IncrementalGraph {
     * through the standing link state's current mapping (the read-time
     * canonicalization the RAW storage decision above requires). Falls back
     * to the raw triples when no link state exists.
+    * @throws IllegalArgumentException when `root` holds no standing graph
+    *         (a mistyped or non-crawl root must not read as an empty graph)
     */
   def readCanonical(spark: SparkSession, root: String,
                     io: TableIO = TableIO.default): Dataset[Triple] = {
-    import spark.implicits._
-    val raw = readGraph(spark, root, io).df
-      .select(col("subj"), col("pred"), col("obj_iri"), col("obj_lexical"),
-        col("obj_datatype"), col("obj_lang"), col("conv_id"), col("turn_idx"))
-      .as[Triple]
+    require(GraphLayout.exists(spark, s"$root/graph", io), s"no crawl root graph under $root")
+    val raw = standing(spark, s"$root/graph", io)
     LinkStateStore.loadMapping(spark, s"$root/link_state", io) match {
       case Some(mapping) => EntityLink.rewriteWithMapping(raw, mapping.localCheckpoint())
       case None => raw

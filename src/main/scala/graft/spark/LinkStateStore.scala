@@ -1,7 +1,8 @@
 package graft.spark
 
 import graft.model.Triple
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned persistence for a STANDING entity-link state — the
   * `(node, component)` labels over the mention↔key graph that
@@ -50,6 +51,11 @@ object LinkStateStore {
 
   private val Pointer = "_link_state_latest"
 
+  /** The schema every version table is written with; reading with it opens
+    * a version without a schema-inference job.
+    */
+  private val StateSchema = StructType.fromDDL("node STRING, component STRING")
+
   /** Name of the currently committed version, if any. */
   def latestVersion(spark: SparkSession, stateDir: String,
                     io: TableIO = TableIO.default): Option[String] =
@@ -58,7 +64,7 @@ object LinkStateStore {
   /** The committed standing state, if any — `(node, component)`. */
   def load(spark: SparkSession, stateDir: String,
            io: TableIO = TableIO.default): Option[DataFrame] =
-    latestVersion(spark, stateDir, io).map(v => io.read(spark, s"$stateDir/$v"))
+    latestVersion(spark, stateDir, io).map(v => io.read(spark, s"$stateDir/$v", Some(StateSchema)))
 
   /** The committed `(subj, canonical)` mapping, if any — what
     * [[EntityLink.rewriteWithMapping]] consumes.
@@ -67,23 +73,21 @@ object LinkStateStore {
                   io: TableIO = TableIO.default): Option[DataFrame] =
     load(spark, stateDir, io).map(EntityLink.mappingFromState)
 
-  /** Fold one batch of mention triples into the standing state (or build it,
-    * first batch) and commit the result as version `v<version>`. Returns the
-    * new state. Versions must be monotone across folds (a batch id, a date
-    * stamp) — retention sorts lexicographically, so zero-pad numeric
-    * versions at the caller if they can pass 10 digits.
+  /** Fold one batch of mention triples into the standing state (empty
+    * before the first commit) and commit the result as version
+    * `v<version>`. Returns the new state. Versions must be monotone across
+    * folds (a batch id, a date stamp) — retention sorts lexicographically,
+    * so zero-pad numeric versions at the caller if they can pass 10 digits.
     */
   def fold(batch: org.apache.spark.sql.Dataset[Triple], stateDir: String,
            version: Long, keyPredicates: Seq[String],
            maxKeyDegree: Int = 100000, io: TableIO = TableIO.default,
            retainVersions: Int = 2): DataFrame = {
     val spark = batch.sparkSession
-    val next = load(spark, stateDir, io) match {
-      case None => EntityLink.mentionLinkState(batch, keyPredicates, maxKeyDegree)
-      case Some(state) =>
-        EntityLink.mentionLinkStateIncremental(state, batch, keyPredicates, maxKeyDegree)
-    }
-    save(next, stateDir, version, io, retainVersions)
+    val state = load(spark, stateDir, io)
+      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), StateSchema))
+    save(EntityLink.mentionLinkStateIncremental(state, batch, keyPredicates, maxKeyDegree),
+      stateDir, version, io, retainVersions)
   }
 
   /** Commit an externally-built state as version `v<version>` (the write +
@@ -101,7 +105,7 @@ object LinkStateStore {
     // live files from under concurrent readers and, on a crash mid-rewrite,
     // leave the committed pointer on a half-written table. Skip the write.
     if (latestVersion(spark, stateDir, io).contains(name))
-      return io.read(spark, s"$stateDir/$name")
+      return io.read(spark, s"$stateDir/$name", Some(StateSchema))
     io.write(state, s"$stateDir/$name", Nil)
     io.writeMetadata(spark, stateDir, Pointer, name + "\n")
     // retention AFTER the flip: the dropped versions are unreachable from
@@ -114,6 +118,6 @@ object LinkStateStore {
     io.listMetadata(spark, stateDir, "v").sorted.dropRight(math.max(retainVersions, 1))
       .filter(_ != name)
       .foreach(old => io.dropTable(spark, s"$stateDir/$old"))
-    io.read(spark, s"$stateDir/$name")
+    io.read(spark, s"$stateDir/$name", Some(StateSchema))
   }
 }

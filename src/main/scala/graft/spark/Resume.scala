@@ -101,10 +101,7 @@ object Resume {
     // bucket from a crashed attempt is atomically replaced. The row count
     // rides along as an observed metric on the write itself — no cache of
     // the full triple set, no second pass.
-    val obs = org.apache.spark.sql.Observation()
-    io.overwritePartitions(
-      triples.observe(obs, count(lit(1)).as("rows")), outDir, Seq("bucket"))
-    val n = obs.get("rows").asInstanceOf[Long]
+    val n = ExtractPipeline.writeCounted(triples, io.overwritePartitions(_, outDir, Seq("bucket")))
     commitBuckets(spark, outDir, todo, io)
     Summary(todo, done.toSeq.sorted, n)
   }

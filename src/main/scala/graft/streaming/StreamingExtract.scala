@@ -82,15 +82,10 @@ object StreamingExtract {
     // layout DESCRIBES ITSELF: a restart passing a different predBuckets
     // must not rewrite it — earlier batches were hashed with the recorded
     // count, and re-labeling them would make constant-predicate pruning
-    // silently skip matching rows (same guard as IncrementalGraph
-    // .appendNovel).
+    // silently skip matching rows (the guard IncrementalGraph.appendNovel
+    // shares).
     val spark = triples.sparkSession
-    val buckets = graft.spark.IncrementalGraph.bucketCount(spark, outDir, io)
-      .getOrElse {
-        graft.spark.GraphLayout.write(spark, outDir, io, graft.spark.GraphLayout(predBuckets,
-          schema = Some(graft.spark.IncrementalGraph.BatchSchema)))
-        predBuckets
-      }
+    val buckets = graft.spark.IncrementalGraph.layoutBuckets(spark, outDir, io, predBuckets)
     triples.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")

@@ -1,13 +1,10 @@
 package graft
 
 import graft.model.Triple
-import graft.spark.{AdaptiveStrategy, ExtractPipeline, GraphLayout, GraphQuery, SparkTestSession}
+import graft.spark.{AdaptiveStrategy, ExtractPipeline, GraphLayout, GraphQuery, JobFence, SparkTestSession}
 import graft.spark.AdaptiveStrategy.{Decision, Limits}
 import graft.spark.GraphQuery.{C, Path, V}
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Spark jobs per `QueryMain.run` on a persisted [[ExtractPipeline.writeGraph]]
   * graph, by query kind: opening the graph is a metadata read, a path
@@ -60,33 +57,7 @@ class QueryJobBudgetSpec extends AnyFunSuite {
     "query_jobs_subj"
   }
 
-  /** Job groups of the jobs `body` starts, in order. Sentinel jobs before
-    * and after fence them off: the listener bus delivers in order, so
-    * every job between the two sentinels' starts is the body's.
-    */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    def sentinel(name: String): Unit = {
-      sc.setJobGroup(name, "QueryJobBudgetSpec fence")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("fence-start")
-      val a = body
-      sentinel("fence-end")
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains("fence-end") && System.nanoTime() < deadline) Thread.sleep(20)
-      val groups = seen.asScala.toSeq
-      assert(groups.contains("fence-end"), s"fence job never reported: $groups")
-      (a, groups.dropWhile(_ != "fence-start").drop(1).takeWhile(_ != "fence-end").size)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf[A](body: => A): (A, Int) = JobFence.jobsOf(spark)(body)
 
   /** One query kind: QueryMain arguments (no source, no output; "ask" runs
     * through the API instead), with its expected answer rows.

@@ -115,4 +115,21 @@ class EntailmentParitySpec extends AnyFunSuite {
     assert(afterHop.contains(("a", "p", "d", null, null, null)))
     assert(afterHop.contains(("a", "p", null, "leaf", null, null)))
   }
+
+  test("iteration cap: a 70-predicate subPropertyOf chain throws on both strategies; 30 closes") {
+    // x p0 y climbs one predicate per round: a chain of n predicates needs
+    // n - 1 deriving rounds, past the 64-round cap at n = 70
+    def chain(n: Int): Seq[Triple] =
+      t("x", "p0", "y") +: (1 until n).map(i => t(s"p${i - 1}", Entailment.SubPropertyOf, s"p$i"))
+    Seq(AdaptiveStrategy.Limits.Production -> "single-task",
+        AdaptiveStrategy.Limits.ForceDistributed -> "distributed").foreach { case (l, strategy) =>
+      val (e, _) = AdaptiveStrategy.withLimits(l)(
+        intercept[IllegalStateException](Entailment.owlEntail(chain(70).toDS()).collect()))
+      assert(e.getMessage.contains("fixpoint not reached"), strategy)
+      val (out, ds) = AdaptiveStrategy.withLimits(l)(ids(Entailment.owlEntail(chain(30).toDS())))
+      assert(ds.map(_.strategy) == Seq(strategy))
+      assert(out == NaiveEntailment.closure(chain(30)), strategy)
+      assert(out.contains(("x", "p29", "y", null, null, null)))
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft.spark
 
 import graft.model.Triple
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -311,5 +312,76 @@ class IncrementalGraphSpec extends AnyFunSuite {
     LinkStateStore.fold(t, state, 0L, Seq(Contact))
     assert(LinkStateStore.latestVersion(spark, state).contains(f"v${0L}%016d"))
     assert(LinkStateStore.loadMapping(spark, state).get.count() > 0)
+  }
+
+  private def jobsOf[A](body: => A): (A, Int) = JobFence.jobsOf(spark)(body)
+
+  private def foldAll(root: String, delta: Dataset[Triple]): IncrementalGraph.CrawlSummary =
+    IncrementalGraph.foldBatch(delta, root, predBuckets = 4, linkKeys = Seq(Contact), entail = true)
+
+  private def labels(state: DataFrame) =
+    state.select("node", "component").collect().map(r => (r.getString(0), r.getString(1))).toSet
+
+  /** A root after `n` folds: batch1 and batch2 (the contact ⊑ ex:key edge
+    * included), then `n - 1` [[sameShaped]] deltas.
+    */
+  private def rootAfter(n: Int): String = {
+    val root = Files.createTempDirectory("graftjobs").toString
+    foldAll(root, ExtractPipeline.extract(turns(batch1 ++ batch2: _*)))
+    (1 until n).foreach(i => foldAll(root, sameShaped(i)))
+    root
+  }
+
+  /** Two mentions on fresh keys: every such delta is novel, links and
+    * entails, with the same shape.
+    */
+  private def sameShaped(i: Int): Dataset[Triple] =
+    ExtractPipeline.extract(turns(mentionTurn(s"j$i", 0, s"q$i", s"r$i"),
+      mentionTurn(s"j$i", 1, s"r$i", s"s$i"))).localCheckpoint()
+
+  /** Spark jobs of one full fold (raw graph, link state, closure) of a
+    * same-shaped delta, measured on this suite's session.
+    */
+  private val FoldJobs = 40
+
+  test("an empty first delta commits batch 0 with no rows; the next folds as batch 1, equal to scratch") {
+    val root = Files.createTempDirectory("graftempty").toString
+    val s0 = foldAll(root, spark.emptyDataset[Triple])
+    assert(s0 == IncrementalGraph.CrawlSummary(0L, 0L, 0L, 0L))
+    // every artifact is committed, and holds no rows
+    Seq("graph", "closure").foreach(a => assert(GraphLayout.exists(spark, s"$root/$a", TableIO.default), a))
+    assert(IncrementalGraph.readGraph(spark, root).df.count() == 0)
+    assert(LinkStateStore.load(spark, s"$root/link_state").get.count() == 0)
+
+    val all = ExtractPipeline.extract(turns(batch1 ++ batch2: _*)).localCheckpoint()
+    val s1 = foldAll(root, all)
+    assert(s1.batchId == 1 && s1.newTriples == all.dropDuplicates(Triple.identityCols).count())
+    assert(key(IncrementalGraph.readGraph(spark, root).df) == key(all.toDF()))
+    assert(key(IncrementalGraph.readClosure(spark, root).df) == key(Entailment.owlEntail(all).toDF()))
+    assert(labels(LinkStateStore.load(spark, s"$root/link_state").get) ==
+      labels(EntityLink.mentionLinkState(all, Seq(Contact))))
+  }
+
+  test("readCanonical refuses a root with no standing graph") {
+    val missing = Files.createTempDirectory("graftnoroot").toString + "/nope"
+    val e = intercept[IllegalArgumentException](IncrementalGraph.readCanonical(spark, missing))
+    assert(e.getMessage.contains(s"no crawl root graph under $missing"))
+  }
+
+  test("a fold of a same-shaped delta runs a pinned number of Spark jobs") {
+    val root = rootAfter(1)
+    val delta = sameShaped(100)
+    val (s, jobs) = jobsOf(foldAll(root, delta))
+    assert(s.newTriples > 0 && s.newClosureTriples > s.newTriples && s.linkStateNodes > 0)
+    assert(jobs == FoldJobs, s"$jobs jobs")
+  }
+
+  test("jobs per fold do not grow with the folds already made (after 1 and after 3)") {
+    val (early, late) = (rootAfter(1), rootAfter(3))
+    val (a, jobsEarly) = jobsOf(foldAll(early, sameShaped(100)))
+    val (b, jobsLate) = jobsOf(foldAll(late, sameShaped(100)))
+    assert(a.batchId == 1 && b.batchId == 3)
+    assert(a.newTriples == b.newTriples && a.newClosureTriples == b.newClosureTriples)
+    assert(jobsEarly == jobsLate, s"after 1 fold: $jobsEarly jobs, after 3: $jobsLate")
   }
 }
