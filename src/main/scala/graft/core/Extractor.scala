@@ -70,22 +70,6 @@ object Extractor {
 
   def isSkolem(iri: String): Boolean = iri.startsWith(SkolemPrefix)
 
-  /** Cheap pre-filter (format sniffing, /root/reference/lib/rdf/microdata/
-    * format.rb:45-47): only texts containing a microdata attribute are worth
-    * parsing. ASCII-case-insensitive, because HTML attribute names are and
-    * the parser lowercases them — an uppercase `ITEMSCOPE` row must not be
-    * dropped by the sniff when extraction would succeed. Mirrored as a
-    * Column filter in the Spark pipeline (ExtractPipeline.markupFilter).
-    */
-  def mightHaveMicrodata(text: String): Boolean = {
-    if (text == null) return false
-    val t = text.toLowerCase(java.util.Locale.ROOT)
-    t.contains("item") && (
-      t.contains("itemscope") || t.contains("itemprop") ||
-      t.contains("itemtype") || t.contains("itemref") ||
-      t.contains("itemid"))
-  }
-
   /** Extract all triples from one HTML text.
     *
     * @param html    the document / fragment markup

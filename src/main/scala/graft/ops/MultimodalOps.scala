@@ -130,19 +130,4 @@ object MultimodalOps {
       }
     }
   }
-
-  /** Partition-size guidance for binary columns: media rows are large —
-    * repartition so a task holds ~targetMb of payload, keeping executor
-    * memory flat regardless of corpus size.
-    */
-  def sizedForPayload(media: Dataset[MediaRow], totalRows: Long, rowBytesEstimate: Long,
-                      targetMb: Int = 128): Dataset[MediaRow] = {
-    val targetBytes = targetMb.toLong * 1024 * 1024
-    val parts = math.max(
-      (totalRows * math.max(rowBytesEstimate, 1) + targetBytes - 1) / targetBytes,
-      media.sparkSession.sparkContext.defaultParallelism.toLong)
-    // clamp before toInt: at 10^12 rows × MB-scale payloads the long count
-    // exceeds Int.MaxValue and a raw toInt wraps negative
-    media.repartition(math.min(parts, Int.MaxValue.toLong).toInt)
-  }
 }

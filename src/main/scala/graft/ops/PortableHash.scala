@@ -45,19 +45,11 @@ object PortableHash {
     * are CodegenFallback — every character cost an interpreted lambda step
     * plus a per-character allocation from the split, which dominated the
     * shingle/minhash pipelines. Identical values (spec-asserted against
-    * [[charFoldLegacy]] including astral/empty inputs).
+    * the composable form, kept in test scope, including astral/empty
+    * inputs).
     */
   def charFold(s: Column, mult: Long, p: Long): Column =
     graft.functions.CharFold(s, mult, p)
-
-  /** The original composable form — kept as the parity reference the spec
-    * checks the native expression against (it IS the documented semantics:
-    * codepoint elements via split's zero-width regex, and `ascii` returns
-    * the element's first codepoint — the full codepoint for an astral
-    * character, e.g. ascii('😀') = 128512).
-    */
-  private[graft] def charFoldLegacy(s: Column, mult: Long, p: Long): Column =
-    aggregate(split(s, ""), lit(0L), (acc, c) => pmod(acc * mult + ascii(c), lit(p)))
 
   def charFoldSql(s: String, mult: Long, p: Long): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(1, length($s)+1), " +
@@ -127,16 +119,10 @@ object PortableHash {
     * evaluates nTables·nBits projections per row, and the higher-order
     * form paid an interpreted lambda step per element per projection.
     * Bit-identical doubles (same sequential accumulation order;
-    * spec-asserted against [[lshProjLegacy]]).
+    * spec-asserted against the composable form, kept in test scope).
     */
   def lshProj(emb: Column, k: Column): Column =
     graft.functions.LshProj(emb, k)
-
-  /** The original composable form — the parity reference for the spec. */
-  private[graft] def lshProjLegacy(emb: Column, k: Column): Column =
-    aggregate(
-      transform(emb, (x, i) => x.cast("double") * plane(k, i)),
-      lit(0.0), (acc, x) => acc + x)
 
   def lshProjSql(emb: String, k: String): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len($emb)+1), " +

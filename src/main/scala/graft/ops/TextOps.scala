@@ -101,13 +101,6 @@ object TextOps {
   private def gramWindows(t: Column, n: Int): Column =
     graft.functions.WordGrams(t, n)
 
-  /** The original composable form — parity reference for the spec. */
-  private[graft] def gramWindowsLegacy(t: Column, n: Int): Column =
-    when(size(t) >= n,
-        transform(sequence(lit(0), size(t) - n),
-          i => concat_ws(" ", slice(t, i + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-
   /** Distinct word k-shingles per document. The input is spread to the
     * session's parallelism first (guide §2.5): the tokenize+explode here is
     * the most expensive projection of the dedup family, and a small corpus

@@ -31,11 +31,11 @@ object ExtractPipeline {
       |  "http://microformats.org/profile/hcard": {}
       |}""".stripMargin)
 
-  /** Markup pre-filter as a pushable Column predicate. Case-insensitive:
-    * HTML attribute names are — `<DIV ITEMSCOPE>` parses and extracts, so
-    * the pre-filter must not drop it (the cheap `contains` guard keeps the
-    * regex off rows with no "item" substring at all, the overwhelming
-    * majority).
+  /** Markup pre-filter (format sniffing, the reference's format.rb:45–47)
+    * as a pushable Column predicate. Case-insensitive: HTML attribute names
+    * are — `<DIV ITEMSCOPE>` parses and extracts, so the pre-filter must
+    * not drop it (the cheap `contains` guard keeps the regex off rows with
+    * no "item" substring at all, the overwhelming majority).
     */
   def markupFilter = col("text").isNotNull &&
     lower(col("text")).contains("item") &&

@@ -1,7 +1,7 @@
 package graft.spark
 
 import graft.model.Triple
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -30,9 +30,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *    [[Entailment.owlEntailIncremental]] (when enabled).
   *
   * Per-batch cost: extraction of the delta, the delta-sized quotient CC,
-  * the closure's delta cone, plus identity anti-joins of the delta against
-  * the pred_bucket-PRUNED standing slice (only partitions whose bucket
-  * appears in the delta are read). Nothing recomputes from scratch.
+  * the closure's delta cone, plus one identity anti-join per standing
+  * artifact ([[appendNovel]]). The anti-join scans every standing row: a
+  * fold's delta carries the standing graph's predicates, so a slice of the
+  * delta's pred buckets would keep nearly all of them. Nothing recomputes
+  * from scratch.
   *
   * Crash-rerun is idempotent WITHOUT a manifest: triples are
   * content-addressed, so a rerun's novelty anti-join skips whatever a
@@ -68,24 +70,8 @@ object IncrementalGraph {
                 io: TableIO = TableIO.default): CrawlSummary = {
     val spark = delta.sparkSession
     val d = delta.dropDuplicates(Triple.identityCols).localCheckpoint()
-
-    // Batch ids must be MONOTONE over ALL folds, including zero-novelty
-    // reruns: an empty fold materializes no batch_id partition (so
-    // max(batch_id) in the data is unchanged) yet still commits a
-    // link-state version and a crawl mark under its id. Deriving the next
-    // id from data alone would REUSE that id on the next genuine fold, and
-    // LinkStateStore.save would then rewrite the LIVE pointed-to version
-    // table in place — torn reads for concurrent consumers, and a crash
-    // mid-rewrite leaves the committed pointer on a corrupt table. The
-    // crawl marks are written unconditionally, so their max rides over
-    // empty folds; the data max still participates for dirs predating the
-    // marks (and compacted roots, whose marks reset).
-    val markFloor = io.listMetadata(spark, s"$root/graph", "_graft_crawl/batch-")
-      .flatMap(n => scala.util.Try(n.stripPrefix("batch-").toLong).toOption)
-      .foldLeft(0L)((acc, id) => math.max(acc, id + 1L))
-
-    val (newTriples, batchId) =
-      appendNovel(spark, d, s"$root/graph", predBuckets, io, minBatchId = markFloor)
+    val batchId = nextBatchId(spark, s"$root/graph", io)
+    val newTriples = appendNovel(spark, d, s"$root/graph", predBuckets, io, batchId)
 
     val linkNodes =
       if (linkKeys.isEmpty) -1L
@@ -96,8 +82,7 @@ object IncrementalGraph {
       if (!entail) -1L
       else {
         val dir = s"$root/closure"
-        appendNovel(spark, closureDelta(d, dir, io), dir, predBuckets, io,
-          knownBatchId = batchId)._1
+        appendNovel(spark, closureWith(d, dir, io), dir, predBuckets, io, batchId)
       }
 
     // per-batch crawl mark: observability + lineage (which batch landed how
@@ -107,72 +92,74 @@ object IncrementalGraph {
     CrawlSummary(batchId, newTriples, closureNew, linkNodes)
   }
 
-  /** The standing triples of a batch-layout dir, read with [[BatchSchema]]
-    * (so opening it starts no job). A dir with no layout — absent, or not
-    * written by a batch-layout writer — is empty, as is one whose every
-    * batch was empty: a first batch folds against empty artifacts.
+  /** The rows of a batch-layout dir, partition columns included, read with
+    * [[BatchSchema]] (so opening it starts no job); None when the dir has
+    * no layout — absent, or not written by a batch-layout writer.
+    */
+  private def batches(spark: SparkSession, dir: String, io: TableIO): Option[DataFrame] =
+    if (GraphLayout.exists(spark, dir, io)) Some(io.read(spark, dir, Some(BatchSchema))) else None
+
+  /** The standing triples of a batch-layout dir: empty when it has no
+    * layout, or when its every batch was empty — a first batch folds
+    * against empty artifacts.
     */
   private def standing(spark: SparkSession, dir: String, io: TableIO): Dataset[Triple] = {
     import spark.implicits._
-    if (!GraphLayout.exists(spark, dir, io)) spark.emptyDataset[Triple]
-    else io.read(spark, dir, Some(BatchSchema))
+    batches(spark, dir, io).fold(spark.emptyDataset[Triple])(_
       .select(col("subj"), col("pred"), col("obj_iri"), col("obj_lexical"),
         col("obj_datatype"), col("obj_lang"), col("conv_id"), col("turn_idx"))
-      .as[Triple]
+      .as[Triple])
   }
 
-  /** Compute the closure's NOVEL rows for one delta against a standing
-    * closure dir — shared by [[foldBatch]] and the streaming maintainer
+  /** The standing closure of `dir` with `delta` folded in: the standing
+    * rows plus the delta's cone, materialized by the entailment engine.
+    * [[appendNovel]] keeps the rows the dir lacks. Shared by [[foldBatch]]
+    * and the streaming maintainer
     * ([[graft.streaming.StreamingExtract.closureStream]]).
     */
-  private[graft] def closureDelta(delta: Dataset[Triple], dir: String,
-                                  io: TableIO): Dataset[Triple] = {
-    val spark = delta.sparkSession
-    import spark.implicits._
-    // full new closure, then keep only rows the standing closure lacks —
-    // the append stays delta-cone-sized. The standing side is a disk-backed
-    // scan read by the incremental seed and the novelty anti-join:
-    // re-scanning pruned parquet beats localCheckpoint's full
-    // materialization of the closure per fold — the O(|closed|) cost this
-    // operator exists to avoid.
-    val closed = standing(spark, dir, io)
-    Entailment.owlEntailIncremental(closed, delta).as("n")
-      .join(closed.as("o"), Triple.identityCond("n", "o"), "left_anti").as[Triple]
-      .localCheckpoint()
+  private[graft] def closureWith(delta: Dataset[Triple], dir: String,
+                                 io: TableIO): Dataset[Triple] =
+    Entailment.owlEntailIncremental(standing(delta.sparkSession, dir, io), delta)
+
+  /** The id the next append to a batch-layout dir writes under: past every
+    * crawl mark of `dir` and past every `batch_id` its rows hold.
+    *
+    * Both halves are needed. The marks: an empty fold materializes no
+    * batch_id partition, yet commits a link-state version and a crawl mark
+    * under its id; an id from the data alone would REUSE it on the next
+    * genuine fold, and LinkStateStore.save would then rewrite the LIVE
+    * pointed-to version table in place (torn reads; a crash mid-rewrite
+    * leaves the pointer on a corrupt table). The data: a fold that crashed
+    * after its rows and link state committed but before its mark leaves no
+    * mark; an id from the marks alone would reuse it, overwrite that
+    * batch's partitions and skip the rerun's link-state commit as a replay.
+    * The data max also covers dirs without marks (a compacted root, a
+    * closureStream dir).
+    */
+  private[graft] def nextBatchId(spark: SparkSession, dir: String, io: TableIO): Long = {
+    val markFloor = io.listMetadata(spark, dir, CrawlPrefix)
+      .flatMap(n => scala.util.Try(n.stripPrefix("batch-").toLong).toOption)
+      .foldLeft(0L)((acc, id) => math.max(acc, id + 1L))
+    // coalesce: a dir whose batches were all empty has no max
+    val dataFloor = batches(spark, dir, io).fold(0L)(
+      _.agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0) + 1L)
+    math.max(markFloor, dataFloor)
   }
 
-  /** Append the delta's NOVEL rows (identity anti-join against the
-    * pred_bucket-pruned standing slice) under the next batch_id partition.
-    * Returns (rows written, batch id used). `minBatchId` lets the caller
-    * raise the derived id past folds that wrote no data (see
-    * [[foldBatch]]'s monotonicity note).
+  /** Append the rows of `rows` that `dir` does not hold yet under the
+    * `batch_id` partition `batchId` ([[nextBatchId]]); returns the rows
+    * written. This is where a batch-layout dir decides which rows are new:
+    * one null-safe identity anti-join against every standing row.
     */
-  private[graft] def appendNovel(spark: SparkSession, delta: Dataset[Triple], dir: String,
-                                 predBuckets: Int, io: TableIO,
-                                 knownBatchId: Long = -1L,
-                                 minBatchId: Long = 0L): (Long, Long) = {
+  private[graft] def appendNovel(spark: SparkSession, rows: Dataset[Triple], dir: String,
+                                 predBuckets: Int, io: TableIO, batchId: Long): Long = {
     val st = standing(spark, dir, io)
     val buckets = layoutBuckets(spark, dir, io, predBuckets)
-    val batchId =
-      if (knownBatchId >= 0) knownBatchId
-      // coalesce: a dir with no rows yet has no max
-      else math.max(minBatchId, io.read(spark, dir, Some(BatchSchema))
-        .agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0) + 1L)
-    // prune the standing side to the delta's own pred buckets before the
-    // identity anti-join: partitions whose bucket the delta never touches
-    // are never read (bucket count is registry-bounded, so the collect is
-    // catalog-sized)
-    val deltaBuckets = delta
-      .select(pmod(hash(col("pred")), lit(buckets)).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val slice = st.toDF().withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets)))
-      .filter(col("pred_bucket").isin(deltaBuckets: _*))
-    val novel = delta.as("d").join(slice.as("a"), Triple.identityCond("d", "a"), "left_anti")
-    val written = ExtractPipeline.writeCounted(
+    val novel = rows.as("r").join(st.as("s"), Triple.identityCond("r", "s"), "left_anti")
+    ExtractPipeline.writeCounted(
       novel.withColumn("batch_id", lit(batchId))
         .withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets))),
       io.overwritePartitions(_, dir, Seq("batch_id", "pred_bucket")))
-    (written, batchId)
   }
 
   private[graft] def bucketCount(spark: SparkSession, dir: String, io: TableIO): Option[Int] =

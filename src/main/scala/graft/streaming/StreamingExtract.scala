@@ -137,7 +137,7 @@ object StreamingExtract {
     * continuous-KG trio ([[sinkToGraph]] = triples, [[linkStateStream]] =
     * identity clusters, this = derived facts): each micro-batch appends the
     * closure's DELTA CONE to a standing closure dir via
-    * [[graft.spark.IncrementalGraph.closureDelta]]
+    * [[graft.spark.IncrementalGraph.closureWith]]
     * ([[graft.spark.Entailment.owlEntailIncremental]] inside, every rule
     * prp-trp included — a schema edge or transitive declaration arriving
     * mid-stream replays the standing facts through just that edge). The dir is the batch_id/pred_bucket layout, so
@@ -145,10 +145,11 @@ object StreamingExtract {
     * at any point.
     *
     * Replay safety WITHOUT relying on the foreachBatch id: each fold
-    * appends under a fresh internal batch partition and its novelty
-    * anti-join skips whatever already landed — a replayed micro-batch adds
-    * only what its first attempt missed, never overwriting a partition
-    * that might hold earlier rows.
+    * appends under a fresh internal batch partition (past every batch the
+    * dir holds, [[graft.spark.IncrementalGraph.nextBatchId]]) and its
+    * novelty anti-join skips whatever already landed — a replayed
+    * micro-batch adds only what its first attempt missed, never overwriting
+    * a partition that might hold earlier rows.
     */
   def closureStream(triples: Dataset[Triple], closureDir: String, checkpointDir: String,
                     predBuckets: Int = 16,
@@ -158,10 +159,11 @@ object StreamingExtract {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Triple], _: Long) =>
+        import graft.spark.IncrementalGraph.{appendNovel, closureWith, nextBatchId}
+        val spark = batch.sparkSession
         val d = batch.dropDuplicates(graft.model.Triple.identityCols).localCheckpoint()
-        graft.spark.IncrementalGraph.appendNovel(batch.sparkSession,
-          graft.spark.IncrementalGraph.closureDelta(d, closureDir, io),
-          closureDir, predBuckets, io)
+        appendNovel(spark, closureWith(d, closureDir, io), closureDir, predBuckets, io,
+          nextBatchId(spark, closureDir, io))
         ()
       }
       .start()

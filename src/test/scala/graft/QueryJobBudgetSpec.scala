@@ -57,7 +57,7 @@ class QueryJobBudgetSpec extends AnyFunSuite {
     "query_jobs_subj"
   }
 
-  private def jobsOf[A](body: => A): (A, Int) = JobFence.jobsOf(spark)(body)
+  private def jobsOf[A](body: => A): (A, JobFence.Jobs) = JobFence.jobsBySite(spark)(body)
 
   /** One query kind: QueryMain arguments (no source, no output; "ask" runs
     * through the API instead), with its expected answer rows.
@@ -120,19 +120,20 @@ class QueryJobBudgetSpec extends AnyFunSuite {
       runKind(k, graphDir, out) // warm-up: first plans of the JVM
       val (n, jobs) = jobsOf(query(k, graphDir, out))
       assert(answer(k, out, n) == k.expected, k.name)
-      assert(jobs <= k.budget, s"${k.name}: $jobs jobs, budget ${k.budget}")
+      assert(jobs.total <= k.budget, s"${k.name}: budget ${k.budget}, $jobs")
     }
   }
 
   test("loadGraph: a recorded schema opens with no job; a layout without one infers it, same answers") {
-    assert(jobsOf(GraphQuery.loadGraph(spark, graphDir))._2 == 0)
+    val (_, open) = jobsOf(GraphQuery.loadGraph(spark, graphDir))
+    assert(open.total == 0, open)
     val copy = s"$base/graph_no_schema"
     ExtractPipeline.writeGraph(triples.toDS(), copy, predBuckets = 8)
     val layout = GraphLayout.read(spark, copy, graft.spark.TableIO.default).get
     assert(layout.schema.isDefined && layout.stats.isDefined && layout.predBuckets == 8)
     GraphLayout.write(spark, copy, graft.spark.TableIO.default, layout.copy(schema = None))
     val (g, jobs) = jobsOf(GraphQuery.loadGraph(spark, copy))
-    assert(jobs >= 1, "schema inference runs a job")
+    assert(jobs.total >= 1, s"schema inference runs a job: $jobs")
     assert(g.predBuckets == 8 && g.df.schema == GraphQuery.loadGraph(spark, graphDir).df.schema)
     kinds.filter(_.name != "bgp_star").foreach { k =>
       assert(runKind(k, copy, s"$base/out_inferred_${k.name}") == k.expected, k.name)

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Parity of the native CharFold / LshProj codegen expressions against the
-  * composable higher-order forms they replaced (which remain in
-  * PortableHash as the documented-semantics reference). The probabilistic
+  * composable higher-order forms they replaced (kept in [[LegacyForms]] as
+  * the documented-semantics reference). The probabilistic
   * ops' oracle gates depend on these hashes bit-for-bit, so the native
   * twins must agree on EVERY input class: ASCII, BMP unicode, astral
   * (surrogate-pair) text, empty and null strings; float/double arrays,
@@ -30,7 +30,7 @@ class PortableHashNativeSpec extends AnyFunSuite {
         (37L, PortableHash.P31b), (31L, PortableHash.FingerprintP))) {
       val out = df.select(
         CharFold(col("s"), mult, p).as("native"),
-        PortableHash.charFoldLegacy(col("s"), mult, p).as("legacy"))
+        LegacyForms.charFoldLegacy(col("s"), mult, p).as("legacy"))
       assert(out.filter(!($"native" <=> $"legacy")).count() == 0,
         s"CharFold($mult, $p) diverged from the composable form")
     }
@@ -51,7 +51,7 @@ class PortableHashNativeSpec extends AnyFunSuite {
       .select(col("embedding"), col("k").cast("long").as("k"))
     val out = embs.select(
       LshProj(col("embedding"), col("k")).as("native"),
-      PortableHash.lshProjLegacy(col("embedding"), col("k")).as("legacy"))
+      LegacyForms.lshProjLegacy(col("embedding"), col("k")).as("legacy"))
     assert(out.count() > 0)
     assert(out.filter(!($"native" <=> $"legacy")).count() == 0)
   }
@@ -66,7 +66,7 @@ class PortableHashNativeSpec extends AnyFunSuite {
     for (n <- Seq(2, 3, 5)) {
       val out = docs.select(
         graft.functions.WordGrams(col("t"), n).as("native"),
-        graft.ops.TextOps.gramWindowsLegacy(col("t"), n).as("legacy"))
+        LegacyForms.gramWindowsLegacy(col("t"), n).as("legacy"))
       assert(out.filter(!($"native" <=> $"legacy")).count() == 0,
         s"WordGrams($n) diverged from the composable form")
     }
@@ -88,7 +88,7 @@ class PortableHashNativeSpec extends AnyFunSuite {
       (None, 5L)).toDF("emb", "k")
     val out = df.select(
       LshProj(col("emb"), col("k")).as("native"),
-      PortableHash.lshProjLegacy(col("emb"), col("k")).as("legacy"))
+      LegacyForms.lshProjLegacy(col("emb"), col("k")).as("legacy"))
     assert(out.filter(!($"native" <=> $"legacy")).count() == 0)
     // empty array folds to 0.0; null array / null element are NULL
     val rows = out.select("native").collect().map(r => Option(r.get(0)))

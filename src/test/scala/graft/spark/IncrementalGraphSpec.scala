@@ -314,7 +314,7 @@ class IncrementalGraphSpec extends AnyFunSuite {
     assert(LinkStateStore.loadMapping(spark, state).get.count() > 0)
   }
 
-  private def jobsOf[A](body: => A): (A, Int) = JobFence.jobsOf(spark)(body)
+  private def jobsOf[A](body: => A): (A, JobFence.Jobs) = JobFence.jobsBySite(spark)(body)
 
   private def foldAll(root: String, delta: Dataset[Triple]): IncrementalGraph.CrawlSummary =
     IncrementalGraph.foldBatch(delta, root, predBuckets = 4, linkKeys = Seq(Contact), entail = true)
@@ -342,7 +342,12 @@ class IncrementalGraphSpec extends AnyFunSuite {
   /** Spark jobs of one full fold (raw graph, link state, closure) of a
     * same-shaped delta, measured on this suite's session.
     */
-  private val FoldJobs = 40
+  private val FoldJobs = 34
+
+  /** Spark jobs of a first fold (an empty root) of batch1 and batch2, at
+    * most: the first batch folds through the same path as a later one.
+    */
+  private val FirstFoldJobs = 23
 
   test("an empty first delta commits batch 0 with no rows; the next folds as batch 1, equal to scratch") {
     val root = Files.createTempDirectory("graftempty").toString
@@ -362,6 +367,29 @@ class IncrementalGraphSpec extends AnyFunSuite {
       labels(EntityLink.mentionLinkState(all, Seq(Contact))))
   }
 
+  test("a fold that crashed before its crawl mark: the rerun's batch id comes from the data") {
+    // fold A, then fold B; dropping B's mark leaves B's rows and link-state
+    // version committed with no mark — a crash between the two commits
+    val root = Files.createTempDirectory("graftnomark").toString
+    val a = ExtractPipeline.extract(turns(batch1: _*)).localCheckpoint()
+    val b = ExtractPipeline.extract(turns(batch2: _*)).localCheckpoint()
+    val c = ExtractPipeline.extract(turns(mentionTurn("c6", 0, "k3", "k9"))).localCheckpoint()
+    assert(foldAll(root, a).batchId == 0 && foldAll(root, b).batchId == 1)
+    val mark = new java.io.File(s"$root/graph/_graft_crawl/batch-1")
+    assert(mark.delete(), s"no crawl mark at $mark")
+
+    // C's rows share B's predicates: reusing id 1 would overwrite B's
+    // partitions, and skip C's link-state commit as a replay of v1
+    val s = foldAll(root, c)
+    assert(s.batchId == 2 && s.newTriples > 0)
+    val all = a.union(b).union(c)
+    assert(key(IncrementalGraph.readGraph(spark, root).df) == key(all.toDF()))
+    assert(key(IncrementalGraph.readClosure(spark, root).df) == key(Entailment.owlEntail(all).toDF()))
+    assert(LinkStateStore.latestVersion(spark, s"$root/link_state").contains(f"v${2L}%016d"))
+    assert(labels(LinkStateStore.load(spark, s"$root/link_state").get) ==
+      labels(EntityLink.mentionLinkState(all, Seq(Contact))))
+  }
+
   test("readCanonical refuses a root with no standing graph") {
     val missing = Files.createTempDirectory("graftnoroot").toString + "/nope"
     val e = intercept[IllegalArgumentException](IncrementalGraph.readCanonical(spark, missing))
@@ -373,7 +401,15 @@ class IncrementalGraphSpec extends AnyFunSuite {
     val delta = sameShaped(100)
     val (s, jobs) = jobsOf(foldAll(root, delta))
     assert(s.newTriples > 0 && s.newClosureTriples > s.newTriples && s.linkStateNodes > 0)
-    assert(jobs == FoldJobs, s"$jobs jobs")
+    assert(jobs.total == FoldJobs, jobs)
+  }
+
+  test("a first fold into an empty root runs at most a pinned number of Spark jobs") {
+    val root = Files.createTempDirectory("graftfirst").toString
+    val delta = ExtractPipeline.extract(turns(batch1 ++ batch2: _*)).localCheckpoint()
+    val (s, jobs) = jobsOf(foldAll(root, delta))
+    assert(s.batchId == 0 && s.newClosureTriples > s.newTriples && s.linkStateNodes > 0)
+    assert(jobs.total <= FirstFoldJobs, jobs)
   }
 
   test("jobs per fold do not grow with the folds already made (after 1 and after 3)") {
@@ -382,6 +418,6 @@ class IncrementalGraphSpec extends AnyFunSuite {
     val (b, jobsLate) = jobsOf(foldAll(late, sameShaped(100)))
     assert(a.batchId == 1 && b.batchId == 3)
     assert(a.newTriples == b.newTriples && a.newClosureTriples == b.newClosureTriples)
-    assert(jobsEarly == jobsLate, s"after 1 fold: $jobsEarly jobs, after 3: $jobsLate")
+    assert(jobsEarly.total == jobsLate.total, s"after 1 fold: $jobsEarly\nafter 3: $jobsLate")
   }
 }
