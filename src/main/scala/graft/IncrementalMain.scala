@@ -2,7 +2,7 @@ package graft
 
 import graft.core.RegistryIndex
 import graft.sources.TranscriptSources
-import graft.spark.{ExtractPipeline, GraftSession, IncrementalGraph}
+import graft.spark.{ExtractPipeline, GraftSession, GraphLayout, IncrementalGraph}
 import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the NIGHTLY-CRAWL shape: fold one delta
@@ -69,7 +69,7 @@ object IncrementalMain {
     val delta = ExtractPipeline.extract(transcripts, registry,
       opts.getOrElse("base-prefix", null), errors, uriOpts)
     val summary = IncrementalGraph.foldBatch(delta, opts("root"),
-      predBuckets = opts.getOrElse("buckets", "16").toInt,
+      predBuckets = opts.get("buckets").fold(GraphLayout.DefaultBuckets)(_.toInt),
       linkKeys = opts.get("link-keys").map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil),
       entail = opts.contains("entail"))
     if (opts.contains("validate") && errors.value > 0)

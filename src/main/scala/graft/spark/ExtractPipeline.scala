@@ -154,11 +154,11 @@ object ExtractPipeline {
     * predicate-sliced reads prune partitions. Physical binding goes through
     * the [[TableIO]] seam (parquet here; Iceberg in deployment).
     */
-  def writeGraph(triples: Dataset[Triple], outDir: String, predBuckets: Int = 16,
+  def writeGraph(triples: Dataset[Triple], outDir: String, predBuckets: Int = GraphLayout.DefaultBuckets,
                  io: TableIO = TableIO.default): Unit = {
     io.write(
-      triples.withColumn("pred_bucket", pmod(hash(col("pred")), lit(predBuckets))),
-      outDir, Seq("pred_bucket"))
+      triples.withColumn(GraphLayout.BucketColumn, GraphLayout.bucket(col("pred"), predBuckets)),
+      outDir, Seq(GraphLayout.BucketColumn))
     // self-describing layout: the bucket count is a property of the TABLE,
     // not of any query against it, and the predicate-frequency stats are
     // catalog statistics computed ONCE at write time (a pruned pred-column
@@ -177,16 +177,14 @@ object ExtractPipeline {
     // absent/corrupt metadata — loadGraph degrades to no-pruning.
     val spark = triples.sparkSession
     val written = io.read(spark, outDir)
-    val stats = written
-      .groupBy(col("pred")).agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    GraphLayout.write(spark, outDir, io, GraphLayout(predBuckets, Some(stats), Some(written.schema)))
+    GraphLayout.write(spark, outDir, io,
+      GraphLayout(predBuckets, Some(GraphQuery.predStats(written)), Some(written.schema)))
   }
 
   /** Catalog table property carrying write-time predicate stats on a
     * subject-bucketed graph table (the counterpart of writeGraph's
     * `_graft_layout.json`; Iceberg: table properties play exactly this
-    * role). Value: a JSON object of predicate → count.
+    * role). Value: [[GraphLayout.statsJson]], predicate → count.
     */
   val PredStatsProperty = "graft.pred_stats"
 
@@ -200,10 +198,10 @@ object ExtractPipeline {
     * counterpart of writeGraph's directory layout (Iceberg: `bucket(N,
     * subj)` partition transform).
     *
-    * Predicate-frequency stats are computed once at write time (pruned
-    * pred-column scan, vocabulary-bounded result) and stored as a TABLE
-    * PROPERTY — the table describes itself, readers never re-scan for
-    * join-ordering stats.
+    * Predicate-frequency stats are computed once at write time
+    * ([[GraphQuery.predStats]]) and stored as the [[PredStatsProperty]]
+    * TABLE PROPERTY — the table describes itself, readers never re-scan
+    * for join-ordering stats.
     *
     * @param path optional explicit data location (external table); default
     *             is the session warehouse directory
@@ -216,19 +214,13 @@ object ExtractPipeline {
     (if (path != null) w.option("path", path) else w).saveAsTable(tableName)
 
     val spark = triples.sparkSession
-    val stats = spark.table(tableName)
-      .groupBy(col("pred")).agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    stats.sortBy(_._1).foreach { case (p, n) => root.put(p, n) }
+    val stats = GraphLayout.statsJson(GraphQuery.predStats(spark.table(tableName)))
     // catalog API, not an ALTER TABLE SQL string: predicate IRIs are
     // arbitrary strings and must not need SQL-literal escaping
     val catalog = spark.sessionState.catalog
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(tableName)
     val meta = catalog.getTableMetadata(ident)
-    catalog.alterTable(meta.copy(properties =
-      meta.properties + (PredStatsProperty -> mapper.writeValueAsString(root))))
+    catalog.alterTable(meta.copy(properties = meta.properties + (PredStatsProperty -> stats)))
   }
 
   /** IRIREF escaping, Column twin of graft.core.NTriples.escapeIri. A

@@ -21,11 +21,12 @@ import scala.collection.mutable
   *    constant terms become pushable predicates (plain column equalities
   *    and IsNull/Or combinations, so `PushedFilters` reach the parquet
   *    scan — a `?s rdf:type :Person` pattern never reads non-type rows);
-  *  - when the table is a [[ExtractPipeline.writeGraph]] layout (a
-  *    `pred_bucket` partition column), a constant-predicate pattern also
-  *    filters `pred_bucket = pmod(hash(pred), n)` — the hash folds to a
-  *    literal at plan time, so the scan PRUNES partitions: at 100 TB a
-  *    `rdf:type` pattern touches 1/n of the directories, not all of them;
+  *  - a constant-predicate pattern reads [[PersistedGraph.predSlice]]:
+  *    on a table with a `pred_bucket` partition column (the
+  *    [[ExtractPipeline.writeGraph]] and batch layouts) it also filters
+  *    the predicate's [[GraphLayout.bucket]], which folds to a literal at
+  *    plan time, so the scan PRUNES partitions: at 100 TB a `rdf:type`
+  *    pattern touches 1/n of the directories, not all of them;
   *  - patterns join pairwise on their shared variables (equi-joins on
   *    binding columns — co-partitioned shuffles, or BroadcastHashJoin when
   *    a selective pattern leaves a small side; AQE re-plans at runtime);
@@ -64,11 +65,26 @@ object GraphQuery {
     triples.groupBy(col("pred")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  /** A [[ExtractPipeline.writeGraph]] table opened for querying: frame +
-    * the layout's own bucket count + predicate stats.
+  /** A graph opened for querying: frame + the layout's own bucket count
+    * (0 = no pruning) + predicate stats; a bare frame is `PersistedGraph(df, 0, Map.empty)`.
     */
   final case class PersistedGraph(df: DataFrame, predBuckets: Int,
-                                  stats: Map[String, Long])
+                                  stats: Map[String, Long]) {
+    /** The rows of `preds` among `rows` (the graph, or a frame filtered
+      * from it) for every constant-predicate reader: the pushed `pred`
+      * filter and, when the frame has the bucket column, their buckets'
+      * partition filter (each [[GraphLayout.bucket]] folds to a literal).
+      */
+    def predSlice(preds: Seq[String], rows: DataFrame = df): DataFrame = {
+      // a one-element IN optimizes to the pushed EqualTo(pred, p)
+      val byPred = rows.filter(col("pred").isin(preds: _*))
+      if (predBuckets > 0 && rows.columns.contains(GraphLayout.BucketColumn))
+        byPred.filter(preds
+          .map(p => col(GraphLayout.BucketColumn) === GraphLayout.bucket(lit(p), predBuckets))
+          .reduce(_ || _))
+      else byPred
+    }
+  }
 
   /** Open a persisted graph directory: reads the layout's OWN bucket count,
     * write-time predicate stats AND recorded schema from
@@ -110,76 +126,59 @@ object GraphQuery {
     * shuffle as usual.
     *
     * Predicate stats come from the table's own [[ExtractPipeline
-    * .PredStatsProperty]] catalog property (written at write time);
-    * a foreign table without it falls back to the one-pass scan.
+    * .PredStatsProperty]] catalog property (written at write time, read
+    * with [[GraphLayout.parseStats]]); a foreign table without it falls
+    * back to the one-pass scan.
     * `predBuckets` is 0 — a bucketed table has no `pred_bucket` partition
     * column; predicate selectivity is served by parquet row-group pushdown
     * on the sorted-within-bucket layout instead.
     */
   def loadBucketedGraph(spark: org.apache.spark.sql.SparkSession,
                         tableName: String): PersistedGraph = {
-    import scala.jdk.CollectionConverters._
     val df = spark.table(tableName)
     val stats = scala.util.Try {
       val ident = spark.sessionState.sqlParser.parseTableIdentifier(tableName)
-      val props = spark.sessionState.catalog.getTableMetadata(ident).properties
-      props.get(graft.spark.ExtractPipeline.PredStatsProperty).map { json =>
-        new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-          .properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-      }
+      spark.sessionState.catalog.getTableMetadata(ident).properties
+        .get(ExtractPipeline.PredStatsProperty).flatMap(GraphLayout.parseStats)
     }.toOption.flatten
     PersistedGraph(df, 0, stats.getOrElse(predStats(df)))
   }
 
-  /** Solve a BGP against an opened persisted graph (bucket count and stats
-    * come from the table itself — the safe front door).
+  /** Solve the basic graph pattern over the graph's (subj, pred, obj_iri,
+    * obj_lexical, ...) triples; returns one column per distinct variable
+    * name, in first-mention order. Pruning and join order use `g`'s bucket
+    * count and stats — the table's own, when opened with [[loadGraph]].
     */
   def bgp(g: PersistedGraph, patterns: Seq[(Term, Term, Term)]): DataFrame =
-    bgp(g.df, patterns, g.predBuckets, g.stats)
-
-  /** Solve the basic graph pattern over (subj, pred, obj_iri, obj_lexical,
-    * ...) triples; returns one column per distinct variable name, in
-    * first-mention order.
-    *
-    * @param predBuckets when > 0 and the frame carries a `pred_bucket`
-    *        column (the [[ExtractPipeline.writeGraph]] layout), constant-
-    *        predicate patterns add the partition-pruning bucket filter.
-    *        MUST equal the count the table was written with — a mismatch
-    *        silently empties constant-pred patterns; prefer the
-    *        [[loadGraph]]/[[PersistedGraph]] front door, which reads the
-    *        count from the table's own layout metadata.
-    * @param stats predicate frequencies from [[predStats]]; empty map =
-    *        cost by constant count only.
-    */
-  def bgp(triples: DataFrame, patterns: Seq[(Term, Term, Term)],
-          predBuckets: Int = 0, stats: Map[String, Long] = Map.empty): DataFrame =
-    solve(triples, patterns, predBuckets, stats).distinct()
+    solve(g, patterns).distinct()
 
   /** [[bgp]] without its final distinct: every solution, once per
     * derivation. For a side that only feeds a semi- or anti-join, which
     * never multiplies the other side's rows — deduplicating it would buy
     * a shuffle and change no answer.
     */
-  private def solve(g: PersistedGraph, patterns: Seq[(Term, Term, Term)]): DataFrame =
-    solve(g.df, patterns, g.predBuckets, g.stats)
-
-  private def solve(triples: DataFrame, patterns: Seq[(Term, Term, Term)],
-                    predBuckets: Int, stats: Map[String, Long]): DataFrame = {
+  private def solve(g: PersistedGraph, patterns: Seq[(Term, Term, Term)]): DataFrame = {
     require(patterns.nonEmpty, "empty BGP")
+    // variables surface in first-mention order regardless of join order
+    val outVars = patterns
+      .flatMap(p => Seq(p._1, p._2, p._3)).collect { case V(n) => n }.distinct
+    greedyJoin(patternItems(g, patterns), outVars)
+  }
+
+  /** Each pattern as a [[greedyJoin]] item: its compiled frame, variable
+    * names, subject variable (or null) and estimated rows.
+    */
+  private def patternItems(g: PersistedGraph, patterns: Seq[(Term, Term, Term)])
+      : Seq[(DataFrame, Seq[String], String, Long)] = {
     require(patterns.forall(p => Seq(p._1, p._2, p._3).exists(_.isInstanceOf[V])),
       "variable-free patterns (pure existence checks) are not supported: " +
         "they cannot join on a shared variable — evaluate the constant " +
         "triple separately and gate the query on its result")
-
-    val items = patterns.map { p =>
-      val (df, vars) = compile(triples, p, predBuckets)
+    patterns.map { p =>
+      val (df, vars) = compile(g, p)
       val subjVar = p._1 match { case V(n) => n; case _ => null }
-      (df, vars, subjVar, estimate(p, stats))
+      (df, vars, subjVar, estimate(p, g.stats))
     }
-    // variables surface in first-mention order regardless of join order
-    val outVars = patterns
-      .flatMap(p => Seq(p._1, p._2, p._3)).collect { case V(n) => n }.distinct
-    greedyJoin(items, outVars)
   }
 
   /** Selectivity-greedy connected join over pre-compiled pattern frames —
@@ -255,20 +254,16 @@ object GraphQuery {
     (0 until discounts).foldLeft(base)((e, _) => if (e > 0) math.max(e / 100, 1L) else 0L)
   }
 
-  /** One pattern → (bindings frame, variable names). Constants filter as
-    * pushable predicates; a variable repeated inside one pattern becomes an
-    * equality filter (e.g. `?x :sameAs ?x`).
+  /** One pattern → (bindings frame, variable names). A constant predicate
+    * reads the graph's [[PersistedGraph.predSlice]]; the other constants
+    * filter as pushable predicates; a variable repeated inside one pattern
+    * becomes an equality filter (e.g. `?x :sameAs ?x`).
     */
-  private def compile(triples: DataFrame, p: (Term, Term, Term),
-                      predBuckets: Int): (DataFrame, Seq[String]) = {
-    val hasBucket = predBuckets > 0 && triples.columns.contains("pred_bucket")
-    var df = triples
+  private def compile(g: PersistedGraph, p: (Term, Term, Term)): (DataFrame, Seq[String]) = {
+    var df = g.df
     val slots = Seq("subj" -> p._1, "pred" -> p._2, "obj" -> p._3)
     slots.foreach {
-      case ("pred", C(v)) =>
-        df = df.filter(col("pred") === v)
-        if (hasBucket) // hash(lit) constant-folds → literal partition filter
-          df = df.filter(col("pred_bucket") === pmod(hash(lit(v)), lit(predBuckets)))
+      case ("pred", C(v)) => df = g.predSlice(Seq(v), df)
       case ("subj", C(v)) => df = df.filter(col("subj") === v)
       case ("obj", C(v)) =>
         // Triple's object is (obj_iri XOR obj_lexical) — this disjunction
@@ -532,17 +527,13 @@ object GraphQuery {
     * predicates' edge slices (the SPARQL alternation-under-closure path,
     * e.g. `(reportsTo|managedBy)+`): a hop may take any listed predicate.
     * Same semi-naive machinery as the single-predicate form; the edge
-    * slice is one pushed `pred IN (…)` scan, with partition pruning
-    * through an `IN` over the constant-folded bucket hashes.
+    * slice is one [[PersistedGraph.predSlice]] scan: a pushed `pred IN
+    * (…)`, pruned to the predicates' buckets.
     */
   def pathPlusAlt(g: PersistedGraph, preds: Seq[String],
                   maxIterations: Int = 64): DataFrame = {
     require(preds.nonEmpty, "empty predicate alternation")
-    var slice = g.df.filter(col("pred").isin(preds: _*) && col("obj_iri").isNotNull)
-    if (g.predBuckets > 0 && g.df.columns.contains("pred_bucket"))
-      slice = slice.filter(preds
-        .map(p => col("pred_bucket") === pmod(hash(lit(p)), lit(g.predBuckets)))
-        .reduce(_ || _)) // each side folds to a literal → partition filter
+    val slice = g.predSlice(preds).filter(col("obj_iri").isNotNull)
     // no distinct here: closure dedups its input itself — a second
     // Deduplicate would cost a redundant full shuffle of the edge slice.
     // The stats count the predicates' literal-object rows too: an upper
@@ -879,21 +870,17 @@ object GraphQuery {
   def evalPath(g: PersistedGraph, path: Path, maxIterations: Int = 64): DataFrame =
     pathFrame(g, path, None, None, maxIterations).distinct()
 
-  /** Atomic forward edges for one predicate: pushed equality +
-    * constant-folded bucket pruning, object coalesced to one term domain.
+  /** Atomic forward edges for one predicate: its
+    * [[PersistedGraph.predSlice]], object coalesced to one term domain.
     * The coalesce matches the BGP engine's string-typed binding columns
     * (literal-terminal paths bind their lexical form). Known limitation of
     * the string domain: a literal whose lexical form EQUALS an IRI in the
     * graph is indistinguishable from it at a chaining join — exact typed
     * paths would carry a term-kind column through every binding frame.
     */
-  private def atomEdges(g: PersistedGraph, iri: String): DataFrame = {
-    var df = g.df.filter(col("pred") === iri)
-    if (g.predBuckets > 0 && g.df.columns.contains("pred_bucket"))
-      df = df.filter(col("pred_bucket") === pmod(hash(lit(iri)), lit(g.predBuckets)))
-    df.select(col("subj").as("s"),
+  private def atomEdges(g: PersistedGraph, iri: String): DataFrame =
+    g.predSlice(Seq(iri)).select(col("subj").as("s"),
       coalesce(col("obj_iri"), col("obj_lexical")).as("o"))
-  }
 
   /** Rows of the edge frame [[pathFrame]] builds for `p`, from the
     * layout's stats: exact for an atom (its slice is that predicate's
@@ -1075,18 +1062,10 @@ object GraphQuery {
                    pathPatterns: Seq[(Term, Path, Term)],
                    maxIterations: Int = 64): DataFrame = {
     require(patterns.nonEmpty || pathPatterns.nonEmpty, "empty BGP")
-    require(patterns.forall(p => Seq(p._1, p._2, p._3).exists(_.isInstanceOf[V])),
-      "variable-free patterns (pure existence checks) are not supported: " +
-        "they cannot join on a shared variable — evaluate the constant " +
-        "triple separately and gate the query on its result")
+    val tripleItems = patternItems(g, patterns)
     require(pathPatterns.forall(p => Seq(p._1, p._3).exists(_.isInstanceOf[V])),
       "variable-free path patterns are not supported — evaluate evalPath " +
         "with both endpoints bound separately and gate the query on its result")
-    val tripleItems = patterns.map { p =>
-      val (df, vars) = compile(g.df, p, g.predBuckets)
-      val subjVar = p._1 match { case V(n) => n; case _ => null }
-      (df, vars, subjVar, estimate(p, g.stats))
-    }
     val pathItems = pathPatterns.map { pp =>
       val (df, vars) = compilePath(g, pp._1, pp._2, pp._3, maxIterations)
       // a path frame is closure/join output, never the bucketed scan — no

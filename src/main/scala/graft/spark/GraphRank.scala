@@ -129,13 +129,8 @@ object GraphRank {
     */
   def pagerank(g: GraphQuery.PersistedGraph, pred: Option[String],
                iters: Int): DataFrame = {
-    var slice = g.df.filter(col("obj_iri").isNotNull)
-    pred.foreach { p =>
-      slice = slice.filter(col("pred") === p)
-      if (g.predBuckets > 0 && g.df.columns.contains("pred_bucket"))
-        slice = slice.filter(
-          col("pred_bucket") === pmod(hash(lit(p)), lit(g.predBuckets)))
-    }
+    val iriEdges = g.df.filter(col("obj_iri").isNotNull)
+    val slice = pred.fold(iriEdges)(p => g.predSlice(Seq(p), iriEdges))
     pagerank(slice.select(col("subj").as("src"), col("obj_iri").as("dst"))
       .distinct(), iters)
   }

@@ -51,20 +51,21 @@ object IncrementalGraph {
   private val CrawlPrefix = "_graft_crawl/batch-"
 
   /** The schema a batch-layout dir reads back with: the triple columns,
-    * then the `batch_id` and `pred_bucket` partition columns. Recorded in
+    * then the `batch_id` and [[GraphLayout.BucketColumn]] partition
+    * columns. Recorded in
     * the layout ([[GraphLayout]]) by every batch-layout writer, so readers
     * open the dir without an inference job; `batch_id` is the LONG the
     * writers store (inference would narrow it to int when it fits).
     */
   private[graft] val BatchSchema: StructType = StructType(
     org.apache.spark.sql.Encoders.product[Triple].schema.fields.map(_.copy(nullable = true)) ++
-      Seq(StructField("batch_id", LongType), StructField("pred_bucket", IntegerType)))
+      Seq(StructField("batch_id", LongType), StructField(GraphLayout.BucketColumn, IntegerType)))
 
   /** Fold one delta batch into the standing root. `delta` should be the
     * extracted (set-semantics) triples of the new transcripts — see
     * [[graft.IncrementalMain]] for the CLI wiring.
     */
-  def foldBatch(delta: Dataset[Triple], root: String, predBuckets: Int = 16,
+  def foldBatch(delta: Dataset[Triple], root: String, predBuckets: Int = GraphLayout.DefaultBuckets,
                 linkKeys: Seq[String] = Nil, entail: Boolean = false,
                 maxKeyDegree: Int = 100000,
                 io: TableIO = TableIO.default): CrawlSummary = {
@@ -156,11 +157,19 @@ object IncrementalGraph {
     val st = standing(spark, dir, io)
     val buckets = layoutBuckets(spark, dir, io, predBuckets)
     val novel = rows.as("r").join(st.as("s"), Triple.identityCond("r", "s"), "left_anti")
-    ExtractPipeline.writeCounted(
-      novel.withColumn("batch_id", lit(batchId))
-        .withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets))),
-      io.overwritePartitions(_, dir, Seq("batch_id", "pred_bucket")))
+    writeBatch(novel, dir, batchId, buckets, io)
   }
+
+  /** The one batch-layout writer: `rows` into `dir` as batch `batchId`,
+    * each under its [[GraphLayout.bucket]] of `buckets` (dynamic partition
+    * overwrite); returns the rows written.
+    */
+  private[graft] def writeBatch(rows: Dataset[_], dir: String, batchId: Long, buckets: Int,
+                                io: TableIO): Long =
+    ExtractPipeline.writeCounted(
+      rows.withColumn("batch_id", lit(batchId))
+        .withColumn(GraphLayout.BucketColumn, GraphLayout.bucket(col("pred"), buckets)),
+      io.overwritePartitions(_, dir, Seq("batch_id", GraphLayout.BucketColumn)))
 
   private[graft] def bucketCount(spark: SparkSession, dir: String, io: TableIO): Option[Int] =
     GraphLayout.read(spark, dir, io).map(_.predBuckets).filter(_ > 0)
@@ -190,12 +199,9 @@ object IncrementalGraph {
     */
   def compact(spark: SparkSession, srcDir: String, destDir: String,
               io: TableIO = TableIO.default): Long = {
-    val buckets = bucketCount(spark, srcDir, io).getOrElse(16)
-    val rows = ExtractPipeline.writeCounted(
-      standing(spark, srcDir, io).dropDuplicates(Triple.identityCols)
-        .withColumn("batch_id", lit(0L))
-        .withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets))),
-      io.overwritePartitions(_, destDir, Seq("batch_id", "pred_bucket")))
+    val buckets = bucketCount(spark, srcDir, io).getOrElse(GraphLayout.DefaultBuckets)
+    val rows = writeBatch(standing(spark, srcDir, io).dropDuplicates(Triple.identityCols),
+      destDir, 0L, buckets, io)
     GraphLayout.write(spark, destDir, io, GraphLayout(buckets, schema = Some(BatchSchema)))
     rows
   }

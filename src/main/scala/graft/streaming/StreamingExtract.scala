@@ -72,7 +72,7 @@ object StreamingExtract {
     * into one generation when the count grows unwieldy.
     */
   def sinkToGraph(triples: Dataset[Triple], outDir: String, checkpointDir: String,
-                  predBuckets: Int = 16,
+                  predBuckets: Int = graft.spark.GraphLayout.DefaultBuckets,
                   io: graft.spark.TableIO = graft.spark.TableIO.default)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // metadata ONCE, before the stream starts: its content is constant
@@ -90,14 +90,12 @@ object StreamingExtract {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Triple], batchId: Long) =>
-        // data rides the SAME TableIO seam as every batch writer — an
-        // Iceberg binding must not end up with metadata in the table but
-        // triples in a stray parquet dir
-        io.overwritePartitions(
-          batch.dropDuplicates(Triple.identityCols)
-            .withColumn("batch_id", lit(batchId))
-            .withColumn("pred_bucket", pmod(hash(col("pred")), lit(buckets))),
-          outDir, Seq("batch_id", "pred_bucket"))
+        // the one batch-layout writer, through the SAME TableIO seam as the
+        // metadata — an Iceberg binding must not end up with metadata in
+        // the table but triples in a stray parquet dir
+        graft.spark.IncrementalGraph.writeBatch(batch.dropDuplicates(Triple.identityCols),
+          outDir, batchId, buckets, io)
+        ()
       }
       .start()
   }
@@ -152,7 +150,7 @@ object StreamingExtract {
     * a partition that might hold earlier rows.
     */
   def closureStream(triples: Dataset[Triple], closureDir: String, checkpointDir: String,
-                    predBuckets: Int = 16,
+                    predBuckets: Int = graft.spark.GraphLayout.DefaultBuckets,
                     io: graft.spark.TableIO = graft.spark.TableIO.default)
       : org.apache.spark.sql.streaming.StreamingQuery =
     triples.writeStream

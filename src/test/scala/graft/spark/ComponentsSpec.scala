@@ -129,7 +129,7 @@ class ComponentsSpec extends AnyFunSuite {
         (V("s"), C("http://www.w3.org/1999/02/22-rdf-syntax-ns#type"), V("t"))))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     val batch = ExtractPipeline.extract(spark.read.parquet(dir)).toDF()
-    val expected = graft.spark.GraphQuery.bgp(batch, Seq(
+    val expected = graft.spark.GraphQuery.bgp(graft.spark.GraphQuery.PersistedGraph(batch, 0, Map.empty), Seq(
         (V("s"), C("http://www.w3.org/1999/02/22-rdf-syntax-ns#type"), V("t"))))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(streamed == expected && streamed.nonEmpty)
@@ -183,7 +183,9 @@ class ComponentsSpec extends AnyFunSuite {
     val rdfType = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
     val pruned = graft.spark.GraphQuery.bgp(g, Seq((V("s"), C(rdfType), V("t"))))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val expect = graft.spark.GraphQuery.bgp(batchAll.toDF(), Seq((V("s"), C(rdfType), V("t"))))
+    val expect = graft.spark.GraphQuery.bgp(
+        graft.spark.GraphQuery.PersistedGraph(batchAll.toDF(), 0, Map.empty),
+        Seq((V("s"), C(rdfType), V("t"))))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(pruned == expect && pruned.nonEmpty)
   }

@@ -21,9 +21,11 @@ class GraphQuerySpec extends AnyFunSuite {
     ("p1", "likes", "p1", null))
     .toDF("subj", "pred", "obj_iri", "obj_lexical")
 
+  private def asGraph = GraphQuery.PersistedGraph(graph, 0, Map.empty)
+
   test("bgp: multi-pattern join binds across subject and object positions") {
     // persons and the NAME of someone they know
-    val out = bgp(graph, Seq(
+    val out = bgp(asGraph, Seq(
       (V("x"), C(TypeP), C("Person")),
       (V("x"), C("knows"), V("y")),
       (V("y"), C("name"), V("n"))))
@@ -32,20 +34,20 @@ class GraphQuerySpec extends AnyFunSuite {
   }
 
   test("bgp: literal and IRI objects share one binding domain") {
-    val out = bgp(graph, Seq((V("s"), C("name"), V("v"))))
+    val out = bgp(asGraph, Seq((V("s"), C("name"), V("v"))))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(out == Set(("p1", "Ann"), ("p2", "Bob")))
   }
 
   test("bgp: repeated variable inside one pattern filters equality") {
-    val out = bgp(graph, Seq((V("x"), C("likes"), V("x"))))
+    val out = bgp(asGraph, Seq((V("x"), C("likes"), V("x"))))
       .collect().map(_.getString(0)).toSet
     assert(out == Set("p1")) // p1 likes p1; knows edges are not reflexive
   }
 
   test("bgp: disconnected pattern set is refused, never a cartesian") {
     val e = intercept[IllegalArgumentException] {
-      bgp(graph, Seq(
+      bgp(asGraph, Seq(
         (V("a"), C("name"), V("b")),
         (V("c"), C("knows"), V("d"))))
     }
@@ -55,7 +57,7 @@ class GraphQuerySpec extends AnyFunSuite {
   test("bgp: join order is connectivity-greedy (listed order may interleave)") {
     // patterns listed so #2 is disconnected from #1 but #3 bridges them:
     // the greedy order must pick #3 before #2 instead of failing
-    val out = bgp(graph, Seq(
+    val out = bgp(asGraph, Seq(
       (V("x"), C(TypeP), C("Person")),
       (V("y"), C("name"), V("n")),
       (V("x"), C("knows"), V("y"))))
@@ -92,8 +94,8 @@ class GraphQuerySpec extends AnyFunSuite {
       (V("x"), C(TypeP), C("Person")),
       (V("x"), C("knows"), V("y")),
       (V("y"), C("name"), V("n")))
-    val base = bgp(graph, pats).collect().map(_.toSeq).toSet
-    val ordered = bgp(graph, pats, stats = stats).collect().map(_.toSeq).toSet
+    val base = bgp(asGraph, pats).collect().map(_.toSeq).toSet
+    val ordered = bgp(GraphQuery.PersistedGraph(graph, 0, stats), pats).collect().map(_.toSeq).toSet
     assert(ordered == base && base.nonEmpty)
   }
 
@@ -129,9 +131,9 @@ class GraphQuerySpec extends AnyFunSuite {
   }
 
   test("bgp: a pattern over an absent predicate estimates 0, seeds the join, empties the result") {
-    val out = bgp(graph, Seq(
+    val out = bgp(GraphQuery.PersistedGraph(graph, 0, GraphQuery.predStats(graph)), Seq(
       (V("x"), C(TypeP), C("Person")),
-      (V("x"), C("no_such_pred"), V("z"))), stats = GraphQuery.predStats(graph))
+      (V("x"), C("no_such_pred"), V("z"))))
     assert(out.count() == 0)
   }
 
@@ -140,14 +142,14 @@ class GraphQuerySpec extends AnyFunSuite {
       (V("x"), C(TypeP), C("Person")),
       (V("x"), C("knows"), V("y")),
       (V("y"), C("name"), V("n")))
-    val expected = bgp(graph, pats).collect().map(_.toSeq).toSet
+    val expected = bgp(asGraph, pats).collect().map(_.toSeq).toSet
     assert(expected.nonEmpty)
     pats.permutations.foreach { perm =>
-      val got = bgp(graph, perm).collect().map(_.toSeq).toSet
+      val got = bgp(asGraph, perm).collect().map(_.toSeq).toSet
       // variable columns surface in the PERMUTATION's first-mention order —
       // compare as (name -> value) maps so only the bindings matter
-      val cols = bgp(graph, perm).columns
-      val expCols = bgp(graph, pats).columns
+      val cols = bgp(asGraph, perm).columns
+      val expCols = bgp(asGraph, pats).columns
       val gotMaps = got.map(r => cols.zip(r).toMap)
       val expMaps = expected.map(r => expCols.zip(r).toMap)
       assert(gotMaps == expMaps, s"order ${perm.map(_.toString).mkString(";")}")
@@ -252,7 +254,7 @@ class GraphQuerySpec extends AnyFunSuite {
       assert(!plan.contains("Exchange hashpartitioning"),
         s"subject-star join over the bucketed table must be shuffle-free:\n$plan")
       val got = out.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      val exp = bgp(triples.toDF(), pats)
+      val exp = bgp(GraphQuery.PersistedGraph(triples.toDF(), 0, Map.empty), pats)
         .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
       assert(got == exp && got == Set(
         ("http://x/p1", "Ann", "http://x/n1"), ("http://x/p2", "Bob", "http://x/n2")))
@@ -373,7 +375,7 @@ class GraphQuerySpec extends AnyFunSuite {
       ("c2", 0, """<div itemscope itemtype="http://schema.org/Country" itemid="http://x/n1"><span itemprop="name">Norway</span></div>"""))
       .toDF("conv_id", "turn_idx", "text")
     val triples = ExtractPipeline.extract(turns).toDF()
-    val out = bgp(triples, Seq(
+    val out = bgp(GraphQuery.PersistedGraph(triples, 0, Map.empty), Seq(
       (V("p"), C(TypeP), C("http://schema.org/Person")),
       (V("p"), C("http://schema.org/name"), V("name")),
       (V("p"), C("http://schema.org/nation"), V("nat")),
@@ -442,8 +444,6 @@ class GraphQuerySpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(out == Set("a" -> "b", "a" -> "d", "b" -> "d"))
   }
-
-  private def asGraph = GraphQuery.PersistedGraph(graph, 0, Map.empty)
 
   test("bgpOptional: unmatched optional keeps the row with NULL bindings") {
     // every Person binds; only p1/p2 know someone — d1 is not a Person so

@@ -7,25 +7,50 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.Assertions.assert
 import scala.jdk.CollectionConverters._
 
-/** Counts the Spark jobs a block starts, for the specs that pin job budgets. */
+/** Counts the Spark jobs a block starts, and collects the plans of the SQL
+  * executions it starts, for the specs that pin job budgets and plans.
+  */
 object JobFence {
+
+  private sealed trait Seen
+  private final case class JobSeen(group: String, site: String) extends Seen
+  private final case class PlanSeen(plan: String) extends Seen
 
   /** Jobs `body` starts, keyed by site: the description of the SQL
     * execution each job runs for (its call site, `<action> at
     * <File>.scala:<line>`), else the call site of the job's final stage.
     * Keying by execution, not by the job's own call site, matters under
     * AQE: it submits stage jobs from another thread, whose call site says
-    * `CompletableFuture`. Sentinel jobs before and after fence the body
-    * off: the listener bus delivers in order, so every job between the two
-    * sentinels' starts is the body's.
+    * `CompletableFuture`.
     */
   def jobsBySite[A](spark: SparkSession)(body: => A): (A, Jobs) = {
+    val (a, seen) = fence(spark)(body)
+    val sites = seen.collect { case JobSeen(_, site) => site }
+    (a, Jobs(sites.groupBy(identity).map { case (site, js) => site -> js.size }))
+  }
+
+  /** The physical-plan description (the formatted explain, with each
+    * scan's `PartitionFilters` and `PushedFilters`) of every SQL execution
+    * `body` starts, in start order.
+    */
+  def plansOf[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
+    val (a, seen) = fence(spark)(body)
+    (a, seen.collect { case PlanSeen(plan) => plan })
+  }
+
+  /** What the listener bus reports while `body` runs. Sentinel jobs before
+    * and after fence the body off: the bus delivers in order, so every
+    * event between the two sentinels' job starts is the body's.
+    */
+  private def fence[A](spark: SparkSession)(body: => A): (A, Seq[Seen]) = {
     val sc = spark.sparkContext
     val executions = new ConcurrentHashMap[String, String]
-    val seen = new ConcurrentLinkedQueue[(String, String)] // (job group, site)
+    val seen = new ConcurrentLinkedQueue[Seen]
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => executions.put(s.executionId.toString, s.description)
+        case s: SparkListenerSQLExecutionStart =>
+          executions.put(s.executionId.toString, s.description)
+          seen.add(PlanSeen(s.physicalPlanDescription))
         case _ =>
       }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -34,12 +59,16 @@ object JobFence {
         val site = prop("spark.sql.execution.id").flatMap(id => Option(executions.get(id)))
           .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
           .getOrElse("unknown")
-        seen.add((prop("spark.jobGroup.id").getOrElse("null"), site))
+        seen.add(JobSeen(prop("spark.jobGroup.id").getOrElse("null"), site))
       }
     }
     def sentinel(name: String): Unit = {
       sc.setJobGroup(name, "JobFence")
       try spark.range(1).collect() finally sc.clearJobGroup()
+    }
+    def isSentinel(name: String): Seen => Boolean = {
+      case JobSeen(group, _) => group == name
+      case _ => false
     }
     sc.addSparkListener(listener)
     try {
@@ -47,12 +76,12 @@ object JobFence {
       val a = body
       sentinel("fence-end")
       val deadline = System.nanoTime() + 30000000000L
-      def ended = seen.asScala.exists(_._1 == "fence-end")
+      def ended = seen.asScala.exists(isSentinel("fence-end"))
       while (!ended && System.nanoTime() < deadline) Thread.sleep(20)
-      val jobs = seen.asScala.toSeq
-      assert(ended, s"fence job never reported: ${jobs.map(_._1)}")
-      val fenced = jobs.dropWhile(_._1 != "fence-start").drop(1).takeWhile(_._1 != "fence-end")
-      (a, Jobs(fenced.groupBy(_._2).map { case (site, js) => site -> js.size }))
+      val all = seen.asScala.toSeq
+      assert(ended, s"fence job never reported: ${all.collect { case JobSeen(g, _) => g }}")
+      (a, all.dropWhile(!isSentinel("fence-start")(_)).drop(1)
+        .takeWhile(!isSentinel("fence-end")(_)))
     } finally sc.removeSparkListener(listener)
   }
 
