@@ -583,7 +583,7 @@ object SparkEntry {
         ExtractPipeline.canonicalize(
           ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
       val edges = g.df
-        .filter(col("pred") === "http://schema.org/reportsTo" && col("obj_iri").isNotNull)
+        .filter(g.predSlice(Seq("http://schema.org/reportsTo")) && col("obj_iri").isNotNull)
         .select(col("subj").as("src"), col("obj_iri").as("dst"))
       val srcKey = substring_index(col("src"), "/", -1).cast("long")
       val labels = graft.spark.ConnectedComponents.run(edges.filter(srcKey % 2 === 0))
@@ -603,7 +603,7 @@ object SparkEntry {
         ExtractPipeline.canonicalize(
           ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
       val edges = g.df
-        .filter(col("pred") === "http://schema.org/reportsTo" && col("obj_iri").isNotNull)
+        .filter(g.predSlice(Seq("http://schema.org/reportsTo")) && col("obj_iri").isNotNull)
         .select(col("subj").as("s"), col("obj_iri").as("o"))
       val srcKey = substring_index(col("s"), "/", -1).cast("long")
       val closed = graft.spark.GraphQuery.closePairs(edges.filter(srcKey % 2 === 0))

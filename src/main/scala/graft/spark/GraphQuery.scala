@@ -1,7 +1,10 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.graftbridge.PlanBridge.{PlanOps, frameAs, plan}
 import scala.collection.mutable
 
 /** Basic-graph-pattern (BGP) querying over the extracted triple table —
@@ -17,11 +20,16 @@ import scala.collection.mutable
   *
   * Spark-first shape — the whole query stays declarative so Catalyst does
   * the planning:
-  *  - each pattern compiles to a filtered projection of the triple table;
-  *    constant terms become pushable predicates (plain column equalities
-  *    and IsNull/Or combinations, so `PushedFilters` reach the parquet
-  *    scan — a `?s rdf:type :Person` pattern never reads non-type rows);
-  *  - a constant-predicate pattern reads [[PersistedGraph.predSlice]]:
+  *  - each query form builds ONE Catalyst logical plan and wraps it in a
+  *    Dataset once ([[PlanBridge]]): the DataFrame API's chain of
+  *    Datasets would re-analyze the plan built so far at every `filter`,
+  *    `select` and `join`;
+  *  - each pattern compiles to one filter and one projection of the triple
+  *    table; constant terms become pushable predicates (plain column
+  *    equalities and IsNull/Or combinations, so `PushedFilters` reach the
+  *    parquet scan — a `?s rdf:type :Person` pattern never reads non-type
+  *    rows);
+  *  - a constant-predicate pattern filters by [[PersistedGraph.predSlice]]:
   *    on a table with a `pred_bucket` partition column (the
   *    [[ExtractPipeline.writeGraph]] and batch layouts) it also filters
   *    the predicate's [[GraphLayout.bucket]], which folds to a literal at
@@ -70,18 +78,19 @@ object GraphQuery {
     */
   final case class PersistedGraph(df: DataFrame, predBuckets: Int,
                                   stats: Map[String, Long]) {
-    /** The rows of `preds` among `rows` (the graph, or a frame filtered
-      * from it) for every constant-predicate reader: the pushed `pred`
-      * filter and, when the frame has the bucket column, their buckets'
-      * partition filter (each [[GraphLayout.bucket]] folds to a literal).
+    /** The condition selecting the rows of `preds` from the graph (or a
+      * frame filtered from it), for every constant-predicate reader: the
+      * pushed `pred` filter and, when the graph has the bucket column,
+      * their buckets' partition filter (each [[GraphLayout.bucket]] folds
+      * to a literal).
       */
-    def predSlice(preds: Seq[String], rows: DataFrame = df): DataFrame = {
+    def predSlice(preds: Seq[String]): Column = {
       // a one-element IN optimizes to the pushed EqualTo(pred, p)
-      val byPred = rows.filter(col("pred").isin(preds: _*))
-      if (predBuckets > 0 && rows.columns.contains(GraphLayout.BucketColumn))
-        byPred.filter(preds
+      val byPred = col("pred").isin(preds: _*)
+      if (predBuckets > 0 && df.columns.contains(GraphLayout.BucketColumn))
+        byPred && preds
           .map(p => col(GraphLayout.BucketColumn) === GraphLayout.bucket(lit(p), predBuckets))
-          .reduce(_ || _))
+          .reduce(_ || _)
       else byPred
     }
   }
@@ -150,26 +159,33 @@ object GraphQuery {
     * count and stats — the table's own, when opened with [[loadGraph]].
     */
   def bgp(g: PersistedGraph, patterns: Seq[(Term, Term, Term)]): DataFrame =
-    solve(g, patterns).distinct()
+    frame(g, solve(g, patterns).distinct())
 
-  /** [[bgp]] without its final distinct: every solution, once per
-    * derivation. For a side that only feeds a semi- or anti-join, which
-    * never multiplies the other side's rows — deduplicating it would buy
-    * a shuffle and change no answer.
+  /** The plan of [[bgp]] without its final distinct: every solution, once
+    * per derivation, with one column per [[varsOf]]. For a side that only
+    * feeds a semi- or anti-join, which never multiplies the other side's
+    * rows — deduplicating it would buy a shuffle and change no answer.
     */
-  private def solve(g: PersistedGraph, patterns: Seq[(Term, Term, Term)]): DataFrame = {
+  private def solve(g: PersistedGraph, patterns: Seq[(Term, Term, Term)]): LogicalPlan = {
     require(patterns.nonEmpty, "empty BGP")
-    // variables surface in first-mention order regardless of join order
-    val outVars = patterns
-      .flatMap(p => Seq(p._1, p._2, p._3)).collect { case V(n) => n }.distinct
-    greedyJoin(patternItems(g, patterns), outVars)
+    greedyJoin(patternItems(g, patterns), varsOf(patterns))
   }
 
-  /** Each pattern as a [[greedyJoin]] item: its compiled frame, variable
+  /** The variables of `patterns` in first-mention order: the columns of
+    * their solutions, whatever the join order.
+    */
+  private def varsOf(patterns: Seq[(Term, Term, Term)]): Seq[String] =
+    patterns.flatMap(p => Seq(p._1, p._2, p._3)).collect { case V(n) => n }.distinct
+
+  /** `p` as a DataFrame on `g`'s session: a query form's one analysis. */
+  private def frame(g: PersistedGraph, p: LogicalPlan): DataFrame =
+    PlanBridge.frame(g.df.sparkSession, p)
+
+  /** Each pattern as a [[greedyJoin]] item: its compiled plan, variable
     * names, subject variable (or null) and estimated rows.
     */
   private def patternItems(g: PersistedGraph, patterns: Seq[(Term, Term, Term)])
-      : Seq[(DataFrame, Seq[String], String, Long)] = {
+      : Seq[(LogicalPlan, Seq[String], String, Long)] = {
     require(patterns.forall(p => Seq(p._1, p._2, p._3).exists(_.isInstanceOf[V])),
       "variable-free patterns (pure existence checks) are not supported: " +
         "they cannot join on a shared variable — evaluate the constant " +
@@ -181,18 +197,17 @@ object GraphQuery {
     }
   }
 
-  /** Selectivity-greedy connected join over pre-compiled pattern frames —
+  /** Selectivity-greedy connected join over pre-compiled pattern plans —
     * the shared core of [[bgp]] and [[bgpWithPaths]] — projected to
-    * `outVars`, NOT deduplicated. Each item is (bindings frame, variable
+    * `outVars`, NOT deduplicated. Each item is (bindings plan, variable
     * names, subject variable or null, estimated rows); input position
-    * breaks cost ties deterministically.
+    * breaks cost ties deterministically. The joins are inner using-column
+    * joins, projected once.
     */
-  private def greedyJoin(items0: Seq[(DataFrame, Seq[String], String, Long)],
-                         outVars: Seq[String]): DataFrame = {
-    val items = scala.collection.mutable.ArrayBuffer.tabulate(items0.size) { i =>
-      val (df, vars, sv, e) = items0(i)
-      (df, vars, sv, e, i)
-    }
+  private def greedyJoin(items0: Seq[(LogicalPlan, Seq[String], String, Long)],
+                         outVars: Seq[String]): LogicalPlan = {
+    val items = mutable.ArrayBuffer.from(
+      items0.zipWithIndex.map { case ((p, vs, sv, e), i) => (p, vs, sv, e, i) })
     // subject variables of the patterns already joined into acc: at EQUAL
     // estimated cost, a candidate whose SUBJECT variable is one of these is
     // preferred — that join is subject-to-subject, which a subject-bucketed
@@ -203,12 +218,12 @@ object GraphQuery {
     // would repartition acc and force the remaining star joins to shuffle
     // back). On a non-bucketed layout the preference is harmless: order
     // between equal-cost patterns was arbitrary (input index) anyway.
-    val accSubjVars = scala.collection.mutable.Set.empty[String]
-    def takeCheapest(ok: Seq[String] => Boolean): Option[(DataFrame, Seq[String], String)] = {
+    val accSubjVars = mutable.Set.empty[String]
+    def takeCheapest(ok: Seq[String] => Boolean): Option[(LogicalPlan, Seq[String], String)] = {
       val cands = items.zipWithIndex.collect {
-        case ((df, vs, sv, e, i), pos) if ok(vs) =>
+        case ((p, vs, sv, e, i), pos) if ok(vs) =>
           val starPenalty = if (sv != null && accSubjVars.contains(sv)) 0 else 1
-          ((df, vs, sv), (e, starPenalty, i), pos)
+          ((p, vs, sv), (e, starPenalty, i), pos)
       }
       if (cands.isEmpty) None
       else {
@@ -226,10 +241,10 @@ object GraphQuery {
       require(next.isDefined,
         s"disconnected BGP: patterns over ${items.map(_._2).mkString(",")} share no " +
           s"variable with {${acc._2.mkString(",")}} — a cartesian product is refused")
-      val (ndf, nvs, nsv) = next.get
+      val (np, nvs, nsv) = next.get
       if (nsv != null) accSubjVars += nsv
       val shared = nvs.filter(acc._2.contains)
-      acc = (acc._1.join(ndf, shared), (acc._2 ++ nvs).distinct)
+      acc = (acc._1.join(np, shared), (acc._2 ++ nvs).distinct)
     }
     acc._1.select(outVars.map(col): _*)
   }
@@ -254,34 +269,27 @@ object GraphQuery {
     (0 until discounts).foldLeft(base)((e, _) => if (e > 0) math.max(e / 100, 1L) else 0L)
   }
 
-  /** One pattern → (bindings frame, variable names). A constant predicate
-    * reads the graph's [[PersistedGraph.predSlice]]; the other constants
-    * filter as pushable predicates; a variable repeated inside one pattern
-    * becomes an equality filter (e.g. `?x :sameAs ?x`).
+  /** One pattern → (bindings plan, variable names): one filter and one
+    * projection of the graph. A constant predicate filters by the graph's
+    * [[PersistedGraph.predSlice]]; the other constants filter as pushable
+    * predicates; a variable repeated inside one pattern becomes an
+    * equality (e.g. `?x :sameAs ?x`).
     */
-  private def compile(g: PersistedGraph, p: (Term, Term, Term)): (DataFrame, Seq[String]) = {
-    var df = g.df
-    val slots = Seq("subj" -> p._1, "pred" -> p._2, "obj" -> p._3)
-    slots.foreach {
-      case ("pred", C(v)) => df = g.predSlice(Seq(v), df)
-      case ("subj", C(v)) => df = df.filter(col("subj") === v)
-      case ("obj", C(v)) =>
-        // Triple's object is (obj_iri XOR obj_lexical) — this disjunction
-        // is exactly coalesce(obj_iri, obj_lexical) = v, but built from
-        // EqualTo/IsNull/Or so it PUSHES to the parquet scan (a coalesce
-        // comparison does not)
-        df = df.filter(col("obj_iri") === v ||
-          (col("obj_iri").isNull && col("obj_lexical") === v))
-      case _ => ()
-    }
-    df = df.select(col("subj"), col("pred"),
-      coalesce(col("obj_iri"), col("obj_lexical")).as("obj"))
-    val varSlots = slots.collect { case (c, V(n)) => (c, n) }
-    varSlots.groupBy(_._2).foreach { case (_, cs) =>
-      cs.drop(1).foreach { case (c, _) => df = df.filter(col(c) === col(cs.head._1)) }
-    }
+  private def compile(g: PersistedGraph, p: (Term, Term, Term)): (LogicalPlan, Seq[String]) = {
+    val terms = Seq(p._1, p._2, p._3)
+    val consts = terms.zip(Seq[String => Column](v => col("subj") === v, v => g.predSlice(Seq(v)),
+      // Triple's object is (obj_iri XOR obj_lexical) — this disjunction
+      // is exactly coalesce(obj_iri, obj_lexical) = v, but built from
+      // EqualTo/IsNull/Or so it PUSHES to the parquet scan (a coalesce
+      // comparison does not)
+      v => col("obj_iri") === v || (col("obj_iri").isNull && col("obj_lexical") === v)))
+      .collect { case (C(v), cond) => cond(v) }
+    val varSlots = Seq(col("subj"), col("pred"), coalesce(col("obj_iri"), col("obj_lexical")))
+      .zip(terms).collect { case (c, V(n)) => (c, n) }
+    val repeats = varSlots.groupBy(_._2).values.toSeq.flatMap(cs => cs.drop(1).map(_._1 === cs.head._1))
     val names = varSlots.map(_._2).distinct
-    (df.select(names.map(n => col(varSlots.find(_._2 == n).get._1).as(n)): _*), names)
+    val rows = (consts ++ repeats).reduceOption(_ && _).fold(plan(g.df))(plan(g.df).filter)
+    (rows.select(names.map(n => varSlots.find(_._2 == n).get._1.as(n)): _*), names)
   }
 
   /** BGP with OPTIONAL groups (the SPARQL OPTIONAL analog): the required
@@ -314,22 +322,24 @@ object GraphQuery {
     */
   def bgpOptional(g: PersistedGraph, required: Seq[(Term, Term, Term)],
                   optionals: Seq[Seq[(Term, Term, Term)]]): DataFrame = {
-    var acc = bgp(g, required)
+    var acc = solve(g, required).distinct()
+    var accVars = varsOf(required)
     // variables an earlier optional group may have left NULL
     val maybeNull = scala.collection.mutable.Set.empty[String]
     optionals.foreach { grp =>
-      val opt = bgp(g, grp)
-      val shared = opt.columns.filter(acc.columns.contains).toSeq
+      val opt = solve(g, grp).distinct()
+      val optVars = varsOf(grp)
+      val shared = optVars.filter(accVars.contains)
       require(shared.nonEmpty,
-        s"optional group {${opt.columns.mkString(",")}} shares no variable " +
-          s"with {${acc.columns.mkString(",")}} — a cartesian product is refused")
+        s"optional group {${optVars.mkString(",")}} shares no variable " +
+          s"with {${accVars.mkString(",")}} — a cartesian product is refused")
       val (nullable, bound) = shared.partition(maybeNull.contains)
+      val accOnly = accVars.filterNot(shared.contains)
+      val optOnly = optVars.filterNot(shared.contains)
+      val outCols = shared ++ accOnly ++ optOnly
       acc =
         if (nullable.isEmpty) acc.join(opt, shared, "left")
         else {
-          val accOnly = acc.columns.filterNot(shared.contains)
-          val optOnly = opt.columns.filterNot(shared.contains)
-          val outCols = shared ++ accOnly ++ optOnly
           val allBound = nullable.map(col(_).isNotNull).reduce(_ && _)
           // bound slice: plain equi left join (hash-joinable, the bulk)
           val boundSide = acc.filter(allBound).join(opt, shared, "left")
@@ -350,16 +360,15 @@ object GraphQuery {
             .select(outCols.map(col): _*)
           boundSide.unionByName(nullSide)
         }
+      accVars = outCols
       // the group's new variables are NULL on unmatched rows; nullable
       // shared variables stay possibly-NULL (unmatched rows keep NULL
       // through the coalesce)
-      maybeNull ++= opt.columns.filterNot(shared.contains)
+      maybeNull ++= optOnly
     }
     // variables surface in first-mention order across required + optional
     // groups (a using-columns join reorders; the API shouldn't)
-    val outVars = (required ++ optionals.flatten)
-      .flatMap(p => Seq(p._1, p._2, p._3)).collect { case V(n) => n }.distinct
-    acc.select(outVars.map(col): _*)
+    frame(g, acc.select(varsOf(required ++ optionals.flatten).map(col): _*))
   }
 
   /** ASK — does the pattern set have at least one solution? (The SPARQL
@@ -369,7 +378,7 @@ object GraphQuery {
     * pruned slice and exits, never the full solution set.
     */
   def ask(g: PersistedGraph, patterns: Seq[(Term, Term, Term)]): Boolean =
-    !bgp(g, patterns).limit(1).isEmpty
+    frame(g, solve(g, patterns).distinct().limit(1)).collect().nonEmpty
 
   /** CONSTRUCT — build new triples from a template over the BGP's
     * solutions (the SPARQL CONSTRUCT query form, and the light-weight
@@ -387,18 +396,18 @@ object GraphQuery {
   def construct(g: PersistedGraph, patterns: Seq[(Term, Term, Term)],
                 template: Seq[(Term, Term, Term)]): DataFrame = {
     require(template.nonEmpty, "empty CONSTRUCT template")
-    val bindings = bgp(g, patterns)
+    val bindings = solve(g, patterns).distinct()
+    val vars = varsOf(patterns)
     def slot(t: Term, name: String): Column = t match {
       case C(v) => lit(v).as(name)
       case V(n) =>
-        require(bindings.columns.contains(n),
-          s"template variable ?$n is not bound by the patterns " +
-            s"{${bindings.columns.mkString(",")}}")
+        require(vars.contains(n),
+          s"template variable ?$n is not bound by the patterns {${vars.mkString(",")}}")
         col(n).as(name)
     }
-    template.map { case (s, p, o) =>
+    frame(g, template.map { case (s, p, o) =>
       bindings.select(slot(s, "subj"), slot(p, "pred"), slot(o, "obj"))
-    }.reduce(_ unionByName _).distinct()
+    }.reduce(_ unionByName _).distinct())
   }
 
   /** BGP difference (the SPARQL MINUS analog): solutions of the required
@@ -419,13 +428,11 @@ object GraphQuery {
     */
   def bgpMinus(g: PersistedGraph, required: Seq[(Term, Term, Term)],
                minusGroups: Seq[Seq[(Term, Term, Term)]]): DataFrame = {
-    var acc = bgp(g, required)
-    minusGroups.foreach { grp =>
-      val m = solve(g, grp)
-      val shared = m.columns.filter(acc.columns.contains).toSeq
-      if (shared.nonEmpty) acc = acc.join(m, shared, "left_anti")
-    }
-    acc
+    val vars = varsOf(required)
+    frame(g, minusGroups.foldLeft(solve(g, required).distinct()) { (acc, grp) =>
+      val shared = varsOf(grp).filter(vars.contains)
+      if (shared.nonEmpty) acc.join(solve(g, grp), shared, "left_anti") else acc
+    })
   }
 
   /** DESCRIBE — assemble every stored triple about the entities a BGP
@@ -447,11 +454,10 @@ object GraphQuery {
     */
   def describe(g: PersistedGraph, patterns: Seq[(Term, Term, Term)],
                entityVar: String): DataFrame = {
-    val bindings = solve(g, patterns)
-    require(bindings.columns.contains(entityVar),
+    require(varsOf(patterns).contains(entityVar),
       s"describe variable ?$entityVar is not bound by the patterns " +
-        s"{${bindings.columns.mkString(",")}}")
-    val entities = bindings.select(col(entityVar).as("subj"))
+        s"{${varsOf(patterns).mkString(",")}}")
+    val entities = solve(g, patterns).select(col(entityVar).as("subj"))
     // of the triple columns, keep those the frame actually carries (a
     // persisted graph has all six; a bare test frame may carry four) —
     // layout columns like pred_bucket stay internal
@@ -459,8 +465,8 @@ object GraphQuery {
       "obj_datatype", "obj_lang").filter(g.df.columns.contains)
     // set semantics like [[bgp]]: a lineage-keeping table stores one row
     // per witness turn; the DESCRIBED graph is a set of triples
-    g.df.join(entities, Seq("subj"), "left_semi")
-      .select(cols.map(col): _*).distinct()
+    frame(g, plan(g.df).join(entities, Seq("subj"), "left_semi")
+      .select(cols.map(col): _*).distinct())
   }
 
   /** UNION of basic graph patterns (the SPARQL UNION analog): each branch
@@ -482,8 +488,8 @@ object GraphQuery {
     // allowMissingColumns NULL-fills branch-unbound variables and keeps
     // first-mention column order across the reduce — every binding column
     // is a string, so the filled NULLs type consistently
-    branches.map(b => bgp(g, b))
-      .reduce(_.unionByName(_, allowMissingColumns = true)).distinct()
+    frame(g, branches.map(b => solve(g, b).distinct())
+      .reduce(_.unionByName(_, allowMissingColumns = true)).distinct())
   }
 
   /** Transitive property path `pred+` (the SPARQL OneOrMorePath analog —
@@ -533,13 +539,13 @@ object GraphQuery {
   def pathPlusAlt(g: PersistedGraph, preds: Seq[String],
                   maxIterations: Int = 64): DataFrame = {
     require(preds.nonEmpty, "empty predicate alternation")
-    val slice = g.predSlice(preds).filter(col("obj_iri").isNotNull)
     // no distinct here: closure dedups its input itself — a second
     // Deduplicate would cost a redundant full shuffle of the edge slice.
     // The stats count the predicates' literal-object rows too: an upper
     // bound of the slice, which is all admission needs
-    val edges = slice.select(col("subj").as("s"), col("obj_iri").as("o"))
-    closure(edges, None, maxIterations, preds.mkString("|"),
+    val edges = plan(g.df).filter(g.predSlice(preds) && col("obj_iri").isNotNull)
+      .select(col("subj").as("s"), col("obj_iri").as("o"))
+    closure(g.df.sparkSession, edges, None, maxIterations, preds.mkString("|"),
       sliceRows(g, Path.Alt(preds.map(Path.P))))
   }
 
@@ -549,7 +555,7 @@ object GraphQuery {
     * the same THROW on a live frontier at the iteration cap.
     */
   def closePairs(edges: DataFrame, maxIterations: Int = 64): DataFrame =
-    closure(edges, None, maxIterations, "closePairs")
+    closure(edges.sparkSession, plan(edges), None, maxIterations, "closePairs")
 
   /** INCREMENTAL transitive-closure maintenance — the path twin of
     * [[Entailment.owlEntailIncremental]]: given the CLOSED pair set of a
@@ -572,10 +578,10 @@ object GraphQuery {
     // admitted on the standing closure's size alone: the delta is unsized
     // until the task reads it, where the kernel's seed cap bounds it — so
     // the hop rows (closure plus delta) need no cap of their own
-    closureStrategy("GraphQuery.pathPlusIncremental", closedSize,
-        tagged(c, Hop | Prefix).unionByName(tagged(d, Hop | Seed)),
+    closureStrategy(c.sparkSession, "GraphQuery.pathPlusIncremental", closedSize,
+        tagged(plan(c), Hop | Prefix).unionByName(tagged(plan(d), Hop | Seed)),
         doubling = false, maxIterations, "pathPlusIncremental", capHops = false) {
-      val suffix = closure(c.union(d), Some(d), maxIterations,
+      val suffix = closure(c.sparkSession, plan(c.union(d)), Some(plan(d)), maxIterations,
         "pathPlusIncremental").localCheckpoint()
       val prefixed = c.as("pc").join(suffix.as("px"), col("pc.o") === col("px.s"))
         .select(col("pc.s").as("s"), col("px.o").as("o"))
@@ -588,7 +594,7 @@ object GraphQuery {
   private final val Seed = 2 // a starting pair of the expansion
   private final val Prefix = 4 // a standing closed pair: kept, and prefix-joined onto the expansion
 
-  private def tagged(pairs: DataFrame, tag: Int): DataFrame =
+  private def tagged(pairs: LogicalPlan, tag: Int): LogicalPlan =
     pairs.select(lit(tag).as("t"), col("s"), col("o"))
 
   /** Transitive closure of `edgesIn` — the shared fixpoint core of
@@ -611,27 +617,28 @@ object GraphQuery {
     * body, never in one task. Without it, the edges are deduplicated and
     * materialized first, their count observed on that same job.
     */
-  private def closure(edgesIn: DataFrame, seed: Option[DataFrame], maxIterations: Int,
-                      what: String, edgeRows: Option[Long] = None): DataFrame = {
+  private def closure(spark: SparkSession, edgesIn: LogicalPlan, seed: Option[LogicalPlan],
+                      maxIterations: Int, what: String, edgeRows: Option[Long] = None): DataFrame = {
     val doubling = seed.isEmpty
     val engine = s"GraphQuery.closure[$what]"
     val e = edgesIn.select(col("s"), col("o"))
     val seeds = seed.map(_.select(col("s"), col("o")))
-    def input(edges: DataFrame, starts: Option[DataFrame]): DataFrame =
+    def input(edges: LogicalPlan, starts: Option[LogicalPlan]): LogicalPlan =
       starts.fold(tagged(edges, Hop | Seed))(sd => tagged(edges, Hop).unionByName(tagged(sd, Seed)))
+    def distinctFrame(p: LogicalPlan) = PlanBridge.frame(spark, p.distinct())
     // the distributed loop reads edges and seeds every round: dedup and
     // materialize them once (callers skip their own distinct)
     def distributed(edges: DataFrame): DataFrame =
-      closureLoop(edges, seeds.fold(edges)(_.distinct().localCheckpoint()), doubling,
+      closureLoop(edges, seeds.fold(edges)(distinctFrame(_).localCheckpoint()), doubling,
         maxIterations, what)
     edgeRows match {
       case Some(n) =>
-        closureStrategy(engine, n, input(e, seeds), doubling, maxIterations, what) {
-          distributed(e.distinct().localCheckpoint())
+        closureStrategy(spark, engine, n, input(e, seeds), doubling, maxIterations, what) {
+          distributed(distinctFrame(e).localCheckpoint())
         }
       case None =>
-        val (edges, n) = ExtractPipeline.checkpointCounted(e.distinct())
-        closureStrategy(engine, n, input(edges, seeds.map(_.distinct())), doubling,
+        val (edges, n) = ExtractPipeline.checkpointCounted(distinctFrame(e))
+        closureStrategy(spark, engine, n, input(plan(edges), seeds.map(_.distinct())), doubling,
           maxIterations, what)(distributed(edges))
     }
   }
@@ -640,15 +647,14 @@ object GraphQuery {
     * tagged (t, s, o) rows [[closureKernel]] reads; with `capHops` the task
     * overflows past the edge limit's worth of hop rows.
     */
-  private def closureStrategy(engine: String, size: Long, input: DataFrame,
+  private def closureStrategy(spark: SparkSession, engine: String, size: Long, input: LogicalPlan,
                               doubling: Boolean, maxIterations: Int, what: String,
                               capHops: Boolean = true)
                              (distributed: => DataFrame): DataFrame = {
-    val spark = input.sparkSession
     import spark.implicits._
     val l = AdaptiveStrategy.limits
     val maxHops = if (capHops) l.closureEdges else Long.MaxValue
-    AdaptiveStrategy.run(engine, size, l.closureEdges, input.as[(Int, String, String)])(
+    AdaptiveStrategy.run(engine, size, l.closureEdges, frameAs[(Int, String, String)](spark, input))(
       closureKernel(_, doubling, maxIterations, maxHops, l.closureEdges, l.closurePairs, what))(
       distributed.as[(String, String)]).toDF("s", "o")
   }
@@ -868,7 +874,7 @@ object GraphQuery {
     * endpoint when you don't need that.
     */
   def evalPath(g: PersistedGraph, path: Path, maxIterations: Int = 64): DataFrame =
-    pathFrame(g, path, None, None, maxIterations).distinct()
+    frame(g, pathFrame(g, path, None, None, maxIterations).distinct())
 
   /** Atomic forward edges for one predicate: its
     * [[PersistedGraph.predSlice]], object coalesced to one term domain.
@@ -878,8 +884,8 @@ object GraphQuery {
     * graph is indistinguishable from it at a chaining join — exact typed
     * paths would carry a term-kind column through every binding frame.
     */
-  private def atomEdges(g: PersistedGraph, iri: String): DataFrame =
-    g.predSlice(Seq(iri)).select(col("subj").as("s"),
+  private def atomEdges(g: PersistedGraph, iri: String): LogicalPlan =
+    plan(g.df).filter(g.predSlice(Seq(iri))).select(col("subj").as("s"),
       coalesce(col("obj_iri"), col("obj_lexical")).as("o"))
 
   /** Rows of the edge frame [[pathFrame]] builds for `p`, from the
@@ -902,24 +908,24 @@ object GraphQuery {
     * (subjects ∪ objects — one distinct over two projected scans).
     */
   private def zeroLength(g: PersistedGraph, src: Option[String],
-                         dst: Option[String]): DataFrame = {
-    val spark = g.df.sparkSession
+                         dst: Option[String]): LogicalPlan = {
+    def one(n: Long) = plan(g.df.sparkSession.range(n))
     (src, dst) match {
-      case (Some(a), Some(b)) =>
-        spark.range(if (a == b) 1 else 0).select(lit(a).as("s"), lit(b).as("o"))
-      case (Some(a), None) => spark.range(1).select(lit(a).as("s"), lit(a).as("o"))
-      case (None, Some(b)) => spark.range(1).select(lit(b).as("s"), lit(b).as("o"))
+      case (Some(a), Some(b)) => one(if (a == b) 1 else 0).select(lit(a).as("s"), lit(b).as("o"))
+      case (Some(a), None) => one(1).select(lit(a).as("s"), lit(a).as("o"))
+      case (None, Some(b)) => one(1).select(lit(b).as("s"), lit(b).as("o"))
       case (None, None) =>
-        g.df.select(col("subj").as("n"))
-          .unionByName(g.df.select(
+        plan(g.df).select(col("subj").as("n"))
+          .unionByName(plan(g.df).select(
             coalesce(col("obj_iri"), col("obj_lexical")).as("n")))
           .distinct()
           .select(col("n").as("s"), col("n").as("o"))
     }
   }
 
-  /** Recursive path evaluation to an (s, o) frame (not necessarily
-    * distinct — [[evalPath]]/[[compilePath]] add the final distinct).
+  /** Recursive path evaluation to an (s, o) plan (not necessarily
+    * distinct — [[evalPath]]/[[compilePath]] add the final distinct); a
+    * closure wraps its edge plan in a Dataset and its result is a leaf.
     * `src`/`dst` are endpoint CONSTANTS pushed as deep as the algebra
     * allows: into both sides of [[Path.Alt]], the outer steps of a
     * [[Path.Chain]], the swapped slots of [[Path.Inv]], and the closure
@@ -927,25 +933,22 @@ object GraphQuery {
     * reachable cone, never the full closure).
     */
   private def pathFrame(g: PersistedGraph, path: Path, src: Option[String],
-                        dst: Option[String], maxIter: Int): DataFrame = {
-    def bound(df: DataFrame): DataFrame = {
-      var d = df
-      src.foreach(v => d = d.filter(col("s") === v))
-      dst.foreach(v => d = d.filter(col("o") === v))
-      d
-    }
+                        dst: Option[String], maxIter: Int): LogicalPlan = {
+    def bound(p: LogicalPlan): LogicalPlan =
+      (src.map(col("s") === _) ++ dst.map(col("o") === _)).reduceOption(_ && _).fold(p)(p.filter)
     path match {
       case Path.P(iri) => bound(atomEdges(g, iri))
 
       case Path.NegSet(fwd, inv) =>
+        def base(ex: Seq[String]) =
+          if (ex.isEmpty) plan(g.df) else plan(g.df).filter(!col("pred").isin(ex: _*))
         val fw = fwd.map { ex =>
-          val base = if (ex.isEmpty) g.df else g.df.filter(!col("pred").isin(ex: _*))
-          base.select(col("subj").as("s"),
+          base(ex).select(col("subj").as("s"),
             coalesce(col("obj_iri"), col("obj_lexical")).as("o"))
         }
         val iv = inv.map { ex =>
-          val base = if (ex.isEmpty) g.df else g.df.filter(!col("pred").isin(ex: _*))
-          base.select(coalesce(col("obj_iri"), col("obj_lexical")).as("s"),
+          base(ex).select(coalesce(col("obj_iri"), col("obj_lexical")).as("s"),
+
             col("subj").as("o"))
         }
         bound((fw.toSeq ++ iv.toSeq).reduce(_ unionByName _))
@@ -959,12 +962,11 @@ object GraphQuery {
         if (ps.size == 1) pathFrame(g, ps.head, src, dst, maxIter)
         else {
           val frames = ps.zipWithIndex.map { case (q, i) =>
-            pathFrame(g, q,
-              if (i == 0) src else None,
-              if (i == ps.size - 1) dst else None, maxIter).distinct()
+            pathFrame(g, q, if (i == 0) src else None, if (i == ps.size - 1) dst else None,
+              maxIter).distinct()
           }
           frames.reduce { (a, b) =>
-            a.as("pl").join(b.as("pr"), col("pl.o") === col("pr.s"))
+            a.as("pl").join(b.as("pr"), col("pl.o") === col("pr.s"), "inner")
               .select(col("pl.s").as("s"), col("pr.o").as("o"))
           }
         }
@@ -976,17 +978,16 @@ object GraphQuery {
       case Path.Plus(p) =>
         // closure dedups the edges when it needs them distinct
         val edges = pathFrame(g, p, None, None, maxIter)
-        val rows = sliceRows(g, p)
+        def close(e: LogicalPlan, seed: Option[LogicalPlan]) =
+          plan(closure(g.df.sparkSession, e, seed, maxIter, render(path), sliceRows(g, p)))
         (src, dst) match {
           case (Some(v), d) =>
-            val cone = closure(edges, Some(edges.filter(col("s") === v)), maxIter,
-              render(path), rows)
+            val cone = close(edges, Some(edges.filter(col("s") === v)))
             d.map(w => cone.filter(col("o") === w)).getOrElse(cone)
           case (None, Some(w)) => // single-TARGET: explore the reverse cone
             val rev = edges.select(col("o").as("s"), col("s").as("o"))
-            closure(rev, Some(rev.filter(col("s") === w)), maxIter, render(path), rows)
-              .select(col("o").as("s"), col("s").as("o"))
-          case _ => closure(edges, None, maxIter, render(path), rows)
+            close(rev, Some(rev.filter(col("s") === w))).select(col("o").as("s"), col("s").as("o"))
+          case _ => close(edges, None)
         }
 
       case Path.Star(p) =>
@@ -999,13 +1000,13 @@ object GraphQuery {
     }
   }
 
-  /** One path pattern → (bindings frame, variable names), the path twin of
+  /** One path pattern → (bindings plan, variable names), the path twin of
     * [[compile]]: constant endpoints push into [[pathFrame]] (closures
     * explore only the bound cone); a repeated variable (`?x path ?x`)
     * becomes an equality filter.
     */
   private def compilePath(g: PersistedGraph, sTerm: Term, path: Path,
-                          oTerm: Term, maxIter: Int): (DataFrame, Seq[String]) = {
+                          oTerm: Term, maxIter: Int): (LogicalPlan, Seq[String]) = {
     val src = sTerm match { case C(v) => Some(v); case _ => None }
     val dst = oTerm match { case C(v) => Some(v); case _ => None }
     val df = pathFrame(g, path, src, dst, maxIter).distinct()
@@ -1072,9 +1073,8 @@ object GraphQuery {
       // subject-star preference applies
       (df, vars, null: String, pathEstimate(pp, g.stats))
     }
-    val outVars = (patterns.flatMap(p => Seq(p._1, p._2, p._3)) ++
-        pathPatterns.flatMap(p => Seq(p._1, p._3)))
-      .collect { case V(n) => n }.distinct
-    greedyJoin(tripleItems ++ pathItems, outVars).distinct()
+    val outVars =
+      (varsOf(patterns) ++ pathPatterns.flatMap(p => Seq(p._1, p._3)).collect { case V(n) => n }).distinct
+    frame(g, greedyJoin(tripleItems ++ pathItems, outVars).distinct())
   }
 }

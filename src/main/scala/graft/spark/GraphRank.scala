@@ -130,7 +130,7 @@ object GraphRank {
   def pagerank(g: GraphQuery.PersistedGraph, pred: Option[String],
                iters: Int): DataFrame = {
     val iriEdges = g.df.filter(col("obj_iri").isNotNull)
-    val slice = pred.fold(iriEdges)(p => g.predSlice(Seq(p), iriEdges))
+    val slice = pred.fold(iriEdges)(p => iriEdges.filter(g.predSlice(Seq(p))))
     pagerank(slice.select(col("subj").as("src"), col("obj_iri").as("dst"))
       .distinct(), iters)
   }

@@ -1,8 +1,9 @@
 package graft.spark
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.Assertions.assert
 import scala.jdk.CollectionConverters._
@@ -94,5 +95,23 @@ object JobFence {
     override def toString: String = s"$total jobs" +
       bySite.toSeq.sortBy { case (site, n) => (-n, site) }
         .map { case (site, n) => s"\n  $n × $site" }.mkString
+  }
+}
+
+/** Counts Catalyst analyses on the sessions it is registered with (the
+  * test session, [[SparkTestSession]]): its check rule runs once per
+  * analysis, i.e. once per Dataset built and per plan a command analyzes.
+  */
+object AnalysisCount {
+  private val analyses = new AtomicInteger
+
+  def register(ext: SparkSessionExtensions): Unit =
+    ext.injectCheckRule(_ => _ => analyses.incrementAndGet())
+
+  /** The analyses `body` runs. */
+  def of[A](body: => A): (A, Int) = {
+    val before = analyses.get
+    val a = body
+    (a, analyses.get - before)
   }
 }

@@ -10,6 +10,7 @@ object SparkTestSession {
     val s = GraftSession.builder("local[4]", 4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .withExtensions(AnalysisCount.register)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
