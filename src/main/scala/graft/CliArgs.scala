@@ -7,22 +7,13 @@ package graft
 private[graft] object CliArgs {
 
   /** @param flags      keys that take no value (`--validate`)
-    * @param repeatKey   a key that may repeat; its values accumulate in the
-    *                    returned vector (`--pattern a --pattern b`)
-    * @param required    keys that must be present (checked after parsing)
+    * @param repeatKeys keys that may repeat; their values accumulate per
+    *                   key, in argument order (`--pattern a --optional b
+    *                   --pattern c`)
+    * @param required   keys that must be present (checked after parsing)
     */
   def parse(args: Array[String], flags: Set[String] = Set.empty,
-            repeatKey: Option[String] = None,
-            required: Seq[String] = Nil): (Map[String, String], Vector[String]) = {
-    val (m, reps) = parseMulti(args, flags, repeatKey.toSet, required)
-    (m, repeatKey.map(k => reps.getOrElse(k, Vector.empty)).getOrElse(Vector.empty))
-  }
-
-  /** [[parse]] with any number of repeating keys; their values accumulate
-    * per key, in argument order (`--pattern a --optional b --pattern c`).
-    */
-  def parseMulti(args: Array[String], flags: Set[String] = Set.empty,
-                 repeatKeys: Set[String] = Set.empty, required: Seq[String] = Nil)
+            repeatKeys: Set[String] = Set.empty, required: Seq[String] = Nil)
       : (Map[String, String], Map[String, Vector[String]]) = {
     @annotation.tailrec
     def loop(rest: List[String], acc: Map[String, String],

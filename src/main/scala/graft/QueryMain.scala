@@ -68,7 +68,7 @@ object QueryMain {
     * without owning JVM exit/session lifecycle.
     */
   def run(args: Array[String], spark: SparkSession): Long = {
-    val (opts, reps) = CliArgs.parseMulti(args, flags = Set("entail"),
+    val (opts, reps) = CliArgs.parse(args, flags = Set("entail"),
       repeatKeys = Set("pattern", "optional", "minus"), required = Seq("output"))
     val patternStrs = reps.getOrElse("pattern", Vector.empty)
     require(patternStrs.nonEmpty, "at least one --pattern is required")

@@ -64,23 +64,29 @@ object SparkEntry {
   // the map's bin lock (computeIfAbsent's contract wants short mappers;
   // a long-running mapper stalls unrelated colliding keys and a reentrant
   // build would throw 'Recursive update'); racing threads share one holder
-  private val graphPaths =
+  private val built =
     new java.util.concurrent.ConcurrentHashMap[String, () => String]()
-  private def persistedGraph(s: SparkSession, cacheKey: String)
-                            (build: => Dataset[Triple]): graft.spark.GraphQuery.PersistedGraph = {
+
+  /** What `build` returns for `id` within `slot`, built once per JVM:
+    * `build` gets the 12-hex MD5 prefix of `id` to name its path or table.
+    */
+  private def cached(slot: String, id: String)(build: String => String): String = {
     val holder = new (() => String) {
-      lazy val value: String = {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(cacheKey.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-        val p = graphTmpBase.resolve(s"g$key").toString
-        ExtractPipeline.writeGraph(build, p, GraphPredBuckets)
-        p
-      }
+      lazy val value: String = build(java.security.MessageDigest.getInstance("MD5")
+        .digest(id.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12))
       def apply(): String = value
     }
-    val prev = graphPaths.putIfAbsent(cacheKey, holder)
-    graft.spark.GraphQuery.loadGraph(s, (if (prev != null) prev else holder)())
+    val prev = built.putIfAbsent(s"$slot|$id", holder)
+    (if (prev != null) prev else holder)()
   }
+
+  private def persistedGraph(s: SparkSession, cacheKey: String)
+                            (build: => Dataset[Triple]): graft.spark.GraphQuery.PersistedGraph =
+    graft.spark.GraphQuery.loadGraph(s, cached("graph", cacheKey) { key =>
+      val p = graphTmpBase.resolve(s"g$key").toString
+      ExtractPipeline.writeGraph(build, p, GraphPredBuckets)
+      p
+    })
   private def persistedCustomerGraph(s: SparkSession, dir: String): graft.spark.GraphQuery.PersistedGraph =
     persistedGraph(s, dir)(customerTriples(s, dir))
 
@@ -89,56 +95,33 @@ object SparkEntry {
     * off the bucketed scans. The table lives in a session CATALOG (the
     * in-memory catalog dies with the SparkContext), so the cache is keyed
     * per (applicationId, dir) — a later SparkContext re-registers the
-    * table. Same lazy-holder pattern as [[persistedGraph]]: the
-    * multi-second write runs OUTSIDE the map's bin lock, and two dirs never
-    * serialize behind one another.
+    * table.
     */
-  private val bucketedTables =
-    new java.util.concurrent.ConcurrentHashMap[String, () => String]()
-  private def bucketedCustomerGraph(s: SparkSession, dir: String): graft.spark.GraphQuery.PersistedGraph = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val cacheKey = s.sparkContext.applicationId + "|" + key
-    val holder = new (() => String) {
-      lazy val value: String = {
+  private def bucketedCustomerGraph(s: SparkSession, dir: String): graft.spark.GraphQuery.PersistedGraph =
+    graft.spark.GraphQuery.loadBucketedGraph(s,
+      cached("subj|" + s.sparkContext.applicationId, dir) { key =>
         val tbl = s"graft_subj_$key"
         ExtractPipeline.writeGraphBucketedBySubject(customerTriples(s, dir), tbl,
           buckets = GraphPredBuckets, path = graphTmpBase.resolve(s"b$key").toString)
         tbl
-      }
-      def apply(): String = value
-    }
-    val prev = bucketedTables.putIfAbsent(cacheKey, holder)
-    graft.spark.GraphQuery.loadBucketedGraph(s, (if (prev != null) prev else holder)())
-  }
+      })
 
   /** Standing crawl root for kg_crawl_incr: the mention corpus folded in
     * two turn-sliced batches through [[graft.spark.IncrementalGraph]]
     * (raw-graph novel append + versioned link state on disk). Folding is
-    * idempotent, so the holder cache is a cost-saver, not a correctness
+    * idempotent, so the cache is a cost-saver, not a correctness
     * requirement.
     */
-  private val crawlRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, () => String]()
-  private def crawlRoot(s: SparkSession, dir: String): String = {
-    val holder = new (() => String) {
-      lazy val value: String = {
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-        val root = graphTmpBase.resolve(s"c$key").toString
-        import s.implicits._
-        val contact = Seq("http://schema.org/contact")
-        val all = ExtractPipeline.extract(Transcripts.mentions(s, dir)).localCheckpoint()
-        graft.spark.IncrementalGraph.foldBatch(
-          all.filter(col("turn_idx") <= 2).as[Triple], root, linkKeys = contact)
-        graft.spark.IncrementalGraph.foldBatch(
-          all.filter(col("turn_idx") >= 3).as[Triple], root, linkKeys = contact)
-        root
-      }
-      def apply(): String = value
-    }
-    val prev = crawlRoots.putIfAbsent(dir, holder)
-    (if (prev != null) prev else holder)()
+  private def crawlRoot(s: SparkSession, dir: String): String = cached("crawl", dir) { key =>
+    val root = graphTmpBase.resolve(s"c$key").toString
+    import s.implicits._
+    val contact = Seq("http://schema.org/contact")
+    val all = ExtractPipeline.extract(Transcripts.mentions(s, dir)).localCheckpoint()
+    graft.spark.IncrementalGraph.foldBatch(
+      all.filter(col("turn_idx") <= 2).as[Triple], root, linkKeys = contact)
+    graft.spark.IncrementalGraph.foldBatch(
+      all.filter(col("turn_idx") >= 3).as[Triple], root, linkKeys = contact)
+    root
   }
 
   /** Flagship: full extraction pipeline over all three transcript shapes

@@ -791,9 +791,7 @@ object TextOps {
     * single whole-stage-codegen projection, no UDF, no shuffle, scan-bound
     * at any corpus size. The merge list inlines into the plan, which is
     * the right trade up to vocab-scale lists (~1k merges); past that the
-    * expression tree itself gets large — [[bpeEncodeIter]] is the same
-    * semantics as one per-partition loop for production-sized
-    * vocabularies, parity-proven in the spec.
+    * expression tree itself gets large.
     */
   def bpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     requireValidMerges(merges)
@@ -803,41 +801,6 @@ object TextOps {
     }
     docs.select(col("doc_id"),
       symbolCount(enc).as("n_tokens"), symbolCount(sym).as("n_chars"))
-  }
-
-  /** [[bpeEncode]] for production-sized merge lists: identical
-    * merge-list-order semantics (Java `String.replace` is the same
-    * literal, left-to-right, non-overlapping rewrite as the SQL
-    * `replace`), but the merges live in ONE broadcast-sized array applied
-    * in a per-partition loop instead of a 50k-deep expression tree. A
-    * contains() pre-check skips absent pairs, so the common cost per doc
-    * is a scan of the merge list, not a rewrite per merge. Still a pure
-    * projection: no shuffle, embarrassingly parallel.
-    */
-  def bpeEncodeIter(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    requireValidMerges(merges)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(
-      merges.map { case (a, b) => (s"<$a><$b>", s"<$a$b>") }.toArray)
-    val sym = docs.select(col("doc_id"), delimitedSymbols(col("text")).as("sym"))
-      .as[(Long, String)]
-    sym.mapPartitions { it =>
-      val ms = bc.value
-      it.map { case (id, s) =>
-        if (s == null) (id, None, None) // null text → null counts, like bpeEncode
-        else {
-          var cur = s
-          var i = 0
-          while (i < ms.length) {
-            val (pat, rep) = ms(i)
-            if (cur.contains(pat)) cur = cur.replace(pat, rep)
-            i += 1
-          }
-          (id, Some(cur.count(_ == '<').toLong), Some(s.count(_ == '<').toLong))
-        }
-      }
-    }.toDF("doc_id", "n_tokens", "n_chars")
   }
 
   private def delimitedSymbols(text: Column): Column =

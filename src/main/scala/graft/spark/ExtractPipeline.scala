@@ -154,9 +154,9 @@ object ExtractPipeline {
     * predicate-sliced reads prune partitions. Physical binding goes through
     * the [[TableIO]] seam (parquet here; Iceberg in deployment).
     */
-  def writeGraph(triples: Dataset[Triple], outDir: String, predBuckets: Int = GraphLayout.DefaultBuckets,
-                 io: TableIO = TableIO.default): Unit = {
-    io.write(
+  def writeGraph(triples: Dataset[Triple], outDir: String,
+                 predBuckets: Int = GraphLayout.DefaultBuckets): Unit = {
+    TableIO.default.write(
       triples.withColumn(GraphLayout.BucketColumn, GraphLayout.bucket(col("pred"), predBuckets)),
       outDir, Seq(GraphLayout.BucketColumn))
     // self-describing layout: the bucket count is a property of the TABLE,
@@ -176,8 +176,8 @@ object ExtractPipeline {
     // filesystem path from a catalog identifier. Readers still tolerate
     // absent/corrupt metadata — loadGraph degrades to no-pruning.
     val spark = triples.sparkSession
-    val written = io.read(spark, outDir)
-    GraphLayout.write(spark, outDir, io,
+    val written = TableIO.default.read(spark, outDir)
+    GraphLayout.write(spark, outDir,
       GraphLayout(predBuckets, Some(GraphQuery.predStats(written)), Some(written.schema)))
   }
 

@@ -79,15 +79,15 @@ private[graft] object GraphLayout {
   /** The directory's layout; None when absent or unparseable. Read
     * failures of the metadata seam itself propagate.
     */
-  def read(spark: SparkSession, dir: String, io: TableIO): Option[GraphLayout] =
-    io.readMetadata(spark, dir, ExtractPipeline.LayoutFile).flatMap(parse)
+  def read(spark: SparkSession, dir: String): Option[GraphLayout] =
+    TableIO.default.readMetadata(spark, dir, ExtractPipeline.LayoutFile).flatMap(parse)
 
   /** Whether the directory carries a layout file at all, parseable or not
     * (a batch-layout dir exists from its first writer on).
     */
-  def exists(spark: SparkSession, dir: String, io: TableIO): Boolean =
-    io.readMetadata(spark, dir, ExtractPipeline.LayoutFile).isDefined
+  def exists(spark: SparkSession, dir: String): Boolean =
+    TableIO.default.readMetadata(spark, dir, ExtractPipeline.LayoutFile).isDefined
 
-  def write(spark: SparkSession, dir: String, io: TableIO, layout: GraphLayout): Unit =
-    io.writeMetadata(spark, dir, ExtractPipeline.LayoutFile, layout.toJson)
+  def write(spark: SparkSession, dir: String, layout: GraphLayout): Unit =
+    TableIO.default.writeMetadata(spark, dir, ExtractPipeline.LayoutFile, layout.toJson)
 }

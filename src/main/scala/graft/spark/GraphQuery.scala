@@ -110,14 +110,13 @@ object GraphQuery {
     * corrupt metadata (a foreign parquet dir) does both with predBuckets =
     * 0 (correct results, no partition pruning).
     */
-  def loadGraph(spark: org.apache.spark.sql.SparkSession, dir: String,
-                io: graft.spark.TableIO = graft.spark.TableIO.default): PersistedGraph = {
+  def loadGraph(spark: org.apache.spark.sql.SparkSession, dir: String): PersistedGraph = {
     // corrupt/truncated metadata (e.g. a writer killed mid-write on a
     // filesystem without the rename the writer attempts) degrades exactly
     // like MISSING metadata — the graph must stay queryable; the metadata
     // READ itself may also throw (checksum mismatch on a torn local file)
-    val layout = scala.util.Try(GraphLayout.read(spark, dir, io)).toOption.flatten
-    val df = io.read(spark, dir, layout.flatMap(_.schema))
+    val layout = scala.util.Try(GraphLayout.read(spark, dir)).toOption.flatten
+    val df = TableIO.default.read(spark, dir, layout.flatMap(_.schema))
     PersistedGraph(df, layout.fold(0)(_.predBuckets),
       layout.flatMap(_.stats).getOrElse(predStats(df)))
   }
@@ -523,11 +522,11 @@ object GraphQuery {
     *    terminate naturally — a cyclic hop re-derives only seen pairs and
     *    the anti-join empties the frontier.
     *
-    * Hitting `maxIterations` with a live frontier THROWS: a silently
-    * truncated closure is wrong answers, not a degraded mode.
+    * Hitting the 64-round iteration cap with a live frontier THROWS: a
+    * silently truncated closure is wrong answers, not a degraded mode.
     */
-  def pathPlus(g: PersistedGraph, pred: String, maxIterations: Int = 64): DataFrame =
-    pathPlusAlt(g, Seq(pred), maxIterations)
+  def pathPlus(g: PersistedGraph, pred: String): DataFrame =
+    pathPlusAlt(g, Seq(pred))
 
   /** `(p1|p2|…)+` — transitive closure over the UNION of several
     * predicates' edge slices (the SPARQL alternation-under-closure path,
@@ -536,8 +535,7 @@ object GraphQuery {
     * slice is one [[PersistedGraph.predSlice]] scan: a pushed `pred IN
     * (…)`, pruned to the predicates' buckets.
     */
-  def pathPlusAlt(g: PersistedGraph, preds: Seq[String],
-                  maxIterations: Int = 64): DataFrame = {
+  def pathPlusAlt(g: PersistedGraph, preds: Seq[String]): DataFrame = {
     require(preds.nonEmpty, "empty predicate alternation")
     // no distinct here: closure dedups its input itself — a second
     // Deduplicate would cost a redundant full shuffle of the edge slice.
@@ -545,7 +543,7 @@ object GraphQuery {
     // bound of the slice, which is all admission needs
     val edges = plan(g.df).filter(g.predSlice(preds) && col("obj_iri").isNotNull)
       .select(col("subj").as("s"), col("obj_iri").as("o"))
-    closure(g.df.sparkSession, edges, None, maxIterations, preds.mkString("|"),
+    closure(g.df.sparkSession, edges, None, preds.mkString("|"),
       sliceRows(g, Path.Alt(preds.map(Path.P))))
   }
 
@@ -554,8 +552,8 @@ object GraphQuery {
     * (entity-link outputs, diff batches). Same semi-naive machinery and
     * the same THROW on a live frontier at the iteration cap.
     */
-  def closePairs(edges: DataFrame, maxIterations: Int = 64): DataFrame =
-    closure(edges.sparkSession, plan(edges), None, maxIterations, "closePairs")
+  def closePairs(edges: DataFrame): DataFrame =
+    closure(edges.sparkSession, plan(edges), None, "closePairs")
 
   /** INCREMENTAL transitive-closure maintenance — the path twin of
     * [[Entailment.owlEntailIncremental]]: given the CLOSED pair set of a
@@ -571,8 +569,7 @@ object GraphQuery {
     * delta's reachability cone, never the standing closure — the
     * continuously-maintained-KG shape at 100 TB.
     */
-  def pathPlusIncremental(closedPairs: DataFrame, newEdges: DataFrame,
-                          maxIterations: Int = 64): DataFrame = {
+  def pathPlusIncremental(closedPairs: DataFrame, newEdges: DataFrame): DataFrame = {
     val (c, closedSize) = ExtractPipeline.checkpointCounted(closedPairs.select(col("s"), col("o")))
     val d = newEdges.select(col("s"), col("o")).distinct()
     // admitted on the standing closure's size alone: the delta is unsized
@@ -580,14 +577,21 @@ object GraphQuery {
     // the hop rows (closure plus delta) need no cap of their own
     closureStrategy(c.sparkSession, "GraphQuery.pathPlusIncremental", closedSize,
         tagged(plan(c), Hop | Prefix).unionByName(tagged(plan(d), Hop | Seed)),
-        doubling = false, maxIterations, "pathPlusIncremental", capHops = false) {
-      val suffix = closure(c.sparkSession, plan(c.union(d)), Some(plan(d)), maxIterations,
-        "pathPlusIncremental").localCheckpoint()
+        doubling = false, "pathPlusIncremental", capHops = false) {
+      val suffix = closure(c.sparkSession, plan(c.union(d)), Some(plan(d)), "pathPlusIncremental")
+        .localCheckpoint()
       val prefixed = c.as("pc").join(suffix.as("px"), col("pc.o") === col("px.s"))
         .select(col("pc.s").as("s"), col("px.o").as("o"))
       c.union(suffix).union(prefixed).distinct()
     }
   }
+
+  /** The iteration cap of both closure strategies: a live frontier after
+    * this many rounds THROWS rather than return a truncated closure. A
+    * full closure doubles the covered path length per round; a seeded one
+    * (a bound endpoint, an incremental delta) extends it by one hop.
+    */
+  private final val MaxIterations = 64
 
   // row tags of the closure kernel's input (bit flags)
   private final val Hop = 1 // a traversable (s, o) edge
@@ -604,7 +608,7 @@ object GraphQuery {
     * the seed pairs only — a bound-endpoint `<x> p+ ?y` query explores x's
     * reachable cone, never the whole graph's closure (composing a cone
     * slice with a full closure would drag in pairs outside the cone).
-    * Hitting `maxIterations` with a live frontier THROWS on either
+    * Hitting `MaxIterations` with a live frontier THROWS on either
     * strategy — a silently truncated closure is wrong answers, not a
     * degraded mode.
     *
@@ -618,7 +622,7 @@ object GraphQuery {
     * materialized first, their count observed on that same job.
     */
   private def closure(spark: SparkSession, edgesIn: LogicalPlan, seed: Option[LogicalPlan],
-                      maxIterations: Int, what: String, edgeRows: Option[Long] = None): DataFrame = {
+                      what: String, edgeRows: Option[Long] = None): DataFrame = {
     val doubling = seed.isEmpty
     val engine = s"GraphQuery.closure[$what]"
     val e = edgesIn.select(col("s"), col("o"))
@@ -629,17 +633,16 @@ object GraphQuery {
     // the distributed loop reads edges and seeds every round: dedup and
     // materialize them once (callers skip their own distinct)
     def distributed(edges: DataFrame): DataFrame =
-      closureLoop(edges, seeds.fold(edges)(distinctFrame(_).localCheckpoint()), doubling,
-        maxIterations, what)
+      closureLoop(edges, seeds.fold(edges)(distinctFrame(_).localCheckpoint()), doubling, what)
     edgeRows match {
       case Some(n) =>
-        closureStrategy(spark, engine, n, input(e, seeds), doubling, maxIterations, what) {
+        closureStrategy(spark, engine, n, input(e, seeds), doubling, what) {
           distributed(distinctFrame(e).localCheckpoint())
         }
       case None =>
         val (edges, n) = ExtractPipeline.checkpointCounted(distinctFrame(e))
         closureStrategy(spark, engine, n, input(plan(edges), seeds.map(_.distinct())), doubling,
-          maxIterations, what)(distributed(edges))
+          what)(distributed(edges))
     }
   }
 
@@ -648,14 +651,14 @@ object GraphQuery {
     * overflows past the edge limit's worth of hop rows.
     */
   private def closureStrategy(spark: SparkSession, engine: String, size: Long, input: LogicalPlan,
-                              doubling: Boolean, maxIterations: Int, what: String,
+                              doubling: Boolean, what: String,
                               capHops: Boolean = true)
                              (distributed: => DataFrame): DataFrame = {
     import spark.implicits._
     val l = AdaptiveStrategy.limits
     val maxHops = if (capHops) l.closureEdges else Long.MaxValue
     AdaptiveStrategy.run(engine, size, l.closureEdges, frameAs[(Int, String, String)](spark, input))(
-      closureKernel(_, doubling, maxIterations, maxHops, l.closureEdges, l.closurePairs, what))(
+      closureKernel(_, doubling, maxHops, l.closureEdges, l.closurePairs, what))(
       distributed.as[(String, String)]).toDF("s", "o")
   }
 
@@ -663,7 +666,7 @@ object GraphQuery {
     * expansion from the SEED pairs over the HOP edges. With `doubling` the
     * accepted novel pairs join the adjacency after each round, so the next
     * round composes against the closure so far — the same round semantics
-    * as [[closureLoop]], so the `maxIterations` contract agrees across
+    * as [[closureLoop]], so the `MaxIterations` contract agrees across
     * strategies. PREFIX pairs C (the incremental case) finish the result as
     * `C ∪ X ∪ (C ∘ X)` over the expansion X. Traversal never continues
     * through a NULL hop node, matching the SQL equi-joins' null rejection
@@ -676,7 +679,7 @@ object GraphQuery {
     * pairs throws [[AdaptiveStrategy.overflow]].
     */
   private def closureKernel(rows: Iterator[(Int, String, String)], doubling: Boolean,
-                            maxIterations: Int, maxHops: Long, maxSeeds: Long, maxPairs: Long,
+                            maxHops: Long, maxSeeds: Long, maxPairs: Long,
                             what: String): Iterator[(String, String)] = {
     type Index = java.util.HashMap[String, mutable.ArrayBuffer[String]]
     def link(m: Index, k: String, v: String): Unit = {
@@ -707,7 +710,7 @@ object GraphQuery {
       }
     }
     var iter = 0
-    while (delta.nonEmpty && iter < maxIterations) {
+    while (delta.nonEmpty && iter < MaxIterations) {
       iter += 1
       val next = mutable.ArrayBuffer.empty[(String, String)]
       delta.foreach { case (s, o) =>
@@ -717,7 +720,7 @@ object GraphQuery {
       if (doubling) next.foreach { case (s, o) => link(adj, s, o) }
       delta = next
     }
-    if (delta.nonEmpty) throw new IllegalStateException(liveFrontier(what, maxIterations))
+    if (delta.nonEmpty) throw new IllegalStateException(liveFrontier(what))
     if (prefix.isEmpty) seen.iterator
     else {
       val byObj = new Index()
@@ -759,12 +762,12 @@ object GraphQuery {
     * runs (org trees, crawl chains) pay log₂ d barriers instead of d.
     */
   private def closureLoop(edges: DataFrame, seed: DataFrame, doubling: Boolean,
-                          maxIterations: Int, what: String): DataFrame = {
+                          what: String): DataFrame = {
     var seen = seed
     var delta = seed
     var frontierLive = !delta.isEmpty
     var iter = 0
-    while (iter < maxIterations && frontierLive) {
+    while (iter < MaxIterations && frontierLive) {
       iter += 1
       // renamed projections, not aliases: a doubling round 1 composes
       // `seen` with ITSELF, and the anti-join's left side derives from
@@ -787,13 +790,13 @@ object GraphQuery {
       // running union stays shallow-lineage and duplicate-free
       if (frontierLive) seen = seen.union(novel)
     }
-    if (frontierLive) throw new IllegalStateException(liveFrontier(what, maxIterations))
+    if (frontierLive) throw new IllegalStateException(liveFrontier(what))
     seen
   }
 
-  private def liveFrontier(what: String, maxIterations: Int): String =
-    s"path closure ($what) frontier still live after $maxIterations iterations " +
-      "— raise maxIterations; a truncated closure would be silently wrong"
+  private def liveFrontier(what: String): String =
+    s"path closure ($what) frontier still live after $MaxIterations iterations " +
+      "— a truncated closure would be silently wrong"
 
   // --------------------------------------------------------------------
   // SPARQL 1.1 property-path algebra
@@ -873,8 +876,8 @@ object GraphQuery {
     * node (SPARQL's ZeroLengthPath) — a full node-set scan; bind an
     * endpoint when you don't need that.
     */
-  def evalPath(g: PersistedGraph, path: Path, maxIterations: Int = 64): DataFrame =
-    frame(g, pathFrame(g, path, None, None, maxIterations).distinct())
+  def evalPath(g: PersistedGraph, path: Path): DataFrame =
+    frame(g, pathFrame(g, path, None, None).distinct())
 
   /** Atomic forward edges for one predicate: its
     * [[PersistedGraph.predSlice]], object coalesced to one term domain.
@@ -933,7 +936,7 @@ object GraphQuery {
     * reachable cone, never the full closure).
     */
   private def pathFrame(g: PersistedGraph, path: Path, src: Option[String],
-                        dst: Option[String], maxIter: Int): LogicalPlan = {
+                        dst: Option[String]): LogicalPlan = {
     def bound(p: LogicalPlan): LogicalPlan =
       (src.map(col("s") === _) ++ dst.map(col("o") === _)).reduceOption(_ && _).fold(p)(p.filter)
     path match {
@@ -954,16 +957,16 @@ object GraphQuery {
         bound((fw.toSeq ++ iv.toSeq).reduce(_ unionByName _))
 
       case Path.Inv(p) =>
-        pathFrame(g, p, dst, src, maxIter)
+        pathFrame(g, p, dst, src)
           .select(col("o").as("s"), col("s").as("o"))
 
       case Path.Chain(ps) =>
         require(ps.nonEmpty, "empty path sequence")
-        if (ps.size == 1) pathFrame(g, ps.head, src, dst, maxIter)
+        if (ps.size == 1) pathFrame(g, ps.head, src, dst)
         else {
           val frames = ps.zipWithIndex.map { case (q, i) =>
-            pathFrame(g, q, if (i == 0) src else None, if (i == ps.size - 1) dst else None,
-              maxIter).distinct()
+            pathFrame(g, q, if (i == 0) src else None, if (i == ps.size - 1) dst else None)
+              .distinct()
           }
           frames.reduce { (a, b) =>
             a.as("pl").join(b.as("pr"), col("pl.o") === col("pr.s"), "inner")
@@ -973,13 +976,13 @@ object GraphQuery {
 
       case Path.Alt(ps) =>
         require(ps.nonEmpty, "empty path alternation")
-        ps.map(pathFrame(g, _, src, dst, maxIter)).reduce(_ unionByName _)
+        ps.map(pathFrame(g, _, src, dst)).reduce(_ unionByName _)
 
       case Path.Plus(p) =>
         // closure dedups the edges when it needs them distinct
-        val edges = pathFrame(g, p, None, None, maxIter)
+        val edges = pathFrame(g, p, None, None)
         def close(e: LogicalPlan, seed: Option[LogicalPlan]) =
-          plan(closure(g.df.sparkSession, e, seed, maxIter, render(path), sliceRows(g, p)))
+          plan(closure(g.df.sparkSession, e, seed, render(path), sliceRows(g, p)))
         (src, dst) match {
           case (Some(v), d) =>
             val cone = close(edges, Some(edges.filter(col("s") === v)))
@@ -991,11 +994,11 @@ object GraphQuery {
         }
 
       case Path.Star(p) =>
-        pathFrame(g, Path.Plus(p), src, dst, maxIter)
+        pathFrame(g, Path.Plus(p), src, dst)
           .unionByName(zeroLength(g, src, dst))
 
       case Path.Opt(p) =>
-        pathFrame(g, p, src, dst, maxIter)
+        pathFrame(g, p, src, dst)
           .unionByName(zeroLength(g, src, dst))
     }
   }
@@ -1006,10 +1009,10 @@ object GraphQuery {
     * becomes an equality filter.
     */
   private def compilePath(g: PersistedGraph, sTerm: Term, path: Path,
-                          oTerm: Term, maxIter: Int): (LogicalPlan, Seq[String]) = {
+                          oTerm: Term): (LogicalPlan, Seq[String]) = {
     val src = sTerm match { case C(v) => Some(v); case _ => None }
     val dst = oTerm match { case C(v) => Some(v); case _ => None }
-    val df = pathFrame(g, path, src, dst, maxIter).distinct()
+    val df = pathFrame(g, path, src, dst).distinct()
     (sTerm, oTerm) match {
       case (V(a), V(b)) if a == b =>
         (df.filter(col("s") === col("o")).select(col("s").as(a)), Seq(a))
@@ -1060,15 +1063,14 @@ object GraphQuery {
     * before path patterns.
     */
   def bgpWithPaths(g: PersistedGraph, patterns: Seq[(Term, Term, Term)],
-                   pathPatterns: Seq[(Term, Path, Term)],
-                   maxIterations: Int = 64): DataFrame = {
+                   pathPatterns: Seq[(Term, Path, Term)]): DataFrame = {
     require(patterns.nonEmpty || pathPatterns.nonEmpty, "empty BGP")
     val tripleItems = patternItems(g, patterns)
     require(pathPatterns.forall(p => Seq(p._1, p._3).exists(_.isInstanceOf[V])),
       "variable-free path patterns are not supported — evaluate evalPath " +
         "with both endpoints bound separately and gate the query on its result")
     val pathItems = pathPatterns.map { pp =>
-      val (df, vars) = compilePath(g, pp._1, pp._2, pp._3, maxIterations)
+      val (df, vars) = compilePath(g, pp._1, pp._2, pp._3)
       // a path frame is closure/join output, never the bucketed scan — no
       // subject-star preference applies
       (df, vars, null: String, pathEstimate(pp, g.stats))

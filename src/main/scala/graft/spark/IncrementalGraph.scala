@@ -67,28 +67,26 @@ object IncrementalGraph {
     */
   def foldBatch(delta: Dataset[Triple], root: String, predBuckets: Int = GraphLayout.DefaultBuckets,
                 linkKeys: Seq[String] = Nil, entail: Boolean = false,
-                maxKeyDegree: Int = 100000,
-                io: TableIO = TableIO.default): CrawlSummary = {
+                maxKeyDegree: Int = 100000): CrawlSummary = {
     val spark = delta.sparkSession
     val d = delta.dropDuplicates(Triple.identityCols).localCheckpoint()
-    val batchId = nextBatchId(spark, s"$root/graph", io)
-    val newTriples = appendNovel(spark, d, s"$root/graph", predBuckets, io, batchId)
+    val batchId = nextBatchId(spark, s"$root/graph")
+    val newTriples = appendNovel(spark, d, s"$root/graph", predBuckets, batchId)
 
     val linkNodes =
       if (linkKeys.isEmpty) -1L
-      else LinkStateStore.fold(d, s"$root/link_state", batchId, linkKeys,
-        maxKeyDegree, io).count()
+      else LinkStateStore.fold(d, s"$root/link_state", batchId, linkKeys, maxKeyDegree).count()
 
     val closureNew =
       if (!entail) -1L
       else {
         val dir = s"$root/closure"
-        appendNovel(spark, closureWith(d, dir, io), dir, predBuckets, io, batchId)
+        appendNovel(spark, closureWith(d, dir), dir, predBuckets, batchId)
       }
 
     // per-batch crawl mark: observability + lineage (which batch landed how
     // much), atomic via the metadata seam
-    io.writeMetadata(spark, s"$root/graph", s"$CrawlPrefix$batchId",
+    TableIO.default.writeMetadata(spark, s"$root/graph", s"$CrawlPrefix$batchId",
       s"""{"batch_id": $batchId, "new_triples": $newTriples, "new_closure_triples": $closureNew, "link_state_nodes": $linkNodes}""" + "\n")
     CrawlSummary(batchId, newTriples, closureNew, linkNodes)
   }
@@ -97,16 +95,17 @@ object IncrementalGraph {
     * [[BatchSchema]] (so opening it starts no job); None when the dir has
     * no layout — absent, or not written by a batch-layout writer.
     */
-  private def batches(spark: SparkSession, dir: String, io: TableIO): Option[DataFrame] =
-    if (GraphLayout.exists(spark, dir, io)) Some(io.read(spark, dir, Some(BatchSchema))) else None
+  private def batches(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (GraphLayout.exists(spark, dir)) Some(TableIO.default.read(spark, dir, Some(BatchSchema)))
+    else None
 
   /** The standing triples of a batch-layout dir: empty when it has no
     * layout, or when its every batch was empty — a first batch folds
     * against empty artifacts.
     */
-  private def standing(spark: SparkSession, dir: String, io: TableIO): Dataset[Triple] = {
+  private def standing(spark: SparkSession, dir: String): Dataset[Triple] = {
     import spark.implicits._
-    batches(spark, dir, io).fold(spark.emptyDataset[Triple])(_
+    batches(spark, dir).fold(spark.emptyDataset[Triple])(_
       .select(col("subj"), col("pred"), col("obj_iri"), col("obj_lexical"),
         col("obj_datatype"), col("obj_lang"), col("conv_id"), col("turn_idx"))
       .as[Triple])
@@ -118,9 +117,8 @@ object IncrementalGraph {
     * and the streaming maintainer
     * ([[graft.streaming.StreamingExtract.closureStream]]).
     */
-  private[graft] def closureWith(delta: Dataset[Triple], dir: String,
-                                 io: TableIO): Dataset[Triple] =
-    Entailment.owlEntailIncremental(standing(delta.sparkSession, dir, io), delta)
+  private[graft] def closureWith(delta: Dataset[Triple], dir: String): Dataset[Triple] =
+    Entailment.owlEntailIncremental(standing(delta.sparkSession, dir), delta)
 
   /** The id the next append to a batch-layout dir writes under: past every
     * crawl mark of `dir` and past every `batch_id` its rows hold.
@@ -137,12 +135,12 @@ object IncrementalGraph {
     * The data max also covers dirs without marks (a compacted root, a
     * closureStream dir).
     */
-  private[graft] def nextBatchId(spark: SparkSession, dir: String, io: TableIO): Long = {
-    val markFloor = io.listMetadata(spark, dir, CrawlPrefix)
+  private[graft] def nextBatchId(spark: SparkSession, dir: String): Long = {
+    val markFloor = TableIO.default.listMetadata(spark, dir, CrawlPrefix)
       .flatMap(n => scala.util.Try(n.stripPrefix("batch-").toLong).toOption)
       .foldLeft(0L)((acc, id) => math.max(acc, id + 1L))
     // coalesce: a dir whose batches were all empty has no max
-    val dataFloor = batches(spark, dir, io).fold(0L)(
+    val dataFloor = batches(spark, dir).fold(0L)(
       _.agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0) + 1L)
     math.max(markFloor, dataFloor)
   }
@@ -153,36 +151,34 @@ object IncrementalGraph {
     * one null-safe identity anti-join against every standing row.
     */
   private[graft] def appendNovel(spark: SparkSession, rows: Dataset[Triple], dir: String,
-                                 predBuckets: Int, io: TableIO, batchId: Long): Long = {
-    val st = standing(spark, dir, io)
-    val buckets = layoutBuckets(spark, dir, io, predBuckets)
+                                 predBuckets: Int, batchId: Long): Long = {
+    val st = standing(spark, dir)
+    val buckets = layoutBuckets(spark, dir, predBuckets)
     val novel = rows.as("r").join(st.as("s"), Triple.identityCond("r", "s"), "left_anti")
-    writeBatch(novel, dir, batchId, buckets, io)
+    writeBatch(novel, dir, batchId, buckets)
   }
 
   /** The one batch-layout writer: `rows` into `dir` as batch `batchId`,
     * each under its [[GraphLayout.bucket]] of `buckets` (dynamic partition
     * overwrite); returns the rows written.
     */
-  private[graft] def writeBatch(rows: Dataset[_], dir: String, batchId: Long, buckets: Int,
-                                io: TableIO): Long =
+  private[graft] def writeBatch(rows: Dataset[_], dir: String, batchId: Long, buckets: Int): Long =
     ExtractPipeline.writeCounted(
       rows.withColumn("batch_id", lit(batchId))
         .withColumn(GraphLayout.BucketColumn, GraphLayout.bucket(col("pred"), buckets)),
-      io.overwritePartitions(_, dir, Seq("batch_id", GraphLayout.BucketColumn)))
+      TableIO.default.overwritePartitions(_, dir, Seq("batch_id", GraphLayout.BucketColumn)))
 
-  private[graft] def bucketCount(spark: SparkSession, dir: String, io: TableIO): Option[Int] =
-    GraphLayout.read(spark, dir, io).map(_.predBuckets).filter(_ > 0)
+  private[graft] def bucketCount(spark: SparkSession, dir: String): Option[Int] =
+    GraphLayout.read(spark, dir).map(_.predBuckets).filter(_ > 0)
 
   /** The pred-bucket count a batch-layout dir records; a dir without one
     * first gets a layout recording `predBuckets` and [[BatchSchema]]. A
     * dir that carries a layout describes itself: a caller-supplied count
     * that disagrees would corrupt pruning for every reader.
     */
-  private[graft] def layoutBuckets(spark: SparkSession, dir: String, io: TableIO,
-                                   predBuckets: Int): Int =
-    bucketCount(spark, dir, io).getOrElse {
-      GraphLayout.write(spark, dir, io, GraphLayout(predBuckets, schema = Some(BatchSchema)))
+  private[graft] def layoutBuckets(spark: SparkSession, dir: String, predBuckets: Int): Int =
+    bucketCount(spark, dir).getOrElse {
+      GraphLayout.write(spark, dir, GraphLayout(predBuckets, schema = Some(BatchSchema)))
       predBuckets
     }
 
@@ -197,12 +193,11 @@ object IncrementalGraph {
     * re-deduplicate on identity (a sinkToGraph source can hold the same
     * statement under several batch partitions — set semantics at rest).
     */
-  def compact(spark: SparkSession, srcDir: String, destDir: String,
-              io: TableIO = TableIO.default): Long = {
-    val buckets = bucketCount(spark, srcDir, io).getOrElse(GraphLayout.DefaultBuckets)
-    val rows = writeBatch(standing(spark, srcDir, io).dropDuplicates(Triple.identityCols),
-      destDir, 0L, buckets, io)
-    GraphLayout.write(spark, destDir, io, GraphLayout(buckets, schema = Some(BatchSchema)))
+  def compact(spark: SparkSession, srcDir: String, destDir: String): Long = {
+    val buckets = bucketCount(spark, srcDir).getOrElse(GraphLayout.DefaultBuckets)
+    val rows = writeBatch(standing(spark, srcDir).dropDuplicates(Triple.identityCols),
+      destDir, 0L, buckets)
+    GraphLayout.write(spark, destDir, GraphLayout(buckets, schema = Some(BatchSchema)))
     rows
   }
 
@@ -213,15 +208,14 @@ object IncrementalGraph {
     * or -1). The source root stays untouched; swapping roots is the
     * storage layer's atomic operation.
     */
-  def compactRoot(spark: SparkSession, srcRoot: String, destRoot: String,
-                  io: TableIO = TableIO.default): (Long, Long, Long) = {
-    val g = compact(spark, s"$srcRoot/graph", s"$destRoot/graph", io)
+  def compactRoot(spark: SparkSession, srcRoot: String, destRoot: String): (Long, Long, Long) = {
+    val g = compact(spark, s"$srcRoot/graph", s"$destRoot/graph")
     val c =
-      if (GraphLayout.exists(spark, s"$srcRoot/closure", io))
-        compact(spark, s"$srcRoot/closure", s"$destRoot/closure", io)
+      if (GraphLayout.exists(spark, s"$srcRoot/closure"))
+        compact(spark, s"$srcRoot/closure", s"$destRoot/closure")
       else -1L
-    val l = LinkStateStore.load(spark, s"$srcRoot/link_state", io)
-      .map(st => LinkStateStore.save(st, s"$destRoot/link_state", 0L, io).count())
+    val l = LinkStateStore.load(spark, s"$srcRoot/link_state")
+      .map(st => LinkStateStore.save(st, s"$destRoot/link_state", 0L).count())
       .getOrElse(-1L)
     (g, c, l)
   }
@@ -230,9 +224,8 @@ object IncrementalGraph {
     * semantics: pruning and schema from the layout metadata, stats by
     * one-pass scan).
     */
-  def readGraph(spark: SparkSession, root: String,
-                io: TableIO = TableIO.default): GraphQuery.PersistedGraph =
-    GraphQuery.loadGraph(spark, s"$root/graph", io)
+  def readGraph(spark: SparkSession, root: String): GraphQuery.PersistedGraph =
+    GraphQuery.loadGraph(spark, s"$root/graph")
 
   /** The CANONICAL view of the standing graph: raw triples rewritten
     * through the standing link state's current mapping (the read-time
@@ -241,18 +234,16 @@ object IncrementalGraph {
     * @throws IllegalArgumentException when `root` holds no standing graph
     *         (a mistyped or non-crawl root must not read as an empty graph)
     */
-  def readCanonical(spark: SparkSession, root: String,
-                    io: TableIO = TableIO.default): Dataset[Triple] = {
-    require(GraphLayout.exists(spark, s"$root/graph", io), s"no crawl root graph under $root")
-    val raw = standing(spark, s"$root/graph", io)
-    LinkStateStore.loadMapping(spark, s"$root/link_state", io) match {
+  def readCanonical(spark: SparkSession, root: String): Dataset[Triple] = {
+    require(GraphLayout.exists(spark, s"$root/graph"), s"no crawl root graph under $root")
+    val raw = standing(spark, s"$root/graph")
+    LinkStateStore.loadMapping(spark, s"$root/link_state") match {
       case Some(mapping) => EntityLink.rewriteWithMapping(raw, mapping.localCheckpoint())
       case None => raw
     }
   }
 
   /** The standing closure opened for querying (when maintained). */
-  def readClosure(spark: SparkSession, root: String,
-                  io: TableIO = TableIO.default): GraphQuery.PersistedGraph =
-    GraphQuery.loadGraph(spark, s"$root/closure", io)
+  def readClosure(spark: SparkSession, root: String): GraphQuery.PersistedGraph =
+    GraphQuery.loadGraph(spark, s"$root/closure")
 }

@@ -22,8 +22,7 @@ import org.apache.spark.sql.types.StructType
   *  2. atomically flip the `_link_state_latest` pointer
   *     ([[TableIO.writeMetadata]] is write-then-rename);
   *  3. best-effort drop versions older than the retained window
-  *     (default 2 — the new state plus one for readers that resolved the
-  *     pointer just before the flip). Retention enumerates version TABLES
+  *     (`RetainVersions`). Retention enumerates version TABLES
   *     through [[TableIO.listMetadata]], which is exact for the
   *     path-addressed parquet binding (tables and metadata share the
   *     directory namespace); an Iceberg binding whose tables live in a
@@ -56,22 +55,27 @@ object LinkStateStore {
     */
   private val StateSchema = StructType.fromDDL("node STRING, component STRING")
 
+  /** Versions a commit keeps: the new state plus one for readers that
+    * resolved the pointer just before the flip.
+    */
+  private val RetainVersions = 2
+
+  private def read(spark: SparkSession, table: String): DataFrame =
+    TableIO.default.read(spark, table, Some(StateSchema))
+
   /** Name of the currently committed version, if any. */
-  def latestVersion(spark: SparkSession, stateDir: String,
-                    io: TableIO = TableIO.default): Option[String] =
-    io.readMetadata(spark, stateDir, Pointer).map(_.trim).filter(_.nonEmpty)
+  def latestVersion(spark: SparkSession, stateDir: String): Option[String] =
+    TableIO.default.readMetadata(spark, stateDir, Pointer).map(_.trim).filter(_.nonEmpty)
 
   /** The committed standing state, if any — `(node, component)`. */
-  def load(spark: SparkSession, stateDir: String,
-           io: TableIO = TableIO.default): Option[DataFrame] =
-    latestVersion(spark, stateDir, io).map(v => io.read(spark, s"$stateDir/$v", Some(StateSchema)))
+  def load(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    latestVersion(spark, stateDir).map(v => read(spark, s"$stateDir/$v"))
 
   /** The committed `(subj, canonical)` mapping, if any — what
     * [[EntityLink.rewriteWithMapping]] consumes.
     */
-  def loadMapping(spark: SparkSession, stateDir: String,
-                  io: TableIO = TableIO.default): Option[DataFrame] =
-    load(spark, stateDir, io).map(EntityLink.mappingFromState)
+  def loadMapping(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    load(spark, stateDir).map(EntityLink.mappingFromState)
 
   /** Fold one batch of mention triples into the standing state (empty
     * before the first commit) and commit the result as version
@@ -81,22 +85,21 @@ object LinkStateStore {
     */
   def fold(batch: org.apache.spark.sql.Dataset[Triple], stateDir: String,
            version: Long, keyPredicates: Seq[String],
-           maxKeyDegree: Int = 100000, io: TableIO = TableIO.default,
-           retainVersions: Int = 2): DataFrame = {
+           maxKeyDegree: Int = 100000): DataFrame = {
     val spark = batch.sparkSession
-    val state = load(spark, stateDir, io)
+    val state = load(spark, stateDir)
       .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), StateSchema))
     save(EntityLink.mentionLinkStateIncremental(state, batch, keyPredicates, maxKeyDegree),
-      stateDir, version, io, retainVersions)
+      stateDir, version)
   }
 
   /** Commit an externally-built state as version `v<version>` (the write +
     * pointer-flip + retention half of [[fold]]; also the root-migration
     * path of [[IncrementalGraph.compactRoot]]).
     */
-  def save(state: DataFrame, stateDir: String, version: Long,
-           io: TableIO = TableIO.default, retainVersions: Int = 2): DataFrame = {
+  def save(state: DataFrame, stateDir: String, version: Long): DataFrame = {
     val spark = state.sparkSession
+    val io = TableIO.default
     val name = f"v$version%016d"
     // replay no-op: a version the pointer ALREADY references was fully
     // committed (the pointer flips only after a complete write), and folds
@@ -104,8 +107,7 @@ object LinkStateStore {
     // table in place (SaveMode.Overwrite = delete-then-write) would yank
     // live files from under concurrent readers and, on a crash mid-rewrite,
     // leave the committed pointer on a half-written table. Skip the write.
-    if (latestVersion(spark, stateDir, io).contains(name))
-      return io.read(spark, s"$stateDir/$name", Some(StateSchema))
+    if (latestVersion(spark, stateDir).contains(name)) return read(spark, s"$stateDir/$name")
     io.write(state, s"$stateDir/$name", Nil)
     io.writeMetadata(spark, stateDir, Pointer, name + "\n")
     // retention AFTER the flip: the dropped versions are unreachable from
@@ -115,9 +117,9 @@ object LinkStateStore {
     // with a fresh checkpoint resets batch ids to 0) sorts below standing
     // names and lexicographic retention would otherwise delete the very
     // table the pointer now references.
-    io.listMetadata(spark, stateDir, "v").sorted.dropRight(math.max(retainVersions, 1))
+    io.listMetadata(spark, stateDir, "v").sorted.dropRight(RetainVersions)
       .filter(_ != name)
       .foreach(old => io.dropTable(spark, s"$stateDir/$old"))
-    io.read(spark, s"$stateDir/$name", Some(StateSchema))
+    read(spark, s"$stateDir/$name")
   }
 }

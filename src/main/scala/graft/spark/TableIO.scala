@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.StructType
   * The sandbox ships no Iceberg runtime jars (SURVEY.md §7.4), so the
   * default binding is parquet with Iceberg-layout partitioning + the
   * Resume manifest standing in for snapshot metadata. Every writer in the
-  * pipeline goes through this trait, so an Iceberg deployment implements it
-  * once against a catalog table name:
+  * pipeline goes through this trait's one binding, [[TableIO.default]], so
+  * an Iceberg deployment implements it once against a catalog table name
+  * and binds it there:
   *
   *  - `write`              → `df.writeTo(table).using("iceberg").createOrReplace()`
   *  - `overwritePartitions`→ `df.writeTo(table).overwritePartitions()`
@@ -129,5 +130,9 @@ final class ParquetTableIO extends TableIO {
 }
 
 object TableIO {
+  /** The one binding of the process: every graph, resume manifest and
+    * link-state store goes through it, so no root can have its parts
+    * written through different bindings. A deployment binds Iceberg here.
+    */
   val default: TableIO = new ParquetTableIO
 }

@@ -72,8 +72,7 @@ object StreamingExtract {
     * into one generation when the count grows unwieldy.
     */
   def sinkToGraph(triples: Dataset[Triple], outDir: String, checkpointDir: String,
-                  predBuckets: Int = graft.spark.GraphLayout.DefaultBuckets,
-                  io: graft.spark.TableIO = graft.spark.TableIO.default)
+                  predBuckets: Int = graft.spark.GraphLayout.DefaultBuckets)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // metadata ONCE, before the stream starts: its content is constant
     // (bucket count and schema — no stats, they'd go stale per batch), and a
@@ -85,7 +84,7 @@ object StreamingExtract {
     // silently skip matching rows (the guard IncrementalGraph.appendNovel
     // shares).
     val spark = triples.sparkSession
-    val buckets = graft.spark.IncrementalGraph.layoutBuckets(spark, outDir, io, predBuckets)
+    val buckets = graft.spark.IncrementalGraph.layoutBuckets(spark, outDir, predBuckets)
     triples.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
@@ -94,7 +93,7 @@ object StreamingExtract {
         // metadata — an Iceberg binding must not end up with metadata in
         // the table but triples in a stray parquet dir
         graft.spark.IncrementalGraph.writeBatch(batch.dropDuplicates(Triple.identityCols),
-          outDir, batchId, buckets, io)
+          outDir, batchId, buckets)
         ()
       }
       .start()
@@ -118,15 +117,13 @@ object StreamingExtract {
     * until then).
     */
   def linkStateStream(triples: Dataset[Triple], stateDir: String, checkpointDir: String,
-                      keyPredicates: Seq[String], maxKeyDegree: Int = 100000,
-                      io: graft.spark.TableIO = graft.spark.TableIO.default)
+                      keyPredicates: Seq[String], maxKeyDegree: Int = 100000)
       : org.apache.spark.sql.streaming.StreamingQuery =
     triples.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Triple], batchId: Long) =>
-        graft.spark.LinkStateStore.fold(batch, stateDir, batchId, keyPredicates,
-          maxKeyDegree, io)
+        graft.spark.LinkStateStore.fold(batch, stateDir, batchId, keyPredicates, maxKeyDegree)
         ()
       }
       .start()
@@ -150,8 +147,7 @@ object StreamingExtract {
     * a partition that might hold earlier rows.
     */
   def closureStream(triples: Dataset[Triple], closureDir: String, checkpointDir: String,
-                    predBuckets: Int = graft.spark.GraphLayout.DefaultBuckets,
-                    io: graft.spark.TableIO = graft.spark.TableIO.default)
+                    predBuckets: Int = graft.spark.GraphLayout.DefaultBuckets)
       : org.apache.spark.sql.streaming.StreamingQuery =
     triples.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -160,8 +156,8 @@ object StreamingExtract {
         import graft.spark.IncrementalGraph.{appendNovel, closureWith, nextBatchId}
         val spark = batch.sparkSession
         val d = batch.dropDuplicates(graft.model.Triple.identityCols).localCheckpoint()
-        appendNovel(spark, closureWith(d, closureDir, io), closureDir, predBuckets, io,
-          nextBatchId(spark, closureDir, io))
+        appendNovel(spark, closureWith(d, closureDir), closureDir, predBuckets,
+          nextBatchId(spark, closureDir))
         ()
       }
       .start()

@@ -129,9 +129,9 @@ class QueryJobBudgetSpec extends AnyFunSuite {
     assert(open.total == 0, open)
     val copy = s"$base/graph_no_schema"
     ExtractPipeline.writeGraph(triples.toDS(), copy, predBuckets = 8)
-    val layout = GraphLayout.read(spark, copy, graft.spark.TableIO.default).get
+    val layout = GraphLayout.read(spark, copy).get
     assert(layout.schema.isDefined && layout.stats.isDefined && layout.predBuckets == 8)
-    GraphLayout.write(spark, copy, graft.spark.TableIO.default, layout.copy(schema = None))
+    GraphLayout.write(spark, copy, layout.copy(schema = None))
     val (g, jobs) = jobsOf(GraphQuery.loadGraph(spark, copy))
     assert(jobs.total >= 1, s"schema inference runs a job: $jobs")
     assert(g.predBuckets == 8 && g.df.schema == GraphQuery.loadGraph(spark, graphDir).df.schema)

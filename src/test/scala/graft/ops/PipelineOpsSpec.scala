@@ -384,20 +384,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(out == Map(1L -> 2L, 2L -> 2L))
   }
 
-  test("bpeEncodeIter parity: identical to the expression chain on mixed docs") {
-    val docs = Seq(
-      (1L, "table value row row scan"),
-      (2L, "Tab!LE  va lue"),
-      (3L, ""),
-      (4L, null: String),
-      (5L, "0123 tata vvaall"))
-      .toDF("doc_id", "text")
-    val merges = graft.SparkEntry.BpeMerges
-    val a = TextOps.bpeEncode(docs, merges).orderBy("doc_id").collect().toSeq
-    val b = TextOps.bpeEncodeIter(docs, merges).orderBy("doc_id").collect().toSeq
-    assert(a.map(_.toSeq) == b.map(_.toSeq))
-  }
-
   test("crossDedup: only cross-corpus pairs surface, with exact Jaccard") {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = Seq(

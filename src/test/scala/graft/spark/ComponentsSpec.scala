@@ -17,7 +17,7 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("EntityStats salted two-phase equals direct groupBy") {
     val triples = ExtractPipeline.extract(Transcripts.synthetic(spark, 500, 20))
-    val salted = EntityStats.bySubject(triples, salt = 8).collect()
+    val salted = EntityStats.bySubject(triples).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val direct = triples.groupBy($"subj")
       .agg(count(lit(1)).as("n"), size(collect_set($"pred")).cast("long").as("p"))
@@ -56,24 +56,14 @@ class ComponentsSpec extends AnyFunSuite {
     assert(Resume.readGraph(spark, out).count() == full)
   }
 
-  test("Resume: a transform emitting rows without conv_id lineage fails the write atomically") {
-    // a cross-row transform (e.g. an entailment closure) derives rows with
-    // null lineage — unattributable to a resume bucket and semantically
-    // wrong under partial resume; the write must fail, and a FAILED dynamic
-    // overwrite commits no partitions and no manifest marks
-    val out = "file://" + Files.createTempDirectory("graftresume_nl").toString
-    val t = Transcripts.synthetic(spark, 50, 5)
-    val derived = graft.model.Triple("http://ex.org/s", "http://ex.org/p",
-      "http://ex.org/o", null, null, null, null, -1)
-    val e = intercept[Exception] {
-      Resume.writeWithResume(t, out, nBuckets = 4,
-        transform = ds => ds.unionByName(Seq(derived).toDS()))
-    }
-    def msgs(x: Throwable): Seq[String] =
-      if (x == null) Nil else Option(x.getMessage).toSeq ++ msgs(x.getCause)
-    assert(msgs(e).exists(_.contains("conv_id lineage")), msgs(e).mkString(" | "))
-    assert(Resume.completedBuckets(spark, out).isEmpty,
-      "a failed write must leave no manifest marks — the rerun starts clean")
+  test("Resume: every row lands in its own conv_id bucket") {
+    val out = "file://" + Files.createTempDirectory("graftresume_bk").toString
+    val n = 8
+    val s = Resume.writeWithResume(Transcripts.synthetic(spark, 200, 10), out, nBuckets = n)
+    val g = Resume.readGraph(spark, out)
+    assert(s.rowsWritten > 0 && g.count() == s.rowsWritten)
+    // a null conv_id or bucket fails the equality, so it counts as misplaced
+    assert(g.filter($"bucket" === pmod(crc32($"conv_id"), lit(n))).count() == s.rowsWritten)
   }
 
   test("N-Triples sink/source round-trips the canonical graph exactly") {

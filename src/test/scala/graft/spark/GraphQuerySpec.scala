@@ -318,14 +318,15 @@ class GraphQuerySpec extends AnyFunSuite {
   test("CliArgs: a following --token is never consumed as a value; trailing key errors clearly") {
     val e = intercept[RuntimeException](graft.CliArgs.parse(
       Array("--graph", "g", "--output", "o", "--pattern", "--entail"),
-      flags = Set("entail"), repeatKey = Some("pattern")))
+      flags = Set("entail"), repeatKeys = Set("pattern")))
     assert(e.getMessage.contains("missing value for --pattern"), e.getMessage)
     val e2 = intercept[RuntimeException](graft.CliArgs.parse(Array("--graph")))
     assert(e2.getMessage.contains("missing value for --graph"), e2.getMessage)
     // flags and ordinary values still parse
-    val (m, reps) = graft.CliArgs.parse(
+    val (m, repeated) = graft.CliArgs.parse(
       Array("--entail", "--graph", "g", "--pattern", "?a <p> ?b"),
-      flags = Set("entail"), repeatKey = Some("pattern"))
+      flags = Set("entail"), repeatKeys = Set("pattern"))
+    val reps = repeated("pattern")
     assert(m("entail") == "true" && m("graph") == "g" && reps == Vector("?a <p> ?b"))
   }
 
@@ -411,15 +412,6 @@ class GraphQuerySpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     // every node reaches every node, including itself through the cycle
     assert(out == (for { x <- Set("a", "b", "c"); y <- Set("a", "b", "c") } yield (x, y)))
-  }
-
-  test("pathPlus: non-converged frontier throws instead of truncating") {
-    val e = intercept[IllegalStateException] {
-      GraphQuery.pathPlus(
-        pathGraph("a" -> "b", "b" -> "c", "c" -> "d", "d" -> "e"), "boss",
-        maxIterations = 1)
-    }
-    assert(e.getMessage.contains("frontier still live"))
   }
 
   test("pathPlusAlt: a hop may take any listed predicate, others stay out") {
@@ -762,13 +754,25 @@ class GraphQuerySpec extends AnyFunSuite {
       pairs(GraphQuery.pathPlus(g, "boss")))
   }
 
-  test("evalPath: bound-source closure still throws on a live frontier") {
-    val e = intercept[IllegalStateException] {
-      GraphQuery.bgpWithPaths(
-        pathGraph("a" -> "b", "b" -> "c", "c" -> "d", "d" -> "e"), Nil,
-        Seq((C("a"), Path.Plus(Path.P("boss")), V("x"))), maxIterations = 1)
+  // a seeded closure extends its paths one hop per round: a 70-hop chain
+  // is still live after the 64-round cap on either strategy
+  private def chain70 = pathGraph((0 until 70).map(i => s"a$i" -> s"a${i + 1}"): _*)
+  private def throwsOnBothStrategies(closure: => Long): Unit =
+    Seq(AdaptiveStrategy.Limits.Production -> "single-task",
+        AdaptiveStrategy.Limits.ForceDistributed -> "distributed").foreach { case (l, strategy) =>
+      val (e, _) = AdaptiveStrategy.withLimits(l)(intercept[IllegalStateException](closure))
+      assert(e.getMessage.contains("frontier still live"), strategy)
     }
-    assert(e.getMessage.contains("frontier still live"))
+
+  test("evalPath: bound-source closure still throws on a live frontier") {
+    throwsOnBothStrategies(GraphQuery.bgpWithPaths(chain70, Nil,
+      Seq((C("a0"), Path.Plus(Path.P("boss")), V("x")))).count())
+  }
+
+  test("pathPlusIncremental: a live frontier throws instead of truncating") {
+    val none = spark.emptyDataset[(String, String)].toDF("s", "o")
+    throwsOnBothStrategies(GraphQuery.pathPlusIncremental(none,
+      GraphQuery.evalPath(chain70, Path.P("boss"))).count())
   }
 
   // ------------------------------------------------------------------

@@ -354,7 +354,7 @@ class IncrementalGraphSpec extends AnyFunSuite {
     val s0 = foldAll(root, spark.emptyDataset[Triple])
     assert(s0 == IncrementalGraph.CrawlSummary(0L, 0L, 0L, 0L))
     // every artifact is committed, and holds no rows
-    Seq("graph", "closure").foreach(a => assert(GraphLayout.exists(spark, s"$root/$a", TableIO.default), a))
+    Seq("graph", "closure").foreach(a => assert(GraphLayout.exists(spark, s"$root/$a"), a))
     assert(IncrementalGraph.readGraph(spark, root).df.count() == 0)
     assert(LinkStateStore.load(spark, s"$root/link_state").get.count() == 0)
 

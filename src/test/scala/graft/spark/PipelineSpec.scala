@@ -371,35 +371,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(r1 == r2)
   }
 
-  test("Resume: a transform moving rows into an already-committed bucket fails, committed data unchanged") {
-    // dynamic overwrite replaces every partition the job writes: a row whose
-    // rewritten conv_id hashes into a COMMITTED bucket would silently
-    // replace that bucket with only the moved rows
-    val out = "file://" + java.nio.file.Files.createTempDirectory("graftresume_mv").toString
+  test("Resume: a failed write commits no mark, keeps committed rows") {
+    // dynamic overwrite replaces only the partitions a job writes, and a
+    // FAILED job commits none of them and no manifest marks
+    val out = "file://" + java.nio.file.Files.createTempDirectory("graftresume_fail").toString
     val n = 4
     val t = Transcripts.synthetic(spark, 60, 6)
     Resume.writeWithResume(t, out, nBuckets = n)
-    def bucketOf(conv: String): Int = {
-      val crc = new java.util.zip.CRC32()
-      crc.update(conv.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      (crc.getValue % n).toInt
-    }
     // reopen one bucket that holds rows; every other bucket stays committed
-    val reopened = bucketOf(Resume.readGraph(spark, out).select("conv_id").head().getString(0))
+    val conv = Resume.readGraph(spark, out).select("conv_id").head().getString(0)
+    val crc = new java.util.zip.CRC32()
+    crc.update(conv.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val reopened = (crc.getValue % n).toInt
     val manifest = new org.apache.hadoop.fs.Path(out, "_graft_manifest")
     manifest.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(new org.apache.hadoop.fs.Path(manifest, s"bucket-$reopened"), false)
-    val target = Iterator.from(0).map(i => s"moved-$i").find(bucketOf(_) != reopened).get
     def snapshot = Resume.readGraph(spark, out).collect().map(_.toString).toSet
     val before = snapshot
     val committed = Resume.completedBuckets(spark, out)
-    val e = intercept[Exception] {
-      Resume.writeWithResume(t, out, nBuckets = n,
-        transform = ds => ds.map(_.copy(conv_id = target)))
-    }
+    // the rerun fails on the input of one conversation in the reopened bucket
+    val failing = t.withColumn("text",
+      when($"conv_id" === conv, raise_error(lit("injected input failure"))).otherwise($"text"))
+    val e = intercept[Exception](Resume.writeWithResume(failing, out, nBuckets = n))
     def msgs(x: Throwable): Seq[String] =
       if (x == null) Nil else Option(x.getMessage).toSeq ++ msgs(x.getCause)
-    assert(msgs(e).exists(_.contains("outside this run's pending buckets")), msgs(e).mkString(" | "))
+    assert(msgs(e).exists(_.contains("injected input failure")), msgs(e).mkString(" | "))
     assert(snapshot == before)
     assert(Resume.completedBuckets(spark, out) == committed)
   }
