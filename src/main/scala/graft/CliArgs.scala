@@ -1,8 +1,12 @@
 package graft
 
-/** Shared `--key value` / `--flag` argument scaffold for the spark-submit
-  * entry points ([[ExtractMain]], [[QueryMain]]) — one implementation so
-  * error behavior and parsing rules cannot drift between them.
+import graft.spark.GraftSession
+import org.apache.spark.sql.SparkSession
+
+/** Shared scaffold for the spark-submit entry points ([[ExtractMain]],
+  * [[IncrementalMain]], [[QueryMain]]): `--key value` / `--flag` parsing
+  * and the `--validate` exit contract — one implementation so error
+  * behavior and parsing rules cannot drift between them.
   */
 private[graft] object CliArgs {
 
@@ -38,4 +42,31 @@ private[graft] object CliArgs {
     required.foreach(k => require(m.contains(k), s"--$k is required"))
     (m, reps)
   }
+
+  /** What `--validate` raises when extraction reported soft errors. */
+  final class ValidationFailed(errors: Long)
+      extends RuntimeException(s"validate: $errors extraction errors")
+
+  /** `--validate`: once the output is written, any soft extraction error
+    * fails the run.
+    */
+  def checkValidate(opts: Map[String, String], errors: Long): Unit =
+    if (opts.contains("validate") && errors > 0) throw new ValidationFailed(errors)
+
+  /** An extracting main's body on [[GraftSession.withSubmitSession]]. A
+    * failed `--validate` on the main's own session (spark-submit) exits 2,
+    * the CLI contract; on a borrowed session (a harness drove `main`
+    * directly) it propagates, reporting the failure WITHOUT killing the
+    * host JVM.
+    */
+  def withExtractSession(body: SparkSession => Unit): Unit =
+    GraftSession.withSubmitSession { (spark, owned) =>
+      try body(spark)
+      catch {
+        case e: ValidationFailed if owned =>
+          System.err.println(s"[graft] ${e.getMessage}")
+          spark.stop()
+          sys.exit(2)
+      }
+    }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.core.RegistryIndex
 import graft.sources.TranscriptSources
-import graft.spark.{Entailment, ExtractPipeline, GraftSession, Resume}
+import graft.spark.{Entailment, ExtractPipeline, Resume}
 import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point — the distributed counterpart of the reference
@@ -44,10 +44,10 @@ object ExtractMain {
     val opts = parseArgs(args)
     // spark-submit provides master/conf (respected); a borrowed session is
     // never stopped here
-    GraftSession.withSubmitSession((spark, owned) => extract(opts, spark, owned))
+    CliArgs.withExtractSession(extract(opts, _))
   }
 
-  private def extract(opts: Map[String, String], spark: SparkSession, owned: Boolean): Unit = {
+  private def extract(opts: Map[String, String], spark: SparkSession): Unit = {
     val registry = opts.get("registry").map(RegistryIndex.fromUri)
       .getOrElse(ExtractPipeline.defaultRegistry)
     val transcripts = TranscriptSources.fromSpec(spark, opts("input"))
@@ -101,14 +101,7 @@ object ExtractMain {
       }
     val secs = (System.nanoTime() - t0) / 1e9
 
-    if (opts.contains("validate") && errors.value > 0) {
-      System.err.println(s"[graft] validate: ${errors.value} extraction errors")
-      // own session (spark-submit): exit code 2, the CLI contract. Borrowed
-      // session (a harness drove main directly): throwing reports the
-      // failure WITHOUT killing the host JVM.
-      if (owned) { spark.stop(); sys.exit(2) }
-      else sys.error(s"validate: ${errors.value} extraction errors")
-    }
+    CliArgs.checkValidate(opts, errors.value)
     // the reference CLI's self-report (script/parse:98), distributed edition
     println(f"Parsed $written statements in $secs%.2f seconds @ ${written / secs}%.0f statements/second. (errors=${errors.value})")
   }

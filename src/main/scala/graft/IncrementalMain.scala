@@ -2,7 +2,7 @@ package graft
 
 import graft.core.RegistryIndex
 import graft.sources.TranscriptSources
-import graft.spark.{ExtractPipeline, GraftSession, GraphLayout, IncrementalGraph}
+import graft.spark.{ExtractPipeline, GraphLayout, IncrementalGraph}
 import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the NIGHTLY-CRAWL shape: fold one delta
@@ -24,6 +24,9 @@ import org.apache.spark.sql.SparkSession
   * ([[graft.spark.IncrementalGraph.compactRoot]]); the source stays
   * untouched and the root swap is the storage layer's atomic operation.
   *
+  * `--validate` fails the run once the batch is folded if extraction
+  * reported soft errors: exit code 2 under spark-submit, as [[ExtractMain]].
+  *
   * `--input` accepts the same forms as [[ExtractMain]]
   * ([[graft.sources.TranscriptSources.fromSpec]]). Every run folds: against
   * an empty root, every artifact folds into an empty one. Query the
@@ -39,7 +42,7 @@ object IncrementalMain {
       required = Seq("root"))._1
     require(opts.contains("input") ^ opts.contains("compact"),
       "exactly one of --input <delta> (fold) or --compact <destRoot> (maintenance) is required")
-    GraftSession.withSubmitSession { (spark, _) =>
+    CliArgs.withExtractSession { spark =>
       opts.get("compact") match {
         case Some(dest) =>
           val (g, c, l) = IncrementalGraph.compactRoot(spark, opts("root"), dest)
@@ -72,8 +75,7 @@ object IncrementalMain {
       predBuckets = opts.get("buckets").fold(GraphLayout.DefaultBuckets)(_.toInt),
       linkKeys = opts.get("link-keys").map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil),
       entail = opts.contains("entail"))
-    if (opts.contains("validate") && errors.value > 0)
-      sys.error(s"validate: ${errors.value} extraction errors")
+    CliArgs.checkValidate(opts, errors.value)
     summary
   }
 }

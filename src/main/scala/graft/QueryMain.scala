@@ -48,13 +48,14 @@ import org.apache.spark.sql.functions.col
   * flat CLI cannot express their nesting order; multi-pattern groups and
   * mixed composition live on the [[graft.spark.GraphQuery]] API.
   *
-  * The PREDICATE slot of a `--pattern` may be a SPARQL 1.1 property-path
-  * expression instead of a single `<iri>` — written WITHOUT spaces, e.g.
-  * `'?e <p>+/<name> ?n'`, `'?a ^<p> ?b'`, `'?x (<p>|<q>)* ?y'`,
-  * `'?x !(<p>|^<q>) ?y'` (see [[graft.spark.PathParser]]). Path patterns
-  * join with plain patterns through the same selectivity-greedy order
-  * ([[graft.spark.GraphQuery.bgpWithPaths]]); they compose with the plain
-  * SELECT form only (not --describe/--optional/--minus).
+  * The PREDICATE slot of a `--pattern`, `--optional` or `--minus` may be
+  * a SPARQL 1.1 property-path expression instead of a single `<iri>` —
+  * written WITHOUT spaces, e.g. `'?e <p>+/<name> ?n'`, `'?a ^<p> ?b'`,
+  * `'?x (<p>|<q>)* ?y'`, `'?x !(<p>|^<q>) ?y'` (see
+  * [[graft.spark.PathParser]]). A path pattern is a pattern like any
+  * other: it joins with the rest through the same selectivity-greedy
+  * order, in every form. Binding columns follow the patterns' argument
+  * order (first mention).
   */
 object QueryMain {
 
@@ -74,9 +75,7 @@ object QueryMain {
     require(patternStrs.nonEmpty, "at least one --pattern is required")
     require(Seq("graph", "table", "canonical").count(opts.contains) == 1,
       "exactly one of --graph <dir>, --table <name>, or --canonical <crawlRoot> is required")
-    val parsed = patternStrs.map(parseAnyPattern)
-    val patterns = parsed.collect { case Left(t) => t }
-    val pathPatterns = parsed.collect { case Right(p) => p }
+    val patterns = patternStrs.map(parsePattern)
     val g0 =
       if (opts.contains("graph")) GraphQuery.loadGraph(spark, opts("graph"))
       else if (opts.contains("table")) GraphQuery.loadBucketedGraph(spark, opts("table"))
@@ -112,10 +111,6 @@ object QueryMain {
       } else g0
     val optGroups = reps.getOrElse("optional", Vector.empty).map(p => Seq(parsePattern(p)))
     val minusGroups = reps.getOrElse("minus", Vector.empty).map(p => Seq(parsePattern(p)))
-    require(pathPatterns.isEmpty ||
-        (opts.get("describe").isEmpty && optGroups.isEmpty && minusGroups.isEmpty),
-      "property-path patterns compose with the plain SELECT form only " +
-        "(not --describe/--optional/--minus) — use the GraphQuery API for those")
     val out: DataFrame = opts.get("describe") match {
       case Some(v) =>
         require(optGroups.isEmpty && minusGroups.isEmpty,
@@ -127,7 +122,6 @@ object QueryMain {
             "API composes them; the flat CLI cannot express the nesting order)")
         if (minusGroups.nonEmpty) GraphQuery.bgpMinus(g, patterns, minusGroups)
         else if (optGroups.nonEmpty) GraphQuery.bgpOptional(g, patterns, optGroups)
-        else if (pathPatterns.nonEmpty) GraphQuery.bgpWithPaths(g, patterns, pathPatterns)
         else GraphQuery.bgp(g, patterns)
     }
     val rows = graft.spark.ExtractPipeline.writeCounted(out,
@@ -144,28 +138,18 @@ object QueryMain {
   }
 
   /** One pattern string → three terms. Tokenizes on whitespace outside
-    * `<...>` / `"..."` so literal constants may contain spaces.
+    * `<...>` / `"..."` so literal constants may contain spaces; a predicate
+    * using path operators (written without spaces) parses as a
+    * [[GraphQuery.Path]].
     */
-  private[graft] def parsePattern(s: String): (GraphQuery.Term, GraphQuery.Term, GraphQuery.Term) = {
-    val toks = tokenize(s)
-    require(toks.length == 3,
-      s"pattern needs exactly 3 terms (?var, <iri>, or \"literal\"): $s")
-    (term(toks(0)), term(toks(1)), term(toks(2)))
-  }
-
-  /** [[parsePattern]] that also accepts a property-path expression in the
-    * predicate slot (written without spaces — the tokenizer splits on
-    * whitespace): Left = plain triple pattern, Right = path pattern.
-    */
-  private[graft] def parseAnyPattern(s: String)
-      : Either[(GraphQuery.Term, GraphQuery.Term, GraphQuery.Term),
-               (GraphQuery.Term, GraphQuery.Path, GraphQuery.Term)] = {
+  private def parsePattern(s: String): (GraphQuery.Term, GraphQuery.Term, GraphQuery.Term) = {
     val toks = tokenize(s)
     require(toks.length == 3,
       s"pattern needs exactly 3 terms (?var, <iri>/path, or \"literal\"): $s")
-    if (graft.spark.PathParser.isPathExpr(toks(1)))
-      Right((term(toks(0)), graft.spark.PathParser.parse(toks(1)), term(toks(2))))
-    else Left((term(toks(0)), term(toks(1)), term(toks(2))))
+    val pred =
+      if (graft.spark.PathParser.isPathExpr(toks(1))) graft.spark.PathParser.parse(toks(1))
+      else term(toks(1))
+    (term(toks(0)), pred, term(toks(2)))
   }
 
   private def term(t: String): GraphQuery.Term = t match {

@@ -89,6 +89,9 @@ object SparkEntry {
     })
   private def persistedCustomerGraph(s: SparkSession, dir: String): graft.spark.GraphQuery.PersistedGraph =
     persistedGraph(s, dir)(customerTriples(s, dir))
+  private def persistedOrgGraph(s: SparkSession, dir: String): graft.spark.GraphQuery.PersistedGraph =
+    persistedGraph(s, "org|" + dir)(
+      ExtractPipeline.canonicalize(ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
 
   /** The customer KG as a SUBJECT-BUCKETED catalog table (writeGraphBucketedBySubject
     * — the entity-assembly layout): subject-star BGP joins run Exchange-free
@@ -512,9 +515,7 @@ object SparkEntry {
     // extraction plus GraphQuery.pathPlus's semi-naive fixpoint, against a
     // DuckDB recursive-CTE oracle
     "kg_path_reachable" -> ((s, dir) => {
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
+      val g = persistedOrgGraph(s, dir)
       graft.spark.GraphQuery.pathPlus(g, "http://schema.org/reportsTo")
         .select(col("s").as("emp"), col("o").as("mgr"))
         .orderBy(col("emp"), col("mgr"))
@@ -562,9 +563,7 @@ object SparkEntry {
     // min IRI with every employee in it (from-scratch shape, reached
     // incrementally)
     "kg_cc_incr" -> ((s, dir) => {
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
+      val g = persistedOrgGraph(s, dir)
       val edges = g.df
         .filter(g.predSlice(Seq("http://schema.org/reportsTo")) && col("obj_iri").isNotNull)
         .select(col("subj").as("src"), col("obj_iri").as("dst"))
@@ -582,9 +581,7 @@ object SparkEntry {
     // kg_path_reachable, so incremental == from-scratch is checked
     // independently of our own closure code
     "kg_path_incr" -> ((s, dir) => {
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
+      val g = persistedOrgGraph(s, dir)
       val edges = g.df
         .filter(g.predSlice(Seq("http://schema.org/reportsTo")) && col("obj_iri").isNotNull)
         .select(col("subj").as("s"), col("obj_iri").as("o"))
@@ -601,9 +598,7 @@ object SparkEntry {
     // against the recursive-CTE-plus-name-join oracle
     "kg_path_mgr_names" -> ((s, dir) => {
       import graft.spark.GraphQuery.Path
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
+      val g = persistedOrgGraph(s, dir)
       graft.spark.GraphQuery.evalPath(g,
           Path.Chain(Seq(Path.Plus(Path.P("http://schema.org/reportsTo")),
             Path.P("http://schema.org/name"))))
@@ -617,10 +612,8 @@ object SparkEntry {
     // closure, only one root-to-leaf chain
     "kg_path_star_bound" -> ((s, dir) => {
       import graft.spark.GraphQuery.{C, V, Path}
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
-      graft.spark.GraphQuery.bgpWithPaths(g, Nil,
+      val g = persistedOrgGraph(s, dir)
+      graft.spark.GraphQuery.bgp(g,
           Seq((C("http://ex.org/emp/13"),
             Path.Star(Path.P("http://schema.org/reportsTo")), V("anc"))))
         .orderBy(col("anc"))
@@ -632,14 +625,11 @@ object SparkEntry {
     // join on ?e
     "kg_path_peers" -> ((s, dir) => {
       import graft.spark.GraphQuery.{C, V, Path}
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
-      graft.spark.GraphQuery.bgpWithPaths(g,
-          patterns = Seq((V("e"), C("http://schema.org/name"), V("en"))),
-          pathPatterns = Seq((V("e"),
-            Path.Chain(Seq(Path.P("http://schema.org/reportsTo"),
-              Path.Inv(Path.P("http://schema.org/reportsTo")))), V("peer"))))
+      val g = persistedOrgGraph(s, dir)
+      graft.spark.GraphQuery.bgp(g, Seq(
+          (V("e"), C("http://schema.org/name"), V("en")),
+          (V("e"), Path.Chain(Seq(Path.P("http://schema.org/reportsTo"),
+            Path.Inv(Path.P("http://schema.org/reportsTo")))), V("peer"))))
         .orderBy(col("e"), col("peer"))
     }),
 
@@ -648,9 +638,7 @@ object SparkEntry {
     // instead of dropping the row — left-join semantics end to end
     "kg_bgp_optional" -> ((s, dir) => {
       import graft.spark.GraphQuery.{C, V}
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
+      val g = persistedOrgGraph(s, dir)
       graft.spark.GraphQuery.bgpOptional(g,
           required = Seq(
             (V("e"), C(RdfType), C("http://schema.org/Person")),
@@ -745,9 +733,7 @@ object SparkEntry {
     // once)
     "kg_construct" -> ((s, dir) => {
       import graft.spark.GraphQuery.{C, V}
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
+      val g = persistedOrgGraph(s, dir)
       graft.spark.GraphQuery.construct(g,
           patterns = Seq((V("e"), C("http://schema.org/reportsTo"), V("m"))),
           template = Seq(
@@ -762,9 +748,7 @@ object SparkEntry {
     // no-op rule is spec-covered
     "kg_bgp_minus" -> ((s, dir) => {
       import graft.spark.GraphQuery.{C, V}
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
+      val g = persistedOrgGraph(s, dir)
       graft.spark.GraphQuery.bgpMinus(g,
           required = Seq(
             (V("e"), C(RdfType), C("http://schema.org/Person")),
@@ -792,9 +776,7 @@ object SparkEntry {
     // PageRank (5 power iterations) — deterministic under any
     // partitioning, replayed by the oracle with identical arithmetic
     "kg_pagerank" -> ((s, dir) => {
-      val g = persistedGraph(s, "org|" + dir)(
-        ExtractPipeline.canonicalize(
-          ExtractPipeline.extract(graft.spark.Transcripts.orgChart(s, dir))))
+      val g = persistedOrgGraph(s, dir)
       graft.spark.GraphRank.pagerank(g, Some("http://schema.org/reportsTo"), iters = 5)
         .orderBy(col("node"))
     }),

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Alternate transcript/document sources feeding the same extraction
   * pipeline as the parquet tables — the input-format surface a user of the
@@ -58,19 +57,9 @@ object TranscriptSources {
       .toDF("conv_id", "turn_idx", "text", "base")
   }
 
-  /** The transcript schema JSONL files must carry (a line-delimited JSON
-    * twin of the parquet tables).
-    */
-  val transcriptSchema: StructType = StructType(Seq(
-    StructField("conv_id", StringType),
-    StructField("turn_idx", IntegerType),
-    StructField("role", StringType),
-    StructField("text", StringType),
-    StructField("tool", StringType),
-    StructField("ts", TimestampType)))
-
   /** JSONL transcripts (the common LLM-data interchange format): one JSON
-    * object per line. The schema is EXPLICIT — schema inference would scan
+    * object per line, a line-delimited twin of the parquet tables carrying
+    * [[graft.model.Turn.schema]]. The schema is EXPLICIT — schema inference would scan
     * the whole corpus once before the real read, an extra full pass that is
     * free to skip at 100 TB. Malformed lines surface as all-null rows under
     * the default PERMISSIVE mode and are dropped by the `conv_id` filter —
@@ -80,7 +69,7 @@ object TranscriptSources {
     */
   def jsonlTranscripts(spark: SparkSession, path: String): DataFrame =
     spark.read
-      .schema(transcriptSchema)
+      .schema(graft.model.Turn.schema)
       .json(path)
       .filter(col("conv_id").isNotNull)
 }

@@ -41,21 +41,27 @@ object GraftSession {
     binding
   }
 
+  /** The settings every graft session gets, from [[builder]] and
+    * [[fromSubmit]] alike.
+    */
+  private val Defaults = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    // static conf: the generated-class cache defaults to 100 entries —
+    // a ~55-query suite (3+ codegen stages each) thrashes that LRU, so
+    // every repeated run re-compiles its classes and the JVM code cache
+    // fills with dead generated code until JIT deoptimizes (measured 13x
+    // on the extraction stage when it ran after the full bench loop)
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(master)
       .appName("graft-kg")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static conf: the generated-class cache defaults to 100 entries —
-      // a ~55-query suite (3+ codegen stages each) thrashes that LRU, so
-      // every repeated run re-compiles its classes and the JVM code cache
-      // fills with dead generated code until JIT deoptimizes (measured 13x
-      // on the extraction stage when it ran after the full bench loop)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config(Defaults.toMap)
       .config("spark.ui.enabled", "false")
     fileBindingFor(master).fold(b) { case (k, v) => b.config(k, v) }
   }
@@ -96,16 +102,9 @@ object GraftSession {
     * `--conf spark.sql.shuffle.partitions=N` still wins).
     */
   def fromSubmit(): SparkSession = {
-    val graftDefaults = Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.session.timeZone" -> "UTC")
     val submitted = sys.props.contains("spark.master")
     var b = SparkSession.builder().appName("graft-kg")
-    graftDefaults.foreach { case (k, v) =>
-      if (!sys.props.contains(k)) b = b.config(k, v)
-    }
+      .config(Defaults.filterNot { case (k, _) => sys.props.contains(k) }.toMap)
     if (!submitted) sys.env.get("SPARK_MASTER") match {
       // plain-java launches targeting a cluster set SPARK_MASTER instead of
       // the spark.master system property — honor it rather than silently

@@ -15,8 +15,11 @@ import scala.collection.mutable
   * patterns against a loaded repository).
   *
   * A pattern is a (subject, predicate, object) triple of terms; each term
-  * is a constant ([[GraphQuery.C]]) or a named variable ([[GraphQuery.V]]).
-  * `bgp` returns the DISTINCT variable bindings satisfying every pattern.
+  * is a constant ([[GraphQuery.C]]) or a named variable ([[GraphQuery.V]]),
+  * and the predicate may instead be a property path ([[GraphQuery.Path]],
+  * SPARQL 1.1's path pattern). `bgp` returns the DISTINCT variable
+  * bindings satisfying every pattern; every query form solves its
+  * patterns the same way, paths included.
   *
   * Spark-first shape — the whole query stays declarative so Catalyst does
   * the planning:
@@ -58,6 +61,7 @@ import scala.collection.mutable
   */
 object GraphQuery {
 
+  /** A pattern slot: [[V]], [[C]], or — in the predicate slot only — a [[Path]]. */
   sealed trait Term
   /** Named variable; equal names unify across (and within) patterns. */
   final case class V(name: String) extends Term
@@ -156,6 +160,9 @@ object GraphQuery {
     * obj_lexical, ...) triples; returns one column per distinct variable
     * name, in first-mention order. Pruning and join order use `g`'s bucket
     * count and stats — the table's own, when opened with [[loadGraph]].
+    * A pattern whose predicate is a [[Path]] compiles to the path's
+    * distinct (s, o) bindings: bound endpoints push into the evaluation,
+    * so a `<x> p+ ?y` pattern explores only x's cone.
     */
   def bgp(g: PersistedGraph, patterns: Seq[(Term, Term, Term)]): DataFrame =
     frame(g, solve(g, patterns).distinct())
@@ -181,23 +188,34 @@ object GraphQuery {
     PlanBridge.frame(g.df.sparkSession, p)
 
   /** Each pattern as a [[greedyJoin]] item: its compiled plan, variable
-    * names, subject variable (or null) and estimated rows.
+    * names, subject variable (or null) and estimated rows. A path
+    * predicate compiles by [[compilePath]] and costs by [[pathEstimate]];
+    * its frame is closure or join output, never the bucketed scan, so no
+    * subject-star preference applies.
     */
   private def patternItems(g: PersistedGraph, patterns: Seq[(Term, Term, Term)])
       : Seq[(LogicalPlan, Seq[String], String, Long)] = {
+    patterns.foreach { p =>
+      require(!Seq(p._1, p._3).exists(_.isInstanceOf[Path]),
+        s"a property path may only be a pattern's predicate, not its subject or object: $p")
+    }
     require(patterns.forall(p => Seq(p._1, p._2, p._3).exists(_.isInstanceOf[V])),
       "variable-free patterns (pure existence checks) are not supported: " +
         "they cannot join on a shared variable — evaluate the constant " +
         "triple separately and gate the query on its result")
-    patterns.map { p =>
-      val (df, vars) = compile(g, p)
-      val subjVar = p._1 match { case V(n) => n; case _ => null }
-      (df, vars, subjVar, estimate(p, g.stats))
+    patterns.map {
+      case (s, path: Path, o) =>
+        val (df, vars) = compilePath(g, s, path, o)
+        (df, vars, null, pathEstimate((s, path, o), g.stats))
+      case p =>
+        val (df, vars) = compile(g, p)
+        val subjVar = p._1 match { case V(n) => n; case _ => null }
+        (df, vars, subjVar, estimate(p, g.stats))
     }
   }
 
   /** Selectivity-greedy connected join over pre-compiled pattern plans —
-    * the shared core of [[bgp]] and [[bgpWithPaths]] — projected to
+    * the shared core of every query form — projected to
     * `outVars`, NOT deduplicated. Each item is (bindings plan, variable
     * names, subject variable or null, estimated rows); input position
     * breaks cost ties deterministically. The joins are inner using-column
@@ -383,7 +401,8 @@ object GraphQuery {
     * solutions (the SPARQL CONSTRUCT query form, and the light-weight
     * rule-application path: "wherever this shape matches, assert these
     * edges" without running the full entailment fixpoint). Template slots
-    * are [[C]] constants or [[V]] variables bound by the patterns; output
+    * are [[C]] constants or [[V]] variables bound by the patterns (a
+    * [[Path]] is refused: it is no term a triple can carry); output
     * is a distinct (subj, pred, obj) edge frame (set semantics, like any
     * graph). A term bound to a literal surfaces by its lexical form —
     * callers constructing typed-literal graphs should keep literals in
@@ -403,6 +422,9 @@ object GraphQuery {
         require(vars.contains(n),
           s"template variable ?$n is not bound by the patterns {${vars.mkString(",")}}")
         col(n).as(name)
+      case p: Path =>
+        throw new IllegalArgumentException(
+          s"a property path cannot be a CONSTRUCT template term: ${render(p)}")
     }
     frame(g, template.map { case (s, p, o) =>
       bindings.select(slot(s, "subj"), slot(p, "pred"), slot(o, "obj"))
@@ -806,9 +828,10 @@ object GraphQuery {
     * role: rdf-microdata emits graphs INTO RDF.rb, whose SPARQL engine
     * serves path queries over them; here the engine itself is Spark).
     * Build with the constructors in [[Path]]; evaluate with [[evalPath]]
-    * or embed in a BGP with [[bgpWithPaths]].
+    * or put it in a pattern's predicate slot, where every query form
+    * ([[bgp]] and the rest) solves it.
     */
-  sealed trait Path
+  sealed trait Path extends Term
   object Path {
     /** Atomic predicate step `p` — one forward edge. The object may be an
       * IRI or a literal (a literal can TERMINATE a path but never continues
@@ -862,8 +885,8 @@ object GraphQuery {
   }
 
   /** Evaluate a property path to its distinct (s, o) pairs over the whole
-    * graph. For bound-endpoint evaluation (`<x> path ?y`), prefer
-    * [[bgpWithPaths]] with a constant term — closures then explore only
+    * graph. For bound-endpoint evaluation (`<x> path ?y`), prefer a
+    * [[bgp]] path pattern with a constant term — closures then explore only
     * the reachable cone instead of materializing the full closure.
     *
     * Scale shape: atomic steps are pushed constant-pred scans with
@@ -1006,7 +1029,8 @@ object GraphQuery {
   /** One path pattern → (bindings plan, variable names), the path twin of
     * [[compile]]: constant endpoints push into [[pathFrame]] (closures
     * explore only the bound cone); a repeated variable (`?x path ?x`)
-    * becomes an equality filter.
+    * becomes an equality filter. [[patternItems]] has already refused a
+    * path endpoint and a pattern without a variable.
     */
   private def compilePath(g: PersistedGraph, sTerm: Term, path: Path,
                           oTerm: Term): (LogicalPlan, Seq[String]) = {
@@ -1017,11 +1041,9 @@ object GraphQuery {
       case (V(a), V(b)) if a == b =>
         (df.filter(col("s") === col("o")).select(col("s").as(a)), Seq(a))
       case (V(a), V(b)) => (df.select(col("s").as(a), col("o").as(b)), Seq(a, b))
-      case (V(a), C(_)) => (df.select(col("s").as(a)), Seq(a))
-      case (C(_), V(b)) => (df.select(col("o").as(b)), Seq(b))
-      case (C(_), C(_)) =>
-        throw new IllegalArgumentException(
-          "variable-free path pattern — evaluate evalPath with both endpoints bound separately")
+      case (V(a), _) => (df.select(col("s").as(a)), Seq(a))
+      case (_, V(b)) => (df.select(col("o").as(b)), Seq(b))
+      case _ => throw new IllegalArgumentException(s"no variable in path pattern $sTerm ${render(path)} $oTerm")
     }
   }
 
@@ -1050,33 +1072,5 @@ object GraphQuery {
     }
     val consts = Seq(p._1, p._3).count(_.isInstanceOf[C])
     (0 until consts).foldLeft(go(p._2))((e, _) => if (e > 0) math.max(e / 100, 1L) else 0L)
-  }
-
-  /** BGP extended with property-path patterns: `patterns` solve exactly as
-    * [[bgp]]; each `(s, path, o)` in `pathPatterns` compiles to the path's
-    * distinct (s, o) binding frame ([[compilePath]] — bound endpoints push
-    * into the evaluation, so a `<x> p+ ?y` pattern explores only x's
-    * cone); all frames then join through the same selectivity-greedy
-    * connected order ([[greedyJoin]]), path frames costed by
-    * [[pathEstimate]]. Disconnected pattern sets are refused like in
-    * [[bgp]]. Variables surface in first-mention order, triple patterns
-    * before path patterns.
-    */
-  def bgpWithPaths(g: PersistedGraph, patterns: Seq[(Term, Term, Term)],
-                   pathPatterns: Seq[(Term, Path, Term)]): DataFrame = {
-    require(patterns.nonEmpty || pathPatterns.nonEmpty, "empty BGP")
-    val tripleItems = patternItems(g, patterns)
-    require(pathPatterns.forall(p => Seq(p._1, p._3).exists(_.isInstanceOf[V])),
-      "variable-free path patterns are not supported — evaluate evalPath " +
-        "with both endpoints bound separately and gate the query on its result")
-    val pathItems = pathPatterns.map { pp =>
-      val (df, vars) = compilePath(g, pp._1, pp._2, pp._3)
-      // a path frame is closure/join output, never the bucketed scan — no
-      // subject-star preference applies
-      (df, vars, null: String, pathEstimate(pp, g.stats))
-    }
-    val outVars =
-      (varsOf(patterns) ++ pathPatterns.flatMap(p => Seq(p._1, p._3)).collect { case V(n) => n }).distinct
-    frame(g, greedyJoin(tripleItems ++ pathItems, outVars).distinct())
   }
 }

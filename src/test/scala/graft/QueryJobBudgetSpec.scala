@@ -147,7 +147,7 @@ class QueryJobBudgetSpec extends AnyFunSuite {
     val seeded = Seq((C(emp(29)), Path.Plus(Path.P(ReportsTo)), V("m")))
     val full = Seq((V("e"), Path.Plus(Path.Inv(Path.P(ReportsTo))), V("m")))
     def answer(graph: GraphQuery.PersistedGraph, q: Seq[(GraphQuery.Term, Path, GraphQuery.Term)]) =
-      GraphQuery.bgpWithPaths(graph, Nil, q).collect().map(_.toSeq).toSet
+      GraphQuery.bgp(graph, q).collect().map(_.toSeq).toSet
     val limit = 8L
     val small = Limits.Production.copy(closureEdges = limit)
     Seq(seeded, full).foreach { q =>

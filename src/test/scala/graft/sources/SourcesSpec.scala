@@ -72,7 +72,7 @@ class SourcesSpec extends AnyFunSuite {
   test("fromSpec: synthetic, html, jsonl and parquet inputs through the one parser") {
     val dir = Files.createTempDirectory("graftspec")
     def nameTypes(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
-    val transcript = TranscriptSources.transcriptSchema.map(f => f.name -> f.dataType)
+    val transcript = graft.model.Turn.schema.map(f => f.name -> f.dataType)
     def convs(df: org.apache.spark.sql.DataFrame) = df.select("conv_id").distinct().count()
 
     // nConvs defaults to nTurns/20

@@ -704,25 +704,22 @@ class GraphQuerySpec extends AnyFunSuite {
   }
 
   test("bgpWithPaths: bound-source star explores only the reachable cone plus self") {
-    val out = GraphQuery.bgpWithPaths(orgGraph, Nil,
-        Seq((C("a"), Path.Star(Path.P("boss")), V("anc"))))
+    val out = bgp(orgGraph, Seq((C("a"), Path.Star(Path.P("boss")), V("anc"))))
       .collect().map(_.getString(0)).toSet
     assert(out == Set("a", "m", "ceo"))
   }
 
   test("bgpWithPaths: bound-target plus explores the reverse cone") {
-    val out = GraphQuery.bgpWithPaths(orgGraph, Nil,
-        Seq((V("e"), Path.Plus(Path.P("boss")), C("ceo"))))
+    val out = bgp(orgGraph, Seq((V("e"), Path.Plus(Path.P("boss")), C("ceo"))))
       .collect().map(_.getString(0)).toSet
     assert(out == Set("a", "b", "m"))
   }
 
   test("bgpWithPaths: path and triple patterns join on shared variables") {
     // peers = same manager (includes self); name comes from a triple pattern
-    val out = GraphQuery.bgpWithPaths(orgGraph,
-        patterns = Seq((V("e"), C("name"), V("n"))),
-        pathPatterns = Seq(
-          (V("e"), Path.Chain(Seq(Path.P("boss"), Path.Inv(Path.P("boss")))), V("peer"))))
+    val out = bgp(orgGraph, Seq(
+        (V("e"), C("name"), V("n")),
+        (V("e"), Path.Chain(Seq(Path.P("boss"), Path.Inv(Path.P("boss")))), V("peer"))))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(out == Set(
       ("a", "Ann", "a"), ("a", "Ann", "b"), ("b", "Bob", "a"), ("b", "Bob", "b"),
@@ -733,19 +730,40 @@ class GraphQuerySpec extends AnyFunSuite {
     val cyc = GraphQuery.PersistedGraph(Seq(
         ("x", "next", "y", null), ("y", "next", "x", null), ("y", "next", "z", null))
       .toDF("subj", "pred", "obj_iri", "obj_lexical"), 0, Map.empty)
-    val out = GraphQuery.bgpWithPaths(cyc, Nil,
-        Seq((V("n"), Path.Plus(Path.P("next")), V("n"))))
+    val out = bgp(cyc, Seq((V("n"), Path.Plus(Path.P("next")), V("n"))))
       .collect().map(_.getString(0)).toSet
     assert(out == Set("x", "y")) // z is reachable but not on the cycle
   }
 
   test("bgpWithPaths: disconnected path pattern is refused") {
     val e = intercept[IllegalArgumentException] {
-      GraphQuery.bgpWithPaths(orgGraph,
-        patterns = Seq((V("x"), C(TypeP), C("Person"))),
-        pathPatterns = Seq((V("a"), Path.P("boss"), V("b"))))
+      bgp(orgGraph, Seq((V("x"), C(TypeP), C("Person")), (V("a"), Path.P("boss"), V("b"))))
     }
     assert(e.getMessage.contains("cartesian"))
+  }
+
+  test("ask: a path pattern in the predicate slot") {
+    // a reaches ceo (named Zed) over boss+; ceo reports to no one; m's
+    // managers never include Ann
+    assert(GraphQuery.ask(orgGraph, Seq(
+      (C("a"), Path.Plus(Path.P("boss")), V("x")), (V("x"), C("name"), C("Zed")))))
+    assert(!GraphQuery.ask(orgGraph, Seq((C("ceo"), Path.Plus(Path.P("boss")), V("x")))))
+    assert(!GraphQuery.ask(orgGraph, Seq(
+      (C("m"), Path.Plus(Path.P("boss")), V("x")), (V("x"), C("name"), C("Ann")))))
+  }
+
+  test("a path outside the predicate slot is refused, never matched") {
+    val boss = Path.Plus(Path.P("boss"))
+    Seq[Seq[(GraphQuery.Term, GraphQuery.Term, GraphQuery.Term)]](
+      Seq((boss, C("name"), V("n"))),
+      Seq((V("e"), C("boss"), boss)),
+      Seq((V("e"), C("name"), V("n")), (V("e"), C("boss"), boss))).foreach { q =>
+      val e = intercept[IllegalArgumentException](bgp(orgGraph, q))
+      assert(e.getMessage.contains("only be a pattern's predicate"), q)
+    }
+    val t = intercept[IllegalArgumentException](GraphQuery.construct(orgGraph,
+      Seq((V("e"), C("boss"), V("m"))), Seq((V("e"), boss, V("m")))))
+    assert(t.getMessage.contains("CONSTRUCT template"))
   }
 
   test("evalPath: plus matches pathPlus on an IRI-only slice") {
@@ -765,8 +783,7 @@ class GraphQuerySpec extends AnyFunSuite {
     }
 
   test("evalPath: bound-source closure still throws on a live frontier") {
-    throwsOnBothStrategies(GraphQuery.bgpWithPaths(chain70, Nil,
-      Seq((C("a0"), Path.Plus(Path.P("boss")), V("x")))).count())
+    throwsOnBothStrategies(bgp(chain70, Seq((C("a0"), Path.Plus(Path.P("boss")), V("x")))).count())
   }
 
   test("pathPlusIncremental: a live frontier throws instead of truncating") {
@@ -886,10 +903,55 @@ class GraphQuerySpec extends AnyFunSuite {
     val rows = spark.read.parquet(s"$base/out")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(rows == Set(("a", "Ann", "Mia"), ("a", "Ann", "Zed"), ("m", "Mia", "Zed")))
-    // path patterns refuse --describe/--optional/--minus composition
-    val e = intercept[IllegalArgumentException](graft.QueryMain.run(Array(
-      "--graph", s"$base/graph", "--output", s"$base/out2", "--describe", "?e",
-      "--pattern", "?e <boss>+ ?m"), spark))
-    assert(e.getMessage.contains("plain SELECT"))
+    // DESCRIBE over a path selector: a and m reach ceo over boss+
+    val d = graft.QueryMain.run(Array(
+      "--graph", s"$base/graph", "--output", s"$base/out2", "--describe", "e",
+      "--pattern", "?e <boss>+ <ceo>"), spark)
+    assert(d == 4L)
+    assert(spark.read.parquet(s"$base/out2").collect()
+      .map(r => (r.getAs[String]("subj"), r.getAs[String]("pred"),
+        Option(r.getAs[String]("obj_iri")).getOrElse(r.getAs[String]("obj_lexical")))).toSet ==
+      Set(("a", "boss", "m"), ("a", "name", "Ann"), ("m", "boss", "ceo"), ("m", "name", "Mia")))
+  }
+
+  /** [[orgGraph]] written as a `writeGraph` dir, for the CLI. */
+  private def persistedOrgGraph(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("gq_cli_org_").toString + "/graph"
+    import org.apache.spark.sql.functions.lit
+    ExtractPipeline.writeGraph(orgGraph.df
+      .withColumn("obj_datatype", lit(null).cast("string"))
+      .withColumn("obj_lang", lit(null).cast("string"))
+      .withColumn("conv_id", lit("c"))
+      .withColumn("turn_idx", lit(0))
+      .as[graft.model.Triple], dir, predBuckets = 4)
+    dir
+  }
+
+  private def cliRows(args: String*): Set[Seq[String]] = {
+    val out = java.nio.file.Files.createTempDirectory("gq_cli_out_").toString + "/out"
+    val n = graft.QueryMain.run((args ++ Seq("--output", out)).toArray, spark)
+    val rows = spark.read.parquet(out).collect().map(_.toSeq.map(v => if (v == null) null else v.toString))
+    assert(n == rows.length.toLong)
+    rows.toSet
+  }
+
+  test("QueryMain CLI: a path inside --optional and inside --minus") {
+    val graph = persistedOrgGraph()
+    // every employee's transitive managers, NULL for the top
+    assert(cliRows("--graph", graph, "--pattern", "?e <name> ?n",
+        "--optional", "?e <boss>+ ?m") == Set(
+      Seq("a", "Ann", "m"), Seq("a", "Ann", "ceo"), Seq("b", "Bob", "m"), Seq("b", "Bob", "ceo"),
+      Seq("m", "Mia", "ceo"), Seq("ceo", "Zed", null)))
+    // minus everyone someone reports to (^boss): m and ceo go
+    assert(cliRows("--graph", graph, "--pattern", "?e <name> ?n",
+        "--minus", "?e ^<boss> ?r") == Set(Seq("a", "Ann"), Seq("b", "Bob")))
+  }
+
+  test("QueryMain CLI: a path token outside the predicate slot is refused") {
+    val graph = persistedOrgGraph()
+    Seq("<boss>+ <name> ?n", "?e <name> ^<boss>").foreach { p =>
+      val e = intercept[RuntimeException](cliRows("--graph", graph, "--pattern", p))
+      assert(e.getMessage.contains("cannot parse term"), p)
+    }
   }
 }
